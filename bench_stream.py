@@ -49,7 +49,7 @@ WORK = "/tmp/spark_graft_stream_bench"
 
 
 def _run(spark, label: str, files_per_trigger: int | None, transactional: bool,
-         mode: str = "shared", n_users: int = N_USERS) -> dict:
+         n_users: int = N_USERS) -> dict:
     work = os.path.join(WORK, label)
     shutil.rmtree(work, ignore_errors=True)
     udir, adir = os.path.join(work, "u"), os.path.join(work, "a")
@@ -83,7 +83,6 @@ def _run(spark, label: str, files_per_trigger: int | None, transactional: bool,
     spark.streams.addListener(listener)
     pipe = ReferencePipeline(
         spark, u_stream, a_stream, out, ckpt, transactional=transactional,
-        mode=mode,
     )
     t0 = time.time()
     pipe.start()
@@ -96,42 +95,25 @@ def _run(spark, label: str, files_per_trigger: int | None, transactional: bool,
 
     time.sleep(2)  # listener bus drain
     recs = [r for r in read_metrics(metrics_path) if r["event"] == "progress"]
-    # classify: the join query's stateful operator is
-    # flatMapGroupsWithState*; the two window-count queries carry
-    # stateStoreSave aggs
-    def kind(r):
-        ops = [(so["operatorName"] or "") for so in r.get("stateOperators", [])]
-        # count queries re-execute the join upstream of their window agg,
-        # so they carry BOTH the pandas-state op and stateStoreSave;
-        # the pure join query carries only the pandas-state op
-        if any("stateStoreSave" in o for o in ops):
-            return "window_count"
-        if any("applyInPandasWithState" in o or "flatMapGroups" in o for o in ops):
-            return "join"
-        return "other"
-
-    rates: dict[str, list[float]] = {}
-    for r in recs:
-        if r["numInputRows"] > 0 and r["processedRowsPerSecond"]:
-            rates.setdefault(kind(r), []).append(r["processedRowsPerSecond"])
+    # one streaming query: every progress record is the join query's
+    rates = [
+        r["processedRowsPerSecond"] for r in recs
+        if r["numInputRows"] > 0 and r["processedRowsPerSecond"]
+    ]
     state_rows = max(
         (so["numRowsTotal"] for r in recs for so in r.get("stateOperators", [])),
         default=0,
     )
     return {
         "label": label,
-        "mode": mode,
         "n_users": n_users,
         "files_per_trigger": files_per_trigger,
         "transactional": transactional,
         "n_events": n_events,
         "wall_s": round(wall, 2),
         "events_per_sec_end_to_end": round(n_events / wall, 1),
-        "peak_join_rows_per_sec": round(max(rates.get("join", [0.0])), 1),
-        "join_rates": [round(x, 1) for x in sorted(rates.get("join", []))],
-        "window_count_rates": [
-            round(x, 1) for x in sorted(rates.get("window_count", []))
-        ],
+        "peak_join_rows_per_sec": round(max(rates, default=0.0), 1),
+        "join_rates": [round(x, 1) for x in sorted(rates)],
         "max_state_rows": state_rows,
     }
 
@@ -140,32 +122,26 @@ def main() -> None:
     spark = get_spark("bench-stream")
     shutil.rmtree(WORK, ignore_errors=True)
     runs = [
-        # shared (default): ONE query, join executed once per batch,
-        # foreachBatch multiplexes to the three sinks
-        _run(spark, "pipelined_txn_shared", 1, True, mode="shared"),
-        _run(spark, "bigbatch_txn_shared", None, True, mode="shared"),
-        _run(spark, "bigbatch_plain_shared", None, False, mode="shared"),
-        # legacy: three queries, each re-executing the stateful join
-        _run(spark, "pipelined_txn_per_sink", 1, True, mode="per_sink"),
-        _run(spark, "bigbatch_txn_per_sink", None, True, mode="per_sink"),
-        _run(spark, "bigbatch_plain_per_sink", None, False, mode="per_sink"),
+        # ONE query, join executed once per batch, foreachBatch
+        # multiplexes to the three sinks
+        _run(spark, "pipelined_txn_shared", 1, True),
+        _run(spark, "bigbatch_txn_shared", None, True),
+        _run(spark, "bigbatch_plain_shared", None, False),
         # state-growth probe: 1e6 events through the headline shared
         # config -- upsert tables at 250k keys must hold throughput
         # within ~2x of the 80k-event figure (VERDICT r10 ask #7)
-        _run(spark, "bigbatch_txn_shared_1e6", None, True, mode="shared",
-             n_users=250_000),
+        _run(spark, "bigbatch_txn_shared_1e6", None, True, n_users=250_000),
     ]
     artifact = {
         "n_users": N_USERS,
         "addr_per_user": ADDR_PER_USER,
         "runs": runs,
         "note": "full topology: stateful join + 3 upsert sinks. "
-                "mode=shared runs ONE streaming query whose foreachBatch "
-                "multiplexes the joined micro-batch to all three upserts "
-                "(join executed once, single copy of join state); "
-                "mode=per_sink is the legacy layout where each sink query "
-                "re-executes the join (no cross-query plan sharing in "
-                "Structured Streaming). local[*]",
+                "ONE streaming query whose foreachBatch multiplexes the "
+                "joined micro-batch to all three upserts (join executed "
+                "once, single copy of join state). The deleted "
+                "one-query-per-sink layout re-executed the join per sink; "
+                "its last numbers are in this file's git history. local[*]",
     }
     with open("STREAM_BENCH.json", "w") as f:
         json.dump(artifact, f, indent=1)

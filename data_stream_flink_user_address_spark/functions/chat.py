@@ -35,8 +35,12 @@ separator.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..streaming.epoch import start_gate_stream, write_partition
 
 from .text import tokens
 
@@ -270,9 +274,9 @@ def streaming_sft_gate(
     runs parse -> structural gate (:func:`validate_conversations`,
     ``valid`` only) -> :func:`conversation_turns`, and the surviving
     turn rows (loss-mask spans included) land under an
-    ``__epoch=<id>`` partition of ``out_path`` with dynamic overwrite
-    -- a replayed epoch rewrites exactly its own partition, the same
-    idempotency contract as the dedup/NB admission gates (they
+    ``__epoch=<id>`` partition of ``out_path`` -- a replayed epoch
+    rewrites exactly its own partition (the ``streaming/epoch.py``
+    contract shared with the dedup/NB admission gates; they
     compose: chain this gate's survivors into a dedup gate for
     validity-then-novelty admission -- measured composed in
     ``STREAM_BENCH.json:sft_ingest_dedup_stream``,
@@ -287,27 +291,31 @@ def streaming_sft_gate(
     Measured end to end in ``STREAM_BENCH.json:sft_ingest_stream``
     (``python bench_stream_sft.py``).
     """
-    from .dedup import _require_epoch_layout
+    return start_gate_stream(
+        stream, checkpoint_dir,
+        partial(
+            _sft_gate_epoch, out_path=out_path, json_col=json_col,
+            id_col=id_col,
+        ),
+        out_path,
+    )
 
-    _require_epoch_layout(out_path)
 
-    def fb(batch_df: DataFrame, epoch_id: int) -> None:
-        parsed = parse_conversations(batch_df, json_col, id_col)
-        valid = _structural_flags(F.col("turns"))[-1]
-        (
-            conversation_turns(parsed.filter(valid), id_col=id_col)
-            .withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .partitionBy("__epoch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(out_path)
-        )
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(fb)
-        .start()
+def _sft_gate_epoch(
+    batch_df: DataFrame,
+    epoch_id: int,
+    out_path: str,
+    json_col: str,
+    id_col: str,
+) -> None:
+    """One epoch of :func:`streaming_sft_gate` -- module-level so the
+    replay-idempotency contract (same epoch twice == once) is directly
+    unit-testable without a running stream."""
+    parsed = parse_conversations(batch_df, json_col, id_col)
+    valid = _structural_flags(F.col("turns"))[-1]
+    write_partition(
+        conversation_turns(parsed.filter(valid), id_col=id_col),
+        out_path, epoch_id,
     )
 
 
@@ -442,14 +450,8 @@ def _sft_pack_epoch(
         valid, seq_len=seq_len, id_col=id_col, bucket_size=bucket_size,
         assume_valid_turns=True,
     )
-    for frame, path in ((bins, bins_path), (spans, spans_path)):
-        (
-            frame.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .partitionBy("__epoch")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(path)
-        )
+    write_partition(bins, bins_path, epoch_id)
+    write_partition(spans, spans_path, epoch_id)
 
 
 def streaming_sft_pack(
@@ -473,7 +475,7 @@ def streaming_sft_pack(
     streaming trade -- bins never span a checkpoint boundary, so a
     replayed epoch rewrites exactly its own partitions in both
     directories and the corpus stays consistent under at-least-once
-    delivery (the gate family's idempotency contract).  Chain a dedup
+    delivery (the ``streaming/epoch.py`` contract).  Chain a dedup
     gate upstream for validity-then-novelty admission before packing
     (the ``streaming_sft_gate`` composition).
 
@@ -484,20 +486,12 @@ def streaming_sft_pack(
     otherwise raise the packer's in-plan guard).  Returns the started
     ``StreamingQuery``.
     """
-    from .dedup import _require_epoch_layout
-
-    _require_epoch_layout(bins_path)
-    _require_epoch_layout(spans_path)
-
-    def fb(batch_df: DataFrame, epoch_id: int) -> None:
-        _sft_pack_epoch(
-            batch_df, int(epoch_id), bins_path, spans_path, seq_len,
-            json_col, id_col, bucket_size,
-        )
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(fb)
-        .start()
+    return start_gate_stream(
+        stream, checkpoint_dir,
+        partial(
+            _sft_pack_epoch, bins_path=bins_path, spans_path=spans_path,
+            seq_len=seq_len, json_col=json_col, id_col=id_col,
+            bucket_size=bucket_size,
+        ),
+        bins_path, spans_path,
     )

@@ -32,9 +32,12 @@ the repo's fixed-point determinism rule).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..streaming.epoch import start_gate_stream, write_partition
 from .dedup import _md5_long
 from .text import lower_ascii, tokens
 
@@ -350,14 +353,9 @@ def _nb_gate_batch(
     """One epoch of :func:`streaming_nb_quality_gate` -- module-level so
     the replay-idempotency contract (same epoch twice == once) is
     directly unit-testable without a live stream."""
-    kept = nb_quality_filter(
-        batch_df, weights, info, threshold, text_col, id_col
-    ).withColumn("__epoch", F.lit(int(epoch_id)))
-    (
-        kept.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(out_path)
+    write_partition(
+        nb_quality_filter(batch_df, weights, info, threshold, text_col, id_col),
+        out_path, epoch_id,
     )
 
 
@@ -374,9 +372,9 @@ def streaming_nb_quality_gate(
     """Continuous-crawl admission through the trained NB quality model:
     every micro-batch is scored against the (frozen, broadcast) weight
     table and survivors land under an ``__epoch=<id>`` partition of
-    ``out_path`` with dynamic overwrite -- a replayed epoch rewrites
-    exactly its own partition, the same idempotency contract as the
-    dedup gates (they compose: chain this gate's output directory into
+    ``out_path`` -- a replayed epoch rewrites exactly its own
+    partition (the ``streaming/epoch.py`` contract shared with the
+    dedup gates; they compose: chain this gate's output directory into
     :func:`~.dedup.streaming_incremental_minhash_dedup` for
     quality-then-novelty admission).
 
@@ -385,21 +383,13 @@ def streaming_nb_quality_gate(
     the map-side featurize + broadcast join per batch -- no state, no
     shuffle of history.  Returns the started ``StreamingQuery``.
     """
-    from .dedup import _require_epoch_layout
-
-    _require_epoch_layout(out_path)
-
-    def fb(batch_df: DataFrame, epoch_id: int) -> None:
-        _nb_gate_batch(
-            batch_df, int(epoch_id), weights, info, out_path,
-            threshold, text_col, id_col,
-        )
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(fb)
-        .start()
+    return start_gate_stream(
+        stream, checkpoint_dir,
+        partial(
+            _nb_gate_batch, weights=weights, info=info, out_path=out_path,
+            threshold=threshold, text_col=text_col, id_col=id_col,
+        ),
+        out_path,
     )
 
 

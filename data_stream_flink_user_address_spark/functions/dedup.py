@@ -21,9 +21,12 @@ Scale shape per operator (n docs, s shingles/doc):
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..streaming.epoch import start_gate_stream, write_partition
 from .rounding import round_parity
 
 from .text import norm_ws
@@ -1206,27 +1209,6 @@ def embedding_near_dup_pairs(
     )
 
 
-def _require_epoch_layout(out_path: str) -> None:
-    """Fail fast on a flat-``part-*`` survivor directory: the streaming
-    dedup sinks write ``__epoch=N/`` partitions (replay idempotency),
-    and a directory mixing both layouts cannot be read consistently by
-    ``spark.read.parquet``.  Migrate old flat files under a synthetic
-    ``__epoch=-1`` partition or point the stream at a fresh directory."""
-    import os as _os
-
-    if _os.path.isdir(out_path):
-        entries = _os.listdir(out_path)
-        flat_parts = [e for e in entries if e.startswith("part-")]
-        if flat_parts and not any(e.startswith("__epoch=") for e in entries):
-            raise ValueError(
-                f"out_path {out_path!r} holds flat-append part files from a "
-                "pre-__epoch sink layout; mixing them with __epoch=N/ "
-                "partitions is unreadable. Rewrite them under __epoch=-1/ "
-                "(spark.read.parquet(out_path).withColumn('__epoch', "
-                "lit(-1))...partitionBy('__epoch')) or use a new out_path."
-            )
-
-
 def streaming_incremental_dedup(
     stream: DataFrame,
     store_path: str,
@@ -1251,7 +1233,8 @@ def streaming_incremental_dedup(
     ``__batch=<batch_id_base + epoch>`` with the epoch's OWN partition
     excluded from the anti-join (so a replayed epoch returns identical
     survivors and rewrites identical state), and the survivor output
-    lands under ``__epoch=<epoch>`` with dynamic overwrite.  A crash
+    lands under ``__epoch=<epoch>`` (the ``streaming/epoch.py``
+    contract).  A crash
     between sink write and checkpoint commit therefore re-runs the
     epoch into exactly its own two partitions -- no duplicates, no
     loss.
@@ -1271,35 +1254,33 @@ def streaming_incremental_dedup(
 
     Returns the started ``StreamingQuery``.
     """
-    _require_epoch_layout(out_path)
-
-    def fb(batch_df: DataFrame, epoch_id: int) -> None:
-        survivors = incremental_exact_dedup(
-            batch_df, store_path, text_col=text_col, id_col=id_col,
-            batch_id=batch_id_base + int(epoch_id),
-        )
-        spark = batch_df.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                survivors.withColumn("__epoch", F.lit(int(epoch_id)))
-                .write.mode("overwrite")
-                .partitionBy("__epoch")
-                .parquet(out_path)
-            )
-        finally:
-            if prev is not None:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
-                )
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(fb)
-        .start()
+    return start_gate_stream(
+        stream, checkpoint_dir,
+        partial(
+            _exact_dedup_epoch, store_path=store_path, out_path=out_path,
+            text_col=text_col, id_col=id_col, batch_id_base=batch_id_base,
+        ),
+        out_path,
     )
+
+
+def _exact_dedup_epoch(
+    batch_df: DataFrame,
+    epoch_id: int,
+    store_path: str,
+    out_path: str,
+    text_col: str,
+    id_col: str,
+    batch_id_base: int,
+) -> None:
+    """One epoch of :func:`streaming_incremental_dedup`: the store
+    append (inside :func:`incremental_exact_dedup`), then the survivor
+    partition."""
+    survivors = incremental_exact_dedup(
+        batch_df, store_path, text_col=text_col, id_col=id_col,
+        batch_id=batch_id_base + int(epoch_id),
+    )
+    write_partition(survivors, out_path, epoch_id)
 
 
 def streaming_embedding_near_dup(
@@ -1337,40 +1318,23 @@ def streaming_embedding_near_dup(
     O(new rows)) or a full rebuild, the same trade every ANN system
     makes between index freshness and build cost.
 
-    Replay-idempotent: ``foreachBatch`` re-runs an epoch whenever the
-    sink write lands but the checkpoint commit does not (executor loss,
-    driver restart), and a plain append would re-admit the same
-    survivors -- duplicates from the dedup operator itself.  Survivors
-    are therefore written under an ``__epoch=<id>`` partition with
-    DYNAMIC partition overwrite, so a replayed epoch replaces exactly
-    its own partition and leaves every other epoch untouched.  Readers
-    of ``out_path`` see the extra ``__epoch`` column.
-
-    LAYOUT BREAK (since the replay-idempotency fix): earlier versions
-    appended flat ``part-*`` files at the root of ``out_path``; the
-    sink is now ``__epoch=N/`` partitioned.  A directory mixing both
-    layouts cannot be read consistently by ``spark.read.parquet``, so
-    resuming over a flat-layout ``out_path`` FAILS FAST with
-    ``ValueError`` instead of corrupting it -- migrate by rewriting the
-    old files under a synthetic partition (e.g. ``__epoch=-1``) or
-    point the stream at a fresh directory.
+    Replay-idempotent: survivors land under ``__epoch=<id>``
+    partitions (the ``streaming/epoch.py`` contract), so a replayed
+    epoch replaces exactly its own partition instead of re-admitting
+    its survivors.  Resuming over a flat-``part-*`` ``out_path`` from
+    the pre-``__epoch`` layout FAILS FAST with ``ValueError``
+    (:func:`..streaming.epoch.require_epoch_layout`).
 
     Returns the started ``StreamingQuery``.
     """
-    _require_epoch_layout(out_path)
-
-    def fb(batch_df: DataFrame, epoch_id: int) -> None:
-        _near_dup_gate_batch(
-            batch_df, epoch_id, corpus, corpus_codes, codebooks, out_path,
-            threshold=threshold, expand=expand, m=m, dim=dim,
-            id_col=id_col, vec_col=vec_col,
-        )
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(fb)
-        .start()
+    return start_gate_stream(
+        stream, checkpoint_dir,
+        partial(
+            _near_dup_gate_batch, corpus=corpus, corpus_codes=corpus_codes,
+            codebooks=codebooks, out_path=out_path, threshold=threshold,
+            expand=expand, m=m, dim=dim, id_col=id_col, vec_col=vec_col,
+        ),
+        out_path,
     )
 
 
@@ -1411,15 +1375,8 @@ def _near_dup_gate_batch(
     dup_ids = top1.filter(F.col("cosine") >= threshold).select(
         F.col("query_id").alias(id_col)
     )
-    kept = batch_df.join(dup_ids, id_col, "left_anti").withColumn(
-        "__epoch", F.lit(int(epoch_id))
-    )
-    (
-        kept.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(out_path)
-    )
+    kept = batch_df.join(dup_ids, id_col, "left_anti")
+    write_partition(kept, out_path, epoch_id)
 
 
 def paragraph_dedup(
@@ -1662,9 +1619,8 @@ def build_fingerprint_store(
     """Seed (or re-seed) a persisted exact-dedup fingerprint store from
     a corpus snapshot: distinct normalized-content md5s written under an
     ``__batch=<id>`` partition with dynamic partition overwrite, so
-    replaying a batch replaces exactly its own partition -- the same
-    replay-idempotency contract as the streaming near-dup sink above.
-    
+    replaying a batch replaces exactly its own partition -- the
+    ``streaming/epoch.py`` contract keyed on ``__batch``.
 
     .. note:: r17 changed fingerprint normalization (edge whitespace
        now strips -- ``norm_ws``), so stores built before r17 hold
@@ -1678,22 +1634,10 @@ def build_fingerprint_store(
        of silently re-admitting (VERDICT r17 ask #2).
     """
     fp = F.md5(norm_ws(text_col))
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            _stamp_store_format(
-                df.select(fp.alias("fingerprint")).distinct()
-            )
-            .withColumn("__batch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .partitionBy("__batch")
-            .parquet(store_path)
-        )
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    write_partition(
+        _stamp_store_format(df.select(fp.alias("fingerprint")).distinct()),
+        store_path, batch_id, col="__batch",
+    )
 
 
 def build_bucketed_fingerprint_store(
@@ -1865,85 +1809,83 @@ def incremental_exact_dedup(
         # store we are about to write into (read-overwrite hazard), and
         # the caller's returned frame must reflect pre-append state
         survivors = survivors.localCheckpoint()
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                _stamp_store_format(survivors.select("fingerprint"))
-                .withColumn("__batch", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("__batch")
-                .parquet(store_path)
-            )
-        finally:
-            if prev is not None:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
-                )
+        write_partition(
+            _stamp_store_format(survivors.select("fingerprint")),
+            store_path, batch_id, col="__batch",
+        )
     return survivors
 
 
-def _bucketed_dedup_epoch(
+def _store_gate_epoch(
     batch_df: DataFrame,
     epoch_id: int,
+    gate,
+    store_rows,
     store_table: str,
     out_path: str,
     text_col: str,
     id_col: str,
     profile_path: str | None = None,
 ) -> None:
-    """One epoch of :func:`streaming_incremental_dedup_bucketed` --
-    module-level so the replay-idempotency contract (same epoch twice
-    == once) is directly unit-testable without a running stream.
+    """One epoch of a bucketed-store admission gate (exact, MinHash or
+    SimHash): ``gate(batch_df, exclude_epoch)`` returns the survivors,
+    ``store_rows(survivors)`` the rows they append to ``store_table``.
     ``profile_path`` adds the shared :func:`_write_epoch_profile`
     funnel leg.
 
     Replay safety decomposes per sink:
 
-    * survivors (``out_path``): ``__epoch=<id>`` partition + dynamic
-      overwrite -- a re-run REPLACES exactly its own partition.
+    * survivors (``out_path``) and profile rows: the
+      ``streaming/epoch.py`` contract -- a re-run REPLACES exactly its
+      own ``__epoch`` partition.
     * store (``store_table``): bucketed catalog tables only APPEND (a
       per-partition overwrite would need a table format with atomic
-      replace), so a replayed epoch appends its fingerprints a second
-      time.  That is harmless by construction: the anti-join consumes
-      the store as a MEMBERSHIP set, and ``exclude_epoch`` drops the
-      current epoch's leftover rows from the gate so the replay
-      computes identical survivors.  Periodic
-      ``sources/layout.py:compact``-style rewrites (distinct on
-      fingerprint) reclaim the duplicate bytes.
+      replace), so a replayed epoch appends its rows a second time.
+      That is harmless by construction: the gate consumes the store as
+      a MEMBERSHIP set, and ``exclude_epoch`` drops the current epoch's
+      leftover rows from the gate so the replay computes identical
+      survivors.  The ``compact_*_store`` rewrites reclaim the
+      duplicate bytes.
     """
-    survivors = incremental_exact_dedup_bucketed(
-        batch_df, store_table, text_col=text_col, id_col=id_col,
-        exclude_epoch=int(epoch_id),
-    )
     # materialize BEFORE the store append: the survivor plan reads the
     # table we are about to write into (read-overwrite hazard)
-    survivors = survivors.localCheckpoint()
-    spark = batch_df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            survivors.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .partitionBy("__epoch")
-            .parquet(out_path)
+    survivors = gate(batch_df, int(epoch_id)).localCheckpoint()
+    write_partition(survivors, out_path, epoch_id)
+    if profile_path is not None:
+        _write_epoch_profile(
+            batch_df, survivors, int(epoch_id), profile_path, text_col, id_col,
         )
-        if profile_path is not None:
-            _write_epoch_profile(
-                batch_df, survivors, int(epoch_id), profile_path,
-                text_col, id_col,
-            )
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     (
         _stamp_store_format(
-            survivors.select("fingerprint")
-            .withColumn("__epoch", F.lit(int(epoch_id)))
+            store_rows(survivors).withColumn("__epoch", F.lit(int(epoch_id)))
         )
         .write.mode("append")
         .insertInto(store_table)
+    )
+
+
+def _bucketed_gate(
+    store_table: str,
+    out_path: str,
+    text_col: str,
+    id_col: str,
+    profile_path: str | None = None,
+):
+    """The per-epoch function of
+    :func:`streaming_incremental_dedup_bucketed`: a
+    :func:`_store_gate_epoch` over the bucketed fingerprint store."""
+
+    def gate(batch_df: DataFrame, epoch_id: int) -> DataFrame:
+        return incremental_exact_dedup_bucketed(
+            batch_df, store_table, text_col=text_col, id_col=id_col,
+            exclude_epoch=epoch_id,
+        )
+
+    return partial(
+        _store_gate_epoch, gate=gate,
+        store_rows=lambda survivors: survivors.select("fingerprint"),
+        store_table=store_table, out_path=out_path, text_col=text_col,
+        id_col=id_col, profile_path=profile_path,
     )
 
 
@@ -1968,8 +1910,8 @@ def streaming_incremental_dedup_bucketed(
     the stream's critical path.  Survivors land under
     ``__epoch=<id>`` partitions of ``out_path``; survivor fingerprints
     append to the store with the same bucket spec, becoming history for
-    every later epoch.  See :func:`_bucketed_dedup_epoch` for the
-    replay-idempotency contract.
+    every later epoch.  See :func:`_store_gate_epoch` (and
+    ``streaming/epoch.py``) for the replay-idempotency contract.
 
     Observer caveat: ``foreachBatch`` runs in a CLONED SparkSession
     whose ``insertInto`` refreshes the CLONE's relation cache -- a
@@ -1985,19 +1927,10 @@ def streaming_incremental_dedup_bucketed(
 
     Returns the started ``StreamingQuery``.
     """
-    _require_epoch_layout(out_path)
-
-    def fb(batch_df: DataFrame, epoch_id: int) -> None:
-        _bucketed_dedup_epoch(
-            batch_df, int(epoch_id), store_table, out_path, text_col,
-            id_col, profile_path=profile_path,
-        )
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(fb)
-        .start()
+    return start_gate_stream(
+        stream, checkpoint_dir,
+        _bucketed_gate(store_table, out_path, text_col, id_col, profile_path),
+        out_path,
     )
 
 
@@ -2010,7 +1943,7 @@ def compact_bucketed_fingerprint_store(
 ) -> tuple[int, int]:
     """Maintenance rewrite for the bucketed fingerprint store: collapse
     the duplicate rows that epoch replays append
-    (:func:`_bucketed_dedup_epoch` -- bucketed catalog tables can only
+    (:func:`_store_gate_epoch` -- bucketed catalog tables can only
     APPEND, so a replayed epoch re-appends its fingerprints) back to
     one row per fingerprint, preserving both the bucket spec and the
     epoch tags.  Returns ``(rows_before, rows_after)``.
@@ -2366,29 +2299,24 @@ def _write_epoch_profile(
     Survivor frames may carry only (id, signature), so the admitted
     leg recovers text with a semi-join against the survivor ids
     (broadcast: the checkpointed survivor set is micro-batch-sized,
-    never corpus-sized).  Callers run this inside a dynamic
-    partitionOverwriteMode scope, so a replayed epoch REWRITES its
-    profile partition instead of double-counting."""
+    never corpus-sized).  The rows go through
+    :func:`..streaming.epoch.write_partition`, so a replayed epoch
+    REWRITES its profile partition instead of double-counting."""
     from .profile import profile_funnel
 
     admitted = batch_df.join(
         F.broadcast(survivors.select(id_col)), id_col, "semi"
     )
-    (
+    write_partition(
         profile_funnel(
             {"raw": batch_df, "admitted": admitted},
             text_col=text_col, id_col=id_col,
-        )
-        .withColumn("__epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .partitionBy("__epoch")
-        .parquet(profile_path)
+        ),
+        profile_path, epoch_id,
     )
 
 
-def _minhash_dedup_epoch(
-    batch_df: DataFrame,
-    epoch_id: int,
+def _minhash_gate(
     store_table: str,
     out_path: str,
     text_col: str,
@@ -2399,52 +2327,30 @@ def _minhash_dedup_epoch(
     bands: int,
     rows_per_band: int,
     profile_path: str | None = None,
-) -> None:
-    """One epoch of :func:`streaming_incremental_minhash_dedup`; same
-    replay decomposition as :func:`_bucketed_dedup_epoch` (survivor
-    partitions dynamic-overwrite; the band store only appends, with the
-    epoch's own rows excluded from its gate, so a replayed epoch
-    computes identical survivors and the duplicate band rows are
-    membership-harmless until compaction).  With ``profile_path``, the
-    epoch also dynamic-overwrites its own ``__epoch`` partition there
-    with the raw-vs-admitted :func:`..profile.profile_funnel` rows, so
-    a replayed epoch rewrites its profile too instead of double-counting."""
-    survivors = incremental_minhash_dedup(
-        batch_df, store_table, text_col=text_col, id_col=id_col,
-        threshold=threshold, n=n, num_hashes=num_hashes, bands=bands,
-        rows_per_band=rows_per_band, exclude_epoch=int(epoch_id),
-    )
-    survivors = survivors.localCheckpoint()
-    spark = batch_df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            survivors.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .partitionBy("__epoch")
-            .parquet(out_path)
+):
+    """The per-epoch function of
+    :func:`streaming_incremental_minhash_dedup`: a
+    :func:`_store_gate_epoch` over the MinHash band store."""
+
+    def gate(batch_df: DataFrame, epoch_id: int) -> DataFrame:
+        return incremental_minhash_dedup(
+            batch_df, store_table, text_col=text_col, id_col=id_col,
+            threshold=threshold, n=n, num_hashes=num_hashes, bands=bands,
+            rows_per_band=rows_per_band, exclude_epoch=epoch_id,
         )
-        if profile_path is not None:
-            _write_epoch_profile(
-                batch_df, survivors, int(epoch_id), profile_path,
-                text_col, id_col,
-            )
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    (
+
+    def store_rows(survivors: DataFrame) -> DataFrame:
         # empty signatures = sub-shingle pass-throughs; banding them
         # would pile every short doc onto the same degenerate band keys
-        _stamp_store_format(
-            band_rows(
-                survivors.filter(F.size("signature") > 0),
-                id_col, bands, rows_per_band, keep_signature=True,
-            )
-            .withColumn("__epoch", F.lit(int(epoch_id)))
+        return band_rows(
+            survivors.filter(F.size("signature") > 0),
+            id_col, bands, rows_per_band, keep_signature=True,
         )
-        .write.mode("append")
-        .insertInto(store_table)
+
+    return partial(
+        _store_gate_epoch, gate=gate, store_rows=store_rows,
+        store_table=store_table, out_path=out_path, text_col=text_col,
+        id_col=id_col, profile_path=profile_path,
     )
 
 
@@ -2471,7 +2377,9 @@ def streaming_incremental_minhash_dedup(
     must ``refreshTable`` to see the store grow.  Knobs
     (``n``/``num_hashes``/``bands``/``rows_per_band``) MUST match the
     store's seeding; band keys are derived values, so Spark cannot
-    validate the mismatch for you.
+    validate the mismatch for you.  Replay contract:
+    :func:`_store_gate_epoch` (``streaming/epoch.py`` for the
+    partitioned outputs).
 
     ``profile_path`` composes observability into the SAME query: each
     epoch also writes its raw-vs-admitted
@@ -2481,20 +2389,13 @@ def streaming_incremental_minhash_dedup(
 
     Returns the started ``StreamingQuery``.
     """
-    _require_epoch_layout(out_path)
-
-    def fb(batch_df: DataFrame, epoch_id: int) -> None:
-        _minhash_dedup_epoch(
-            batch_df, int(epoch_id), store_table, out_path, text_col,
-            id_col, threshold, n, num_hashes, bands, rows_per_band,
-            profile_path=profile_path,
-        )
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(fb)
-        .start()
+    return start_gate_stream(
+        stream, checkpoint_dir,
+        _minhash_gate(
+            store_table, out_path, text_col, id_col, threshold, n,
+            num_hashes, bands, rows_per_band, profile_path,
+        ),
+        out_path,
     )
 
 
@@ -2730,9 +2631,7 @@ def incremental_simhash_dedup(
     return fresh.join(dropped, id_col, "left_anti")
 
 
-def _simhash_dedup_epoch(
-    batch_df: DataFrame,
-    epoch_id: int,
+def _simhash_gate(
     store_table: str,
     out_path: str,
     text_col: str,
@@ -2740,42 +2639,24 @@ def _simhash_dedup_epoch(
     bits: int,
     max_hamming: int,
     profile_path: str | None = None,
-) -> None:
-    """One epoch of :func:`streaming_incremental_simhash_dedup`; replay
-    decomposition (and the optional ``profile_path`` funnel leg)
-    identical to :func:`_minhash_dedup_epoch`."""
-    survivors = incremental_simhash_dedup(
-        batch_df, store_table, text_col=text_col, id_col=id_col,
-        bits=bits, max_hamming=max_hamming, exclude_epoch=int(epoch_id),
-    )
-    survivors = survivors.localCheckpoint()
-    spark = batch_df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            survivors.withColumn("__epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .partitionBy("__epoch")
-            .parquet(out_path)
+):
+    """The per-epoch function of
+    :func:`streaming_incremental_simhash_dedup`: a
+    :func:`_store_gate_epoch` over the SimHash band store."""
+
+    def gate(batch_df: DataFrame, epoch_id: int) -> DataFrame:
+        return incremental_simhash_dedup(
+            batch_df, store_table, text_col=text_col, id_col=id_col,
+            bits=bits, max_hamming=max_hamming, exclude_epoch=epoch_id,
         )
-        if profile_path is not None:
-            _write_epoch_profile(
-                batch_df, survivors, int(epoch_id), profile_path,
-                text_col, id_col,
-            )
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    (
-        _stamp_store_format(
-            simhash_band_rows(
-                survivors, id_col, bits, max_hamming, keep_signature=True
-            )
-            .withColumn("__epoch", F.lit(int(epoch_id)))
-        )
-        .write.mode("append")
-        .insertInto(store_table)
+
+    return partial(
+        _store_gate_epoch, gate=gate,
+        store_rows=lambda survivors: simhash_band_rows(
+            survivors, id_col, bits, max_hamming, keep_signature=True
+        ),
+        store_table=store_table, out_path=out_path, text_col=text_col,
+        id_col=id_col, profile_path=profile_path,
     )
 
 
@@ -2794,24 +2675,19 @@ def streaming_incremental_simhash_dedup(
     :func:`streaming_incremental_minhash_dedup` with Hamming semantics
     and pigeonhole-exact recall within ``max_hamming``.  Same observer
     caveat (``refreshTable``), same knob-match requirement
-    (``bits``/``max_hamming`` must equal the store's seeding), and the
-    same composed ``profile_path`` funnel leg.
+    (``bits``/``max_hamming`` must equal the store's seeding), the
+    same composed ``profile_path`` funnel leg and the same
+    :func:`_store_gate_epoch` replay contract.
 
     Returns the started ``StreamingQuery``.
     """
-    _require_epoch_layout(out_path)
-
-    def fb(batch_df: DataFrame, epoch_id: int) -> None:
-        _simhash_dedup_epoch(
-            batch_df, int(epoch_id), store_table, out_path, text_col,
-            id_col, bits, max_hamming, profile_path=profile_path,
-        )
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(fb)
-        .start()
+    return start_gate_stream(
+        stream, checkpoint_dir,
+        _simhash_gate(
+            store_table, out_path, text_col, id_col, bits, max_hamming,
+            profile_path,
+        ),
+        out_path,
     )
 
 

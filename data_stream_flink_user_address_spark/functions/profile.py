@@ -14,9 +14,12 @@ shuffle, ~2% relative error, which is the right trade for a report.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..streaming.epoch import start_gate_stream, write_partition
 from .rounding import round_parity
 
 from .text import norm_ws, token_count
@@ -114,15 +117,7 @@ def _profile_epoch(
 ) -> None:
     """One epoch of :func:`streaming_profile`: module-level so replay
     idempotency is unit-testable without a live stream."""
-    row = corpus_profile(batch_df, text_col, id_col).withColumn(
-        "__epoch", F.lit(int(epoch_id))
-    )
-    (
-        row.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__epoch")
-        .parquet(out_path)
-    )
+    write_partition(corpus_profile(batch_df, text_col, id_col), out_path, epoch_id)
 
 
 def streaming_profile(
@@ -137,21 +132,20 @@ def streaming_profile(
     volumes, length percentiles, HLL dup rate per batch.  Reading
     ``out_path`` gives the ingest-rate/quality time series a crawl
     operator watches; a replayed epoch rewrites exactly its own
-    partition (the gate family's idempotency contract).  Pair with the
+    partition (the ``streaming/epoch.py`` contract), and a flat-layout
+    ``out_path`` raises ``ValueError``.  Pair with the
     admission gates: profile the RAW stream on one branch and the
     gate's survivor directory on another, and the two series give
     kept-fraction drift over time.  Returns the started
     ``StreamingQuery``.
     """
-
-    def fb(batch_df: DataFrame, epoch_id: int) -> None:
-        _profile_epoch(batch_df, int(epoch_id), out_path, text_col, id_col)
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(fb)
-        .start()
+    return start_gate_stream(
+        stream, checkpoint_dir,
+        partial(
+            _profile_epoch, out_path=out_path, text_col=text_col,
+            id_col=id_col,
+        ),
+        out_path,
     )
 
 

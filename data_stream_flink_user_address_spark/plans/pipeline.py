@@ -15,29 +15,24 @@ Differences from the reference, by design (SURVEY.md SS7 item 8):
 - counts are driven by an explicit ingest-time column, making the
   reference's processing-time behavior reproducible in tests.
 
-Execution modes
----------------
-``mode="shared"`` (default): ONE streaming query runs the stateful
-join; its ``foreachBatch`` multiplexes each joined micro-batch to all
-three upserts.  Structured Streaming has no cross-query plan sharing,
-so the previous layout (one query per sink) executed the join -- the
-expensive stateful operator -- three times per micro-batch and kept
-three copies of its keyed state.  Sharing the join is the Flink-graph
-behavior (Main.java wires one joined stream into all three sinks) and
-roughly triples effective join throughput.
+Execution
+---------
+ONE streaming query runs the stateful join; its ``foreachBatch``
+multiplexes each joined micro-batch to all three upserts.  Structured
+Streaming has no cross-query plan sharing, so a layout with one query
+per sink would execute the join -- the expensive stateful operator --
+three times per micro-batch and keep three copies of its keyed state.
+Sharing the join is the Flink-graph behavior (Main.java wires one
+joined stream into all three sinks); the deleted one-query-per-sink
+layout's throughput is recorded in ``STREAM_BENCH.json`` (2.2x slower).
 
-In shared mode the windowed counts are accumulated in the sink tables
-themselves (per key: latest window_start, running count, last applied
-epoch) instead of in a checkpointed streaming aggregation.  Replay
-safety: a micro-batch retry re-runs ``foreachBatch`` with the same
-``epoch_id``; count rows whose stored ``__epoch`` equals the incoming
-epoch already contain this batch's contribution and are skipped, so the
-add-merge stays exactly-once per (key, epoch) on both sink backends.
-
-``mode="per_sink"``: the previous three-query layout (join re-executed
-per sink, window counts in Spark agg state).  Kept for comparison
-benchmarks (bench_stream.py) and as the fallback shape if a deployment
-needs per-sink checkpoint isolation.
+The windowed counts are accumulated in the sink tables themselves (per
+key: latest window_start, running count, last applied epoch) instead of
+in a checkpointed streaming aggregation.  Replay safety: a micro-batch
+retry re-runs ``foreachBatch`` with the same ``epoch_id``; count rows
+whose stored ``__epoch`` equals the incoming epoch already contain this
+batch's contribution and are skipped, so the add-merge stays
+exactly-once per (key, epoch) on both sink backends.
 """
 
 from __future__ import annotations
@@ -74,15 +69,11 @@ class ReferencePipeline:
         window: str = "1 minute",
         seq_col: str | None = "seq",
         transactional: bool = True,
-        mode: str = "shared",
     ):
-        if mode not in ("shared", "per_sink"):
-            raise ValueError(f"mode must be 'shared' or 'per_sink', got {mode!r}")
         self.spark = spark
         self.out_dir = out_dir
         self.checkpoint_dir = checkpoint_dir
         self.window = window
-        self.mode = mode
         # The commit-log backend (cross-bucket crash atomicity,
         # multi-writer safe) is the default; transactional=False selects
         # the simpler parquet-directory store -- same upsert semantics,
@@ -92,7 +83,7 @@ class ReferencePipeline:
         self.queries = []
         self.sinks: dict[str, KeyedUpsertSink | TransactionalKeyedUpsertSink] = {}
         # resolved from the checkpoint in start(); namespaces the
-        # shared-mode epoch guard (see _run_namespace)
+        # epoch guard (see _run_namespace)
         self._run_id: str = ""
 
     @staticmethod
@@ -121,10 +112,6 @@ class ReferencePipeline:
             f.write(rid)
         return rid
 
-    # ------------------------------------------------------------------
-    # shared-join mode
-    # ------------------------------------------------------------------
-
     def _merge_window_counts(self, sink, batch: DataFrame, dim: str, epoch_id: int) -> None:
         """Fold one joined micro-batch into a windowed-count sink table.
 
@@ -132,8 +119,8 @@ class ReferencePipeline:
         The batch's (window x dim) increments are added to the stored
         count when the window matches, or start a fresh count when the
         batch has entered a newer window -- the row always holds the
-        LATEST window's running total, which is what the per_sink mode's
-        update-mode aggregation + upsert produced at every trigger.
+        LATEST window's running total, what an update-mode windowed
+        aggregation + upsert would produce at every trigger.
         Rows whose stored (__run, __epoch) equals (this run, ``epoch_id``)
         were written by a previous attempt of this very batch
         (micro-batch retry); their increments are dropped so replay
@@ -152,26 +139,14 @@ class ReferencePipeline:
         )
         cur = sink.read()
         if cur is not None:
-            if "__epoch" not in cur.columns:
-                # table written by per_sink mode (no epoch column): treat
-                # every stored row as a prior-epoch total so a mode
-                # switch on an existing out_dir keeps accumulating
-                cur = cur.withColumn("__epoch", F.lit(-1).cast("long"))
-            else:
-                # rows merged THROUGH the sink from a legacy table carry
-                # NULL here (KeyedUpsertSink.apply's allowMissingColumns
-                # union); NULL would also null the this_attempt
-                # predicate and ~NULL drops the row -- coalesce to the
-                # same prior-epoch sentinel instead
-                cur = cur.withColumn(
-                    "__epoch", F.coalesce(F.col("__epoch"), F.lit(-1).cast("long"))
+            missing = [c for c in ("__epoch", "__run") if c not in cur.columns]
+            if missing:
+                raise ValueError(
+                    f"count table {sink.path!r} has no {'/'.join(missing)} "
+                    "column: it predates the epoch-guarded count layout, "
+                    "which this pipeline no longer converts; start from a "
+                    "fresh out_dir"
                 )
-            if "__run" not in cur.columns:
-                # pre-namespace table: '' never equals a minted run id,
-                # so legacy rows always read as prior totals
-                cur = cur.withColumn("__run", F.lit(""))
-            else:
-                cur = cur.withColumn("__run", F.coalesce(F.col("__run"), F.lit("")))
             touched = cur.join(inc.select(dim).distinct(), dim, "left_semi")
             this_attempt = (F.col("__epoch") == F.lit(epoch_id)) & (
                 F.col("__run") == F.lit(self._run_id)
@@ -223,55 +198,24 @@ class ReferencePipeline:
 
         return fn
 
-    # ------------------------------------------------------------------
-
     def start(self):
-        """Start the sink queries (one in shared mode, three in per_sink)."""
-        ua_sink = self.sink_cls(
+        """Start the shared streaming query."""
+        self.sinks["userAddress"] = self.sink_cls(
             self.spark, os.path.join(self.out_dir, "userAddress"), key="userId", order_col="seq"
         )
-        self.sinks["userAddress"] = ua_sink
         for dim, table in (("state", "userCountByState"), ("country", "userCountByCountry")):
             self.sinks[table] = self.sink_cls(
                 self.spark, os.path.join(self.out_dir, table), key=dim
             )
 
-        if self.mode == "shared":
-            shared_ckpt = os.path.join(self.checkpoint_dir, "shared")
-            self._run_id = self._run_namespace(shared_ckpt)
-            self.queries.append(
-                self.joined.writeStream.outputMode("append")
-                .option("checkpointLocation", shared_ckpt)
-                .foreachBatch(self._shared_foreach_batch())
-                .start()
-            )
-            return self.queries
-
-        # --- per_sink: the legacy three-query layout ---
-        joined = self.joined.withColumn("ingest_time", F.current_timestamp())
+        shared_ckpt = os.path.join(self.checkpoint_dir, "shared")
+        self._run_id = self._run_namespace(shared_ckpt)
         self.queries.append(
-            joined.writeStream.outputMode("append")
-            .option("checkpointLocation", os.path.join(self.checkpoint_dir, "ua"))
-            .foreachBatch(ua_sink.foreach_batch())
+            self.joined.writeStream.outputMode("append")
+            .option("checkpointLocation", shared_ckpt)
+            .foreachBatch(self._shared_foreach_batch())
             .start()
         )
-        for dim, table in (("state", "userCountByState"), ("country", "userCountByCountry")):
-            sink = self.sinks[table]
-            exploded = joined.withColumn("addr", F.explode("addresses"))
-            counted = (
-                exploded.groupBy(
-                    F.window("ingest_time", self.window).alias("win"),
-                    F.col(f"addr.{dim}").alias(dim),
-                )
-                .agg(F.count(F.lit(1)).alias("count"))
-                .select(dim, "count", F.col("win.start").alias("window_start"))
-            )
-            self.queries.append(
-                counted.writeStream.outputMode("update")
-                .option("checkpointLocation", os.path.join(self.checkpoint_dir, dim))
-                .foreachBatch(sink.foreach_batch())
-                .start()
-            )
         return self.queries
 
     def process_all(self):

@@ -4,7 +4,7 @@ from .stateful_join import (
     union_with_discriminator,
 )
 from .metrics import JsonlMetricsListener, read_metrics
-from .sinks import KeyedUpsertSink, console_sink, upsert_foreach_batch
+from .sinks import KeyedUpsertSink, console_sink
 from .stream_join import watermarked_stream_join
 
 __all__ = [
@@ -12,7 +12,6 @@ __all__ = [
     "stateful_user_address_join",
     "union_with_discriminator",
     "KeyedUpsertSink",
-    "upsert_foreach_batch",
     "console_sink",
     "JsonlMetricsListener",
     "read_metrics",

@@ -124,12 +124,11 @@ class KeyedUpsertSink:
             )
             # new batch wins on key collision (MongoSink $set upsert).
             # allowMissingColumns: a stored table written under an older
-            # schema (e.g. pre-__run/__epoch pipeline layouts) may lack
-            # columns the incoming batch now carries -- survivors get
-            # NULL there instead of failing the first post-upgrade batch
-            # with AnalysisException; writers that compare such columns
-            # must treat NULL as "legacy row" (see
-            # plans/pipeline.py:_merge_window_counts).
+            # schema may lack columns the incoming batch now carries --
+            # survivors get NULL there instead of failing the union with
+            # AnalysisException.  (The reference pipeline's count tables
+            # refuse such a table before merging: see
+            # plans/pipeline.py:_merge_window_counts.)
             merged = incoming.unionByName(survivors, allowMissingColumns=True)
         (
             merged.write.mode("overwrite")
@@ -419,7 +418,7 @@ class TransactionalKeyedUpsertSink:
                     .join(incoming.select(self.key), on=self.key, how="left_anti")
                     .withColumn("__bucket", self._bucket())
                 )
-                # allowMissingColumns: same legacy-schema tolerance as
+                # allowMissingColumns: same older-schema tolerance as
                 # KeyedUpsertSink.apply -- survivors from a table
                 # persisted under an older column set read as NULL in
                 # the new columns rather than failing the union
@@ -504,18 +503,6 @@ class TransactionalKeyedUpsertSink:
             self.apply(batch_df)
 
         return fn
-
-
-def upsert_foreach_batch(
-    spark: SparkSession,
-    path: str,
-    key: str,
-    order_col: str | None = None,
-    transactional: bool = False,
-):
-    """One-call ``foreachBatch`` function factory (K1 instances K2-K4)."""
-    cls = TransactionalKeyedUpsertSink if transactional else KeyedUpsertSink
-    return cls(spark, path, key, order_col).foreach_batch()
 
 
 def console_sink(df: DataFrame, **options):

@@ -597,7 +597,7 @@ class TestStreamingBucketedDedup:
         (partition overwrite), and the store's MEMBERSHIP set is
         unchanged; a later epoch then gates correctly against it."""
         from data_stream_flink_user_address_spark.functions.dedup import (
-            _bucketed_dedup_epoch,
+            _bucketed_gate,
             build_bucketed_fingerprint_store,
         )
 
@@ -611,9 +611,9 @@ class TestStreamingBucketedDedup:
         try:
             b1 = self._mk(spark, [(10, "alpha"), (11, "beta"), (12, "beta")])
             for _ in range(2):  # epoch 0 runs, "crashes" post-commit, replays
-                _bucketed_dedup_epoch(
-                    b1, 0, "fp_replay_bkt_t", out, "text", "doc_id"
-                )
+                _bucketed_gate(
+                    "fp_replay_bkt_t", out, "text", "doc_id",
+                )(b1, 0)
             rows = spark.read.parquet(out).collect()
             assert {r.doc_id for r in rows} == {11}
             assert {r["__epoch"] for r in rows} == {0}
@@ -623,9 +623,9 @@ class TestStreamingBucketedDedup:
             # the double-append left duplicate beta ROWS (documented:
             # bucketed tables only append) -- harmless to the gate:
             b2 = self._mk(spark, [(20, "beta"), (21, "delta")])
-            _bucketed_dedup_epoch(
-                b2, 1, "fp_replay_bkt_t", out, "text", "doc_id"
-            )
+            _bucketed_gate(
+                "fp_replay_bkt_t", out, "text", "doc_id",
+            )(b2, 1)
             rows = spark.read.parquet(out).collect()
             assert {r.doc_id for r in rows} == {11, 21}
         finally:
@@ -636,7 +636,7 @@ class TestStreamingBucketedDedup:
         admitted leg recovers text even though exact survivors DO carry
         it (one uniform recovery path across the gate family)."""
         from data_stream_flink_user_address_spark.functions.dedup import (
-            _bucketed_dedup_epoch,
+            _bucketed_gate,
             build_bucketed_fingerprint_store,
         )
 
@@ -651,10 +651,9 @@ class TestStreamingBucketedDedup:
         try:
             b1 = self._mk(spark, [(10, "alpha"), (11, "beta"), (12, "beta")])
             for _ in range(2):
-                _bucketed_dedup_epoch(
-                    b1, 0, "fp_prof_bkt_t", out, "text", "doc_id",
-                    profile_path=prof,
-                )
+                _bucketed_gate(
+                    "fp_prof_bkt_t", out, "text", "doc_id", profile_path=prof,
+                )(b1, 0)
             got = {
                 (r.stage, r["__epoch"]): r.n_docs
                 for r in spark.read.parquet(prof).collect()
@@ -670,7 +669,7 @@ class TestStreamingBucketedDedup:
         identical survivors against the compacted table, and its scan
         is still bucketed (zero store-side exchange preserved)."""
         from data_stream_flink_user_address_spark.functions.dedup import (
-            _bucketed_dedup_epoch,
+            _bucketed_gate,
             build_bucketed_fingerprint_store,
             compact_bucketed_fingerprint_store,
             incremental_exact_dedup_bucketed,
@@ -687,9 +686,9 @@ class TestStreamingBucketedDedup:
         try:
             b1 = self._mk(spark, [(10, "beta"), (11, "gamma")])
             for _ in range(2):  # replay doubles epoch 0's store rows
-                _bucketed_dedup_epoch(
-                    b1, 0, "fp_cmp_src_t", out, "text", "doc_id"
-                )
+                _bucketed_gate(
+                    "fp_cmp_src_t", out, "text", "doc_id",
+                )(b1, 0)
             before, after = compact_bucketed_fingerprint_store(
                 spark, "fp_cmp_src_t", "fp_cmp_dst_t",
                 str(tmp_path / "store_c"),
@@ -769,17 +768,16 @@ class TestIncrementalMinhashDedup:
 
     def test_epoch_replay_and_history(self, spark, tmp_path):
         from data_stream_flink_user_address_spark.functions.dedup import (
-            _minhash_dedup_epoch,
+            _minhash_gate,
         )
         self._seed(spark, "mh_replay_fn_t", tmp_path)
         out = str(tmp_path / "out")
         try:
             b1 = self._mk(spark, [(100, self.NOVEL2), (101, self.NOVEL2 + " extra")])
             for _ in range(2):  # replayed epoch excludes its own appends
-                _minhash_dedup_epoch(
-                    b1, 0, "mh_replay_fn_t", out, "text", "doc_id",
-                    0.7, 5, 16, 4, 4,
-                )
+                _minhash_gate(
+                    "mh_replay_fn_t", out, "text", "doc_id", 0.7, 5, 16, 4, 4,
+                )(b1, 0)
             rows = spark.read.parquet(out).collect()
             assert sorted((r.doc_id, r["__epoch"]) for r in rows) == [(100, 0)]
             # store membership: 2 seed + 1 survivor, 4 band rows each
@@ -792,10 +790,9 @@ class TestIncrementalMinhashDedup:
                 (201, "yet another fresh text on adaptive query execution "
                       "and skew join splitting at runtime inside spark"),
             ])
-            _minhash_dedup_epoch(
-                b2, 1, "mh_replay_fn_t", out, "text", "doc_id",
-                0.7, 5, 16, 4, 4,
-            )
+            _minhash_gate(
+                "mh_replay_fn_t", out, "text", "doc_id", 0.7, 5, 16, 4, 4,
+            )(b2, 1)
             rows = spark.read.parquet(out).collect()
             assert sorted((r.doc_id, r["__epoch"]) for r in rows) == [
                 (100, 0), (201, 1),
@@ -807,7 +804,7 @@ class TestIncrementalMinhashDedup:
         """profile_path writes raw-vs-admitted funnel rows per epoch,
         and a replayed epoch REWRITES its partition (no double count)."""
         from data_stream_flink_user_address_spark.functions.dedup import (
-            _minhash_dedup_epoch,
+            _minhash_gate,
         )
         self._seed(spark, "mh_prof_fn_t", tmp_path)
         out = str(tmp_path / "out")
@@ -819,10 +816,10 @@ class TestIncrementalMinhashDedup:
                 (102, self.BASE),                # exact dup of seed: dropped
             ])
             for _ in range(2):  # replay must rewrite, not append
-                _minhash_dedup_epoch(
-                    b1, 0, "mh_prof_fn_t", out, "text", "doc_id",
-                    0.7, 5, 16, 4, 4, profile_path=prof,
-                )
+                _minhash_gate(
+                    "mh_prof_fn_t", out, "text", "doc_id", 0.7, 5, 16, 4, 4,
+                    profile_path=prof,
+                )(b1, 0)
             rows = spark.read.parquet(prof).collect()
             got = {(r.stage, r["__epoch"]): r.n_docs for r in rows}
             assert got == {("raw", 0): 3, ("admitted", 0): 1}
@@ -887,7 +884,7 @@ class TestIncrementalMinhashDedup:
         doc); gate semantics and bucket spec unchanged against the
         compacted table."""
         from data_stream_flink_user_address_spark.functions.dedup import (
-            _minhash_dedup_epoch,
+            _minhash_gate,
             compact_minhash_band_store,
             incremental_minhash_dedup,
         )
@@ -896,10 +893,9 @@ class TestIncrementalMinhashDedup:
         try:
             b1 = self._mk(spark, [(100, self.NOVEL2)])
             for _ in range(2):  # replay doubles epoch 0's band rows
-                _minhash_dedup_epoch(
-                    b1, 0, "mh_cmp_src_t", out, "text", "doc_id",
-                    0.7, 5, 16, 4, 4,
-                )
+                _minhash_gate(
+                    "mh_cmp_src_t", out, "text", "doc_id", 0.7, 5, 16, 4, 4,
+                )(b1, 0)
             before, after = compact_minhash_band_store(
                 spark, "mh_cmp_src_t", "mh_cmp_dst_t",
                 str(tmp_path / "store_c"),
@@ -930,7 +926,7 @@ class TestIncrementalMinhashDedup:
         an empty signature, and the epoch body keeps them OUT of the
         band store (no degenerate hot band keys)."""
         from data_stream_flink_user_address_spark.functions.dedup import (
-            _minhash_dedup_epoch,
+            _minhash_gate,
             incremental_minhash_dedup,
         )
         self._seed(spark, "mh_short_fn_t", tmp_path)
@@ -945,10 +941,10 @@ class TestIncrementalMinhashDedup:
             assert set(got) == {5, 7}
             assert got[5] == [] and len(got[7]) == 16
             # streaming epoch: short doc lands in survivors, not store
-            _minhash_dedup_epoch(
-                batch, 0, "mh_short_fn_t", str(tmp_path / "out"),
-                "text", "doc_id", 0.7, 5, 16, 4, 4,
-            )
+            _minhash_gate(
+                "mh_short_fn_t", str(tmp_path / "out"), "text", "doc_id",
+                0.7, 5, 16, 4, 4,
+            )(batch, 0)
             surv = spark.read.parquet(str(tmp_path / "out"))
             assert {r.doc_id for r in surv.collect()} == {5, 7}
             spark.catalog.refreshTable("mh_short_fn_t")
@@ -1066,7 +1062,7 @@ class TestIncrementalSimhashDedup:
 
     def test_epoch_replay_and_streaming(self, spark, tmp_path):
         from data_stream_flink_user_address_spark.functions.dedup import (
-            _simhash_dedup_epoch,
+            _simhash_gate,
             compact_simhash_band_store,
         )
         self._seed(spark, "sh_replay_fn_t", tmp_path)
@@ -1077,9 +1073,9 @@ class TestIncrementalSimhashDedup:
                 (101, self.NOVEL2.replace("modern", "legacy")),
             ])
             for _ in range(2):  # replay excludes its own appends
-                _simhash_dedup_epoch(
-                    b1, 0, "sh_replay_fn_t", out, "text", "doc_id", 32, 3
-                )
+                _simhash_gate(
+                    "sh_replay_fn_t", out, "text", "doc_id", 32, 3,
+                )(b1, 0)
             rows = spark.read.parquet(out).collect()
             assert sorted((r.doc_id, r["__epoch"]) for r in rows) == [(100, 0)]
             # later epoch gates against epoch 0's survivor
@@ -1088,9 +1084,9 @@ class TestIncrementalSimhashDedup:
                 (201, "a wholly fresh text on shuffle partition coalescing "
                       "and adaptive skew split behaviour at runtime"),
             ])
-            _simhash_dedup_epoch(
-                b2, 1, "sh_replay_fn_t", out, "text", "doc_id", 32, 3
-            )
+            _simhash_gate(
+                "sh_replay_fn_t", out, "text", "doc_id", 32, 3,
+            )(b2, 1)
             rows = spark.read.parquet(out).collect()
             assert sorted((r.doc_id, r["__epoch"]) for r in rows) == [
                 (100, 0), (201, 1),
@@ -1110,7 +1106,7 @@ class TestIncrementalSimhashDedup:
         """The SimHash gate shares _write_epoch_profile: replayed epoch
         rewrites its funnel partition."""
         from data_stream_flink_user_address_spark.functions.dedup import (
-            _simhash_dedup_epoch,
+            _simhash_gate,
         )
         self._seed(spark, "sh_prof_fn_t", tmp_path)
         out = str(tmp_path / "out")
@@ -1121,10 +1117,9 @@ class TestIncrementalSimhashDedup:
                 (101, self.NOVEL2.replace("modern", "legacy")),   # near-dup
             ])
             for _ in range(2):
-                _simhash_dedup_epoch(
-                    b1, 0, "sh_prof_fn_t", out, "text", "doc_id", 32, 3,
-                    profile_path=prof,
-                )
+                _simhash_gate(
+                    "sh_prof_fn_t", out, "text", "doc_id", 32, 3, profile_path=prof,
+                )(b1, 0)
             got = {
                 (r.stage, r["__epoch"]): r.n_docs
                 for r in spark.read.parquet(prof).collect()

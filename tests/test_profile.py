@@ -113,6 +113,17 @@ class TestStreamingProfile:
         assert len(rows) == 1
         assert rows[0].n_docs == 2 and rows[0].total_tokens == 5
 
+    def test_flat_layout_rejected(self, spark, tmp_path):
+        from data_stream_flink_user_address_spark.functions.profile import (
+            streaming_profile,
+        )
+
+        out = str(tmp_path / "flat")
+        spark.createDataFrame([(1, "x")], ["doc_id", "text"]).write.parquet(out)
+        stream = spark.readStream.format("rate").load()
+        with pytest.raises(ValueError, match="flat-append"):
+            streaming_profile(stream, out, str(tmp_path / "ck"))
+
     def test_streaming_end_to_end(self, spark, tmp_path):
         import json as _json
         import os as _os

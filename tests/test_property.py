@@ -447,7 +447,7 @@ def test_minhash_gate_second_pass_admits_only_subshingle(
     from pyspark.sql import Row
 
     from data_stream_flink_user_address_spark.functions.dedup import (
-        _minhash_dedup_epoch,
+        _minhash_gate,
         build_minhash_band_store,
     )
 
@@ -469,12 +469,12 @@ def test_minhash_gate_second_pass_admits_only_subshingle(
 
     out = str(tmp_path / f"out_{_uuid.uuid4().hex}")
     try:
-        _minhash_dedup_epoch(
-            batch, 0, "mh_prop_idem_t", out, "text", "doc_id", 0.7, 5, 16, 4, 4
-        )
-        _minhash_dedup_epoch(
-            batch, 1, "mh_prop_idem_t", out, "text", "doc_id", 0.7, 5, 16, 4, 4
-        )
+        _minhash_gate(
+            "mh_prop_idem_t", out, "text", "doc_id", 0.7, 5, 16, 4, 4,
+        )(batch, 0)
+        _minhash_gate(
+            "mh_prop_idem_t", out, "text", "doc_id", 0.7, 5, 16, 4, 4,
+        )(batch, 1)
     finally:
         spark.sql("DROP TABLE IF EXISTS mh_prop_idem_t")
     rows = spark.read.parquet(out).collect()

@@ -151,14 +151,14 @@ def _write_workload(tmp_path, n_users=8):
     return udir, adir
 
 
-def _run_pipeline(spark, tmp_path, mode):
-    udir, adir = _write_workload(tmp_path / mode)
-    out = str(tmp_path / mode / "out")
+def _run_pipeline(spark, tmp_path):
+    udir, adir = _write_workload(tmp_path)
+    out = str(tmp_path / "out")
     users = spark.readStream.schema(USER_SEQ).json(udir)
     addresses = spark.readStream.schema(ADDR_SEQ).json(adir)
     pipe = ReferencePipeline(spark, users, addresses, out,
-                             str(tmp_path / mode / "ckpt"),
-                             window="365 days", transactional=False, mode=mode)
+                             str(tmp_path / "ckpt"),
+                             window="365 days", transactional=False)
     pipe.start()
     try:
         pipe.process_all()
@@ -167,26 +167,23 @@ def _run_pipeline(spark, tmp_path, mode):
     return pipe
 
 
-def test_shared_mode_matches_per_sink_mode(spark, tmp_path):
+def test_shared_pipeline_final_tables(spark, tmp_path):
     """The shared-join foreachBatch multiplexer (one join execution)
-    must land the same three final tables as the legacy three-query
-    layout (join executed per sink)."""
-    shared = _run_pipeline(spark, tmp_path, "shared")
-    legacy = _run_pipeline(spark, tmp_path, "per_sink")
+    lands the three final tables _write_workload's fixed rows imply:
+    8 users with addresses in seq order; emit-per-event inflation
+    counts address j once per snapshot from the j-th on (S0 x3, S1 x2,
+    S2 x1 per user), and each user's 3 snapshots carry 1+2+3 address
+    rows into its country C{i % 2}."""
+    pipe = _run_pipeline(spark, tmp_path)
 
-    for table, key in (("userAddress", "userId"),
-                       ("userCountByState", "state"),
-                       ("userCountByCountry", "country")):
-        s = {r[key]: r for r in shared.sinks[table].read().collect()}
-        l = {r[key]: r for r in legacy.sinks[table].read().collect()}
-        assert set(s) == set(l), table
-        if table == "userAddress":
-            for k in s:
-                assert [a["address"] for a in s[k]["addresses"]] == \
-                       [a["address"] for a in l[k]["addresses"]]
-        else:
-            assert {k: v["count"] for k, v in s.items()} == \
-                   {k: v["count"] for k, v in l.items()}, table
+    ua = {r["userId"]: r for r in pipe.sinks["userAddress"].read().collect()}
+    assert {u: [a["address"] for a in r["addresses"]] for u, r in ua.items()} == {
+        f"u{i}": [f"addr{i}-{j}" for j in range(3)] for i in range(8)
+    }
+    st = pipe.sinks["userCountByState"].read().collect()
+    assert {r["state"]: r["count"] for r in st} == {"S0": 24, "S1": 16, "S2": 8}
+    co = pipe.sinks["userCountByCountry"].read().collect()
+    assert {r["country"]: r["count"] for r in co} == {"C0": 24, "C1": 24}
 
 
 def test_shared_mode_epoch_replay_guard(spark, tmp_path):
@@ -235,59 +232,39 @@ def test_shared_mode_epoch_replay_guard(spark, tmp_path):
         {"S0": 6, "S1": 3}
 
 
-def test_merge_window_counts_over_legacy_per_sink_table(spark, tmp_path):
-    """Upgrade-over-existing-out_dir continuation (r11 ADVICE medium):
-    a count table persisted by the per_sink mode (or a pre-namespace
-    run) physically lacks __epoch/__run.  The shared stream's first
-    batch merges THROUGH KeyedUpsertSink.apply, whose unionByName must
-    tolerate the narrower stored schema (allowMissingColumns) instead
-    of raising AnalysisException; and survivors that came out of that
-    union carrying NULL __epoch/__run must read as prior totals on the
-    NEXT merge (coalesce-to-sentinel), not be dropped by a
-    three-valued-logic ~NULL filter."""
+def test_merge_window_counts_rejects_legacy_table(spark, tmp_path):
+    """A count table without __epoch/__run (written by a pre-epoch
+    pipeline layout) cannot be told apart from this run's increments:
+    the merge must refuse it, naming the table and the fresh-out_dir
+    remedy, and leave the stored rows untouched."""
+    import pytest
     from pyspark.sql import functions as F
     from data_stream_flink_user_address_spark.plans.pipeline import ReferencePipeline as RP
 
     pipe = RP.__new__(RP)
     pipe.window = "365 days"
     pipe._run_id = "runA"
-    # n_buckets=1: every stored key shares the incoming keys' bucket, so
-    # non-batch keys flow through the union as survivors deterministically
-    sink = KeyedUpsertSink(spark, str(tmp_path / "cnt"), key="state", n_buckets=1)
+    batch = spark.createDataFrame(
+        [("u", [("a", "c", "S0", "z", "C0")])],
+        "userId string, addresses array<struct<address:string,city:string,"
+        "state:string,zipCode:string,country:string>>",
+    ).withColumn("ingest_time", F.current_timestamp())
 
-    stamp = "2026-01-15 00:00:00"
-    wstart = spark.sql(
-        f"SELECT window(timestamp'{stamp}', '365 days').start AS s"
-    ).collect()[0]["s"]
-    # per_sink-mode layout: (dim, count, window_start) only
-    sink.apply(spark.createDataFrame(
-        [("S0", 5, wstart), ("S9", 7, wstart)],
-        "state string, count bigint, window_start timestamp",
-    ))
-    assert "__epoch" not in sink.read().columns
-
-    def batch(*states):
-        return spark.createDataFrame(
-            [("u", [("a", "c", s, "z", "C0")]) for s in states],
-            "userId string, addresses array<struct<address:string,city:string,"
-            "state:string,zipCode:string,country:string>>",
-        ).withColumn("ingest_time", F.lit(stamp).cast("timestamp"))
-
-    # first shared-mode batch over the legacy table: must not raise, and
-    # the legacy count reads as a prior total
-    pipe._merge_window_counts(sink, batch("S0"), "state", epoch_id=0)
-    got = {r["state"]: r["count"] for r in sink.read().collect()}
-    assert got == {"S0": 6, "S9": 7}
-
-    # S9 was rewritten as a NULL-__epoch/__run survivor of that merge;
-    # the next batch touching it must accumulate, not drop it
-    pipe._merge_window_counts(sink, batch("S9"), "state", epoch_id=1)
-    got = {r["state"]: r["count"] for r in sink.read().collect()}
-    assert got == {"S0": 6, "S9": 8}
-
-    # and the normal replay guard still holds on the upgraded table
-    pipe._merge_window_counts(sink, batch("S9"), "state", epoch_id=1)
-    assert {r["state"]: r["count"] for r in sink.read().collect()} == got
+    for name, stored in (
+        # no __epoch, no __run
+        ("cnt", spark.createDataFrame(
+            [("S0", 5)], "state string, count bigint")),
+        # __epoch but no __run
+        ("cnt_epoch", spark.createDataFrame(
+            [("S0", 5, 0)], "state string, count bigint, __epoch long")),
+    ):
+        path = str(tmp_path / name)
+        sink = KeyedUpsertSink(spark, path, key="state")
+        sink.apply(stored)
+        with pytest.raises(ValueError, match="fresh out_dir") as err:
+            pipe._merge_window_counts(sink, batch, "state", epoch_id=0)
+        assert path in str(err.value)
+        assert {r["state"]: r["count"] for r in sink.read().collect()} == {"S0": 5}
 
 
 def test_run_namespace_marker_survives_restart(tmp_path):
