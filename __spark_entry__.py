@@ -1824,7 +1824,7 @@ _IVF_TRAIN_ITERS = 1
 def _q_similarity_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-flat ANN with Lloyd-trained coarse centroids: stride-31
     deterministic init, nprobe-list probing, plus spherical-k-means
-    rounds (_IVF_TRAIN_ITERS) (assign = broadcast argmax-cosine; update = per-dim avg,
+    rounds (_IVF_TRAIN_ITERS) (assign = Arrow argmax-cosine pass; update = per-dim avg,
     rounded so both engines train bit-identical centroids).
 
     r13 registry fold: subsumes the retired ``similarity_ivf_topk``
@@ -1870,7 +1870,6 @@ def _trained_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return train_ivf_centroids(
         _embs(spark, sf_dir),
         iters=_IVF_TRAIN_ITERS, centroid_stride=_IVF_STRIDE, dim=_EMB_DIM,
-        kernel="pandas",
     ).localCheckpoint(eager=False)
 
 
@@ -1993,9 +1992,7 @@ def _pq_artifacts(spark: SparkSession, sf_dir: str):
     tcb = train_pq_codebooks(
         e, iters=1, m=_PQ_M, k_sub=_PQ_KSUB, stride=_PQ_STRIDE, dim=_EMB_DIM
     ).localCheckpoint(eager=False)
-    tcodes = pq_encode(
-        e, tcb, m=_PQ_M, dim=_EMB_DIM, kernel="pandas"
-    ).localCheckpoint(eager=False)
+    tcodes = pq_encode(e, tcb, m=_PQ_M, dim=_EMB_DIM).localCheckpoint(eager=False)
     return tcb, tcodes
 
 
@@ -2025,7 +2022,6 @@ def _ivfpq_artifacts(spark: SparkSession, sf_dir: str):
     cent = train_ivf_centroids(
         e, iters=_IVF_TRAIN_ITERS, centroid_stride=_IVF_STRIDE,
         dim=_EMB_DIM, k_cent=_IVF_KCENT, train_limit=_IVF_TRAIN_LIMIT,
-        kernel="pandas",
     ).localCheckpoint(eager=False)
     cb = pq_codebooks(
         e, m=_PQ_M, k_sub=_PQ_KSUB, stride=_PQ_STRIDE, dim=_EMB_DIM

@@ -112,9 +112,7 @@ def main() -> None:
 
         t0 = time.perf_counter()
         codes_path = os.path.join(DATA_ROOT, f"n{n}_codes")
-        pq_encode(emb, cb, M, DIM, kernel="pandas").write.mode(
-            "overwrite"
-        ).parquet(codes_path)
+        pq_encode(emb, cb, M, DIM).write.mode("overwrite").parquet(codes_path)
         build_codes_s = round(time.perf_counter() - t0, 2)
 
         # build = centroid training + assignment + encode join, all
@@ -124,7 +122,7 @@ def main() -> None:
         cent_path = os.path.join(DATA_ROOT, f"n{n}_cent")
         train_ivf_centroids(
             emb, iters=1, centroid_stride=31, dim=DIM, k_cent=K_CENT,
-            train_limit=100 * K_CENT, kernel="pandas",
+            train_limit=100 * K_CENT,
         ).write.mode("overwrite").parquet(cent_path)
         cent = spark.read.parquet(cent_path)
         (

@@ -1930,7 +1930,7 @@ def streaming_incremental_dedup_bucketed(
     return start_gate_stream(
         stream, checkpoint_dir,
         _bucketed_gate(store_table, out_path, text_col, id_col, profile_path),
-        out_path,
+        out_path, profile_path,
     )
 
 
@@ -2395,7 +2395,7 @@ def streaming_incremental_minhash_dedup(
             store_table, out_path, text_col, id_col, threshold, n,
             num_hashes, bands, rows_per_band, profile_path,
         ),
-        out_path,
+        out_path, profile_path,
     )
 
 
@@ -2687,7 +2687,7 @@ def streaming_incremental_simhash_dedup(
             store_table, out_path, text_col, id_col, bits, max_hamming,
             profile_path,
         ),
-        out_path,
+        out_path, profile_path,
     )
 
 

@@ -10,11 +10,11 @@ query build an m x k_sub lookup table of subvector inner products, then
 score every corpus row by summing m table entries -- no float vector is
 touched until the exact rescore of the survivors.
 
-Everything is JVM-side DataFrame expressions: codebook seeding is the
-same deterministic stride sample as ``ivf_topk``, encoding is the
-broadcast-join + ``max_by`` argmin kernel of ``assign_to_centroids``
-run once per subspace, and the ADC scan is a zip_with/aggregate lambda
-over the codes array -- zero Python workers, zero corpus shuffle before
+Codebook seeding is the same deterministic stride sample as
+``ivf_topk``; encoding is one Arrow-batched numpy pass
+(:func:`_pq_codes`: fixed-point L2 argmin per subspace against the
+collected codebook frame), and the ADC scan is unrolled literal-indexed
+LUT lookups -- JVM-side, no Python worker, zero corpus shuffle before
 the partial top-k.
 
 Determinism contract (shared with the DuckDB oracle): all ranking
@@ -32,16 +32,17 @@ local[32] -- TOPK_SCALE.json, bench_topk_scale.py):
 stage              wall (s)   scaling
 =================  =========  ========================================
 corpus encode         ~2      O(n * m * k_sub) fixed-point argmin via
-                              the bit-exact Arrow/numpy kernel (was
-                              146 s as a codegen broadcast join);
+                              the Arrow/numpy kernel (was 146 s as a
+                              broadcast join + max_by plan);
                               persisted once and REUSED by the index
                               build (``corpus_codes``), never run twice
 index build          ~11      Lloyd training O(train_limit * k_cent)
- (train + assign                via the same Arrow kernel (a 1e6 round
-  + join + write)               was 104 s as a codegen plan), coarse
-                              assignment O(n * k_cent * dim) at ~8 s
-                              (was 492 s: same values, 59x less wall),
-                              one vec_id join, one cid repartition
+ (train + assign                via the Arrow assignment kernel (a 1e6
+  + join + write)               round was 104 s as a broadcast-join
+                              plan), coarse assignment O(n * k_cent *
+                              dim) at ~8 s (was 492 s: same values, 59x
+                              less wall), one vec_id join, one cid
+                              repartition
 =================  =========  ========================================
 
 Total 1e6 stand-up ~13 s, vs 910 s before the encode-reuse +
@@ -63,16 +64,6 @@ from pyspark.sql import functions as F
 from .similarity import NORM_FLOOR, _dot_unrolled, _norm
 
 _FP = 1_000_000  # fixed-point scale for distances / LUT partials
-
-
-def _sub_l2sq_fp(vec: Column, cvec: Column, s: int, d_sub: int) -> Column:
-    """round(1e6 * ||vec[s*d : (s+1)*d] - cvec||^2) as BIGINT, unrolled."""
-    acc = None
-    for i in range(d_sub):
-        diff = vec.getItem(s * d_sub + i).cast("double") - cvec.getItem(i).cast("double")
-        term = diff * diff
-        acc = term if acc is None else acc + term
-    return F.round(acc * _FP).cast("bigint")
 
 
 def _sub_dot_fp(vec: Column, cvec: Column, s: int, d_sub: int) -> Column:
@@ -192,6 +183,69 @@ def pq_codebooks(
     return out
 
 
+def _codebook_arrays(rows, m: int) -> list[tuple]:
+    """Per subspace ``s`` in 0..m-1, the code-sorted ``(codes, C)`` pair
+    :func:`_pq_codes` scans, from collected ``(s, code, cvec)`` rows."""
+    import numpy as np
+
+    per_s = []
+    for s in range(m):
+        sub = sorted((r for r in rows if r[0] == s), key=lambda r: r[1])
+        if not sub:
+            raise ValueError(f"pq_encode: no codebook rows for subspace {s}")
+        per_s.append(
+            (
+                np.array([r[1] for r in sub], dtype=np.int64),
+                np.array([r[2] for r in sub], dtype=np.float64),  # (k, d_sub)
+            )
+        )
+    return per_s
+
+
+# the largest squared subvector distance whose ordering key
+# ``dist_fp * 1024 + code`` still fits a signed 64-bit integer
+_DIST_MAX = (2**63 - 1024) / 1024 / _FP
+
+
+def _pq_codes(V, ids, per_s, d_sub: int):
+    """THE PQ encode kernel: ``(n, m)`` int32 codes for the float64
+    batch ``V`` (row ids ``ids``).  The arithmetic is the DuckDB oracle's
+    encode CTE, operation for operation: per (subspace, code) the
+    squared diffs accumulate dimension-ascending starting from the
+    first term, the sum scales by ``_FP`` and rounds HALF_UP (the
+    distance is non-negative, so ``floor(x + 0.5)``), and the argmin
+    runs on the exact integer ``dist_fp * 1024 + code`` over
+    code-sorted columns -- smallest rounded distance first, ties to the
+    smaller code (k_sub <= 1024).
+
+    A NaN or infinite component (or a distance too large for the
+    integer key) has no code: the cast would wrap it to an arbitrary
+    integer and encode the vector silently, so it raises ``ValueError``
+    naming the first offending id instead.  Filter with
+    ``vec_is_finite`` upstream.
+    """
+    import numpy as np
+
+    codes = np.empty((len(V), len(per_s)), dtype=np.int32)
+    for s, (code_vals, C) in enumerate(per_s):
+        diff0 = V[:, s * d_sub][:, None] - C[:, 0][None, :]
+        acc = diff0 * diff0
+        for i in range(1, d_sub):
+            diff = V[:, s * d_sub + i][:, None] - C[:, i][None, :]
+            acc += diff * diff
+        bad = ~(acc < _DIST_MAX).all(axis=1)
+        if bad.any():
+            raise ValueError(
+                f"pq_encode: vec_id {ids[np.argmax(bad)]} has a non-finite "
+                f"or overflowing subspace-{s} distance; filter non-finite "
+                "vectors (vec_is_finite) before encoding"
+            )
+        dist_fp = np.floor(acc * _FP + 0.5).astype(np.int64)
+        ord_ = dist_fp * 1024 + code_vals[None, :]
+        codes[:, s] = code_vals[np.argmin(ord_, axis=1)]
+    return codes
+
+
 def pq_encode(
     corpus: DataFrame,
     codebooks: DataFrame,
@@ -199,112 +253,29 @@ def pq_encode(
     dim: int = 64,
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
-    kernel: str = "codegen",
 ) -> DataFrame:
     """Codes table ``(vec_id, codes: array<int>)`` -- the 8-byte layout.
 
-    One broadcast join against the (m x k_sub)-row codebook frame and
-    one ``groupBy(vec_id)`` whose ``max_by`` aggregates collapse the
-    m*k_sub candidate rows map-side (partial agg), so the exchange
-    carries exactly one narrow row per vector.  Argmin ordering is the
-    integer ``dist_fp * 1024 + code`` (k_sub <= 1024), i.e. smallest
-    6-digit-rounded L2 first, ties to the smaller code -- mirrored
-    verbatim by the oracle's row_number ORDER BY.
-
-    ``kernel="pandas"``: the bit-exact Arrow-batched variant for
-    full-corpus build passes (same pattern as
-    ``assign_to_centroids(kernel="pandas")``): per batch it accumulates
-    each subspace's L2 dimension-at-a-time in the same left-to-right
-    float64 order as :func:`_sub_l2sq_fp`'s unrolled chain, applies the
-    identical HALF_UP fixed-point rounding, and argmins the same
-    integer ``dist_fp * 1024 + code`` ordering over code-sorted
-    columns.  The ranking is exact integer arithmetic on both kernels,
-    so the chosen codes cannot diverge.  Collects the codebook frame
-    (bounded m x k_sub rows) -- use inside eager builds, keep the
-    codegen default in lazy compositions.
+    One Arrow-batched ``mapInPandas`` pass runs :func:`_pq_codes` per
+    batch against the codebook frame, which is COLLECTED when this
+    function is called (bounded: m x k_sub rows), so constructing the
+    result runs the codebook plan's jobs eagerly.  No shuffle: one row
+    in, one codes row out.
     """
-    d_sub = dim // m
-    if kernel == "pandas":
-        return _pq_encode_pandas(corpus, codebooks, m, d_sub, corpus_id, corpus_vec)
-    c = corpus.select(
-        F.col(corpus_id).alias("vec_id"), F.col(corpus_vec).alias("__cv")
-    )
-    j = c.join(F.broadcast(codebooks))
-    dist_fp = None
-    for s in range(m):
-        d = _sub_l2sq_fp(F.col("__cv"), F.col("cvec"), s, d_sub)
-        dist_fp = F.when(F.col("s") == s, d) if dist_fp is None else dist_fp.when(
-            F.col("s") == s, d
-        )
-    j = j.withColumn("__ord", dist_fp * 1024 + F.col("code"))
-    aggs = [
-        F.max_by(
-            F.when(F.col("s") == s, F.col("code")),
-            F.when(F.col("s") == s, -F.col("__ord")),
-        ).alias(f"__c{s}")
-        for s in range(m)
-    ]
-    return (
-        j.groupBy("vec_id")
-        .agg(*aggs)
-        .select(
-            "vec_id", F.array(*[F.col(f"__c{s}") for s in range(m)]).alias("codes")
-        )
-    )
-
-
-def _pq_encode_pandas(
-    corpus: DataFrame,
-    codebooks: DataFrame,
-    m: int,
-    d_sub: int,
-    corpus_id: str,
-    corpus_vec: str,
-) -> DataFrame:
-    """``pq_encode(kernel="pandas")`` -- see its docstring.  Mirrors
-    :func:`_sub_l2sq_fp` op-for-op: per (subspace, code) the squared
-    diffs accumulate dimension-ascending in float64 starting from the
-    first term, the sum scales by ``_FP`` and rounds HALF_UP (the
-    distance is non-negative, so ``floor(x + 0.5)``), and the argmin
-    runs on the exact integer ``dist_fp * 1024 + code`` with codebook
-    columns sorted by code ascending."""
     import numpy as np
     import pandas as pd
 
-    rows = codebooks.select("s", "code", "cvec").collect()
-    per_s: list[tuple] = []
-    for s in range(m):
-        sub = sorted((r for r in rows if r["s"] == s), key=lambda r: r["code"])
-        if not sub:
-            raise ValueError(f"pq_encode: no codebook rows for subspace {s}")
-        per_s.append(
-            (
-                np.array([r["code"] for r in sub], dtype=np.int64),
-                np.array([r["cvec"] for r in sub], dtype=np.float64),  # (k, d_sub)
-            )
-        )
+    d_sub = dim // m
+    per_s = _codebook_arrays(codebooks.select("s", "code", "cvec").collect(), m)
 
     def gen(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
+            ids = pdf[corpus_id].to_numpy()
             V = np.stack(pdf[corpus_vec].to_numpy()).astype(np.float64)
-            n = len(pdf)
-            codes = np.empty((n, m), dtype=np.int64)
-            for s, (code_vals, C) in enumerate(per_s):
-                diff0 = V[:, s * d_sub][:, None] - C[:, 0][None, :]
-                acc = diff0 * diff0
-                for i in range(1, d_sub):
-                    diff = V[:, s * d_sub + i][:, None] - C[:, i][None, :]
-                    acc += diff * diff
-                dist_fp = np.floor(acc * _FP + 0.5).astype(np.int64)
-                ord_ = dist_fp * 1024 + code_vals[None, :]
-                codes[:, s] = code_vals[np.argmin(ord_, axis=1)]
             yield pd.DataFrame(
-                {
-                    "vec_id": pdf[corpus_id].to_numpy(),
-                    "codes": list(codes.astype(np.int32)),
-                }
+                {"vec_id": ids, "codes": list(_pq_codes(V, ids, per_s, d_sub))}
             )
 
     return corpus.select(
@@ -414,7 +385,7 @@ def append_to_ivfpq_index(
     """Incrementally extend a persisted IVF-PQ index with new vectors.
 
     The continuous-ingestion counterpart of :func:`build_ivfpq_index`:
-    assign + encode ONLY the new rows (both through the bit-exact Arrow
+    assign + encode ONLY the new rows (one Arrow pass through both
     kernels -- O(new * (k_cent + m * k_sub)), independent of existing
     index size) and APPEND them into the existing ``cid``-partitioned
     parquet layout.  Probe-time readers (:func:`ivfpq_topk` over
@@ -477,9 +448,9 @@ def ivfpq_topk(
     ``(vec_id, cid, codes)`` frame -- the inverted index WITH the codes
     inline, written once, partitioned by ``cid`` so a probe prunes
     whole partitions.  When absent it is derived on the fly (one
-    narrow vec_id-keyed join of the assignment and codes frames; at
-    scale you persist instead).  ``codebooks`` must accompany a given
-    ``corpus_index`` (same frame the codes were encoded with).
+    :func:`build_ivfpq_index` pass; at scale you persist instead).
+    ``codebooks`` must accompany a given ``corpus_index`` (same frame
+    the codes were encoded with).
 
     ``centroids`` (a ``(cid, centroid)`` frame, e.g. Lloyd-trained
     ``train_ivf_centroids`` output or the frame persisted next to a
@@ -490,37 +461,24 @@ def ivfpq_topk(
     cells the index never filled (with stride derivation that means
     ``centroid_stride`` must equal the build-time value).
     """
-    from .similarity import assign_to_centroids
-
     d_sub = dim // m
     if codebooks is None:
         codebooks = pq_codebooks(corpus, m, k_sub, stride, dim, corpus_id, corpus_vec)
 
-    c = corpus.select(
-        F.col(corpus_id).alias("vec_id"), F.col(corpus_vec).alias("__cv")
-    )
     if centroids is not None:
-        cent = centroids.select(
-            "cid", F.col("centroid").alias("__kv")
-        ).withColumn("__kn", F.greatest(_norm(F.col("__kv")), F.lit(NORM_FLOOR)))
+        cent = centroids.select("cid", F.col("centroid").alias("__kv"))
     else:
-        cent = (
-            c.filter(F.pmod(F.col("vec_id"), F.lit(centroid_stride)) == 0)
-            .select(F.col("vec_id").alias("cid"), F.col("__cv").alias("__kv"))
-            .withColumn("__kn", F.greatest(_norm(F.col("__kv")), F.lit(NORM_FLOOR)))
-        )
+        cent = corpus.filter(
+            F.pmod(F.col(corpus_id), F.lit(centroid_stride)) == 0
+        ).select(F.col(corpus_id).alias("cid"), F.col(corpus_vec).alias("__kv"))
     if corpus_index is None:
-        assigned = assign_to_centroids(
-            corpus,
-            cent.select("cid", F.col("__kv").alias("centroid")),
-            corpus_id,
-            corpus_vec,
-            dim,
-        ).withColumnRenamed("cluster_id", "cid")
-        codes = pq_encode(corpus, codebooks, m, dim, corpus_id, corpus_vec)
-        index = assigned.join(codes, "vec_id")
+        index = _build_ivfpq_index_fused(
+            corpus, cent.withColumnRenamed("__kv", "centroid"), codebooks,
+            m, dim, corpus_id, corpus_vec,
+        )
     else:
         index = corpus_index.select("vec_id", "cid", "codes")
+    cent = cent.withColumn("__kn", F.greatest(_norm(F.col("__kv")), F.lit(NORM_FLOOR)))
 
     q = queries.select(
         F.col(query_id).alias("query_id"), F.col(query_vec).alias("__qv")
@@ -598,11 +556,11 @@ def build_ivfpq_index(
 ) -> DataFrame:
     """The persistable IVF-PQ index: ``(vec_id, cid, codes)``.
 
-    One coarse assignment (corpus x broadcast(centroids) argmax cosine)
-    plus one PQ encode (broadcast codebook join, map-side-combined
-    argmin), joined on the narrow vec_id key -- O(n * (k_cent + m *
-    k_sub)) work, LINEAR in corpus size when both frames are bounded
-    (pass :func:`similarity.train_ivf_centroids` output built with its
+    One Arrow pass over the corpus computes both the coarse assignment
+    (:func:`..similarity._argmax_cosine`) and the PQ codes
+    (:func:`_pq_codes`) per batch -- O(n * (k_cent + m * k_sub)) work,
+    LINEAR in corpus size when both frames are bounded (pass
+    :func:`similarity.train_ivf_centroids` output built with its
     ``k_cent`` cap; an uncapped stride sample grows the centroid set
     with n and turns the build quadratic).  The result comes back
     pre-clustered (``repartition("cid")``) so a
@@ -621,34 +579,14 @@ def build_ivfpq_index(
     # standing up codes + index costs one encode, not two (measured
     # -146 s of the 1e6-vector build, TOPK_SCALE.json)
     if corpus_codes is not None:
-        # kernel="pandas": the bit-exact Arrow-batched assignment -- the
-        # build is the one place the O(n * k_cent) codegen join was the
-        # bottleneck (measured 492 of 764 s at 1e6 vectors), and an
-        # index build is already an eager, persisted operation, so the
-        # kernel's bounded centroid collect costs nothing extra
         assigned = assign_to_centroids(
-            corpus,
-            centroids.select("cid", "centroid"),
-            corpus_id,
-            corpus_vec,
-            dim,
-            kernel="pandas",
+            corpus, centroids.select("cid", "centroid"), corpus_id, corpus_vec, dim
         ).withColumnRenamed("cluster_id", "cid")
         return (
             assigned.join(corpus_codes.select("vec_id", "codes"), "vec_id")
             .select("vec_id", "cid", "codes")
             .repartition("cid")
         )
-    # FUSED single-pass build (r18): without persisted codes, the old
-    # shape ran TWO full-corpus Arrow passes (assign, encode) joined on
-    # vec_id -- a corpus-wide shuffle join whose only job was pairing
-    # two outputs of the same input row.  One mapInPandas pass now
-    # computes both per batch: the assignment block is
-    # _assign_to_centroids_pandas's arithmetic op-for-op and the encode
-    # block _pq_encode_pandas's (both docstrings' bit-exactness
-    # arguments apply unchanged), so the (cid, codes) pair per vec_id
-    # is identical to the join's -- with one corpus pass and zero
-    # pre-output shuffles instead of two passes and a join.
     return _build_ivfpq_index_fused(
         corpus, centroids, codebooks, m, dim, corpus_id, corpus_vec
     ).repartition("cid")
@@ -663,29 +601,28 @@ def _build_ivfpq_index_fused(
     corpus_id: str,
     corpus_vec: str,
 ) -> DataFrame:
-    """One Arrow pass -> ``(vec_id, cid, codes)``.  The assignment
-    block mirrors :func:`..similarity._assign_to_centroids_pandas` and
-    the encode block :func:`_pq_encode_pandas`, op-for-op in the same
-    float64 order, so the fused output matches the two-pass + join
-    derivation bit-for-bit (pinned by
-    tests/test_pq.py::test_build_ivfpq_index_matches_inline_derivation)."""
+    """One Arrow pass -> ``(vec_id, cid, codes)``: per batch the
+    assignment kernel and the encode kernel on the same float64 matrix,
+    so there is one corpus pass and no vec_id join pairing two outputs
+    of the same input row."""
     import numpy as np
     import pandas as pd
 
-    from .similarity import round_half_away
+    from .similarity import _argmax_cosine, _centroid_arrays
 
     d_sub = dim // m
     # ONE collect for both bounded artifact frames (r19): centroids and
     # codebooks are independent kilobyte-sized frames that used to
     # collect in two sequential driver jobs; a tagged union ships the
     # same rows in one job (both lineages materialize together).  Tags
-    # split the rows back apart; per-frame values are untouched.
+    # split the rows back apart; per-frame values are untouched (the
+    # cast widens a float32 stride-sample centroid exactly).
     tagged = (
         centroids.select(
             F.lit(0).alias("__t"),
             F.col("cid").alias("__a"),
             F.lit(None).cast("long").alias("__b"),
-            F.col("centroid").alias("__v"),
+            F.col("centroid").cast("array<double>").alias("__v"),
         )
         .unionAll(
             codebooks.select(
@@ -697,69 +634,24 @@ def _build_ivfpq_index_fused(
         )
         .collect()
     )
-    crows = sorted(
-        ({"cid": r["__a"], "centroid": r["__v"]} for r in tagged if r["__t"] == 0),
-        key=lambda r: r["cid"],
+    cids, K, kn = _centroid_arrays(
+        [(r["__a"], r["__v"]) for r in tagged if r["__t"] == 0], dim
     )
-    if not crows:
-        raise ValueError("build_ivfpq_index: empty centroid frame")
-    cids = np.array([r["cid"] for r in crows], dtype=np.int64)
-    K = np.array([r["centroid"] for r in crows], dtype=np.float64)  # (k, dim)
-    kn = np.zeros(len(crows), dtype=np.float64)
-    for i in range(dim):
-        kn += K[:, i] * K[:, i]
-    kn = np.maximum(np.sqrt(kn), NORM_FLOOR)
-
-    cbrows = [
-        {"s": r["__a"], "code": r["__b"], "cvec": r["__v"]}
-        for r in tagged
-        if r["__t"] == 1
-    ]
-    per_s: list[tuple] = []
-    for s in range(m):
-        sub = sorted((r for r in cbrows if r["s"] == s), key=lambda r: r["code"])
-        if not sub:
-            raise ValueError(f"build_ivfpq_index: no codebook rows for subspace {s}")
-        per_s.append(
-            (
-                np.array([r["code"] for r in sub], dtype=np.int64),
-                np.array([r["cvec"] for r in sub], dtype=np.float64),
-            )
-        )
+    per_s = _codebook_arrays(
+        [(r["__a"], r["__b"], r["__v"]) for r in tagged if r["__t"] == 1], m
+    )
 
     def gen(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
+            ids = pdf[corpus_id].to_numpy()
             V = np.stack(pdf[corpus_vec].to_numpy()).astype(np.float64)
-            n = len(pdf)
-            # --- assignment block (_assign_to_centroids_pandas) ---
-            cn = np.zeros(n, dtype=np.float64)
-            for i in range(dim):
-                cn += V[:, i] * V[:, i]
-            cn = np.maximum(np.sqrt(cn), NORM_FLOOR)
-            acc = V[:, 0][:, None] * K[:, 0][None, :]
-            for i in range(1, dim):
-                acc += V[:, i][:, None] * K[:, i][None, :]
-            acc /= cn[:, None] * kn[None, :]
-            round_half_away(acc, 6)
-            cid_out = cids[np.argmax(acc, axis=1)]
-            # --- encode block (_pq_encode_pandas) ---
-            codes = np.empty((n, m), dtype=np.int64)
-            for s, (code_vals, C) in enumerate(per_s):
-                diff0 = V[:, s * d_sub][:, None] - C[:, 0][None, :]
-                acc2 = diff0 * diff0
-                for i in range(1, d_sub):
-                    diff = V[:, s * d_sub + i][:, None] - C[:, i][None, :]
-                    acc2 += diff * diff
-                dist_fp = np.floor(acc2 * _FP + 0.5).astype(np.int64)
-                ord_ = dist_fp * 1024 + code_vals[None, :]
-                codes[:, s] = code_vals[np.argmin(ord_, axis=1)]
             yield pd.DataFrame(
                 {
-                    "vec_id": pdf[corpus_id].to_numpy(),
-                    "cid": cid_out,
-                    "codes": list(codes.astype(np.int32)),
+                    "vec_id": ids,
+                    "cid": _argmax_cosine(V, K, kn, cids),
+                    "codes": list(_pq_codes(V, ids, per_s, d_sub)),
                 }
             )
 
@@ -784,7 +676,7 @@ def train_pq_codebooks(
     The subvector analogue of ``train_ivf_centroids``: init from the
     deterministic :func:`pq_codebooks` stride sample, then per round
     (1) encode the corpus against the current codebooks (fixed-point L2
-    argmin, the :func:`pq_encode` kernel) and (2) recompute each
+    argmin, :func:`pq_encode`) and (2) recompute each
     (subspace, code) centroid as the mean of its assigned subvectors --
     one ``posexplode`` to (vec_id, s, code) rows and ONE ``groupBy(s,
     code)`` whose d_sub ``avg`` columns combine map-side, so the
@@ -799,8 +691,9 @@ def train_pq_codebooks(
     every later code read its neighbour's LUT entry and the largest
     code read past the array (NULL score) -- silently corrupted
     rankings.  The re-rank window partitions by ``s`` over <= k_sub
-    rows, never corpus data.  Everything stays lazy; each round adds
-    one broadcast of the (m x k_sub x d_sub) codebook frame.
+    rows, never corpus data.  Each round's encode collects the
+    previous round's bounded (m x k_sub x d_sub) codebook frame while
+    the plan is built, so rounds 1..iters-1 run at construction.
 
     Measured (TOPK_RECALL.json, k_sub=32, expand=16): one round lifts
     pq_topk recall@5 from 0.82 to 0.90 (n=500) and 0.70 to 0.80

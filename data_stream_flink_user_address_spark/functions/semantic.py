@@ -72,11 +72,11 @@ def semantic_dedup(
     ``keep = false`` iff a smaller-id cluster-mate sits at
     ``cosine >= threshold``.
 
-    Plan shape: broadcast-join against the centroid frame (map-side),
-    argmax collapsed by map-side partial ``max_by`` so the vec_id
-    exchange carries one fixed-width row per vector, then one
-    ``groupBy(cluster_id)`` shuffle -- no text anywhere -- and a
-    vectorized ``applyInPandas`` per cluster.  Compute is
+    Plan shape: the assignment is one ``mapInPandas`` pass over the
+    scan against the centroid frame (collected when this function is
+    called -- see :func:`assign_to_centroids`), with no exchange before
+    it; then one ``groupBy(cluster_id)`` shuffle -- no text anywhere --
+    and a vectorized ``applyInPandas`` per cluster.  Compute is
     O(sum over clusters of size^2) BLAS flops: the k-means step is what
     turns global O(n^2) into that bounded sum, which is the entire
     SemDeDup argument.

@@ -11,8 +11,10 @@ Engine extension beyond the reference surface (BASELINE.json north star).
   once, shuffled only by bucket key, and each query compares against its
   buckets instead of everything.
 
-All vector math is built-in (``zip_with`` + ``aggregate`` on array
-columns): JVM-evaluated, no Python worker round-trip.
+Search-side vector math is built-in (``zip_with`` + ``aggregate`` on
+array columns): JVM-evaluated, no Python worker round-trip.  Centroid
+assignment (``assign_to_centroids``, used by IVF, Lloyd training and
+SemDeDup) is one Arrow-batched numpy pass over the corpus.
 """
 
 from __future__ import annotations
@@ -199,6 +201,55 @@ def make_planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return planes
 
 
+def _centroid_arrays(rows, dim: int):
+    """``(cids, K, kn)`` for :func:`_argmax_cosine` from collected
+    ``(cid, centroid)`` pairs: centroid rows sorted by cid ascending,
+    and each norm accumulated as 0.0 then ``+= k_i * k_i`` for i
+    ascending (``_norm``'s fold order), square-rooted, then floored at
+    NORM_FLOOR."""
+    import numpy as np
+
+    rows = sorted(rows, key=lambda r: r[0])
+    if not rows:
+        raise ValueError("assign_to_centroids: empty centroid frame")
+    cids = np.array([r[0] for r in rows], dtype=np.int64)
+    K = np.array([r[1] for r in rows], dtype=np.float64)[:, :dim]  # (k, dim)
+    kn = np.zeros(len(rows), dtype=np.float64)
+    for i in range(dim):
+        kn += K[:, i] * K[:, i]
+    return cids, K, np.maximum(np.sqrt(kn), NORM_FLOOR)
+
+
+def _argmax_cosine(V, K, kn, cids):
+    """THE argmax-cosine kernel: for each row of the float64 batch ``V``
+    the cid of its nearest centroid.  The arithmetic is the DuckDB
+    oracle's ``round(cosine, 6) DESC, cid ASC`` (``_sql_cosine``),
+    operation for operation:
+
+    - norm: 0.0 then ``+= v_i * v_i`` for i ascending, sqrt, then
+      ``max(norm, NORM_FLOOR)`` (zero vectors score cosine 0.0);
+    - dot: ``v_0*k_0`` then ``+= v_i*k_i`` for i ascending (the
+      left-to-right order of ``_dot_unrolled`` and the oracle's
+      ``list_sum``);
+    - cosine: ``dot / (cn * kn)``, rounded with :func:`round_half_away`;
+    - argmax over cid-sorted centroid columns: the first maximum wins,
+      so ties go to the smaller cid.
+    """
+    import numpy as np
+
+    dim = K.shape[1]
+    cn = np.zeros(len(V), dtype=np.float64)
+    for i in range(dim):
+        cn += V[:, i] * V[:, i]
+    cn = np.maximum(np.sqrt(cn), NORM_FLOOR)
+    acc = V[:, 0][:, None] * K[:, 0][None, :]
+    for i in range(1, dim):
+        acc += V[:, i][:, None] * K[:, i][None, :]
+    acc /= cn[:, None] * kn[None, :]
+    round_half_away(acc, 6)
+    return cids[np.argmax(acc, axis=1)]
+
+
 def assign_to_centroids(
     emb: DataFrame,
     centroids: DataFrame,
@@ -206,125 +257,45 @@ def assign_to_centroids(
     vec_col: str = "embedding",
     dim: int = 64,
     keep_vec: bool = False,
-    kernel: str = "codegen",
 ) -> DataFrame:
     """Argmax-cosine centroid assignment: ``(vec_id, cluster_id[, __cv])``.
 
     THE deterministic-assignment kernel (6-digit cosine rounding, ties
     to the smaller centroid id, NORM_FLOOR zero-norm guard) shared by
-    ``train_ivf_centroids``' Lloyd rounds, ``semantic_dedup``, and
-    cluster-stratified sampling -- and mirrored by the DuckDB oracle
-    CTEs.  Broadcast join + map-side-combined ``max_by``: the corpus
-    crosses one fixed-width exchange keyed by vec_id.  (``ivf_topk``
-    keeps an inline variant because its assignment also threads the
-    precomputed norm through for the scoring stage.)
+    ``train_ivf_centroids``' Lloyd rounds, ``ivf_topk``,
+    ``semantic_dedup``, cluster-stratified sampling and the IVF-PQ
+    index build -- and mirrored by the DuckDB oracle CTEs.
 
-    ``kernel="pandas"``: a BIT-EXACT Arrow-batched variant of the same
-    arithmetic for full-corpus passes (the IVF-PQ index build, where
-    the codegen join was measured at 492 of the 764 s 1e6-vector
-    build).  Per Arrow batch it accumulates the dot and both norms
-    dimension-at-a-time in float64 -- the SAME left-to-right IEEE
-    addition order as ``_dot_unrolled`` / ``_norm``'s fold, so every
-    intermediate double is identical to the codegen kernel's and the
-    rounded cosine cannot diverge -- then takes ``np.argmax`` over
-    centroid columns pre-sorted by cid (first-max == smaller-cid tie
-    break, matching ``max_by``'s ``(-cid)`` tiebreaker).  It COLLECTS
-    the centroid frame (bounded: k_cent x dim doubles, ~128 KB at
-    k_cent=256) and so forces centroid-plan execution eagerly; keep
-    the default codegen kernel inside lazy compositions like Lloyd
-    training rounds.  No per-corpus-row Python: one numpy pass per
-    ~10k-row Arrow batch, zero shuffle before the output exchange.
-    """
-    if kernel == "pandas":
-        return _assign_to_centroids_pandas(
-            emb, centroids, id_col, vec_col, dim, keep_vec
-        )
-    c = emb.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__cv")
-    ).withColumn("__cn", F.greatest(_norm(F.col("__cv")), F.lit(NORM_FLOOR)))
-    kf = centroids.select("cid", F.col("centroid").alias("__kv")).withColumn(
-        "__kn", F.greatest(_norm(F.col("__kv")), F.lit(NORM_FLOOR))
-    )
-    cos = F.round(
-        _dot_unrolled(F.col("__cv"), F.col("__kv"), dim)
-        / (F.col("__cn") * F.col("__kn")),
-        6,
-    )
-    aggs = [
-        F.max_by(
-            "cid", F.struct(F.col("__kcos"), (-F.col("cid")).alias("__t"))
-        ).alias("cluster_id")
-    ]
-    if keep_vec:
-        aggs.append(F.first("__cv").alias("__cv"))
-    return (
-        c.join(F.broadcast(kf))
-        .select("vec_id", "__cv", "cid", cos.alias("__kcos"))
-        .groupBy("vec_id")
-        .agg(*aggs)
-    )
+    One Arrow-batched ``mapInPandas`` pass runs :func:`_argmax_cosine`
+    per batch: no per-row Python, no shuffle, one numpy pass per ~10k-row
+    batch.  Measured against the broadcast-join + ``max_by`` plan it
+    replaced (same rows): 59x less wall for the 1e6-vector IVF-PQ build
+    assignment; at 2,000 vectors on a 4-vCPU VM, 2.1-2.4 s -> ~0.5 s
+    median and 4 -> 3 Spark jobs per call.
+    The centroid frame is COLLECTED when this function is called
+    (bounded: k_cent x dim doubles, ~128 KB at k_cent=256), so
+    constructing the result runs the centroid plan's jobs eagerly.
 
-
-def _assign_to_centroids_pandas(
-    emb: DataFrame,
-    centroids: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    keep_vec: bool = False,
-) -> DataFrame:
-    """``assign_to_centroids(kernel="pandas")`` -- see its docstring for
-    the bit-exactness argument.  Every float64 operation below mirrors
-    the codegen expression op-for-op in the same order:
-
-    - norm: 0.0 then ``+= v_i * v_i`` for i ascending, sqrt at the end
-      (``_norm``'s aggregate fold), then ``max(norm, NORM_FLOOR)``;
-    - dot: ``v_0*k_0`` then ``+= v_i*k_i`` for i ascending
-      (``_dot_unrolled``'s left-to-right chain);
-    - cosine: ``dot / (cn * kn)``, rounded with :func:`round_half_away`
-      (the F.round HALF_UP convention every numpy kernel here uses);
-    - argmax: centroid columns sorted by cid ascending, first max wins
-      == ``max_by(struct(cos, -cid))``'s smaller-cid tie break.
-
-    ``keep_vec`` (r18) threads the input vector through to the output
-    as ``__cv`` -- the batch already holds it, so Lloyd training rounds
-    no longer pay a vec_id join to re-attach vectors to assignments
-    (one fewer shuffle join per round; the values are the untouched
-    input floats either way).
+    ``keep_vec`` threads the input vector through to the output as
+    ``__cv``: the batch already holds it, so Lloyd rounds and the IVF
+    scoring stage never pay a vec_id join to re-attach vectors.
     """
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
-    rows = sorted(
-        centroids.select("cid", "centroid").collect(), key=lambda r: r["cid"]
+    cids, K, kn = _centroid_arrays(
+        centroids.select("cid", "centroid").collect(), dim
     )
-    if not rows:
-        raise ValueError("assign_to_centroids: empty centroid frame")
-    cids = np.array([r["cid"] for r in rows], dtype=np.int64)
-    K = np.array([r["centroid"] for r in rows], dtype=np.float64)  # (k, dim)
-    kn = np.zeros(len(rows), dtype=np.float64)
-    for i in range(dim):
-        kn += K[:, i] * K[:, i]
-    kn = np.maximum(np.sqrt(kn), NORM_FLOOR)
 
     def gen(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            cn = np.zeros(len(pdf), dtype=np.float64)
-            for i in range(dim):
-                cn += V[:, i] * V[:, i]
-            cn = np.maximum(np.sqrt(cn), NORM_FLOOR)
-            acc = V[:, 0][:, None] * K[:, 0][None, :]
-            for i in range(1, dim):
-                acc += V[:, i][:, None] * K[:, i][None, :]
-            acc /= cn[:, None] * kn[None, :]
-            round_half_away(acc, 6)
             out = {
                 "vec_id": pdf[id_col].to_numpy(),
-                "cluster_id": cids[np.argmax(acc, axis=1)],
+                "cluster_id": _argmax_cosine(V, K, kn, cids),
             }
             if keep_vec:
                 # .to_numpy(), not the raw Series: pd.DataFrame aligns a
@@ -356,31 +327,32 @@ def train_ivf_centroids(
     round_digits: int = 6,
     k_cent: int | None = None,
     train_limit: int | None = None,
-    kernel: str = "codegen",
 ) -> DataFrame:
-    """Lloyd-refined IVF coarse centroids as pure DataFrame aggregations:
-    ``(cid, centroid: array<double>)``.
+    """Lloyd-refined IVF coarse centroids: ``(cid, centroid:
+    array<double>)``.
 
     Init is the same deterministic stride sample :func:`ivf_topk` uses
     standalone (sampling IS the standard k-means init); each of the
     ``iters`` Lloyd rounds is then
 
-    1. **assign** -- corpus x broadcast(centroids), per-vector argmax of
-       the 6-digit-rounded cosine via ``max_by`` (map-side partial agg;
-       ties to the smaller cid), and
+    1. **assign** -- :func:`assign_to_centroids` (per-vector argmax of
+       the 6-digit-rounded cosine, ties to the smaller cid), with the
+       training vector threaded through the batch (``keep_vec``), and
     2. **update** -- ``groupBy(cid)`` with one ``avg`` per dimension
        (``dim`` scalar agg columns, NOT an explode: map-side partials
        keep the shuffle at k_cent x dim doubles), each mean rounded to
        ``round_digits`` so the trained centroids are reproducible
-       across engines and runs.
+       across engines and runs -- and across aggregation orders, which
+       is the tolerance the DuckDB oracle replication relies on.
 
     Clusters that lose all members simply drop out (both the engine and
-    the oracle SQL share that convention).  Everything stays lazy -- the
-    loop builds one nested plan, no driver collects; each round adds a
-    broadcast of the previous (k_cent x dim) centroid frame, which is
-    bounded: centroid count ~ sqrt(n) keeps even a 10^9-vector corpus'
-    centroid set at ~16 MB.  Cosine (not Euclidean) assignment matches
-    the search-time metric -- spherical k-means, the right variant for
+    the oracle SQL share that convention).  Each round COLLECTS the
+    previous round's bounded centroid frame (k_cent x dim doubles;
+    centroid count ~ sqrt(n) keeps even a 10^9-vector corpus' centroid
+    set at ~16 MB) while the plan is built, so constructing the result
+    runs the seed sample and rounds 1..iters-1 eagerly; only the last
+    round stays lazy.  Cosine (not Euclidean) assignment matches the
+    search-time metric -- spherical k-means, the right variant for
     normalized-embedding retrieval.
 
     ``k_cent`` caps the centroid COUNT: init takes the FIRST ``k_cent``
@@ -392,19 +364,6 @@ def train_ivf_centroids(
     k_cent), the linear build an IVF index needs at 10^9 vectors (size
     the cap ~ sqrt(n) for the usual recall/scan trade).
 
-    ``kernel="pandas"`` routes each round's assignment through the
-    bit-exact Arrow kernel (``assign_to_centroids(kernel="pandas")``)
-    with the training vectors re-attached by a narrow join -- same
-    assignments, and the per-round Spark plan shrinks from the
-    dim-unrolled candidate explosion to one mapInPandas + small join
-    (measured: a 1e6-corpus round 104 -> ~8 s).  It collects each
-    round's centroid frame (bounded k_cent x dim), executing rounds
-    eagerly -- use in eager index builds, keep the lazy codegen
-    default inside query compositions.  Mean aggregation order may
-    differ between kernels/plans; ``round_digits`` rounding is what
-    makes the trained means reproducible either way (the same
-    tolerance the DuckDB oracle replication always relied on).
-
     ``train_limit`` bounds the TRAINING SAMPLE: Lloyd rounds assign and
     average only rows with ``vec_id < train_limit`` (a deterministic,
     SQL-replicable prefix sample), the standard FAISS practice of
@@ -414,12 +373,9 @@ def train_ivf_centroids(
     hash-generated or shuffled ids the prefix is an unbiased sample;
     for id-ordered corpora shuffle ids first or raise the limit.
     """
-    # zero-norm guard (same contract as semantic_dedup / quantized_topk):
-    # a zero vector or a collapsed zero centroid gets cosine 0, never an
-    # ANSI DIVIDE_BY_ZERO mid-training
     c = corpus.select(
         F.col(corpus_id).alias("vec_id"), F.col(corpus_vec).alias("__cv")
-    ).withColumn("__cn", F.greatest(_norm(F.col("__cv")), F.lit(NORM_FLOOR)))
+    )
     seeds = c.filter(F.pmod(F.col("vec_id"), F.lit(centroid_stride)) == 0)
     if k_cent is not None:
         # FIRST k_cent stride-matching ids, order-independently: an
@@ -440,22 +396,9 @@ def train_ivf_centroids(
         else corpus
     )
     for _ in range(iters):
-        # the shared kernel re-derives the corpus frame per round, which
-        # is plan-identical to reusing `c` (everything here is lazy).
-        # kernel="pandas" (eager builds only): the Arrow assignment is
-        # bit-exact and threads the training vector through the batch
-        # (keep_vec), so no join re-attaches vectors to assignments --
-        # one fewer shuffle per Lloyd round (r18; the per-cid means go
-        # through the same round_digits rounding either way)
-        if kernel == "pandas":
-            assigned = assign_to_centroids(
-                train_corpus, cent, corpus_id, corpus_vec, dim,
-                keep_vec=True, kernel="pandas",
-            ).withColumnRenamed("cluster_id", "cid")
-        else:
-            assigned = assign_to_centroids(
-                train_corpus, cent, corpus_id, corpus_vec, dim, keep_vec=True
-            ).withColumnRenamed("cluster_id", "cid")
+        assigned = assign_to_centroids(
+            train_corpus, cent, corpus_id, corpus_vec, dim, keep_vec=True
+        ).withColumnRenamed("cluster_id", "cid")
         cent = (
             assigned.groupBy("cid")
             .agg(
@@ -498,13 +441,13 @@ def ivf_topk(
        Centroid count scales as n/stride; choose stride ~ sqrt(n) so
        both the assignment fan-out (n * n/stride) and the list sizes
        (~stride) stay balanced.
-    2. **Assignment** (the inverted lists): each corpus vector joins the
-       broadcast centroid set and keeps its argmax-cosine centroid via
-       ``max_by`` -- a map-side partial aggregate, so the corpus is
-       never shuffled by the n*k_cent pair explosion; ties break on the
-       smaller centroid id.  At scale you would persist this frame
-       partitioned by ``cid``: that IS the inverted index, reusable
-       across every future query set.
+    2. **Assignment** (the inverted lists): each corpus vector keeps
+       its argmax-cosine centroid via :func:`assign_to_centroids` -- one
+       Arrow pass over the corpus against the collected centroid set,
+       no shuffle and no n*k_cent pair rows; ties break on the smaller
+       centroid id.  At scale you would persist this frame partitioned
+       by ``cid``: that IS the inverted index, reusable across every
+       future query set.
     3. **Search**: each query probes its ``nprobe`` nearest centroids
        and scores only the vectors assigned to those lists -- corpus
        touched ~ nprobe/stride fraction, vs. 100% for brute force.
@@ -523,43 +466,29 @@ def ivf_topk(
     fraction as n grows at fixed nprobe; real embedding corpora
     cluster, which is what makes IVF the production default (FAISS).
 
-    Small-n wall time is STAGE-COUNT-bound, not compute-bound: at
-    sf0.1 (n=2,000) this runs ~5 s vs ~2 s brute force, but the profile
-    shows the full 130k-pair assignment join + argmax costs only ~1.3 s
-    -- the rest is fixed per-stage overhead across IVF's ~8 tiny stages
-    (probe window, scoring join, rank).  Brute force is simply correct
+    Small-n wall time is STAGE-COUNT-bound, not compute-bound: the
+    fixed per-stage overhead of IVF's tiny stages (probe window,
+    scoring join, rank) dominates at sf0.1 (n=2,000).  Brute force is simply correct
     at small n; IVF's corpus-fraction advantage is the 10^6+ regime,
     the same shape as the measured near-dup LSH crossover
     (ANN_SCALE.json).
     """
-    c = corpus.select(F.col(corpus_id).alias("vec_id"), F.col(corpus_vec).alias("__cv"))
     if centroids is not None:
         # pre-trained (cid, centroid) frame, e.g. from train_ivf_centroids
-        cent = centroids.select(
-            F.col("cid"), F.col("centroid").alias("__kv")
-        ).withColumn("__kn", F.greatest(_norm(F.col("__kv")), F.lit(NORM_FLOOR)))
+        cent = centroids.select("cid", F.col("centroid").alias("__kv"))
     else:
-        cent = (
-            c.filter(F.pmod(F.col("vec_id"), F.lit(centroid_stride)) == 0)
-            .select(F.col("vec_id").alias("cid"), F.col("__cv").alias("__kv"))
-            .withColumn("__kn", F.greatest(_norm(F.col("__kv")), F.lit(NORM_FLOOR)))
-        )
-    # zero-norm guard: same contract as assign_to_centroids
-    c = c.withColumn("__cn", F.greatest(_norm(F.col("__cv")), F.lit(NORM_FLOOR)))
-    cent_cos = F.round(
-        _dot_unrolled(F.col("__cv"), F.col("__kv"), dim) / (F.col("__cn") * F.col("__kn")),
-        6,
-    )
+        cent = corpus.filter(
+            F.pmod(F.col(corpus_id), F.lit(centroid_stride)) == 0
+        ).select(F.col(corpus_id).alias("cid"), F.col(corpus_vec).alias("__kv"))
     assigned = (
-        c.join(F.broadcast(cent))
-        .select("vec_id", "__cv", "__cn", "cid", cent_cos.alias("__kcos"))
-        .groupBy("vec_id")
-        .agg(
-            F.max_by("cid", F.struct(F.col("__kcos"), (-F.col("cid")).alias("__t"))).alias("cid"),
-            F.first("__cv").alias("__cv"),
-            F.first("__cn").alias("__cn"),
+        assign_to_centroids(
+            corpus, cent.withColumnRenamed("__kv", "centroid"),
+            corpus_id, corpus_vec, dim, keep_vec=True,
         )
+        .withColumnRenamed("cluster_id", "cid")
+        .withColumn("__cn", _norm_floored(F.col("__cv")))
     )
+    cent = cent.withColumn("__kn", _norm_floored(F.col("__kv")))
     q = queries.select(
         F.col(query_id).alias("query_id"), F.col(query_vec).alias("__qv")
     ).withColumn("__qn", F.greatest(_norm(F.col("__qv")), F.lit(NORM_FLOOR)))

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -117,14 +118,19 @@ def write_bucketed(
     after joins/filters can be wildly high, and the cap keeps a bad
     estimate from stranding thousands of tiny files).  Small frames --
     every store this repo's gates build at bench scale -- keep ``k=1``:
-    one file per bucket, the r18 layout, unchanged.  Pass
+    one file per bucket, the r18 layout, unchanged.  The estimate goes
+    through a private JVM handle; where that is unavailable (a Spark
+    Connect frame, a changed internal API) ``k`` falls back to 1.  Pass
     ``files_per_bucket`` explicitly when the ingest knows better (e.g.
     its own row/byte accounting at 100 TB).
     """
     if files_per_bucket is None:
         # catalyst's size estimate: free (no job), pessimistic after
         # wide transforms -- which only pushes k toward the cap
-        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        try:
+            est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        except (AttributeError, Py4JError):
+            est = 0  # -> k = 1
         want = -(-est // (n_buckets * target_file_bytes))  # ceil
         shuffle_parts = int(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions")

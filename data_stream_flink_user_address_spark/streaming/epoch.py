@@ -35,24 +35,25 @@ def write_partition(df: DataFrame, path: str, value: int, col: str = "__epoch") 
     )
 
 
-def require_epoch_layout(*paths: str) -> None:
+def require_epoch_layout(*paths: str | None) -> None:
     """Fail fast on a flat-``part-*`` output directory: the gates write
     ``__epoch=N/`` partitions, and a directory mixing both layouts
     cannot be read consistently by ``spark.read.parquet``.  Migrate old
     flat files under a synthetic ``__epoch=-1`` partition or point the
-    stream at a fresh directory."""
+    stream at a fresh directory.  ``None`` entries (an optional output
+    that is not set) are skipped."""
     for path in paths:
-        if not os.path.isdir(path):
+        if path is None or not os.path.isdir(path):
             continue
         entries = os.listdir(path)
         flat_parts = [e for e in entries if e.startswith("part-")]
         if flat_parts and not any(e.startswith("__epoch=") for e in entries):
             raise ValueError(
-                f"out_path {path!r} holds flat-append part files from a "
+                f"output path {path!r} holds flat-append part files from a "
                 "pre-__epoch sink layout; mixing them with __epoch=N/ "
                 "partitions is unreadable. Rewrite them under __epoch=-1/ "
-                "(spark.read.parquet(out_path).withColumn('__epoch', "
-                "lit(-1))...partitionBy('__epoch')) or use a new out_path."
+                "(spark.read.parquet(path).withColumn('__epoch', "
+                "lit(-1))...partitionBy('__epoch')) or use a new path."
             )
 
 
@@ -60,9 +61,10 @@ def start_gate_stream(
     stream: DataFrame,
     checkpoint_dir: str,
     epoch_fn: Callable[[DataFrame, int], None],
-    *out_paths: str,
+    *out_paths: str | None,
 ):
-    """Check each ``__epoch``-partitioned output's layout, then run
+    """Check each ``__epoch``-partitioned output's layout (``None``
+    entries are unset optional outputs), then run
     ``epoch_fn(batch_df, epoch_id)`` on every micro-batch of ``stream``.
     Returns the started ``StreamingQuery``."""
     require_epoch_layout(*out_paths)

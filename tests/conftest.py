@@ -37,8 +37,8 @@ def spark():
 # restores full collection (how the full-suite results recorded in
 # OPTIMIZATION_r19.md are produced).  Cheap structural tests inside
 # the slow modules (the driver-window rotation pin, the entry smoke,
-# the dtype gate, the rounding-kernel unit tests) stay in the default
-# run via _FAST_EXCEPTIONS.
+# the dtype gate, the rounding-kernel unit tests, the vector-kernel
+# oracle pins) stay in the default run via _FAST_EXCEPTIONS.
 _SLOW_MODULES = {
     "test_degenerate_parity.py",        # 587s  full-registry degenerate-corpus oracle sweep
     "test_pq.py",                       # 215s  PQ/IVF-PQ kernel + index-build pins
@@ -57,6 +57,10 @@ _FAST_EXCEPTIONS = {
     "test_driver_window_covers_r19_rotation",
     "test_round_half_away_matches_oracle_round",
     "test_round_half_away_property_fuzz",
+    # test_pq.py: the one assignment and encode kernel vs the oracle SQL
+    "test_assign_kernel_matches_oracle_sql",
+    "test_pq_encode_kernel_matches_oracle_sql",
+    "test_build_ivfpq_index_rejects_non_finite_vector",
 }
 
 

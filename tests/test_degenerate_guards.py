@@ -98,11 +98,10 @@ def test_brute_force_topk_tolerates_zero_norm_sides(spark):
     assert {r["cosine"] for r in q11} == {0.0}
 
 
-@pytest.mark.parametrize("kernel", ["codegen", "pandas"])
-def test_assign_to_centroids_zero_vector_zero_centroid(spark, kernel):
+def test_assign_to_centroids_zero_vector_zero_centroid(spark):
     # a zero centroid CAN arise (a cluster of only zero vectors); a zero
     # vector against it is the 1e-300**2 underflow trap -- assignment
-    # must complete and tie-break to the smaller cid in BOTH kernels
+    # must complete and tie-break to the smaller cid
     emb = _emb(spark, [(1, [0.0] * DIM), (2, [1.0, 0.0, 0.0, 0.0])])
     cents = spark.createDataFrame(
         [(0, [0.0] * 4), (1, [1.0, 0.0, 0.0, 0.0])],
@@ -110,7 +109,7 @@ def test_assign_to_centroids_zero_vector_zero_centroid(spark, kernel):
     )
     got = {
         r["vec_id"]: r["cluster_id"]
-        for r in assign_to_centroids(emb, cents, dim=DIM, kernel=kernel).collect()
+        for r in assign_to_centroids(emb, cents, dim=DIM).collect()
     }
     # zero vector: cosine 0.0 to every centroid -> smaller cid wins
     assert got[1] == 0

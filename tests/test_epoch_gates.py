@@ -42,6 +42,9 @@ from data_stream_flink_user_address_spark.functions.dedup import (  # noqa: E402
     build_minhash_band_store,
     build_simhash_band_store,
     incremental_exact_dedup,
+    streaming_incremental_dedup_bucketed,
+    streaming_incremental_minhash_dedup,
+    streaming_incremental_simhash_dedup,
 )
 from data_stream_flink_user_address_spark.functions.ordering import (  # noqa: E402
     write_epoch_shards,
@@ -301,3 +304,28 @@ def test_write_epoch_shards_overwrites_after_store_build(
     manifest = write_epoch_shards(docs, path, n_shards=4).collect()
     assert len(manifest) == 4
     assert sum(r.n_rows for r in manifest) == 200
+
+
+@pytest.mark.parametrize(
+    "start",
+    [
+        streaming_incremental_dedup_bucketed,
+        streaming_incremental_minhash_dedup,
+        streaming_incremental_simhash_dedup,
+    ],
+    ids=["bucketed", "minhash", "simhash"],
+)
+def test_store_gate_rejects_flat_profile_path(spark, tmp_path, start):
+    """The store gates write ``__epoch`` partitions to ``profile_path``
+    too, so a flat-``part-*`` profile directory fails at stream start
+    exactly like a flat ``out_path``."""
+    prof = str(tmp_path / "profile")
+    spark.createDataFrame([(1, "x")], "doc_id long, text string").write.parquet(prof)
+    stream = spark.readStream.format("rate").load().select(
+        F.col("value").alias("doc_id"), F.col("value").cast("string").alias("text")
+    )
+    with pytest.raises(ValueError, match="flat-append"):
+        start(
+            stream, "epoch_gates_unused_store", str(tmp_path / "out"),
+            str(tmp_path / "ck"), profile_path=prof,
+        ).stop()

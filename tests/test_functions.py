@@ -442,15 +442,6 @@ def test_train_ivf_centroids_caps_seeds_and_training_sample(spark):
     )
     assert {r["cid"] for r in seeded.collect()} == {-10, -5, 0}
 
-    # kernel="pandas" (the eager-build fast path): same trained
-    # centroids as the codegen round -- assignments are bit-exact and
-    # the rounded means absorb aggregation-order differences
-    base = train_ivf_centroids(e, iters=1, centroid_stride=5, dim=4, k_cent=3)
-    fast = train_ivf_centroids(
-        e, iters=1, centroid_stride=5, dim=4, k_cent=3, kernel="pandas"
-    )
-    assert sorted(map(tuple, base.collect())) == sorted(map(tuple, fast.collect()))
-
 
 def test_substring_dup_spans_marks_and_merges(spark):
     """Cross-doc repeat, within-doc repeat with adjacent-cover merge,

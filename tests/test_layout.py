@@ -260,3 +260,42 @@ def test_write_bucketed_files_per_bucket_regimes(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
         for t in ("t_orders_k1", "t_orders_k3", "t_customer_k3"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_write_bucketed_falls_back_to_one_file_per_bucket(spark, tmp_path):
+    """The size estimate goes through the private ``df._jdf`` handle;
+    when it raises, the write still succeeds with k=1 -- one file per
+    bucket -- even where the estimate would have asked for more files
+    (a 1-byte target makes the estimate-driven k hit its cap)."""
+    from py4j.protocol import Py4JError
+
+    o = spark.read.parquet(f"{SF}/orders.parquet").select("o_orderkey", "o_custkey")
+
+    class _NoEstimate:
+        def __init__(self, jdf):
+            self._jdf = jdf
+
+        def queryExecution(self):
+            raise Py4JError("size estimate unavailable")
+
+        def __getattr__(self, name):
+            return getattr(self._jdf, name)
+
+    try:
+        write_bucketed(
+            o, "t_orders_est", "o_custkey", 2, str(tmp_path / "est"),
+            target_file_bytes=1,
+        )
+        assert len(glob.glob(str(tmp_path / "est" / "*.parquet"))) > 2
+
+        o._jdf = _NoEstimate(o._jdf)
+        write_bucketed(
+            o, "t_orders_noest", "o_custkey", 2, str(tmp_path / "noest"),
+            target_file_bytes=1,
+        )
+        files = glob.glob(str(tmp_path / "noest" / "*.parquet"))
+        assert len(files) == 2, sorted(files)
+        assert spark.table("t_orders_noest").count() == o.count()
+    finally:
+        for t in ("t_orders_est", "t_orders_noest"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")

@@ -118,15 +118,30 @@ def test_q15_scalar_max_broadcasts_not_single_partition_window(spark):
     assert "Window" not in plan
 
 
+def _assert_one_scan_fed_assignment(plan):
+    """The centroid assignment is ONE MapInPandas node, and no hash
+    exchange sits between the corpus scan and it.  The formatted plan's
+    tree lists a node's children below it, so the tree text from the
+    node to the next scan is its input subtree; each Exchange there must
+    be a round-robin spread, not a hash partitioning."""
+    import re
+
+    tree = plan.split("\n\n", 1)[0]
+    assert len(re.findall(r"MapInPandas \(\d+\)", tree)) == 1, tree
+    below = tree.split("MapInPandas", 1)[1].split("Scan parquet", 1)[0]
+    for node in re.findall(r"(?<!Broadcast)Exchange \((\d+)\)", below):
+        details = plan.split(f"({node}) Exchange\n", 1)[1].split("\n\n", 1)[0]
+        assert "hashpartitioning" not in details, details
+
+
 def test_ivf_topk_broadcasts_and_never_cartesians(spark):
-    # centroids and probes are the provably-small sides: both joins must
-    # be broadcast, the n*k_cent assignment explosion must reduce via a
-    # partial (map-side) aggregate, and nothing may degrade to a
-    # cartesian of the corpus
+    # the probe side is provably small and must broadcast; the corpus
+    # assignment is one Arrow pass over the scan (no n*k_cent pair rows,
+    # no shuffle before it), and nothing may degrade to a cartesian
     plan = _plan(spark, "similarity_ivf_trained")
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
     assert "CartesianProduct" not in plan
-    assert "max_by" in plan  # argmax assignment is an aggregate, not a window
+    _assert_one_scan_fed_assignment(plan)
     # the final rank<=k is a partial top-k, not a global sort
     assert "WindowGroupLimit" in plan
 
@@ -252,13 +267,14 @@ def test_main_content_extraction_stage_is_scan_fused_row_local(spark):
 
 
 def test_semantic_dedup_broadcasts_centroids_no_cartesian(spark):
-    # the centroid side must broadcast (the corpus x centroid argmax is
-    # a BroadcastNestedLoopJoin over the tiny trained frame, never a
-    # CartesianProduct shuffle), and the cluster-keyed pairwise stage is
-    # the grouped-pandas node keyed by cluster_id
+    # the tiny trained centroid frame ships with the assignment kernel
+    # (collected at construction), so the corpus x centroid argmax is one
+    # Arrow pass over the scan -- never a CartesianProduct shuffle -- and
+    # the cluster-keyed pairwise stage is the grouped-pandas node keyed
+    # by cluster_id
     plan = _plan(spark, "semantic_dedup")
     assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
+    _assert_one_scan_fed_assignment(plan)
     assert "FlatMapGroupsInPandas" in plan
 
 

@@ -115,20 +115,18 @@ def test_ivfpq_recall_not_below_probe_set(spark):
     assert got == flat
 
 
-def test_assign_pandas_kernel_is_bit_exact_vs_codegen(spark):
-    """The Arrow-batched assignment kernel (the IVF-PQ build fast path)
-    must produce IDENTICAL (vec_id, cluster_id) rows to the codegen
-    broadcast-join kernel: same float64 accumulation order, same
-    HALF_UP rounding, same smaller-cid tie break -- on a corpus that
-    includes duplicate vectors (exact cosine ties) and a zero vector
-    (norm guard)."""
-    from data_stream_flink_user_address_spark.functions.similarity import (
-        assign_to_centroids,
-    )
-
+def _oracle_corpus(spark, con):
+    """The sf0.001 corpus plus a zero vector (norm guard) and an exact
+    duplicate of vec 0 (cosine and distance ties), as the Spark frame
+    and as the DuckDB ``embeddings`` view the oracle SQL reads."""
+    src = os.path.join(SF, "embeddings.parquet")
+    con.execute(f"""
+        CREATE OR REPLACE VIEW embeddings AS
+        SELECT vec_id, embedding FROM read_parquet('{src}')
+        UNION ALL SELECT 90001, list_transform(range(64), x -> 0.0::FLOAT)
+        UNION ALL SELECT 90002, embedding FROM read_parquet('{src}') WHERE vec_id = 0
+    """)
     e = _emb(spark).select("vec_id", "embedding")
-    # append a zero vector and an exact duplicate of vec 0 to force the
-    # guard and the tie-break paths
     extra = spark.createDataFrame(
         [(90001, [0.0] * 64)], "vec_id long, embedding array<float>"
     ).union(
@@ -136,45 +134,129 @@ def test_assign_pandas_kernel_is_bit_exact_vs_codegen(spark):
             F.lit(90002).cast("long").alias("vec_id"), "embedding"
         )
     )
-    corpus = e.union(extra)
-    cent = e.filter(F.col("vec_id") % 31 == 0).select(
+    return e, e.union(extra)
+
+
+def test_assign_kernel_matches_oracle_sql(spark):
+    """The assignment kernel against the DuckDB oracle's argmax-cosine
+    SQL (``_sql_cosine``, ``round(cos, 6) DESC, cid ASC``) on a corpus
+    with a zero vector and a duplicate vector, and a centroid set with
+    a duplicate centroid under a larger cid, so every vector nearest to
+    it is an exact tie the smaller cid must win."""
+    import duckdb
+
+    import __spark_entry__ as entrymod
+    from data_stream_flink_user_address_spark.functions.similarity import (
+        assign_to_centroids,
+    )
+
+    con = duckdb.connect()
+    e, corpus = _oracle_corpus(spark, con)
+    con.execute("""
+        CREATE TABLE cent AS
+        SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec
+        FROM embeddings WHERE vec_id % 31 = 0 AND vec_id < 90000
+        UNION ALL
+        SELECT 99999, embedding::DOUBLE[] FROM embeddings WHERE vec_id = 31
+    """)
+    cos = entrymod._sql_cosine("c.embedding", "k.cvec")
+    want = sorted(con.execute(f"""
+        SELECT vec_id, cid FROM (
+          SELECT c.vec_id, k.cid,
+                 row_number() OVER (
+                   PARTITION BY c.vec_id
+                   ORDER BY round({cos}, 6) DESC, k.cid ASC) AS rn
+          FROM embeddings c CROSS JOIN cent k
+        ) WHERE rn = 1
+    """).fetchall())
+    con.close()
+
+    seeds = e.filter(F.col("vec_id") % 31 == 0)
+    cent = seeds.union(
+        seeds.filter(F.col("vec_id") == 31).select(
+            F.lit(99999).cast("long").alias("vec_id"), "embedding"
+        )
+    ).select(
         F.col("vec_id").alias("cid"),
         F.transform("embedding", lambda x: x.cast("double")).alias("centroid"),
     )
-    base = sorted(
+    got = sorted(
         map(tuple, assign_to_centroids(corpus, cent, "vec_id", "embedding", 64).collect())
     )
-    fast = sorted(
-        map(tuple, assign_to_centroids(
-            corpus, cent, "vec_id", "embedding", 64, kernel="pandas"
-        ).collect())
-    )
-    assert base == fast
+    assert got == want
+    assert 99999 not in {cid for _, cid in got}
 
 
-def test_pq_encode_pandas_kernel_is_bit_exact_vs_codegen(spark):
-    """The Arrow-batched encode kernel must emit IDENTICAL codes to the
-    codegen broadcast-join kernel -- checked against both the raw
-    stride-seeded codebooks and Lloyd-trained (re-densified, possibly
-    ragged) codebooks."""
+def test_pq_encode_kernel_matches_oracle_sql(spark):
+    """The encode kernel against the ``similarity_ivfpq_topk`` oracle's
+    own encode CTE over its finite-vector subset (fixed-point L2
+    argmin, ties to the smaller code),
+    with both the raw stride-seeded codebooks and Lloyd-trained
+    (re-densified, possibly ragged) codebooks."""
+    import re
+
+    import duckdb
+
+    import __spark_entry__ as entrymod
     from data_stream_flink_user_address_spark.functions.pq import (
         train_pq_codebooks,
     )
 
-    e = _emb(spark).select("vec_id", "embedding")
+    enc_cte = re.search(
+        r"\benc AS \((.*?)\),\s*lut AS",
+        entrymod.oracle_sql()["similarity_ivfpq_topk"],
+        re.S,
+    ).group(1)
+    con = duckdb.connect()
+    e, corpus = _oracle_corpus(spark, con)
     for cb in (
         pq_codebooks(e, m=8, k_sub=16, stride=31),
         train_pq_codebooks(e, iters=1, m=8, k_sub=16, stride=31),
     ):
-        base = sorted(
-            (r["vec_id"], tuple(r["codes"]))
-            for r in pq_encode(e, cb, m=8).collect()
+        con.execute("CREATE OR REPLACE TABLE cb (s INTEGER, code INTEGER, cvec DOUBLE[])")
+        con.executemany(
+            "INSERT INTO cb VALUES (?, ?, ?)",
+            [(r["s"], r["code"], list(r["cvec"])) for r in cb.collect()],
         )
-        fast = sorted(
-            (r["vec_id"], tuple(r["codes"]))
-            for r in pq_encode(e, cb, m=8, kernel="pandas").collect()
+        want = sorted(
+            (vec_id, tuple(codes))
+            for vec_id, codes in con.execute(f"""
+                WITH {entrymod._FINITE_EMB_CTE}, enc AS ({enc_cte})
+                SELECT vec_id, list(code ORDER BY s) FROM enc GROUP BY vec_id
+            """).fetchall()
         )
-        assert base == fast
+        got = sorted(
+            (r["vec_id"], tuple(r["codes"]))
+            for r in pq_encode(corpus, cb, m=8).collect()
+        )
+        assert got == want
+    con.close()
+
+
+def test_build_ivfpq_index_rejects_non_finite_vector(spark):
+    """A NaN component has no fixed-point code: the encode must fail
+    naming the vector, not cast the NaN distance to an arbitrary
+    integer and hand the vector code 0."""
+    import pytest
+
+    from data_stream_flink_user_address_spark.functions.pq import (
+        build_ivfpq_index,
+    )
+
+    e = _emb(spark).select("vec_id", "embedding")
+    corpus = e.union(
+        spark.createDataFrame(
+            [(90003, [0.1] * 5 + [float("nan")] + [0.1] * 58)],
+            "vec_id long, embedding array<float>",
+        )
+    )
+    cent = e.filter(F.col("vec_id") % 31 == 0).select(
+        F.col("vec_id").alias("cid"),
+        F.transform("embedding", lambda x: x.cast("double")).alias("centroid"),
+    )
+    cb = pq_codebooks(e, m=8, k_sub=16, stride=31)
+    with pytest.raises(Exception, match="vec_id 90003"):
+        build_ivfpq_index(corpus, cent, cb, m=8).collect()
 
 
 def test_ivfpq_persisted_index_matches_on_the_fly(spark, tmp_path):

@@ -10,7 +10,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -92,6 +92,7 @@ _TEXT = st.one_of(st.none(), st.text(alphabet="xy \t", max_size=6))
     old=st.dictionaries(st.integers(0, 30), _TEXT, max_size=15),
     new=st.dictionaries(st.integers(0, 30), _TEXT, max_size=15),
 )
+@example(old={0: ""}, new={0: "\t"})  # an edge tab alone is not a change
 @settings(**_SETTINGS)
 def test_corpus_diff_partition_laws(spark, old, new):
     mk = lambda d: spark.createDataFrame(  # noqa: E731
@@ -107,13 +108,13 @@ def test_corpus_diff_partition_laws(spark, old, new):
     assert {k for k, s in got.items() if s == "removed"} == set(old) - set(new)
 
     def fp(t):
-        # mirror the ENGINE's normalization exactly: Spark F.trim
-        # strips SPACES only (a leading tab survives into the regex
-        # collapse), so the oracle must strip(" "), not strip()
+        # mirror the ENGINE's normalization exactly (text.norm_ws):
+        # collapse whitespace runs to one space FIRST, then trim spaces,
+        # so edge tabs are stripped too ('' and '\t' are unchanged)
         if t is None:
             return None
         return hashlib.md5(
-            re.sub(r"\s+", " ", t.strip(" ")).encode()
+            re.sub(r"\s+", " ", t).strip(" ").encode()
         ).hexdigest()
 
     for k in set(old) & set(new):
