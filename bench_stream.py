@@ -48,7 +48,7 @@ N_CHUNKS = 4
 WORK = "/tmp/spark_graft_stream_bench"
 
 
-def _run(spark, label: str, files_per_trigger: int | None, transactional: bool,
+def _run(spark, label: str, files_per_trigger: int | None,
          n_users: int = N_USERS) -> dict:
     work = os.path.join(WORK, label)
     shutil.rmtree(work, ignore_errors=True)
@@ -81,9 +81,7 @@ def _run(spark, label: str, files_per_trigger: int | None, transactional: bool,
 
     listener = JsonlMetricsListener(metrics_path)
     spark.streams.addListener(listener)
-    pipe = ReferencePipeline(
-        spark, u_stream, a_stream, out, ckpt, transactional=transactional,
-    )
+    pipe = ReferencePipeline(spark, u_stream, a_stream, out, ckpt)
     t0 = time.time()
     pipe.start()
     try:
@@ -108,7 +106,6 @@ def _run(spark, label: str, files_per_trigger: int | None, transactional: bool,
         "label": label,
         "n_users": n_users,
         "files_per_trigger": files_per_trigger,
-        "transactional": transactional,
         "n_events": n_events,
         "wall_s": round(wall, 2),
         "events_per_sec_end_to_end": round(n_events / wall, 1),
@@ -124,24 +121,23 @@ def main() -> None:
     runs = [
         # ONE query, join executed once per batch, foreachBatch
         # multiplexes to the three sinks
-        _run(spark, "pipelined_txn_shared", 1, True),
-        _run(spark, "bigbatch_txn_shared", None, True),
-        _run(spark, "bigbatch_plain_shared", None, False),
+        _run(spark, "pipelined_txn_shared", 1),
+        _run(spark, "bigbatch_txn_shared", None),
         # state-growth probe: 1e6 events through the headline shared
         # config -- upsert tables at 250k keys must hold throughput
         # within ~2x of the 80k-event figure (VERDICT r10 ask #7)
-        _run(spark, "bigbatch_txn_shared_1e6", None, True, n_users=250_000),
+        _run(spark, "bigbatch_txn_shared_1e6", None, n_users=250_000),
     ]
     artifact = {
         "n_users": N_USERS,
         "addr_per_user": ADDR_PER_USER,
         "runs": runs,
-        "note": "full topology: stateful join + 3 upsert sinks. "
+        "note": "full topology: stateful join + 3 commit-log upsert sinks. "
                 "ONE streaming query whose foreachBatch multiplexes the "
                 "joined micro-batch to all three upserts (join executed "
-                "once, single copy of join state). The deleted "
-                "one-query-per-sink layout re-executed the join per sink; "
-                "its last numbers are in this file's git history. local[*]",
+                "once, single copy of join state). The deleted layouts "
+                "(one query per sink; parquet-directory sinks) have their "
+                "last numbers in this file's git history. local[*]",
     }
     with open("STREAM_BENCH.json", "w") as f:
         json.dump(artifact, f, indent=1)

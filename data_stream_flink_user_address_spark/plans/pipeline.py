@@ -6,12 +6,11 @@ Two JSON streams (user, address) -> stateful emit-per-event join ->
   (c) passthrough snapshots           -> keyed upsert (key=userId)
 
 Differences from the reference, by design (SURVEY.md SS7 item 8):
-- windows are (window x dimension) grouped aggs, not parallelism-1
-  ``windowAll`` -- identical per-window results, fully parallel;
+- windows are one (window x dimension x value) grouped agg, not
+  parallelism-1 ``windowAll`` -- identical per-window results;
 - sinks are keyed upsert tables (MongoSink analogue) behind
-  ``foreachBatch`` -- the commit-log transactional backend by default,
-  the plain parquet-directory store via ``transactional=False``; swap
-  for the Mongo connector in production;
+  ``foreachBatch``, all on the commit-log backend
+  (``TransactionalKeyedUpsertSink``); swap for the Mongo connector;
 - counts are driven by an explicit ingest-time column, making the
   reference's processing-time behavior reproducible in tests.
 
@@ -26,27 +25,50 @@ Sharing the join is the Flink-graph behavior (Main.java wires one
 joined stream into all three sinks); the deleted one-query-per-sink
 layout's throughput is recorded in ``STREAM_BENCH.json`` (2.2x slower).
 
-The windowed counts are accumulated in the sink tables themselves (per
-key: latest window_start, running count, last applied epoch) instead of
+The windowed counts are accumulated in the sink tables themselves, one
+``(dim, count, window_start, __epoch, __run)`` row per key, instead of
 in a checkpointed streaming aggregation.  Replay safety: a micro-batch
 retry re-runs ``foreachBatch`` with the same ``epoch_id``; count rows
-whose stored ``__epoch`` equals the incoming epoch already contain this
-batch's contribution and are skipped, so the add-merge stays
-exactly-once per (key, epoch) on both sink backends.
+whose stored ``(__run, __epoch)`` equals this attempt already contain
+this batch's contribution and are skipped (exactly-once per key, epoch).
 """
 
 from __future__ import annotations
 
 import os
 import uuid
+from collections import defaultdict
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window
 
-from ..streaming.sinks import KeyedUpsertSink, TransactionalKeyedUpsertSink
+from ..streaming.sinks import TransactionalKeyedUpsertSink
 from ..streaming.stateful_join import stateful_user_address_join
+
+# (dimension, count table) -- the reference's two windowAll counts
+COUNT_TABLES = (("state", "userCountByState"), ("country", "userCountByCountry"))
+
+
+def _fold_counts(inc, stored, attempt: tuple[int, str]) -> list[tuple]:
+    """``(value, count, window_us)`` rows to upsert, from a batch's
+    ``(value, window_us, count)`` increments and the table's stored
+    ``(value, count, window_us, __epoch, __run)`` rows.  A value stored
+    by this very ``attempt`` (a retry) is left out; else a stored count
+    is added when its window matches, and the LATEST window wins."""
+    totals: dict[tuple, int] = defaultdict(int)
+    for value, ws, n in inc:
+        totals[value, ws] += n
+    touched = {value for value, _ in totals}
+    done = {value for value, _, _, *guard in stored if tuple(guard) == attempt}
+    for value, n, ws, *guard in stored:
+        if value in touched and value not in done:
+            totals[value, ws] += n
+    latest: dict = {}
+    for (value, ws), n in totals.items():
+        if value not in done and (value not in latest or ws > latest[value][0]):
+            latest[value] = (ws, n)
+    return [(value, n, ws) for value, (ws, n) in latest.items()]
 
 
 class ReferencePipeline:
@@ -68,20 +90,14 @@ class ReferencePipeline:
         checkpoint_dir: str,
         window: str = "1 minute",
         seq_col: str | None = "seq",
-        transactional: bool = True,
     ):
         self.spark = spark
         self.out_dir = out_dir
         self.checkpoint_dir = checkpoint_dir
         self.window = window
-        # The commit-log backend (cross-bucket crash atomicity,
-        # multi-writer safe) is the default; transactional=False selects
-        # the simpler parquet-directory store -- same upsert semantics,
-        # single-writer durability only
-        self.sink_cls = TransactionalKeyedUpsertSink if transactional else KeyedUpsertSink
         self.joined = stateful_user_address_join(users, addresses, seq_col=seq_col)
         self.queries = []
-        self.sinks: dict[str, KeyedUpsertSink | TransactionalKeyedUpsertSink] = {}
+        self.sinks: dict[str, TransactionalKeyedUpsertSink] = {}
         # resolved from the checkpoint in start(); namespaces the
         # epoch guard (see _run_namespace)
         self._run_id: str = ""
@@ -112,34 +128,33 @@ class ReferencePipeline:
             f.write(rid)
         return rid
 
-    def _merge_window_counts(self, sink, batch: DataFrame, dim: str, epoch_id: int) -> None:
-        """Fold one joined micro-batch into a windowed-count sink table.
+    def _merge_counts(self, batch: DataFrame, epoch_id: int) -> None:
+        """Fold one joined micro-batch into both windowed-count tables.
 
-        Table row per ``dim`` value: (dim, count, window_start, __epoch).
-        The batch's (window x dim) increments are added to the stored
-        count when the window matches, or start a fresh count when the
-        batch has entered a newer window -- the row always holds the
-        LATEST window's running total, what an update-mode windowed
-        aggregation + upsert would produce at every trigger.
-        Rows whose stored (__run, __epoch) equals (this run, ``epoch_id``)
-        were written by a previous attempt of this very batch
-        (micro-batch retry); their increments are dropped so replay
-        cannot double-count.  The __run namespace keeps a recreated
-        checkpoint's restarted batchIds from colliding with a prior
-        run's epochs (see _run_namespace).
+        One aggregation over the exploded addresses, tagged by dimension,
+        is collected: ``ingest_time`` is one literal per batch, so it has
+        one window x (distinct states + countries) rows.  Each table (one
+        row per value) is read once and checked, then folded on the
+        driver and upserted.  Window starts travel as epoch microseconds.
         """
-        inc = (
-            batch.withColumn("addr", F.explode("addresses"))
-            .groupBy(
-                F.window("ingest_time", self.window).alias("win"),
-                F.col(f"addr.{dim}").alias(dim),
-            )
-            .agg(F.count(F.lit(1)).alias("count"))
-            .select(dim, "count", F.col("win.start").alias("window_start"))
+        rows = (
+            batch.select("ingest_time", F.explode("addresses").alias("a"))
+            .select("ingest_time", F.inline(F.array(*(
+                F.struct(F.lit(dim).alias("dim"), F.col(f"a.{dim}").alias("value"))
+                for dim, _ in COUNT_TABLES
+            ))))
+            .groupBy(F.window("ingest_time", self.window).alias("win"), "dim", "value")
+            .count()
+            .select("dim", "value", F.unix_micros("win.start"), "count")
+            .collect()
         )
-        cur = sink.read()
-        if cur is not None:
-            missing = [c for c in ("__epoch", "__run") if c not in cur.columns]
+        inc = {dim: [tuple(r[1:]) for r in rows if r[0] == dim] for dim, _ in COUNT_TABLES}
+
+        stored: dict[str, list] = {}
+        for dim, table in COUNT_TABLES:
+            sink = self.sinks[table]
+            cur = sink.read()
+            missing = [c for c in ("__epoch", "__run") if cur is not None and c not in cur.columns]
             if missing:
                 raise ValueError(
                     f"count table {sink.path!r} has no {'/'.join(missing)} "
@@ -147,35 +162,21 @@ class ReferencePipeline:
                     "which this pipeline no longer converts; start from a "
                     "fresh out_dir"
                 )
-            touched = cur.join(inc.select(dim).distinct(), dim, "left_semi")
-            this_attempt = (F.col("__epoch") == F.lit(epoch_id)) & (
-                F.col("__run") == F.lit(self._run_id)
-            )
-            already = touched.filter(this_attempt)
-            prior = touched.filter(~this_attempt).select(
-                dim, "count", "window_start"
-            )
-            # keys already holding this epoch's contribution are left
-            # out of the upsert entirely (sink.apply only rewrites
-            # incoming keys, so absence = untouched)
-            inc = inc.join(already.select(dim), dim, "left_anti").unionByName(prior)
-        totals = inc.groupBy(dim, "window_start").agg(F.sum("count").alias("count"))
-        w = Window.partitionBy(dim).orderBy(F.col("window_start").desc())
-        final = (
-            totals.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select(
-                dim, "count", "window_start",
-                F.lit(epoch_id).alias("__epoch"),
-                F.lit(self._run_id).alias("__run"),
-            )
-        )
-        sink.apply(final)
+            stored[dim] = [] if cur is None else cur.select(
+                dim, "count", F.unix_micros("window_start"), "__epoch", "__run"
+            ).collect()
+
+        for dim, table in COUNT_TABLES:
+            folded = _fold_counts(inc[dim], stored[dim], (epoch_id, self._run_id))
+            self.sinks[table].apply(batch.sparkSession.createDataFrame(
+                [(value, n, ws, epoch_id, self._run_id) for value, n, ws in folded],
+                f"{dim} string, count bigint, ws bigint, __epoch int, __run string",
+            ).select(
+                dim, "count", F.timestamp_micros("ws").alias("window_start"), "__epoch", "__run"
+            ))
 
     def _shared_foreach_batch(self):
         ua_sink = self.sinks["userAddress"]
-        st_sink = self.sinks["userCountByState"]
-        co_sink = self.sinks["userCountByCountry"]
 
         def fn(batch_df: DataFrame, epoch_id: int) -> None:
             # ingest_time is a CONCRETE literal stamped once per batch,
@@ -183,16 +184,15 @@ class ReferencePipeline:
             # recompute current_timestamp() at a later wall time and
             # could land rows of one batch in two different windows
             stamp = datetime.now(timezone.utc).replace(tzinfo=None)
-            # one materialization of the joined batch feeds all three
-            # sinks; without the persist each sink action would re-run
-            # the (already computed, but re-planned) batch lineage
+            # one materialization of the joined batch feeds the
+            # userAddress upsert and the count pass; without the persist
+            # each action would re-run the batch lineage
             batch = batch_df.withColumn(
                 "ingest_time", F.lit(stamp).cast("timestamp")
             ).persist()
             try:
                 ua_sink.apply(batch)
-                self._merge_window_counts(st_sink, batch, "state", epoch_id)
-                self._merge_window_counts(co_sink, batch, "country", epoch_id)
+                self._merge_counts(batch, epoch_id)
             finally:
                 batch.unpersist()
 
@@ -200,11 +200,11 @@ class ReferencePipeline:
 
     def start(self):
         """Start the shared streaming query."""
-        self.sinks["userAddress"] = self.sink_cls(
+        self.sinks["userAddress"] = TransactionalKeyedUpsertSink(
             self.spark, os.path.join(self.out_dir, "userAddress"), key="userId", order_col="seq"
         )
-        for dim, table in (("state", "userCountByState"), ("country", "userCountByCountry")):
-            self.sinks[table] = self.sink_cls(
+        for dim, table in COUNT_TABLES:
+            self.sinks[table] = TransactionalKeyedUpsertSink(
                 self.spark, os.path.join(self.out_dir, table), key=dim
             )
 

@@ -4,7 +4,7 @@ from .stateful_join import (
     union_with_discriminator,
 )
 from .metrics import JsonlMetricsListener, read_metrics
-from .sinks import KeyedUpsertSink, console_sink
+from .sinks import KeyedUpsertSink, TransactionalKeyedUpsertSink, console_sink
 from .stream_join import watermarked_stream_join
 
 __all__ = [
@@ -12,6 +12,7 @@ __all__ = [
     "stateful_user_address_join",
     "union_with_discriminator",
     "KeyedUpsertSink",
+    "TransactionalKeyedUpsertSink",
     "console_sink",
     "JsonlMetricsListener",
     "read_metrics",

@@ -4,13 +4,13 @@ Reference semantics (``Sink/MongoSink.java:44-63``): per record,
 ``updateOne({key: doc[key]}, {$set: doc}, upsert=true)`` -- last-write-wins
 keyed upsert, idempotent per key, no transactions.  Three instances:
 userAddress (key userId), userCountByState (key state), userCountByCountry
-(key country) -- ``Main.java:170-179``.
+(key country) -- ``Main.java:170-179``.  A NULL key upserts like any other.
 
 Spark mapping: ``writeStream.foreachBatch`` with a per-batch keyed merge.
-The default store here is a self-contained parquet key-value table
-(read-merge-rewrite, atomic per bucket directory); on a real deployment
-the same interface fronts Delta ``MERGE`` or the Mongo Spark connector --
-the batch-level dedup logic is identical.
+The pipeline's only backend is :class:`TransactionalKeyedUpsertSink`
+(commit log; count rows ``(dim, count, window_start, __epoch, __run)``);
+on a real deployment the same interface fronts Delta ``MERGE`` or the
+Mongo Spark connector -- the batch-level dedup logic is identical.
 
 Micro-batch retries replay a batch: the merge is idempotent per key, so
 at-least-once delivery converges exactly like the reference's upsert.
@@ -54,6 +54,12 @@ def latest_per_key(df: DataFrame, key: str, order_col: str | None) -> DataFrame:
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
+
+
+def survivors(stored: DataFrame, incoming: DataFrame, key: str) -> DataFrame:
+    """Stored rows the batch does not replace (null-safe: NULL replaces NULL)."""
+    keys = incoming.select(F.col(key).alias("__key"))
+    return stored.join(keys, F.col(key).eqNullSafe(F.col("__key")), "left_anti")
 
 
 class KeyedUpsertSink:
@@ -118,9 +124,8 @@ class KeyedUpsertSink:
         else:
             touched = [r[0] for r in incoming.select("__bucket").distinct().collect()]
             # partition pruning: only touched bucket dirs are scanned
-            survivors = (
-                current.filter(F.col("__bucket").isin(touched))
-                .join(incoming.select(self.key), on=self.key, how="left_anti")
+            kept = survivors(
+                current.filter(F.col("__bucket").isin(touched)), incoming, self.key
             )
             # new batch wins on key collision (MongoSink $set upsert).
             # allowMissingColumns: a stored table written under an older
@@ -128,8 +133,8 @@ class KeyedUpsertSink:
             # survivors get NULL there instead of failing the union with
             # AnalysisException.  (The reference pipeline's count tables
             # refuse such a table before merging: see
-            # plans/pipeline.py:_merge_window_counts.)
-            merged = incoming.unionByName(survivors, allowMissingColumns=True)
+            # plans/pipeline.py:_merge_counts.)
+            merged = incoming.unionByName(kept, allowMissingColumns=True)
         (
             merged.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -413,16 +418,11 @@ class TransactionalKeyedUpsertSink:
                 for f in fl
             ]
             if old_files:
-                survivors = (
-                    self.spark.read.parquet(*old_files)
-                    .join(incoming.select(self.key), on=self.key, how="left_anti")
-                    .withColumn("__bucket", self._bucket())
-                )
-                # allowMissingColumns: same older-schema tolerance as
-                # KeyedUpsertSink.apply -- survivors from a table
-                # persisted under an older column set read as NULL in
-                # the new columns rather than failing the union
-                merged = incoming.unionByName(survivors, allowMissingColumns=True)
+                kept = survivors(
+                    self.spark.read.parquet(*old_files), incoming, self.key
+                ).withColumn("__bucket", self._bucket())
+                # allowMissingColumns: as in KeyedUpsertSink.apply
+                merged = incoming.unionByName(kept, allowMissingColumns=True)
             else:
                 merged = incoming
             new_files = self._write_data(merged, touched)

@@ -73,12 +73,12 @@ def main(n_users: int = 10) -> None:
     finally:
         pipe.stop()
 
-    # 4. what the Mongo collections would hold (sink.read() works on
-    # both the commit-log default and the parquet-directory backend)
+    # 4. what the Mongo collections would hold
     for table in ("userAddress", "userCountByState", "userCountByCountry"):
         print(f"\n=== {table} ===")
-        # __bucket / __epoch are sink-internal (partition key, replay guard)
-        t = pipe.sinks[table].read().drop("__bucket", "__epoch")
+        # __bucket / __epoch / __run are sink-internal (partition key,
+        # replay guard)
+        t = pipe.sinks[table].read().drop("__bucket", "__epoch", "__run")
         t.orderBy(t.columns[0]).show(10, truncate=60)
 
     shutil.rmtree(work)

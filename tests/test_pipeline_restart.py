@@ -1,7 +1,7 @@
 """Full-pipeline kill/restart: the complete reference topology
 (streams -> stateful join -> windowed counts -> keyed upsert sinks)
 stopped mid-stream and resumed from the SAME checkpoint directory must
-converge to exactly the sequential result, on BOTH sink backends.
+converge to exactly the sequential result.
 
 This is the pipeline-level counterpart of the operator-level
 checkpoint-recovery test in tests/test_stateful_join.py: it exercises
@@ -15,8 +15,6 @@ import json
 import os
 import sys
 import uuid
-
-import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -35,8 +33,7 @@ def _write_jsonl(d, rows):
             f.write(json.dumps(r) + "\n")
 
 
-@pytest.mark.parametrize("transactional", [True, False], ids=["txn", "parquet"])
-def test_pipeline_restart_converges(spark, tmp_path, transactional):
+def test_pipeline_restart_converges(spark, tmp_path):
     udir, adir = str(tmp_path / "u"), str(tmp_path / "a")
     os.makedirs(udir)
     os.makedirs(adir)
@@ -49,7 +46,7 @@ def test_pipeline_restart_converges(spark, tmp_path, transactional):
         # the two halves of the test, so the per-state counts are the
         # deterministic whole-run inflation totals
         pipe = ReferencePipeline(spark, users, addresses, out, ckpt,
-                                 window="365 days", transactional=transactional)
+                                 window="365 days")
         pipe.start()
         return pipe
 

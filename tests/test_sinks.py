@@ -4,14 +4,23 @@ import json
 import os
 import sys
 import uuid
+from datetime import datetime
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_stream_flink_user_address_spark.schemas import ADDRESS_SCHEMA, USER_SCHEMA
-from data_stream_flink_user_address_spark.streaming.sinks import KeyedUpsertSink
-from data_stream_flink_user_address_spark.plans.pipeline import ReferencePipeline
+from data_stream_flink_user_address_spark.streaming.sinks import (
+    KeyedUpsertSink,
+    TransactionalKeyedUpsertSink,
+)
+from data_stream_flink_user_address_spark.plans.pipeline import (
+    COUNT_TABLES,
+    ReferencePipeline,
+)
 
 
 def test_upsert_insert_then_overwrite(spark, tmp_path):
@@ -42,6 +51,20 @@ def test_upsert_idempotent_replay(spark, tmp_path):
     assert got == {"a": 1, "b": 2}
 
 
+@pytest.mark.parametrize(
+    "sink_cls", [KeyedUpsertSink, TransactionalKeyedUpsertSink], ids=["plain", "txn"]
+)
+def test_null_key_upserts_to_one_row(spark, tmp_path, sink_cls):
+    """A NULL key is upserted like any other (Mongo's
+    ``updateOne({k: null}, ..., upsert)``): three applies leave one row
+    holding the last value, not three."""
+    sink = sink_cls(spark, str(tmp_path / "kv"), key="k", order_col="v")
+    for v in (1, 2, 3):
+        sink.apply(spark.createDataFrame([(None, v), ("a", v)], "k string, v int"))
+    got = sorted((r["k"] or "", r["v"]) for r in sink.read().collect())
+    assert got == [("", 3), ("a", 3)]
+
+
 USER_SEQ = T.StructType(USER_SCHEMA.fields + [T.StructField("seq", T.LongType())])
 ADDR_SEQ = T.StructType(ADDRESS_SCHEMA.fields + [T.StructField("seq", T.LongType())])
 
@@ -67,11 +90,7 @@ def test_full_pipeline_end_to_end(spark, tmp_path):
 
     users = spark.readStream.schema(USER_SEQ).json(udir)
     addresses = spark.readStream.schema(ADDR_SEQ).json(adir)
-    # transactional=False pins THIS test to the parquet-directory
-    # backend (the raw spark.read.parquet assertions below are
-    # backend-specific); the commit-log default runs in test_txn_sink.py
-    pipe = ReferencePipeline(spark, users, addresses, out, str(tmp_path / "ckpt"),
-                             transactional=False)
+    pipe = ReferencePipeline(spark, users, addresses, out, str(tmp_path / "ckpt"))
     pipe.start()
     try:
         pipe.process_all()
@@ -79,16 +98,15 @@ def test_full_pipeline_end_to_end(spark, tmp_path):
         pipe.stop()
 
     # userAddress: upsert collapses the 4-emission inflation to final snapshots
-    ua = spark.read.parquet(os.path.join(out, "userAddress"))
-    rows = {r["userId"]: r for r in ua.collect()}
+    rows = {r["userId"]: r for r in pipe.sinks["userAddress"].read().collect()}
     assert len(rows) == 10
     assert all(len(r["addresses"]) == 3 for r in rows.values())
 
     # count tables exist, keyed by dimension; inflation counts S0 addresses
     # once per subsequent snapshot (SURVEY.md SS2.3): S0 in [a0],[a0,a1],[a0,a1,a2]
-    st = {r["state"]: r["count"] for r in spark.read.parquet(os.path.join(out, "userCountByState")).collect()}
+    st = {r["state"]: r["count"] for r in pipe.sinks["userCountByState"].read().collect()}
     assert st == {"S0": 30, "S1": 20, "S2": 10}
-    co = spark.read.parquet(os.path.join(out, "userCountByCountry")).collect()
+    co = pipe.sinks["userCountByCountry"].read().collect()
     assert sum(r["count"] for r in co) == 60 and {r["country"] for r in co} == {"C0", "C1"}
 
 
@@ -158,7 +176,7 @@ def _run_pipeline(spark, tmp_path):
     addresses = spark.readStream.schema(ADDR_SEQ).json(adir)
     pipe = ReferencePipeline(spark, users, addresses, out,
                              str(tmp_path / "ckpt"),
-                             window="365 days", transactional=False)
+                             window="365 days")
     pipe.start()
     try:
         pipe.process_all()
@@ -186,36 +204,53 @@ def test_shared_pipeline_final_tables(spark, tmp_path):
     assert {r["country"]: r["count"] for r in co} == {"C0": 24, "C1": 24}
 
 
+ADDRESSES = (
+    "addresses array<struct<address:string,city:string,state:string,"
+    "zipCode:string,country:string>>"
+)
+
+
+def _count_pipe(spark, out, window="365 days"):
+    """A pipeline whose count pass runs without a streaming query."""
+    pipe = ReferencePipeline.__new__(ReferencePipeline)
+    pipe.window = window
+    pipe._run_id = "runA"
+    pipe.sinks = {
+        table: TransactionalKeyedUpsertSink(spark, os.path.join(out, table), key=dim)
+        for dim, table in COUNT_TABLES
+    }
+    return pipe
+
+
+def _counts(pipe):
+    """({state: count}, {country: count}) as the two tables hold them."""
+    return tuple(
+        {r[dim]: r["count"] for r in pipe.sinks[table].read().collect()}
+        for dim, table in COUNT_TABLES
+    )
+
+
 def test_shared_mode_epoch_replay_guard(spark, tmp_path):
     """Re-running a micro-batch with the same epoch id (Structured
     Streaming retry) must not double-count the windowed totals."""
-    from pyspark.sql import functions as F
-    from data_stream_flink_user_address_spark.plans.pipeline import ReferencePipeline as RP
-
-    out = str(tmp_path / "out")
-    pipe = RP.__new__(RP)  # only _merge_window_counts is exercised
-    pipe.window = "365 days"
-    pipe._run_id = "runA"
-    sink = KeyedUpsertSink(spark, os.path.join(out, "c"), key="state")
-
+    pipe = _count_pipe(spark, str(tmp_path / "out"))
     batch = spark.createDataFrame(
         [("u1", [("a1", "c", "S0", "z", "C0")]),
-         ("u2", [("a2", "c", "S0", "z", "C0"), ("a3", "c", "S1", "z", "C0")])],
-        "userId string, addresses array<struct<address:string,city:string,state:string,zipCode:string,country:string>>",
+         ("u2", [("a2", "c", "S0", "z", "C0"), ("a3", "c", "S1", "z", "C1")])],
+        f"userId string, {ADDRESSES}",
     ).withColumn("ingest_time", F.current_timestamp())
 
-    pipe._merge_window_counts(sink, batch, "state", epoch_id=0)
-    first = {r["state"]: r["count"] for r in sink.read().collect()}
-    assert first == {"S0": 2, "S1": 1}
+    pipe._merge_counts(batch, epoch_id=0)
+    first = _counts(pipe)
+    assert first == ({"S0": 2, "S1": 1}, {"C0": 2, "C1": 1})
 
     # replay of epoch 0: counts must be unchanged
-    pipe._merge_window_counts(sink, batch, "state", epoch_id=0)
-    assert {r["state"]: r["count"] for r in sink.read().collect()} == first
+    pipe._merge_counts(batch, epoch_id=0)
+    assert _counts(pipe) == first
 
     # a genuine next batch (epoch 1) accumulates within the same window
-    pipe._merge_window_counts(sink, batch, "state", epoch_id=1)
-    assert {r["state"]: r["count"] for r in sink.read().collect()} == \
-        {"S0": 4, "S1": 2}
+    pipe._merge_counts(batch, epoch_id=1)
+    assert _counts(pipe) == ({"S0": 4, "S1": 2}, {"C0": 4, "C1": 2})
 
     # checkpoint recreated over the SAME out_dir: batchIds restart and a
     # NEW run's batch arrives carrying the same epoch number (1) the
@@ -223,31 +258,20 @@ def test_shared_mode_epoch_replay_guard(spark, tmp_path):
     # VERDICT r10 wrong #3); with the __run namespace the stored rows
     # read as prior totals and accumulation continues.
     pipe._run_id = "runB"
-    pipe._merge_window_counts(sink, batch, "state", epoch_id=1)
-    assert {r["state"]: r["count"] for r in sink.read().collect()} == \
-        {"S0": 6, "S1": 3}
+    pipe._merge_counts(batch, epoch_id=1)
+    assert _counts(pipe) == ({"S0": 6, "S1": 3}, {"C0": 6, "C1": 3})
     # and a retry of that new-run batch is still skipped
-    pipe._merge_window_counts(sink, batch, "state", epoch_id=1)
-    assert {r["state"]: r["count"] for r in sink.read().collect()} == \
-        {"S0": 6, "S1": 3}
+    pipe._merge_counts(batch, epoch_id=1)
+    assert _counts(pipe) == ({"S0": 6, "S1": 3}, {"C0": 6, "C1": 3})
 
 
 def test_merge_window_counts_rejects_legacy_table(spark, tmp_path):
     """A count table without __epoch/__run (written by a pre-epoch
     pipeline layout) cannot be told apart from this run's increments:
     the merge must refuse it, naming the table and the fresh-out_dir
-    remedy, and leave the stored rows untouched."""
-    import pytest
-    from pyspark.sql import functions as F
-    from data_stream_flink_user_address_spark.plans.pipeline import ReferencePipeline as RP
-
-    pipe = RP.__new__(RP)
-    pipe.window = "365 days"
-    pipe._run_id = "runA"
+    remedy, and leave the stored rows of both tables untouched."""
     batch = spark.createDataFrame(
-        [("u", [("a", "c", "S0", "z", "C0")])],
-        "userId string, addresses array<struct<address:string,city:string,"
-        "state:string,zipCode:string,country:string>>",
+        [("u", [("a", "c", "S0", "z", "C0")])], f"userId string, {ADDRESSES}"
     ).withColumn("ingest_time", F.current_timestamp())
 
     for name, stored in (
@@ -258,13 +282,82 @@ def test_merge_window_counts_rejects_legacy_table(spark, tmp_path):
         ("cnt_epoch", spark.createDataFrame(
             [("S0", 5, 0)], "state string, count bigint, __epoch long")),
     ):
-        path = str(tmp_path / name)
-        sink = KeyedUpsertSink(spark, path, key="state")
+        pipe = _count_pipe(spark, str(tmp_path / name))
+        sink = pipe.sinks["userCountByState"]
         sink.apply(stored)
         with pytest.raises(ValueError, match="fresh out_dir") as err:
-            pipe._merge_window_counts(sink, batch, "state", epoch_id=0)
-        assert path in str(err.value)
+            pipe._merge_counts(batch, epoch_id=0)
+        assert sink.path in str(err.value)
         assert {r["state"]: r["count"] for r in sink.read().collect()} == {"S0": 5}
+        assert pipe.sinks["userCountByCountry"].read() is None
+
+
+def test_merge_counts_window_rollover(spark, tmp_path):
+    """Per key the table keeps the LATEST window's running total: a
+    stored count of an older window restarts at this batch's increment,
+    a stored count of the same window is added to, and a stored newer
+    window is kept as it is.  A NULL state is one more key."""
+    pipe = _count_pipe(spark, str(tmp_path / "out"), window="1 minute")
+    old, now, new = (datetime(2026, 1, 1, 12, m) for m in (4, 5, 6))
+    pipe.sinks["userCountByState"].apply(spark.createDataFrame(
+        [("S0", 7, old, 0, "runA"), ("S1", 5, new, 0, "runA"),
+         ("S2", 3, now, 0, "runA"), (None, 4, now, 0, "runA")],
+        "state string, count bigint, window_start timestamp, __epoch int, __run string",
+    ))
+    pipe.sinks["userCountByCountry"].apply(spark.createDataFrame(
+        [("C0", 9, old, 0, "runA")],
+        "country string, count bigint, window_start timestamp, __epoch int, __run string",
+    ))
+    batch = spark.createDataFrame(
+        [("u1", [("a1", "c", "S0", "z", "C0"), ("a2", "c", "S1", "z", "C0")]),
+         ("u2", [("a3", "c", "S2", "z", "C0"), ("a4", "c", None, "z", "C0")])],
+        f"userId string, {ADDRESSES}",
+    ).withColumn("ingest_time", F.lit(datetime(2026, 1, 1, 12, 5, 30)).cast("timestamp"))
+
+    pipe._merge_counts(batch, epoch_id=1)
+
+    def table(name, dim):
+        return {
+            r[dim]: (r["count"], r["window_start"], r["__epoch"])
+            for r in pipe.sinks[name].read().collect()
+        }
+
+    assert table("userCountByState", "state") == {
+        "S0": (1, now, 1), "S1": (5, new, 1), "S2": (4, now, 1), None: (5, now, 1)
+    }
+    assert table("userCountByCountry", "country") == {"C0": (4, now, 1)}
+
+
+def test_foreach_batch_reads_each_count_table_once(spark, tmp_path, monkeypatch):
+    """Structural pin of one micro-batch: each count table is read once
+    and each of the three tables gets one apply."""
+    out = str(tmp_path / "out")
+    pipe = _count_pipe(spark, out)
+    pipe.sinks["userAddress"] = TransactionalKeyedUpsertSink(
+        spark, os.path.join(out, "userAddress"), key="userId", order_col="seq"
+    )
+    calls = []
+    for name in ("read", "apply"):
+        orig = getattr(TransactionalKeyedUpsertSink, name)
+
+        def counted(self, *args, _orig=orig, _name=name):
+            calls.append((_name, os.path.basename(self.path)))
+            return _orig(self, *args)
+
+        monkeypatch.setattr(TransactionalKeyedUpsertSink, name, counted)
+
+    fn = pipe._shared_foreach_batch()
+    batch = spark.createDataFrame(
+        [("u1", 1, [("a1", "c", "S0", "z", "C0")])], f"userId string, seq long, {ADDRESSES}"
+    )
+    for epoch in (0, 1):  # empty tables, then stored rows
+        calls.clear()
+        fn(batch, epoch)
+        assert sorted(calls) == sorted(
+            [("read", table) for _, table in COUNT_TABLES]
+            + [("apply", table) for table in pipe.sinks]
+        )
+    assert _counts(pipe) == ({"S0": 2}, {"C0": 2})
 
 
 def test_run_namespace_marker_survives_restart(tmp_path):
