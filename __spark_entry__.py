@@ -2451,8 +2451,8 @@ def _q_leakage_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     TRAIN doc near-duplicate (signature agreement >= 0.8) to a held-out
     doc is dropped; the held-out copy stays.  The size gate counts the
     holdout and picks broadcast here (500-5000 rows); above
-    broadcast_max_rows the same call falls back to a band_key shuffle
-    join (plan-pinned in tests/test_plan_shapes.py)."""
+    gating.BROADCAST_MAX_ROWS the same call falls back to a band_key
+    shuffle join (plan-pinned in tests/test_plan_shapes.py)."""
     d = _docs(spark, sf_dir)
     out, _ = leakage_free_split(d, _SPLITS, seed=42, min_agreement=0.8)
     return out.select("doc_id", "split")
@@ -2801,8 +2801,8 @@ def _q_crawl_frontier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (h2), blanket block (h3), and the no-robots default (h4).  The
     oracle replays URL construction and each domain's rule outcome in
     SQL.  Scale shape: XML parse is the honest Arrow-batched UDF
-    boundary; rules collapse to one slim row per domain and broadcast;
-    the frontier never shuffles."""
+    boundary; rules collapse to one slim row per domain and broadcast
+    under the size gate (one count job); the frontier never shuffles."""
     d = _docs(spark, sf_dir)
     hc = (F.col("doc_id") % 5).cast("string")
     loc = F.concat(

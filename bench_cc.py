@@ -4,7 +4,8 @@
 The driver union-find branch handles every graph the sf ladder
 produces; the distributed branch is the >5M-edge scale path and through
 round 5 had correctness tests but no timing and no pinned round count.
-This bench runs it (``driver_threshold=0``) on two shapes:
+This bench runs it (``dedup.DRIVER_MAX_EDGES = 0`` for the timed leg)
+on three shapes:
 
 - ``chain_1024``: a pure chain of diameter 1024 -- the adversarial case
   for plain label propagation (1024 rounds); pointer jumping must close
@@ -13,7 +14,7 @@ This bench runs it (``driver_threshold=0``) on two shapes:
   degree ~1.3, the near-dup-graph regime: many small components plus an
   emerging giant) -- the realistic shape.
 - ``random_1e7``: the same shape at 1e7 edges / 1.5e7 nodes -- ABOVE
-  the 5M-edge driver_threshold, i.e. the only regime the distributed
+  the 5M-edge ``DRIVER_MAX_EDGES``, i.e. the only regime the distributed
   branch actually serves; every row also records the converged flag.
 
 For each: rounds, wall seconds, nodes, edges, and the driver-branch
@@ -32,6 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
+from data_stream_flink_user_address_spark.functions import dedup
 from data_stream_flink_user_address_spark.functions.dedup import dedup_clusters
 from data_stream_flink_user_address_spark.session import get_spark
 
@@ -54,11 +56,15 @@ def run(name: str, pairs, compare_driver: bool = True,
     pairs = pairs.localCheckpoint()  # freeze inputs so both branches see the same graph
     n_edges = pairs.count()
     stats: dict = {}
-    t0 = time.perf_counter()
-    out = dedup_clusters(pairs, driver_threshold=0, stats=stats,
-                         max_iter=max_iter)
-    n_nodes = out.count()
-    dist_sec = round(time.perf_counter() - t0, 3)
+    driver_max_edges = dedup.DRIVER_MAX_EDGES
+    dedup.DRIVER_MAX_EDGES = 0  # the distributed branch is what is timed
+    try:
+        t0 = time.perf_counter()
+        out = dedup_clusters(pairs, stats=stats, max_iter=max_iter)
+        n_nodes = out.count()
+        dist_sec = round(time.perf_counter() - t0, 3)
+    finally:
+        dedup.DRIVER_MAX_EDGES = driver_max_edges
     entry = {
         "graph": name,
         "edges": n_edges,
@@ -91,7 +97,7 @@ def main() -> None:
         run("random_100k", random_graph(spark, 100_000, 150_000),
             max_iter=60),
         # the regime the distributed branch exists for: 1e7 edges,
-        # 2x the driver_threshold -- driver comparison skipped (the
+        # 2x DRIVER_MAX_EDGES -- driver comparison skipped (the
         # hybrid would never route this to the driver)
         run("random_1e7", random_graph(spark, 10_000_000, 15_000_000),
             compare_driver=False, max_iter=60),

@@ -241,34 +241,23 @@ def main() -> None:
         }
 
         # --- leakage-guarded split with a 10% holdout (VERDICT r13 ask
-        # #3's measurement): the size gate picks broadcast under the
-        # default threshold and the band_key shuffle join when forced
-        # (broadcast_max_rows=0) -- both paths must agree on the drop
-        # set, and the shuffle fallback must stay in the same cost
-        # class (its exchange carries only slim (id, band_key) rows).
+        # #3's measurement): the size gate picks the side from the
+        # holdout's row count (broadcast at these sizes).
         from data_stream_flink_user_address_spark.functions.sampling import (
             leakage_free_split,
         )
 
         split_cfg = {"train": 0.9, "heldout": 0.1}
         t0 = time.time()
-        out_b, leaks_b = leakage_free_split(
+        out_b, _ = leakage_free_split(
             docs, split_cfg, min_agreement=0.8
         )
         n_b = out_b.count()
         dt_b = time.time() - t0
-        t0 = time.time()
-        out_s, leaks_s = leakage_free_split(
-            docs, split_cfg, min_agreement=0.8, broadcast_max_rows=0
-        )
-        n_s = out_s.count()
-        dt_s = time.time() - t0
-        assert n_b == n_s, (n_b, n_s)
         row["leakage_split_10pct"] = {
             "rows_out": n_b,
             "train_dropped": n - n_b,
             "broadcast_wall_s": round(dt_b, 2),
-            "shuffle_fallback_wall_s": round(dt_s, 2),
         }
 
         out["sizes"].append(row)

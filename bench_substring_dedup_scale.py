@@ -5,8 +5,7 @@ registered query at driver scale; remove_dup_spans only unit-tested);
 this ladder runs the COMPOSITE the registered ``substring_dedup_cut``
 query ships -- ``substring_dup_spans`` (k=8) -> ``remove_dup_spans`` --
 on synthetic corpora up to 10^7 documents with a web-text duplication
-profile, so the mark+cut wall and the span-side size-gate crossover
-are on record (VERDICT r16 ask #4).
+profile, so the mark+cut wall is on record (VERDICT r16 ask #4).
 
 Corpus: deterministic JVM-expression generation (no driver data, no
 Python): each doc is 50 words drawn from a 2^61 id space by
@@ -23,16 +22,15 @@ exactly 12 tokens cut from each, everything else byte-unchanged --
 the ladder asserts it at every rung, so these are verified walls, not
 just timings.
 
-The size-gate leg: at each n the default gated path runs (flagged docs
-= n/10, under the 2M-row gate up to n=1e7 -> spans broadcast, corpus
-never shuffles), plus both FORCED sides at the top rung to put the
-broadcast-vs-shuffle crossover on record for the heavily-duplicated
-regime where the gate must fall back.
+The size gate picks the span-side join at each n (flagged docs = n/10,
+under the 2M-row gate up to n=1e7 -> spans broadcast, corpus never
+shuffles).  The forced-side crossover legs recorded in
+SUBSTRING_DEDUP_SCALE.json were measured before the forcing option was
+removed; a re-run writes the file without them.
 
 Writes SUBSTRING_DEDUP_SCALE.json:
   per n: mark+cut wall (median of 3), flagged-doc count, tokens
-  removed, ground-truth check; at max n: forced-broadcast and
-  forced-shuffle walls.
+  removed, ground-truth check.
 
 Run:  python bench_substring_dedup_scale.py
       SPARK_GRAFT_SUBSTRING_SIZES=100000,1000000 python bench_substring_dedup_scale.py
@@ -102,14 +100,14 @@ def gen_corpus(spark, n: int) -> str:
     return path
 
 
-def run_mark_cut(spark, path: str, broadcast_spans: bool | None):
+def run_mark_cut(spark, path: str):
     """One composite pass: mark -> cut -> full aggregate over the
     output (flagged count + tokens removed), returning
     (wall_s, n_flagged, tokens_removed)."""
     docs = spark.read.parquet(path)
     t0 = time.monotonic()
     spans = substring_dup_spans(docs, k=K)
-    cut = remove_dup_spans(docs, spans, broadcast_spans=broadcast_spans)
+    cut = remove_dup_spans(docs, spans)
     row = cut.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum((F.col("n_tokens_removed") > 0).cast("long")).alias(
@@ -137,9 +135,7 @@ def main() -> None:
         path = gen_corpus(spark, n)
         runs = []
         for _ in range(3):
-            wall, n_flagged, removed, n_docs = run_mark_cut(
-                spark, path, broadcast_spans=None
-            )
+            wall, n_flagged, removed, n_docs = run_mark_cut(spark, path)
             runs.append(round(wall, 3))
         want_flagged = n // DUP_EVERY
         ok = (
@@ -155,12 +151,6 @@ def main() -> None:
             "ground_truth_ok": ok,
             "docs_per_sec": round(n / statistics.median(runs), 1),
         }
-        if n == max(SIZES):
-            # size-gate crossover legs: force each side once
-            for label, forced in (("forced_broadcast", True),
-                                  ("forced_shuffle", False)):
-                wall, _f, _r, _d = run_mark_cut(spark, path, forced)
-                entry[f"{label}_s"] = round(wall, 3)
         out["sizes"].append(entry)
         print(json.dumps(entry))
         assert ok, entry

@@ -257,12 +257,16 @@ def lsh_candidate_pairs(
     )
 
 
+# Edge count up to which dedup_clusters (and graph.connected_components)
+# solves on the driver; read at call time (~16 bytes/edge: 5M = 80 MB).
+DRIVER_MAX_EDGES = 5_000_000
+
+
 def dedup_clusters(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iter: int = 20,
-    driver_threshold: int = 5_000_000,
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components over near-dup pairs: (doc_id, cluster_id)
@@ -272,7 +276,7 @@ def dedup_clusters(
 
     Hybrid execution.  The candidate-pair graph is orders of magnitude
     smaller than the corpus (only near-duplicates appear), so when it
-    has at most ``driver_threshold`` edges the exact answer comes from
+    has at most :data:`DRIVER_MAX_EDGES` edges the exact answer comes from
     one union-find pass on the driver (~16 bytes/edge; 5M edges = 80 MB)
     -- milliseconds instead of an iterative-join round per propagation
     step.  Above the threshold, distributed Pregel-style min-label
@@ -314,8 +318,8 @@ def dedup_clusters(
     spark = pairs.sparkSession
     p = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
     # one computation: a limit probe collects the edges iff they fit
-    probe = p.limit(driver_threshold + 1).collect()
-    if len(probe) <= driver_threshold:
+    probe = p.limit(DRIVER_MAX_EDGES + 1).collect()
+    if len(probe) <= DRIVER_MAX_EDGES:
         parent: dict = {}
 
         def find(x):
@@ -361,7 +365,7 @@ def dedup_clusters(
     # Width scales with the graph: one partition per ~1M directed edges,
     # floored at 8 so the per-round joins keep some parallelism, capped
     # at 2x cluster parallelism so a huge graph doesn't over-split.
-    # This branch only runs above ``driver_threshold`` edges, so the
+    # This branch only runs above ``DRIVER_MAX_EDGES`` edges, so the
     # graph is never tiny here -- the floor, not the cap, is the common
     # case at the threshold boundary, and a billion-edge graph gets the
     # full cluster width instead of funnelling through a fixed handful
@@ -821,8 +825,6 @@ def substring_dedup(
     id_col: str = "doc_id",
     k: int = 8,
     min_occurrences: int = 2,
-    broadcast_spans: bool | None = None,
-    broadcast_max_rows: int = 2_000_000,
 ) -> DataFrame:
     """The full Lee et al. 2022 substring dedup in one call: mark
     maximal globally-repeated ``k``-token ranges
@@ -845,11 +847,7 @@ def substring_dedup(
         df, text_col=text_col, id_col=id_col, k=k,
         min_occurrences=min_occurrences,
     )
-    return remove_dup_spans(
-        df, spans, text_col=text_col, id_col=id_col,
-        broadcast_spans=broadcast_spans,
-        broadcast_max_rows=broadcast_max_rows,
-    )
+    return remove_dup_spans(df, spans, text_col=text_col, id_col=id_col)
 
 
 def remove_dup_spans(
@@ -857,8 +855,6 @@ def remove_dup_spans(
     spans: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_spans: bool | None = None,
-    broadcast_max_rows: int = 2_000_000,
 ) -> DataFrame:
     """The removal half of the suffix-array-surrogate dedup (Lee et
     al. 2022 cut their flagged substrings OUT of the corpus; this
@@ -896,17 +892,17 @@ def remove_dup_spans(
     itself is row-local array arithmetic: ``filter`` with a positional
     lambda against an ``exists`` over the span array, all inside
     codegen.  The join side is SIZE-GATED (the leakage_free_split
-    idiom): when the flagged-doc set fits under ``broadcast_max_rows``
-    -- the usual 100 TB regime, where repeats are a small corpus
-    fraction -- the span arrays BROADCAST and the corpus never moves;
-    above it the join falls back to a plain id-keyed hash join (a
-    heavily-duplicated corpus genuinely must move once to be cut).
-    ``broadcast_spans=None`` (default) counts the flagged docs to
-    decide (:func:`~.gating.size_gated_broadcast` -- the span frame is
-    lazily localCheckpoint-ed so the gate count and the join share one
+    idiom): when the flagged-doc set fits under
+    ``gating.BROADCAST_MAX_ROWS`` -- the usual 100 TB regime, where
+    repeats are a small corpus fraction -- the span arrays BROADCAST
+    and the corpus never moves; above it the join falls back to a
+    plain id-keyed hash join (a heavily-duplicated corpus genuinely
+    must move once to be cut).
+    The gate counts the flagged docs to decide
+    (:func:`~.gating.size_gated_broadcast` -- the span frame is lazily
+    localCheckpoint-ed so the gate count and the join share one
     materialization of the grouped arrays instead of re-running the
-    producer-side aggregation); pass ``True``/``False`` to skip the
-    count and force a side.
+    producer-side aggregation).
     """
     from .gating import size_gated_broadcast
 
@@ -918,7 +914,7 @@ def remove_dup_spans(
             )
         ).alias("__spans")
     )
-    sp, _ = size_gated_broadcast(sp, broadcast_spans, broadcast_max_rows)
+    sp = size_gated_broadcast(sp)
     joined = df.join(sp, id_col, "left")
     toks = _ws_tokens(text_col)
     ranges = F.coalesce(
@@ -1704,7 +1700,6 @@ def build_bucketed_fingerprint_store(
         bucket_by="fingerprint",
         n_buckets=n_buckets,
         path=path,
-        sort=True,
         mode=mode,
     )
 
@@ -2022,8 +2017,6 @@ def cross_corpus_decontaminate(
     bands: int = 4,
     rows_per_band: int = 4,
     min_agreement: float | None = None,
-    broadcast_eval: bool | None = None,
-    broadcast_max_rows: int = 2_000_000,
     materialize_pairs: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Doc-level benchmark decontamination: drop every training doc that
@@ -2047,20 +2040,16 @@ def cross_corpus_decontaminate(
     join is map-side; the final removal is a broadcast left-anti join on
     the (small) contaminated-id set.  The training corpus is never
     shuffled -- the whole pass is map-only over the big side.
-    ``broadcast_eval=None`` (the default, ADVICE r17: the size-gated
-    spelling is the safe default; ``True`` stays as the explicit fast
-    path when the caller KNOWS the eval side is benchmark-tiny)
-    SIZE-GATES the broadcast (:func:`~.gating.size_gated_broadcast`):
-    one column-pruned count of the eval keys decides, broadcasting only
-    while the resulting band rows (``bands`` per eval doc) fit under
-    ``broadcast_max_rows`` -- the ``leakage_free_split`` regime, where
-    the "eval" side is a percentage holdout of unknown size.  When the
-    "eval" side is KNOWN to be big, pass ``broadcast_eval=False`` to
-    skip the count: the candidate join becomes a shuffle equi-join on
-    ``band_key`` carrying only the slim (id, band_key) projections of
-    both sides -- the corpus text still never moves, and AQE may still
-    pick a broadcast at runtime if the eval bands turn out small.
-    Eval docs
+    The broadcast is SIZE-GATED (:func:`~.gating.size_gated_broadcast`,
+    ADVICE r17): one column-pruned count of the eval keys decides,
+    broadcasting only while the resulting band rows (``bands`` per eval
+    doc) fit under ``gating.BROADCAST_MAX_ROWS`` -- the
+    ``leakage_free_split`` regime, where the "eval" side is a
+    percentage holdout of unknown size.  Above it the candidate join
+    becomes a shuffle equi-join on ``band_key`` carrying only the slim
+    (id, band_key) projections of both sides -- the corpus text still
+    never moves, and AQE may still pick a broadcast at runtime if the
+    eval bands turn out small.  Eval docs
     shorter than ``n`` chars produce no shingles and cannot contaminate;
     train docs shorter than ``n`` always pass through.
 
@@ -2089,11 +2078,10 @@ def cross_corpus_decontaminate(
     # gate on the pruned eval-key count (the band frame multiplies rows
     # by a constant `bands`, and counting it would run the signature
     # projection just to decide); the budget shrinks by that same
-    # `bands` factor so broadcast_max_rows bounds the BAND rows
-    # actually broadcast, not the eval docs (ADVICE r17)
-    e_bands, _ = size_gated_broadcast(
-        e_bands, broadcast_eval, broadcast_max_rows // bands,
-        gate_df=eval_df.select(id_col),
+    # `bands` factor so it bounds the BAND rows actually broadcast,
+    # not the eval docs (ADVICE r17)
+    e_bands = size_gated_broadcast(
+        e_bands, gate_df=eval_df.select(id_col), fanout=bands
     )
 
     cand = t_bands.join(e_bands, on="band_key")

@@ -33,6 +33,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Distinct-edge count up to which pagerank runs on the driver; read at
+# call time.
+PAGERANK_DRIVER_MAX_EDGES = 2_000_000
+
 
 def pagerank(
     edges: DataFrame,
@@ -41,15 +45,14 @@ def pagerank(
     src_col: str = "src",
     dst_col: str = "dst",
     materialize: bool = True,
-    driver_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Rank every node of the directed graph ``edges`` -- returns
     ``(node, rank)`` with ranks summing to the node count (the
     classic normalization: rank 1.0 = average importance).
 
     Exactness note for callers: execution is HYBRID (driver replica
-    under ``driver_threshold`` distinct edges, distributed power
-    iteration above), and the two branches sum inflow doubles in
+    under :data:`PAGERANK_DRIVER_MAX_EDGES` distinct edges, distributed
+    power iteration above), and the two branches sum inflow doubles in
     different orders, so UNROUNDED ranks can differ at ulp level
     depending on graph size.  Consumers comparing ranks across runs,
     engines, or sizes must round first (the registered query and the
@@ -86,9 +89,9 @@ def pagerank(
     # Hybrid execution (the dedup_clusters / connected_components
     # pattern, r18): the DISTINCT cross-node edge list of a domain
     # graph is orders of magnitude smaller than the page corpus, so
-    # when it fits ``driver_threshold`` rows the whole power iteration
-    # runs on the driver over one collected copy -- one Spark job
-    # instead of ~7 stages per iteration.  The replica computes the
+    # when it fits ``PAGERANK_DRIVER_MAX_EDGES`` rows the whole power
+    # iteration runs on the driver over one collected copy -- one Spark
+    # job instead of ~7 stages per iteration.  The replica computes the
     # IDENTICAL per-iteration formula (same per-edge rank/deg
     # division, same dangling-mass-over-n term, same damping
     # arithmetic) in a deterministic edge order; double summation
@@ -100,18 +103,21 @@ def pagerank(
     # (measured flat to 1e8 edges, R14_OPS_SCALE.json).
     #
     # The probe is GATED on a bounded count (r19): collecting
-    # driver_threshold+1 rows outright shipped up to 2M Py4J-pickled
-    # string rows to the driver on EVERY call -- hundreds of MB of
-    # discarded probe when the distributed branch was going to run
-    # anyway.  The count job returns one scalar; the edge frame is
-    # lazily localCheckpointed FIRST, so the count materializes the
-    # distinct edges and the follow-up (driver collect, or the
-    # distributed branch's deg/nodes/linked derivations) reads the
-    # blocks instead of re-running the corpus extract+distinct lineage.
-    e = e.localCheckpoint(eager=False)
-    n_edges = e.limit(driver_threshold + 1).count()
-    if n_edges <= driver_threshold:
+    # PAGERANK_DRIVER_MAX_EDGES+1 rows outright shipped up to 2M
+    # Py4J-pickled string rows to the driver on EVERY call -- hundreds
+    # of MB of discarded probe when the distributed branch was going to
+    # run anyway.  The count job returns one scalar; the edge frame is
+    # CACHED first, so the count materializes the distinct edges and
+    # the follow-up (driver collect, or the distributed branch's
+    # deg/nodes/linked derivations) reads the blocks instead of
+    # re-running the corpus extract+distinct lineage.  A cache, not a
+    # localCheckpoint: the cache is released once its consumers ran,
+    # while a local checkpoint's blocks stay pinned for the session.
+    e = e.cache()
+    n_edges = e.limit(PAGERANK_DRIVER_MAX_EDGES + 1).count()
+    if n_edges <= PAGERANK_DRIVER_MAX_EDGES:
         probe = e.collect()
+        e.unpersist()
         from collections import defaultdict
 
         from pyspark.sql import types as T
@@ -228,7 +234,7 @@ def pagerank(
     if not materialize:
         return ranks
     out = ranks.localCheckpoint()
-    for frame in (nodes, linked):
+    for frame in (e, nodes, linked):
         frame.unpersist()
     return out
 
@@ -268,7 +274,6 @@ def connected_components(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iter: int = 20,
-    driver_threshold: int = 5_000_000,
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components of an undirected graph given as a
@@ -291,8 +296,8 @@ def connected_components(
     the solver's size probe, the node union, and the solve itself all
     reference it, and an uncached expensive upstream (a parsed WARC
     corpus, an LSH pair stage) would otherwise re-run per reference
-    (memory pitfall #1).  ``driver_threshold`` forwards to the
-    solver's driver-union-find cutoff.
+    (memory pitfall #1).  The driver-union-find cutoff is the solver's
+    :data:`..dedup.DRIVER_MAX_EDGES`.
     """
     from .dedup import dedup_clusters
 
@@ -302,7 +307,6 @@ def connected_components(
     labels = dedup_clusters(
         e.filter(F.col("doc_a") != F.col("doc_b")),
         max_iter=max_iter,
-        driver_threshold=driver_threshold,
         stats=stats,
     ).select(F.col("doc_id").alias("node"), F.col("cluster_id").alias("component"))
     nodes = (

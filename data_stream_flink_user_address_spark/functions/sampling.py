@@ -537,8 +537,6 @@ def leakage_free_split(
     out_col: str = "split",
     train_label: str | None = None,
     min_agreement: float = 0.8,
-    broadcast_eval: bool | None = None,
-    broadcast_max_rows: int = 2_000_000,
     **minhash_kwargs,
 ) -> tuple[DataFrame, DataFrame]:
     """:func:`hash_split` plus a cross-split LEAKAGE GUARD: after the
@@ -560,16 +558,15 @@ def leakage_free_split(
     unlike that function's stated regime (eval = benchmark suites,
     i.e. tiny), a split's held-out side is a FRACTION of the corpus --
     a 1% holdout of a 100 TB corpus is ~4e8 docs, far past any
-    broadcast threshold.  ``broadcast_eval=None`` (default) counts the
-    held-out keys (a column-pruned scan -- the shared
+    broadcast threshold.  The gate counts the held-out keys (a
+    column-pruned scan -- the shared
     :func:`~.gating.size_gated_broadcast` gate, applied inside
     :func:`~.dedup.cross_corpus_decontaminate` where the band frame
     lives) and broadcasts only while the resulting band rows fit under
-    ``broadcast_max_rows``; above it the guard's candidate
+    ``gating.BROADCAST_MAX_ROWS``; above it the guard's candidate
     join falls back to a shuffle equi-join on ``band_key``, which is
     cheap because the band rows are slim (key, band_key) projections --
-    the corpus text still never moves.  Pass ``True``/``False`` to
-    skip the count and force a side.  Deterministic end to end: same
+    the corpus text still never moves.  Deterministic end to end: same
     seed -> same splits, same drops.
     """
     from .dedup import cross_corpus_decontaminate
@@ -590,8 +587,6 @@ def leakage_free_split(
         text_col=text_col,
         id_col=key_col,
         min_agreement=min_agreement,
-        broadcast_eval=broadcast_eval,
-        broadcast_max_rows=broadcast_max_rows,
         **minhash_kwargs,
     )
     out = clean_train.unionByName(

@@ -54,6 +54,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import gating
 from .text import tokens
 
 UNK_LOGPROB_OFFSET = -10.0  # OOV char: min piece logprob + this
@@ -346,8 +347,6 @@ def unigram_lm_encode(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_piece_len: int = 8,
-    broadcast_words: bool | None = None,
-    broadcast_max_rows: int = 2_000_000,
 ) -> DataFrame:
     """Viterbi-encode every document under a trained piece table:
     output ``(id, n_words, n_pieces, encoded)`` with ``encoded`` the
@@ -366,32 +365,26 @@ def unigram_lm_encode(
     bounded vocabulary): on 100 TB of web text the distinct-word set
     (typos, URLs, numbers) runs to 1e8-1e9 rows and an unconditional
     broadcast OOMs every executor.  So the join is SIZE-GATED, the
-    :func:`~.gating.size_gated_broadcast` idiom:
-    ``broadcast_words=None`` (default)
-    counts the distinct words (one distinct-aggregate pass, local-
-    checkpointed so the segmentation pass reuses it) and broadcasts
-    only under ``broadcast_max_rows``; above it the join falls back to
-    a plain hash join on ``word`` carrying slim (word, seg) rows --
-    AQE may still pick a runtime broadcast if the frame turns out
-    small.  Pass ``True``/``False`` to skip the count and force a
-    side.
+    :func:`~.gating.size_gated_broadcast` idiom: the gate counts the
+    distinct words (one distinct-aggregate pass, local-checkpointed so
+    the segmentation pass reuses it) and broadcasts only under
+    ``gating.BROADCAST_MAX_ROWS``; above it the join falls back to a
+    plain hash join on ``word`` carrying slim (word, seg) rows -- AQE
+    may still pick a runtime broadcast if the frame turns out small.
 
     Hybrid execution (r19, the ``_train_on_vocab`` pattern applied to
-    the encode side): under ``broadcast_words=None``, when the distinct
-    words fit ``_ULM_DRIVER_VOCAB`` rows the per-word Viterbi runs on
-    the driver over ONE collected copy -- the probe collect replaces
-    the gate-count job AND the mapInPandas segmentation job, and the
-    bounded (word, seg, np) result broadcasts to the token join.
-    Exact by construction: the driver runs the SAME
-    :func:`viterbi_segment` kernel over the SAME piece dict the
+    the encode side): when the distinct words fit
+    ``min(_ULM_DRIVER_VOCAB, gating.BROADCAST_MAX_ROWS)`` rows the
+    per-word Viterbi runs on the driver over ONE collected copy -- the
+    probe collect replaces the gate-count job AND the mapInPandas
+    segmentation job, and the bounded (word, seg, np) result broadcasts
+    to the token join.  Exact by construction: the driver runs the
+    SAME :func:`viterbi_segment` kernel over the SAME piece dict the
     executors would (the pandas path's closure is ``dict(piece_rows)``
-    too).  The hybrid HONORS the broadcast gate: the driver branch
-    fires only when the distinct words also fit
-    ``broadcast_max_rows``, so a caller that forbade broadcasting
-    (small ``broadcast_max_rows``) still gets the distributed hash
-    join -- the branch threshold is
-    ``min(_ULM_DRIVER_VOCAB, broadcast_max_rows)``.  Above it the
-    distributed path runs untouched -- the 1e8-distinct-word shape.
+    too).  The broadcast budget caps the driver branch too, so a
+    broadcast-sized result is the only one the driver ever ships.
+    Above the cap the distributed path runs untouched -- the
+    1e8-distinct-word shape.
     """
     piece_rows = sorted(
         (r["piece"], r["logprob"]) for r in pieces.collect()
@@ -412,38 +405,34 @@ def unigram_lm_encode(
                 {"word": pdf["word"], "seg": segs, "np": nps}
             )
 
-    from .gating import size_gated_broadcast
-
-    distinct_words = df.select(
-        F.explode(tokens(text_col)).alias("word")
-    ).distinct()
-    word_segs = None
-    if broadcast_words is None:
-        # checkpoint BEFORE the probe: the probe job materializes the
-        # explode+distinct blocks, so whichever branch runs next (the
-        # driver Viterbi, or the distributed gate count + segmentation
-        # pass) reads them instead of re-paying the corpus scan
-        distinct_words = distinct_words.localCheckpoint(eager=False)
-        driver_cap = min(_ULM_DRIVER_VOCAB, broadcast_max_rows)
-        probe = distinct_words.limit(driver_cap + 1).collect()
-        if probe and len(probe) <= driver_cap:
-            lp = dict(piece_rows)
-            seg_rows = []
-            for r in probe:
-                word = r["word"]
-                ps = viterbi_segment(word, lp, max_piece_len)[0]
-                seg_rows.append((word, " ".join(ps), len(ps)))
-            word_segs = F.broadcast(
-                df.sparkSession.createDataFrame(
-                    seg_rows, "word string, seg string, np long"
-                )
+    # checkpoint BEFORE the probe: the probe job materializes the
+    # explode+distinct blocks, so whichever branch runs next (the
+    # driver Viterbi, or the distributed gate count + segmentation
+    # pass) reads them instead of re-paying the corpus scan
+    distinct_words = (
+        df.select(F.explode(tokens(text_col)).alias("word"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    driver_cap = min(_ULM_DRIVER_VOCAB, gating.BROADCAST_MAX_ROWS)
+    probe = distinct_words.limit(driver_cap + 1).collect()
+    if probe and len(probe) <= driver_cap:
+        lp = dict(piece_rows)
+        seg_rows = []
+        for r in probe:
+            word = r["word"]
+            ps = viterbi_segment(word, lp, max_piece_len)[0]
+            seg_rows.append((word, " ".join(ps), len(ps)))
+        word_segs = F.broadcast(
+            df.sparkSession.createDataFrame(
+                seg_rows, "word string, seg string, np long"
             )
-    if word_segs is None:
-        word_segs = distinct_words.mapInPandas(
-            encode_words, "word string, seg string, np long"
         )
-        word_segs, _ = size_gated_broadcast(
-            word_segs, broadcast_words, broadcast_max_rows,
+    else:
+        word_segs = gating.size_gated_broadcast(
+            distinct_words.mapInPandas(
+                encode_words, "word string, seg string, np long"
+            ),
             gate_df=distinct_words,
         )
     toks = df.select(

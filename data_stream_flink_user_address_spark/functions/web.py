@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .gating import size_gated_broadcast
+
 # tracking params stripped by normalize_url (the common analytics noise
 # that splits one logical page into many crawl identities)
 _TRACKING_PARAMS = (
@@ -374,7 +376,6 @@ def filter_robots_allowed(
     url_col: str = "url",
     domain_col: str = "domain",
     robots_col: str = "robots_txt",
-    broadcast_rules: bool = True,
 ) -> DataFrame:
     """Keep only URLs a polite crawler identifying as ``user_agent``
     may fetch under each domain's robots.txt (RFC 9309).
@@ -389,13 +390,14 @@ def filter_robots_allowed(
     runs against path + query, longest-match wins, Allow wins ties.
 
     Scale shape: rules collapse to ONE slim row per domain (a pattern
-    array), joined to the corpus on the domain key -- broadcast by
-    default (a crawl frontier's robots table is domains-sized, far
-    smaller than the corpus; pass ``broadcast_rules=False`` to let the
-    planner shuffle both sides when the frontier itself is huge), then
-    a row-local Arrow-batched longest-match over each URL's own
-    domain rule list.  The corpus never shuffles on the broadcast
-    path.
+    array), joined to the corpus on the domain key, then a row-local
+    Arrow-batched longest-match over each URL's own domain rule list.
+    The rule frame is domains-sized -- usually far smaller than the
+    corpus, but unbounded for a web-scale frontier -- so the join is
+    size-gated (:func:`~.gating.size_gated_broadcast`: one count of the
+    per-domain rows, broadcast under ``gating.BROADCAST_MAX_ROWS``,
+    plain hash join above it).  The corpus never shuffles on the
+    broadcast path.
     """
     import pandas as pd
 
@@ -424,8 +426,7 @@ def filter_robots_allowed(
         .agg(F.collect_list(F.struct("allow", "pattern")).alias("__rules"))
         .select(F.col("domain").alias("__rdomain"), "__rules")
     )
-    if broadcast_rules:
-        per_domain = F.broadcast(per_domain)
+    per_domain = size_gated_broadcast(per_domain)
     d = df.withColumn("__domain", domain_of(url_col)).join(
         per_domain, F.col("__domain") == F.col("__rdomain"), "left"
     )

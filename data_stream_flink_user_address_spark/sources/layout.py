@@ -80,23 +80,25 @@ def write_partitioned(
             spark.conf.unset("spark.sql.parquet.outputTimestampType")
 
 
+# Target bytes per bucket file when write_bucketed sizes its files per
+# bucket from the optimizer's estimate; read at call time.
+TARGET_FILE_BYTES = 256 << 20
+
+
 def write_bucketed(
     df: DataFrame,
     table_name: str,
     bucket_by: str,
     n_buckets: int,
     path: str,
-    sort: bool = True,
     mode: str = "overwrite",
-    target_file_bytes: int = 256 << 20,
-    files_per_bucket: int | None = None,
 ) -> None:
-    """Bucketed (+ optionally bucket-sorted) external table.
+    """Bucketed, bucket-sorted external table.
 
     Two tables written with the same ``(bucket_by, n_buckets)`` join on
-    that key with ZERO exchange (and, when ``sort=True``, zero sort):
-    the write pays the shuffle once.  Requires ``saveAsTable`` (bucket
-    metadata lives in the catalog); ``path`` keeps the data external.
+    that key with ZERO exchange: the write pays the shuffle once.
+    Requires ``saveAsTable`` (bucket metadata lives in the catalog);
+    ``path`` keeps the data external.
 
     The frame is hash-repartitioned on the bucket key to ``k *
     n_buckets`` tasks first: repartition and ``bucketBy`` share Spark's
@@ -111,39 +113,40 @@ def write_bucketed(
 
     ``k`` (files per bucket) guards the write's PARALLELISM (r19): a
     bare ``repartition(n_buckets)`` funnels a 100 TB store build
-    through ``n_buckets`` writer tasks.  By default ``k`` derives from
-    the optimizer's size estimate -- ``ceil(estimated_bytes /
-    (n_buckets * target_file_bytes))``, clamped so total tasks never
-    exceed ``max(n_buckets, spark.sql.shuffle.partitions)`` (estimates
-    after joins/filters can be wildly high, and the cap keeps a bad
-    estimate from stranding thousands of tiny files).  Small frames --
-    every store this repo's gates build at bench scale -- keep ``k=1``:
-    one file per bucket, the r18 layout, unchanged.  The estimate goes
+    through ``n_buckets`` writer tasks.  ``k`` derives from the
+    optimizer's size estimate -- ``ceil(estimated_bytes / (n_buckets *
+    TARGET_FILE_BYTES))``, clamped so total tasks never exceed
+    ``max(n_buckets, spark.sql.shuffle.partitions)`` (estimates after
+    joins/filters can be wildly high, and the cap keeps a bad estimate
+    from stranding thousands of tiny files).  Small frames -- every
+    store this repo's gates build at bench scale -- keep ``k=1``: one
+    file per bucket, the r18 layout, unchanged.  The estimate goes
     through a private JVM handle; where that is unavailable (a Spark
-    Connect frame, a changed internal API) ``k`` falls back to 1.  Pass
-    ``files_per_bucket`` explicitly when the ingest knows better (e.g.
-    its own row/byte accounting at 100 TB).
+    Connect frame, a changed internal API) ``k`` falls back to 1.
+
+    ``sortBy(bucket_by)`` sorts rows within each FILE: with ``k = 1``
+    each bucket is one sorted file; with ``k > 1`` a bucket spans ``k``
+    separately sorted files, so no order holds across the bucket.
     """
-    if files_per_bucket is None:
-        # catalyst's size estimate: free (no job), pessimistic after
-        # wide transforms -- which only pushes k toward the cap
-        try:
-            est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        except (AttributeError, Py4JError):
-            est = 0  # -> k = 1
-        want = -(-est // (n_buckets * target_file_bytes))  # ceil
-        shuffle_parts = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-        k_cap = max(1, -(-max(n_buckets, shuffle_parts) // n_buckets))
-        k = max(1, min(want, k_cap))
-    else:
-        k = max(1, int(files_per_bucket))
-    df = df.repartition(k * n_buckets, F.col(bucket_by))
-    writer = df.write.mode(mode).option("path", path).bucketBy(n_buckets, bucket_by)
-    if sort:
-        writer = writer.sortBy(bucket_by)
-    writer.format("parquet").saveAsTable(table_name)
+    # catalyst's size estimate: free (no job), pessimistic after wide
+    # transforms -- which only pushes k toward the cap
+    try:
+        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except (AttributeError, Py4JError):
+        est = 0  # -> k = 1
+    want = -(-est // (n_buckets * TARGET_FILE_BYTES))  # ceil
+    shuffle_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    k_cap = max(1, -(-max(n_buckets, shuffle_parts) // n_buckets))
+    k = max(1, min(want, k_cap))
+    (
+        df.repartition(k * n_buckets, F.col(bucket_by))
+        .write.mode(mode)
+        .option("path", path)
+        .bucketBy(n_buckets, bucket_by)
+        .sortBy(bucket_by)
+        .format("parquet")
+        .saveAsTable(table_name)
+    )
 
 
 def compact(

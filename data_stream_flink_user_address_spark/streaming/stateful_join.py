@@ -126,9 +126,10 @@ def union_with_discriminator(users: DataFrame, addresses: DataFrame, seq_col: st
 class _KeyJoinState:
     """Per-key join state + the processElement1/2 logic of Main.java:104-132.
 
-    Shared by the streaming operator (applyInPandasWithState) and the
-    batch emission trace (mapInPandas over sorted runs) so both execute
-    literally the same state machine.
+    Drives the streaming operator (applyInPandasWithState).  The batch
+    emission trace does NOT run this class: it computes the same
+    emissions with vectorized prefix arithmetic over sorted runs, and
+    the tests check each against the same per-key rules.
     """
 
     __slots__ = ("key", "has_user", "name", "email", "genre", "register_date", "addrs")
@@ -216,14 +217,17 @@ _join_state_machine = _make_join_state_machine(None)
 
 
 def batch_emission_trace(users: DataFrame, addresses: DataFrame, seq_col: str = "seq") -> DataFrame:
-    """Run the SAME per-key state machine over a bounded input and return
-    the full emission trace (one row per emission, ordered by ``seq``
-    within each key).
+    """Compute the per-key join's emissions over a bounded input and
+    return the full emission trace (one row per emission, ordered by
+    ``seq`` within each key).
 
     This is the batch-verifiable face of the stateful join: the driver's
     SQL oracle can reproduce the trace exactly (user emission with 0
-    addresses, then the i-th address emission with i), while the operator
-    shares ``_KeyJoinState`` with the streaming version.
+    addresses, then the i-th address emission with i).  It does not
+    share ``_KeyJoinState`` with the streaming operator; the emissions
+    come from the vectorized arithmetic below, which
+    ``tests/test_invariants.py`` checks against a reference simulation
+    of the same per-key rules.
 
     Execution shape: repartition by key + sort within partitions by
     (key, seq), then ONE ``mapInPandas`` pass per partition -- keys are

@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from data_stream_flink_user_address_spark.functions import dedup, graph
 from data_stream_flink_user_address_spark.functions.graph import (
     domain_pagerank,
     pagerank,
@@ -148,7 +149,7 @@ class TestDomainPagerank:
         assert got["hub.example"] > got["a.example"]
 
 
-def test_pagerank_edges_read_from_cache_without_exchange(spark):
+def test_pagerank_edges_read_from_cache_without_exchange(spark, monkeypatch):
     """The 100 TB contract: the cached edge layout feeds every
     iteration's join directly -- no Exchange may sit immediately above
     an InMemoryTableScan (broadcast disabled to force the shuffled
@@ -161,10 +162,11 @@ def test_pagerank_edges_read_from_cache_without_exchange(spark):
         edges = spark.createDataFrame(
             [("a", "b"), ("b", "c"), ("c", "a")], ["src", "dst"]
         )
-        # driver_threshold=0 forces the DISTRIBUTED branch this plan
+        # a zero driver cutoff selects the DISTRIBUTED branch this plan
         # contract is about (the r18 driver hybrid would otherwise
         # solve a 3-edge graph locally)
-        out = pagerank(edges, iters=2, materialize=False, driver_threshold=0)
+        monkeypatch.setattr(graph, "PAGERANK_DRIVER_MAX_EDGES", 0)
+        out = pagerank(edges, iters=2, materialize=False)
         lines = (
             out._jdf.queryExecution().executedPlan().toString().splitlines()
         )
@@ -212,7 +214,7 @@ class TestConnectedComponents:
         connected_components(edges, stats=stats).collect()
         assert stats["mode"] in ("driver", "distributed")
 
-    def test_string_node_ids(self, spark):
+    def test_string_node_ids(self, spark, monkeypatch):
         """URL/domain graphs are the advertised input: string ids must
         work through BOTH solver branches (driver union-find below the
         threshold, distributed min-label above it)."""
@@ -225,12 +227,11 @@ class TestConnectedComponents:
             ["src", "dst"],
         )
         for thresh in (5_000_000, 0):  # driver path, distributed path
+            monkeypatch.setattr(dedup, "DRIVER_MAX_EDGES", thresh)
             stats = {}
             got = {
                 r.node: r.component
-                for r in connected_components(
-                    edges, driver_threshold=thresh, stats=stats
-                ).collect()
+                for r in connected_components(edges, stats=stats).collect()
             }
             assert got == {
                 "a.com": "a.com", "b.com": "a.com", "c.com": "a.com",
@@ -239,7 +240,7 @@ class TestConnectedComponents:
         assert stats["mode"] == "distributed"
 
 
-def test_pagerank_driver_and_distributed_branches_agree(spark):
+def test_pagerank_driver_and_distributed_branches_agree(spark, monkeypatch):
     """r19 probe gate: branch selection now runs a bounded count before
     any driver collect.  Both branches must agree after the consumers'
     required 6-digit rounding (the hybrid's documented contract)."""
@@ -253,8 +254,24 @@ def test_pagerank_driver_and_distributed_branches_agree(spark):
         r.node: round(r.rank, 6)
         for r in pagerank(edges, iters=8).collect()  # fits the default threshold
     }
+    monkeypatch.setattr(graph, "PAGERANK_DRIVER_MAX_EDGES", 0)
     dist = {
         r.node: round(r.rank, 6)
-        for r in pagerank(edges, iters=8, driver_threshold=0).collect()
+        for r in pagerank(edges, iters=8).collect()
     }
     assert drv == dist
+
+
+def test_pagerank_driver_branch_releases_its_edge_frame(spark):
+    """The driver branch materializes the distinct edge list once for
+    the size probe and the collect; it must release it before
+    returning, not leave an edge-list-sized block set pinned for the
+    rest of the session."""
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("d", "a")], ["src", "dst"]
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    ranks = pagerank(edges, iters=3).collect()
+    assert len(ranks) == 4
+    assert jsc.getPersistentRDDs().size() == before

@@ -11,6 +11,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from data_stream_flink_user_address_spark.sources import layout
 from data_stream_flink_user_address_spark.sources.layout import (
     compact,
     write_bucketed,
@@ -209,14 +210,15 @@ def test_persisted_codes_quantized_search_scans_only_codes(spark, tmp_path):
     assert got == expect
 
 
-def test_write_bucketed_files_per_bucket_regimes(spark, tmp_path):
-    """r19 parallelism guard: the small-frame default keeps the r18
-    one-file-per-bucket layout, while an explicit ``files_per_bucket``
-    (the 100 TB ingest's escape hatch from the n_buckets writer-task
-    funnel) emits k files per bucket WITHOUT breaking the bucket
-    layout -- the shuffled join on the bucket key still plans with no
-    Exchange, because k*n_buckets hash partitions refine n_buckets
-    buckets (same murmur3 pmod family)."""
+def test_write_bucketed_files_per_bucket_regimes(spark, tmp_path, monkeypatch):
+    """r19 parallelism guard: a small frame keeps the r18
+    one-file-per-bucket layout, while a frame whose size estimate
+    exceeds ``TARGET_FILE_BYTES`` per bucket (the 100 TB ingest's
+    escape from the n_buckets writer-task funnel; reached here by
+    shrinking the target to 1 byte) emits k files per bucket WITHOUT
+    breaking the bucket layout -- the shuffled join on the bucket key
+    still plans with no Exchange, because k*n_buckets hash partitions
+    refine n_buckets buckets (same murmur3 pmod family)."""
     o = spark.read.parquet(f"{SF}/orders.parquet").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -230,19 +232,17 @@ def test_write_bucketed_files_per_bucket_regimes(spark, tmp_path):
         k1_files = glob.glob(str(tmp_path / "k1" / "*.parquet"))
         assert len(k1_files) == 4, sorted(k1_files)
 
-        # explicit k=3: 12 writer tasks, up to 3 files per bucket, and
-        # every row of a bucket still lands in that bucket's files
-        write_bucketed(
-            o, "t_orders_k3", "o_custkey", 4, str(tmp_path / "k3"),
-            files_per_bucket=3,
-        )
+        # 1-byte target: k hits its cap, shuffle.partitions / n_buckets
+        # writer tasks per bucket, and every row of a bucket still
+        # lands in that bucket's files
+        monkeypatch.setattr(layout, "TARGET_FILE_BYTES", 1)
+        k_cap = -(-int(spark.conf.get("spark.sql.shuffle.partitions")) // 4)
+        assert k_cap > 1
+        write_bucketed(o, "t_orders_k3", "o_custkey", 4, str(tmp_path / "k3"))
         k3_files = glob.glob(str(tmp_path / "k3" / "*.parquet"))
-        assert 4 < len(k3_files) <= 12, sorted(k3_files)
+        assert 4 < len(k3_files) <= 4 * k_cap, sorted(k3_files)
 
-        write_bucketed(
-            c, "t_customer_k3", "c_custkey", 4, str(tmp_path / "ck3"),
-            files_per_bucket=3,
-        )
+        write_bucketed(c, "t_customer_k3", "c_custkey", 4, str(tmp_path / "ck3"))
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         ob = spark.table("t_orders_k3")
         cb = spark.table("t_customer_k3")
@@ -262,7 +262,7 @@ def test_write_bucketed_files_per_bucket_regimes(spark, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def test_write_bucketed_falls_back_to_one_file_per_bucket(spark, tmp_path):
+def test_write_bucketed_falls_back_to_one_file_per_bucket(spark, tmp_path, monkeypatch):
     """The size estimate goes through the private ``df._jdf`` handle;
     when it raises, the write still succeeds with k=1 -- one file per
     bucket -- even where the estimate would have asked for more files
@@ -281,17 +281,14 @@ def test_write_bucketed_falls_back_to_one_file_per_bucket(spark, tmp_path):
         def __getattr__(self, name):
             return getattr(self._jdf, name)
 
+    monkeypatch.setattr(layout, "TARGET_FILE_BYTES", 1)
     try:
-        write_bucketed(
-            o, "t_orders_est", "o_custkey", 2, str(tmp_path / "est"),
-            target_file_bytes=1,
-        )
+        write_bucketed(o, "t_orders_est", "o_custkey", 2, str(tmp_path / "est"))
         assert len(glob.glob(str(tmp_path / "est" / "*.parquet"))) > 2
 
         o._jdf = _NoEstimate(o._jdf)
         write_bucketed(
-            o, "t_orders_noest", "o_custkey", 2, str(tmp_path / "noest"),
-            target_file_bytes=1,
+            o, "t_orders_noest", "o_custkey", 2, str(tmp_path / "noest")
         )
         files = glob.glob(str(tmp_path / "noest" / "*.parquet"))
         assert len(files) == 2, sorted(files)

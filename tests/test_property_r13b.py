@@ -177,7 +177,8 @@ def test_normalize_unicode_idempotent(spark, texts):
     assert {r.doc_id: r.text for r in rows} == first
 
 
-def test_leakage_free_split_drops_cross_split_twins(spark):
+def test_leakage_free_split_drops_cross_split_twins(spark, monkeypatch):
+    from data_stream_flink_user_address_spark.functions import gating
     from data_stream_flink_user_address_spark.functions.sampling import (
         hash_split,
         leakage_free_split,
@@ -228,9 +229,10 @@ def test_leakage_free_split_drops_cross_split_twins(spark):
     )
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, out2.collect()))
     # the size-gated shuffle fallback computes IDENTICAL splits/drops
+    monkeypatch.setattr(gating, "BROADCAST_MAX_ROWS", 0)
     out3, leaks3 = leakage_free_split(
         df, {"train": 0.7, "test": 0.3}, seed=3, min_agreement=0.5,
-        num_hashes=16, bands=8, rows_per_band=2, broadcast_max_rows=0,
+        num_hashes=16, bands=8, rows_per_band=2,
     )
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, out3.collect()))
     assert {(r.doc_id, r.eval_doc_id) for r in leaks3.collect()} == {

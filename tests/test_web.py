@@ -416,6 +416,22 @@ class TestRobots:
         for frag in re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan):
             assert "url" not in frag, plan
 
+    def test_rules_broadcast_is_size_gated(self, spark, monkeypatch):
+        """A per-domain rule frame over the broadcast budget must not be
+        broadcast-hinted: the join falls back to a hash join and the
+        admitted URLs are the same."""
+        from data_stream_flink_user_address_spark.functions import gating
+        from data_stream_flink_user_address_spark.functions.web import (
+            filter_robots_allowed,
+        )
+
+        robots, urls = self._frames(spark)
+        monkeypatch.setattr(gating, "BROADCAST_MAX_ROWS", 0)
+        out = filter_robots_allowed(urls, robots, user_agent="unlisted")
+        plan = out._jdf.queryExecution().sparkPlan().toString()
+        assert "BroadcastHashJoin" not in plan, plan
+        assert {r.doc_id for r in out.collect()} == {1, 2, 4, 6}
+
     def test_parse_robots_relational_shape(self, spark):
         from pyspark.sql import Row
 
