@@ -19,11 +19,18 @@ on three shapes:
 
 For each: rounds, wall seconds, nodes, edges, and the driver-branch
 wall seconds on the same graph for comparison (the hybrid default's
-justification).  Writes CC_BENCH.json.
+justification).
+
+    python bench_cc.py                  # all three graphs, writes CC_BENCH.json
+    python bench_cc.py chain_1024       # only the named graphs, rows to stdout
+
+A run of only some graphs prints its rows and leaves CC_BENCH.json,
+the record of the whole ladder, as it is.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -85,23 +92,38 @@ def run(name: str, pairs, compare_driver: bool = True,
     return entry
 
 
+GRAPHS = {
+    "chain_1024": lambda spark: run("chain_1024", chain(spark, 1024)),
+    # near-critical random graphs grow long tendrils: the giant
+    # component's effective diameter needs more than 20 label
+    # rounds even with pointer jumping -- cap raised so the rows
+    # record CONVERGED numbers (r14's rounds=20 was ambiguous;
+    # the stats flag now makes truncation explicit)
+    "random_100k": lambda spark: run(
+        "random_100k", random_graph(spark, 100_000, 150_000), max_iter=60
+    ),
+    # the regime the distributed branch exists for: 1e7 edges,
+    # 2x DRIVER_MAX_EDGES -- driver comparison skipped (the
+    # hybrid would never route this to the driver)
+    "random_1e7": lambda spark: run(
+        "random_1e7", random_graph(spark, 10_000_000, 15_000_000),
+        compare_driver=False, max_iter=60,
+    ),
+}
+
+
 def main() -> None:
+    p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    p.add_argument("graphs", nargs="*", metavar="GRAPH",
+                   help=f"graphs to run, of {', '.join(GRAPHS)} (default: all)")
+    names = p.parse_args().graphs or list(GRAPHS)
+    unknown = [n for n in names if n not in GRAPHS]
+    if unknown:
+        p.error(f"unknown graph(s): {', '.join(unknown)}")
     spark = get_spark("bench_cc")
-    results = [
-        run("chain_1024", chain(spark, 1024)),
-        # near-critical random graphs grow long tendrils: the giant
-        # component's effective diameter needs more than 20 label
-        # rounds even with pointer jumping -- cap raised so the rows
-        # record CONVERGED numbers (r14's rounds=20 was ambiguous;
-        # the stats flag now makes truncation explicit)
-        run("random_100k", random_graph(spark, 100_000, 150_000),
-            max_iter=60),
-        # the regime the distributed branch exists for: 1e7 edges,
-        # 2x DRIVER_MAX_EDGES -- driver comparison skipped (the
-        # hybrid would never route this to the driver)
-        run("random_1e7", random_graph(spark, 10_000_000, 15_000_000),
-            compare_driver=False, max_iter=60),
-    ]
+    results = [GRAPHS[n](spark) for n in names]
+    if sorted(names) != sorted(GRAPHS):
+        return
     with open(
         os.path.join(os.path.dirname(os.path.abspath(__file__)), "CC_BENCH.json"), "w"
     ) as f:

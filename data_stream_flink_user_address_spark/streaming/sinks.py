@@ -12,6 +12,12 @@ The pipeline's only backend is :class:`TransactionalKeyedUpsertSink`
 on a real deployment the same interface fronts Delta ``MERGE`` or the
 Mongo Spark connector -- the batch-level dedup logic is identical.
 
+Two ways to commit: ``apply(df)`` merges a batch into the touched
+buckets inside Spark, and ``snapshot()`` + ``replace(df, version)``
+commit a whole table a caller has already merged on the driver -- the
+reference pipeline's count tables, which hold a handful of rows, take
+the second path (one read and one write per batch, no Spark-side merge).
+
 Micro-batch retries replay a batch: the merge is idempotent per key, so
 at-least-once delivery converges exactly like the reference's upsert.
 """
@@ -25,6 +31,7 @@ import warnings
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 # Filesystems whose ``rename`` is copy+delete (or otherwise cannot
@@ -133,7 +140,7 @@ class KeyedUpsertSink:
             # survivors get NULL there instead of failing the union with
             # AnalysisException.  (The reference pipeline's count tables
             # refuse such a table before merging: see
-            # plans/pipeline.py:_merge_counts.)
+            # plans/pipeline.py:_count_snapshot.)
             merged = incoming.unionByName(kept, allowMissingColumns=True)
         (
             merged.write.mode("overwrite")
@@ -196,10 +203,35 @@ class TransactionalKeyedUpsertSink:
     filesystem prefix (absolute entries from older manifests are still
     resolved for compatibility).
 
+    Each manifest also records the table schema (the merged schema of
+    every committed batch, without ``__bucket``), and every read passes
+    it to ``spark.read.schema``: no footer-inference job, and a column
+    that only some buckets' files carry reads back as NULL elsewhere
+    instead of depending on which footer Spark samples.  A manifest
+    without a schema (older tables) is read by inference.
+
     Scale shape is unchanged: a batch reads and rewrites only the
     buckets its keys hash to (the manifest carries the untouched
     buckets' file lists forward), so per-batch cost is O(touched
-    buckets) however large the table grows.  Old versions' files stay
+    buckets) however large the table grows.  Every commit writes ONE
+    file per bucket it writes, so a bucket's file list does not grow
+    with the number of batches.
+
+    ``apply(df)`` persists its LWW-collapsed input for the length of
+    the call -- the bucket probe, the survivor anti-join and every
+    commit retry share one computation -- and unpersists it before
+    returning, so a long-running stream pins nothing between batches.
+
+    ``snapshot()`` returns ``(head, table)``: the newest claimed log
+    version (None before the first commit) and the committed contents
+    at the newest parsable version (None before the first commit).
+    ``replace(df, head)`` commits ``df`` -- one row per key, the
+    caller's job -- as the WHOLE table at version ``head + 1`` and
+    returns False, publishing nothing, if another writer has claimed
+    that version since the snapshot; the caller re-snapshots, re-merges
+    and retries.  It is the same optimistic protocol as ``apply``, for
+    tables small enough that the caller merges them on the driver.
+    Old versions' files stay
     until :meth:`vacuum`, which only reclaims unreferenced files older
     than its retention window -- protecting both readers pinned to a
     just-replaced version and in-flight writers whose data is written
@@ -367,81 +399,110 @@ class TransactionalKeyedUpsertSink:
     def _bucket(self):
         return F.pmod(F.xxhash64(F.col(self.key)), F.lit(self.n_buckets))
 
+    def _head(self, fs) -> tuple[int | None, dict | None]:
+        """(newest CLAIMED version, manifest of the newest parsable one).
+        A commit goes past the claimed head even when that entry is
+        unparsable -- a claimed version number is never reused."""
+        return self._current_version(fs), self._latest_valid_manifest(fs)[1]
+
+    def _read_files(self, manifest: dict, buckets=None) -> DataFrame:
+        """The manifest's data files (only ``buckets`` when given), read
+        with the manifest's schema when it records one."""
+        files = [
+            self._resolve(f)
+            for b, fl in manifest["buckets"].items()
+            if buckets is None or int(b) in buckets
+            for f in fl
+        ]
+        reader = self.spark.read
+        if "schema" in manifest:
+            reader = reader.schema(T.StructType.fromJson(manifest["schema"]))
+        return reader.parquet(*files)
+
+    def snapshot(self) -> tuple[int | None, DataFrame | None]:
+        """``(head version, committed contents)``; ``(None, None)``
+        before the first commit.  Pass the head to :meth:`replace`."""
+        head, manifest = self._head(self._fs())
+        return head, None if manifest is None else self._read_files(manifest)
+
     def read(self) -> DataFrame | None:
         """Current committed contents (None before the first commit)."""
-        fs = self._fs()
-        _, manifest = self._latest_valid_manifest(fs)
-        if manifest is None:
-            return None
-        files = [self._resolve(f) for fl in manifest["buckets"].values() for f in fl]
-        return self.spark.read.parquet(*files)
+        return self.snapshot()[1]
 
-    def _write_data(self, merged: DataFrame, touched: list[int]) -> dict[str, list[str]]:
-        """Write touched buckets' merged rows; return bucket -> new
-        files as TABLE-RELATIVE paths (the manifest must survive the
-        table directory moving or being addressed via another prefix)."""
-        txn_name = f"txn-{uuid.uuid4().hex}"
-        merged.write.partitionBy("__bucket").parquet(f"{self.path}/data/{txn_name}")
+    def _write_data(self, merged: DataFrame) -> dict[str, list[str]]:
+        """Write ``merged`` (which carries ``__bucket``) as one file per
+        bucket; return bucket -> new files as TABLE-RELATIVE paths (the
+        manifest must survive the table directory moving or being
+        addressed via another prefix)."""
+        txn = f"data/txn-{uuid.uuid4().hex}"
+        merged.repartition("__bucket").write.partitionBy("__bucket").parquet(
+            f"{self.path}/{txn}"
+        )
         fs = self._fs()
         out: dict[str, list[str]] = {}
-        for b in touched:
-            bdir = self._jpath(f"{self.path}/data/{txn_name}/__bucket={b}")
-            if not fs.exists(bdir):
-                continue  # bucket lost every row to the LWW collapse
-            out[str(b)] = [
-                f"data/{txn_name}/__bucket={b}/{st.getPath().getName()}"
-                for st in fs.listStatus(bdir)
-                if st.getPath().getName().endswith(".parquet")
-            ]
+        for bdir in fs.listStatus(self._jpath(f"{self.path}/{txn}")):
+            name = bdir.getPath().getName()
+            if bdir.isDirectory() and name.startswith("__bucket="):
+                out[name[len("__bucket="):]] = [
+                    f"{txn}/{name}/{st.getPath().getName()}"
+                    for st in fs.listStatus(bdir.getPath())
+                    if st.getPath().getName().endswith(".parquet")
+                ]
         return out
 
+    def replace(self, df: DataFrame, version: int | None) -> bool:
+        """Commit ``df`` (one row per key) as the whole table, iff the
+        head is still ``version`` (from :meth:`snapshot`); False, with
+        the table unchanged, when another commit got there first."""
+        files = self._write_data(df.withColumn("__bucket", self._bucket()))
+        nxt = 0 if version is None else version + 1
+        manifest = {"version": nxt, "schema": df.schema.jsonValue(), "buckets": files}
+        return self._try_commit(self._fs(), nxt, manifest)
+
     def apply(self, batch_df: DataFrame) -> None:
+        # persisted for the call: the probe, the merge and every retry
+        # share one computation, and nothing stays pinned afterwards
         incoming = latest_per_key(batch_df, self.key, self.order_col).withColumn(
             "__bucket", self._bucket()
-        )
-        # bounded collect: <= n_buckets values (same note as KeyedUpsertSink)
-        touched = [int(r[0]) for r in incoming.select("__bucket").distinct().collect()]
-        if not touched:
-            return
-        incoming = incoming.localCheckpoint()  # one computation across retries
-        fs = self._fs()
-        for _ in range(self.max_commit_retries):
-            versions = self._list_versions(fs)
-            _, base_manifest = self._latest_valid_manifest(fs)
-            old_buckets: dict[str, list[str]] = (
-                {} if base_manifest is None else base_manifest["buckets"]
-            )
-            old_files = [
-                self._resolve(f)
-                for b, fl in old_buckets.items()
-                if int(b) in touched
-                for f in fl
-            ]
-            if old_files:
-                kept = survivors(
-                    self.spark.read.parquet(*old_files), incoming, self.key
-                ).withColumn("__bucket", self._bucket())
-                # allowMissingColumns: as in KeyedUpsertSink.apply
-                merged = incoming.unionByName(kept, allowMissingColumns=True)
-            else:
-                merged = incoming
-            new_files = self._write_data(merged, touched)
-            buckets = {
-                b: fl for b, fl in old_buckets.items() if int(b) not in touched
-            }
-            buckets.update(new_files)
-            # next version counts PAST the newest listed entry even if it
-            # was unparsable -- never reuse a claimed version number
-            next_version = versions[0] + 1 if versions else 0
-            if self._try_commit(fs, next_version, {"version": next_version, "buckets": buckets}):
+        ).persist()
+        try:
+            # bounded collect: <= n_buckets values
+            touched = {int(r[0]) for r in incoming.select("__bucket").distinct().collect()}
+            if not touched:
                 return
-            # lost the race: another writer committed next_version; re-merge
-            # against their table state (the orphaned data files are
-            # unreferenced and reclaimed by vacuum)
-        raise RuntimeError(
-            f"TransactionalKeyedUpsertSink: commit contention exceeded "
-            f"{self.max_commit_retries} retries at {self.path}"
-        )
+            fs = self._fs()
+            for _ in range(self.max_commit_retries):
+                head, base = self._head(fs)
+                old_buckets: dict[str, list[str]] = {} if base is None else base["buckets"]
+                merged = incoming
+                if any(int(b) in touched for b in old_buckets):
+                    kept = survivors(
+                        self._read_files(base, touched), incoming, self.key
+                    ).withColumn("__bucket", self._bucket())
+                    # allowMissingColumns: as in KeyedUpsertSink.apply
+                    merged = incoming.unionByName(kept, allowMissingColumns=True)
+                schema = merged.drop("__bucket").schema
+                if base is not None and "schema" in base:
+                    # columns that only untouched buckets carry stay
+                    schema = T.StructType(schema.fields + [
+                        f for f in T.StructType.fromJson(base["schema"])
+                        if f.name not in schema.fieldNames()
+                    ])
+                buckets = {b: fl for b, fl in old_buckets.items() if int(b) not in touched}
+                buckets.update(self._write_data(merged))
+                nxt = 0 if head is None else head + 1
+                manifest = {"version": nxt, "schema": schema.jsonValue(), "buckets": buckets}
+                if self._try_commit(fs, nxt, manifest):
+                    return
+                # lost the race: another writer committed nxt; re-merge
+                # against their table state (the orphaned data files are
+                # unreferenced and reclaimed by vacuum)
+            raise RuntimeError(
+                f"TransactionalKeyedUpsertSink: commit contention exceeded "
+                f"{self.max_commit_retries} retries at {self.path}"
+            )
+        finally:
+            incoming.unpersist()
 
     def vacuum(self, retain_seconds: float = 3600.0) -> int:
         """Delete data files not referenced by the current manifest, and

@@ -329,15 +329,16 @@ def test_merge_counts_window_rollover(spark, tmp_path):
 
 
 def test_foreach_batch_reads_each_count_table_once(spark, tmp_path, monkeypatch):
-    """Structural pin of one micro-batch: each count table is read once
-    and each of the three tables gets one apply."""
+    """Structural pin of one micro-batch: each count table is
+    snapshotted once and committed whole by one replace, from the rows
+    the driver folded; only userAddress goes through apply."""
     out = str(tmp_path / "out")
     pipe = _count_pipe(spark, out)
     pipe.sinks["userAddress"] = TransactionalKeyedUpsertSink(
         spark, os.path.join(out, "userAddress"), key="userId", order_col="seq"
     )
     calls = []
-    for name in ("read", "apply"):
+    for name in ("read", "snapshot", "replace", "apply"):
         orig = getattr(TransactionalKeyedUpsertSink, name)
 
         def counted(self, *args, _orig=orig, _name=name):
@@ -354,10 +355,41 @@ def test_foreach_batch_reads_each_count_table_once(spark, tmp_path, monkeypatch)
         calls.clear()
         fn(batch, epoch)
         assert sorted(calls) == sorted(
-            [("read", table) for _, table in COUNT_TABLES]
-            + [("apply", table) for table in pipe.sinks]
+            [(op, table) for _, table in COUNT_TABLES for op in ("snapshot", "replace")]
+            + [("apply", "userAddress")]
         )
     assert _counts(pipe) == ({"S0": 2}, {"C0": 2})
+
+
+def test_merge_counts_refolds_after_a_lost_commit_race(spark, tmp_path, monkeypatch):
+    """A commit that lands on a count table between the pipeline's
+    snapshot and its replace makes the replace lose; the pipeline
+    re-snapshots and folds again on top of the winner's rows, so no
+    count is lost and none is doubled."""
+    out = str(tmp_path / "out")
+    pipe, rival = _count_pipe(spark, out), _count_pipe(spark, out)
+    rival._run_id = "runB"
+    batch = spark.createDataFrame(
+        [("u1", [("a1", "c", "S0", "z", "C0"), ("a2", "c", "S1", "z", "C0")])],
+        f"userId string, {ADDRESSES}",
+    ).withColumn("ingest_time", F.lit(datetime(2026, 1, 1, 12, 5)).cast("timestamp"))
+    pipe._merge_counts(batch, epoch_id=0)
+
+    orig = TransactionalKeyedUpsertSink.replace
+    raced = []
+
+    def replace(self, df, version):
+        if not raced:  # the rival commits both tables first, once
+            raced.append(version)
+            monkeypatch.setattr(TransactionalKeyedUpsertSink, "replace", orig)
+            rival._merge_counts(batch, epoch_id=7)
+            monkeypatch.setattr(TransactionalKeyedUpsertSink, "replace", replace)
+        return orig(self, df, version)
+
+    monkeypatch.setattr(TransactionalKeyedUpsertSink, "replace", replace)
+    pipe._merge_counts(batch, epoch_id=1)
+    assert raced
+    assert _counts(pipe) == ({"S0": 3, "S1": 3}, {"C0": 6})
 
 
 def test_run_namespace_marker_survives_restart(tmp_path):

@@ -62,7 +62,7 @@ def test_txn_crash_before_commit_is_invisible(spark, tmp_path):
     crashed = spark.createDataFrame([("a", 100), ("z", 9)], "k string, v int").withColumn(
         "__bucket", sink._bucket()
     )
-    sink._write_data(crashed, [int(r[0]) for r in crashed.select("__bucket").distinct().collect()])
+    sink._write_data(crashed)
 
     assert sorted(sink.read().collect()) == before  # orphans invisible
     # replaying the batch converges (at-least-once delivery)
@@ -99,6 +99,66 @@ def test_txn_rewrites_only_touched_buckets(spark, tmp_path):
     assert got["key0"] == 999 and len(got) == 40
 
 
+def test_txn_replace_with_stale_version_loses(spark, tmp_path):
+    """replace() publishes only on top of the snapshot it names: once
+    another commit moved the head it returns False and the table is
+    unchanged."""
+    sink = _mk(spark, tmp_path)
+    assert sink.snapshot() == (None, None)
+    assert sink.replace(spark.createDataFrame([("a", 1)], "k string, v int"), None)
+    sink.apply(spark.createDataFrame([("b", 2)], "k string, v int"))  # head 0 -> 1
+
+    assert sink.replace(spark.createDataFrame([("z", 9)], "k string, v int"), 0) is False
+    head, table = sink.snapshot()
+    assert head == 1
+    assert {r["k"]: r["v"] for r in table.collect()} == {"a": 1, "b": 2}
+
+
+def test_txn_column_added_in_one_bucket_reads_back(spark, tmp_path):
+    """A batch carrying a new column writes only its own bucket; the
+    manifest's merged schema reads the column back for every row (NULL
+    where the files predate it) whichever file's footer comes first,
+    and a later batch without the column, into a third bucket, keeps it."""
+    sink = _mk(spark, tmp_path, n_buckets=8)
+    bucket = dict(spark.createDataFrame(
+        [(f"key{i}",) for i in range(40)], "k string"
+    ).select("k", sink._bucket()).collect())
+    a = "key0"
+    b = next(k for k in bucket if bucket[k] != bucket[a])
+    c = next(k for k in bucket if bucket[k] not in (bucket[a], bucket[b]))
+    sink.apply(spark.createDataFrame([(a, 1)], "k string, v int"))
+    sink.apply(spark.createDataFrame([(b, 2, "x")], "k string, v int, w string"))
+    sink.apply(spark.createDataFrame([(c, 3)], "k string, v int"))
+    got = {r["k"]: (r["v"], r["w"]) for r in sink.read().collect()}
+    assert got == {a: (1, None), b: (2, "x"), c: (3, None)}
+
+
+def test_txn_apply_releases_its_input(spark, tmp_path):
+    """apply persists its collapsed input for the call only: applies
+    leave the session's persistent-RDD count where it was."""
+    jsc = spark.sparkContext._jsc
+    sink = _mk(spark, tmp_path)
+    before = jsc.getPersistentRDDs().size()
+    for v in (1, 2, 3):
+        sink.apply(spark.createDataFrame([("a", v), ("b", v)], "k string, v int"))
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_txn_one_file_per_touched_bucket(spark, tmp_path):
+    """Each commit writes one file per bucket it writes, so a bucket's
+    file list does not grow with the number of batches."""
+    sink = _mk(spark, tmp_path, n_buckets=2)
+    for b in range(3):  # new keys in both buckets: stored rows survive
+        sink.apply(spark.createDataFrame(
+            [(f"key{b}-{i}", b) for i in range(20)], "k string, v int"
+        ).repartition(4))
+    fs = sink._fs()
+    buckets = sink._read_manifest(fs, sink._current_version(fs))["buckets"]
+    assert len(buckets) == 2
+    assert all(len(fl) == 1 for fl in buckets.values()), buckets
+    assert len(sink.read().collect()) == 60
+
+
 def test_txn_concurrent_commit_conflict_retries(spark, tmp_path):
     """If another writer claims the next version first, apply() must
     re-merge against the winner's state and commit on top of it."""
@@ -112,9 +172,7 @@ def test_txn_concurrent_commit_conflict_retries(spark, tmp_path):
     inc = spark.createDataFrame([("b", 7)], "k string, v int").withColumn(
         "__bucket", other._bucket()
     )
-    files = other._write_data(
-        inc, [int(r[0]) for r in inc.select("__bucket").distinct().collect()]
-    )
+    files = other._write_data(inc)
     old = other._read_manifest(fs, v)["buckets"]
     merged_manifest = {bk: fl for bk, fl in old.items()}
     merged_manifest.update(files)
@@ -172,9 +230,7 @@ def test_txn_vacuum_retention_preserves_recent_versions(spark, tmp_path):
     crashed = spark.createDataFrame([("z", 9)], "k string, v int").withColumn(
         "__bucket", sink._bucket()
     )
-    files = sink._write_data(
-        crashed, [int(r[0]) for r in crashed.select("__bucket").distinct().collect()]
-    )
+    files = sink._write_data(crashed)
     assert sink.vacuum() == 0
     for fl in files.values():
         for f in fl:
