@@ -63,7 +63,6 @@ from data_stream_flink_user_address_spark.functions.dedup import (
 from data_stream_flink_user_address_spark.functions.similarity import (
     brute_force_topk,
     ivf_topk,
-    lsh_bucketed_topk,
     make_planes,
     round_half_away,
     train_ivf_centroids,
@@ -138,7 +137,6 @@ from data_stream_flink_user_address_spark.functions.packing import (
     chunk_manifest,
     histogram_pack,
     pack_bins_exact,
-    sequence_pack_offsets,
 )
 from data_stream_flink_user_address_spark.functions.curation import (
     gopher_quality_flags,
@@ -158,7 +156,6 @@ from data_stream_flink_user_address_spark.functions.multimodal import (
     synthesize_square_wavs,
 )
 from data_stream_flink_user_address_spark.functions.sampling import (
-    hash_split,
     importance_resample,
     leakage_free_split,
     mixture_sample,
@@ -1311,17 +1308,6 @@ def _q_grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 
 
-def _q_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GPT-style concat-then-chunk offsets for the documents corpus
-    (functions/packing.py): every doc's position in the global token
-    stream and the seq_len=512 chunks it spans, via the two-phase
-    distributed prefix sum (the single-partition window touches only
-    one row per id-bucket, never the corpus)."""
-    return sequence_pack_offsets(
-        _docs(spark, sf_dir), seq_len=512, sep_tokens=1, bucket_size=100
-    )
-
-
 def _q_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-balanced data diet: assign embeddings to the trained
     centroids (shared argmax kernel), then deterministically downsample
@@ -1657,21 +1643,6 @@ def _bpe_artifacts(spark: SparkSession, sf_dir: str):
     return bpe_train_and_encode(_docs(spark, sf_dir), n_merges=_BPE_N_MERGES)
 
 
-def _q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
-    sigs = minhash_signatures_text(d, n=5, num_hashes=_MINHASH_K)
-    return lsh_candidate_pairs(sigs, bands=_LSH_BANDS, rows_per_band=_LSH_ROWS)
-
-
-def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fuzzy-dedup clustering: connected components (min-label
-    propagation) over the MinHash-LSH candidate pairs."""
-    d = _docs(spark, sf_dir)
-    sigs = minhash_signatures_text(d, n=5, num_hashes=_MINHASH_K)
-    pairs = lsh_candidate_pairs(sigs, bands=_LSH_BANDS, rows_per_band=_LSH_ROWS)
-    return dedup_clusters(pairs)
-
-
 def _q_fuzzy_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fuzzy-dedup KEEP rule -- the pipeline deliverable the cluster
     map exists for: each MinHash-LSH connected component keeps its
@@ -1753,10 +1724,6 @@ def _q_substring_dedup_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return embedding_near_dup_pairs(_embs(spark, sf_dir), threshold=0.4)
-
-
 def _q_embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed variant of embedding_near_dup: 8 independent
     hyperplane tables (6 planes each, seeds 42..49) pre-partition the
@@ -1803,13 +1770,6 @@ def _queries_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _embs(spark, sf_dir)
     return brute_force_topk(e, _queries_frame(spark, sf_dir), k=10)
-
-
-def _q_similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _embs(spark, sf_dir)
-    return lsh_bucketed_topk(
-        e, _queries_frame(spark, sf_dir), k=5, n_planes=_ANN_PLANES, dim=_EMB_DIM, seed=42
-    )
 
 
 # 1 round, not 2: the r7 iteration scan (docstring below) measured
@@ -2306,15 +2266,6 @@ def _q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mixture_sample(
         deduped, _MIX_FRACTIONS, default_fraction=_MIX_DEFAULT, seed=42
     ).select("doc_id", "source", "quality", "dup_token_frac", "n_cut_tokens")
-
-
-def _q_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reproducible train/valid/test assignment by cumulative hash-bucket
-    ranges (functions/sampling.py:hash_split): a doc's split depends on
-    nothing but (doc_id, seed) — stable under re-runs and under corpus
-    growth, unlike randomSplit."""
-    d = _docs(spark, sf_dir)
-    return hash_split(d, _SPLITS, seed=42).select("doc_id", "split")
 
 
 def _q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -11,17 +11,28 @@ Scale shape per operator (n docs, s shingles/doc):
 - exact:    1 shuffle on the content hash.
 - minhash:  O(n*s) explode -> k mins per doc (single agg) -> b band keys
             -> self-join per band bucket (only colliding docs meet).
-- simhash:  O(n*tokens) explode -> 64-bit signature per doc -> bucket on
-            signature prefix bands for near-match candidates.
+- simhash:  one projection -> 32-bit (default) signature per doc ->
+            bucket on max_hamming+1 equal signature slices; pigeonhole
+            makes the candidate set exact within max_hamming bits.
 - ngram:    shingle explode + per-shingle join, pruned by doc-frequency
             cap (stop-shingle removal) to avoid quadratic hot shingles.
 - embedding: random-hyperplane LSH bucket join (scale) or bounded
             brute-force (oracle path).
+
+Persisted stores (continuous-crawl admission): the exact, MinHash and
+SimHash stores are bucketed catalog tables that every arriving batch
+probes.  One core serves all three -- write (:func:`_write_store`),
+scan (:func:`_scan_store`), match (:func:`_store_matches`), self-pairs
+(:func:`_band_self_pairs`), the epoch body (:func:`_store_gate_epoch`)
+and compaction (:func:`_compact_store`); a family only supplies its
+signature, band rows and rescore predicate (:class:`_NearDupSpec`).
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from functools import partial
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -246,15 +257,25 @@ def lsh_candidate_pairs(
     only inside their bucket -- the join is per-bucket, never all-pairs.
     Output: (doc_a, doc_b) with doc_a < doc_b, distinct.
     """
-    b = band_rows(signatures, id_col, bands, rows_per_band)
-    left = b.alias("l")
-    right = b.alias("r")
-    return (
-        left.join(right, on="band_key")
-        .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .select(F.col(f"l.{id_col}").alias("doc_a"), F.col(f"r.{id_col}").alias("doc_b"))
-        .distinct()
-    )
+    return _band_self_pairs(band_rows(signatures, id_col, bands, rows_per_band), id_col)
+
+
+def _band_self_pairs(bands, id_col, sig_col=None, keep=None, score=None) -> DataFrame:
+    """The band-row self-join every banded near-dup stage shares:
+    ``(doc_a, doc_b)`` ids meeting in at least one ``band_key`` bucket,
+    ``doc_a < doc_b``, distinct.  ``keep(l, r)`` rescores a candidate on
+    its two ``sig_col`` values; ``score(l, r)`` adds one aliased column
+    computed from them."""
+    lid, rid = F.col(f"l.{id_col}"), F.col(f"r.{id_col}")
+    pairs = bands.alias("l").join(bands.alias("r"), "band_key").filter(lid < rid)
+    cols = [lid.alias("doc_a"), rid.alias("doc_b")]
+    if sig_col is not None:
+        lsig, rsig = F.col(f"l.{sig_col}"), F.col(f"r.{sig_col}")
+        if keep is not None:
+            pairs = pairs.filter(keep(lsig, rsig))
+        if score is not None:
+            cols.append(score(lsig, rsig))
+    return pairs.select(*cols).distinct()
 
 
 # Edge count up to which dedup_clusters (and graph.connected_components)
@@ -951,9 +972,9 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits:
     whole signature is ONE projection: token-hash array, then per bit a
     filtered count -- zero shuffle at any scale (an earlier version
     exploded (doc, token, bit) rows through two grouped aggregations).
-    Near-dup candidates = equal signatures on prefix bands
-    (hamming-adjacent docs collide on at least one band with high
-    probability).
+    Near-dup candidates = equal signatures on one of ``max_hamming + 1``
+    equal slices: by pigeonhole EVERY pair within ``max_hamming`` bits
+    collides on at least one slice (:func:`simhash_near_dup_pairs`).
     """
     toks = _ws_tokens(text_col)
     # zero-token docs (blank/whitespace-only) carry no signal and get
@@ -996,46 +1017,41 @@ def simhash_near_dup_pairs(
     ``max_hamming`` bits differs in at most that many bands, so at
     least one band is bit-identical and the pair meets in that band's
     bucket.  Candidates then verify with the exact popcount of the
-    XOR.  Shuffle shape mirrors the MinHash banding: only (band, value)
-    collisions join, never all-pairs; each signature contributes
-    ``bands`` 8-byte rows.
+    XOR.  Only band-key collisions join, never all-pairs
+    (:func:`_band_self_pairs`, the MinHash banding's self-join).
     """
-    bands = bands or (max_hamming + 1)
+    keys = _simhash_band_keys(F.col(sig_col), bits, bands or (max_hamming + 1))
+    rows = sigs.select(id_col, sig_col, F.explode(keys).alias("band_key"))
+    return _band_self_pairs(
+        rows, id_col, sig_col, keep=_within_hamming(max_hamming),
+        score=lambda a, b: F.bit_count(a.bitwiseXOR(b)).cast("int").alias("hamming"),
+    )
+
+
+def _simhash_band_keys(sig: Column, bits: int, bands: int) -> Column:
+    """The pigeonhole split of a ``bits``-wide signature into ``bands``
+    equal ``w``-bit slices, each packed with its band index into one
+    bigint key ``band * 2^w + slice``: two signatures share a key
+    exactly when that band is bit-identical, so one column serves as
+    both the join key and the store's bucket key."""
     if bits % bands:
         raise ValueError(f"bits={bits} not divisible by bands={bands}")
     w = bits // bands
     mask = (1 << w) - 1
-    slices = F.array(
+    return F.array(
         *[
-            F.shiftright(F.col(sig_col), i * w).bitwiseAND(F.lit(mask)).cast("bigint")
+            (
+                F.lit(i * (1 << w)).cast("bigint")
+                + F.shiftright(sig, i * w).bitwiseAND(F.lit(mask))
+            ).cast("bigint")
             for i in range(bands)
         ]
     )
-    b = sigs.select(
-        F.col(id_col).alias("id"),
-        F.col(sig_col).alias("sig"),
-        F.posexplode(slices).alias("band", "val"),
-    )
-    left = b.alias("l")
-    right = b.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.val") == F.col("r.val"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(
-            F.col("l.id").alias("doc_a"),
-            F.col("r.id").alias("doc_b"),
-            F.bit_count(
-                F.col("l.sig").bitwiseXOR(F.col("r.sig"))
-            ).cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    return pairs
+
+
+def _within_hamming(max_hamming: int):
+    """SimHash rescore: the exact popcount of the XOR."""
+    return lambda a, b: F.bit_count(a.bitwiseXOR(b)) <= F.lit(max_hamming)
 
 
 # ---------------------------------------------------------------------------
@@ -1221,43 +1237,32 @@ def streaming_incremental_dedup(
     fingerprints to the store and writes the survivor rows
     ``(id, fingerprint)`` under an ``__epoch=<id>`` partition of
     ``out_path``.  The batch operator IS the streaming operator: one
-    code path serves backfill and the live feed, the same
-    shared-implementation contract as the curation pipeline demo.
+    code path serves backfill and the live feed.
 
-    Replay idempotency comes from composing two partition-overwrite
-    contracts: the store append lands under
-    ``__batch=<batch_id_base + epoch>`` with the epoch's OWN partition
-    excluded from the anti-join (so a replayed epoch returns identical
-    survivors and rewrites identical state), and the survivor output
-    lands under ``__epoch=<epoch>`` (the ``streaming/epoch.py``
-    contract).  A crash
-    between sink write and checkpoint commit therefore re-runs the
-    epoch into exactly its own two partitions -- no duplicates, no
-    loss.
+    Replay idempotency composes two partition-overwrite contracts: the
+    store append lands under ``__batch=<batch_id_base + epoch>`` with
+    the epoch's OWN partition excluded from the anti-join, and the
+    survivor output under ``__epoch=<epoch>`` (``streaming/epoch.py``),
+    so a re-run epoch rewrites exactly its own two partitions.
 
     ``batch_id_base`` offsets streaming epochs above any seed batches
     written via :func:`build_fingerprint_store` (which default to small
     ids); without it epoch 0 would collide with seed batch 0 and
     wrongly EXCLUDE the seed fingerprints from its anti-join.
 
-    Scale shape per micro-batch: O(batch + store-scan) exactly like the
-    batch path -- and for a store too large to scan per epoch, seed a
-    bucketed store (:func:`build_bucketed_fingerprint_store`) and swap
-    the inner call for :func:`incremental_exact_dedup_bucketed` plus a
-    same-spec append.  State lives entirely in the parquet store, not
-    in streaming state -- unbounded history without unbounded executor
-    memory, which ``dropDuplicates`` on a stream cannot offer.
+    Scale shape per micro-batch: O(batch + store-scan), like the batch
+    path; for a store too large to scan per epoch, use
+    :func:`streaming_incremental_dedup_bucketed` over a bucketed store
+    instead.  State lives in the parquet store, not in streaming state
+    -- unbounded history without unbounded executor memory.
 
     Returns the started ``StreamingQuery``.
     """
-    return start_gate_stream(
-        stream, checkpoint_dir,
-        partial(
-            _exact_dedup_epoch, store_path=store_path, out_path=out_path,
-            text_col=text_col, id_col=id_col, batch_id_base=batch_id_base,
-        ),
-        out_path,
+    gate = partial(
+        _exact_dedup_epoch, store_path=store_path, out_path=out_path,
+        text_col=text_col, id_col=id_col, batch_id_base=batch_id_base,
     )
+    return start_gate_stream(stream, checkpoint_dir, gate, out_path)
 
 
 def _exact_dedup_epoch(
@@ -1269,14 +1274,19 @@ def _exact_dedup_epoch(
     id_col: str,
     batch_id_base: int,
 ) -> None:
-    """One epoch of :func:`streaming_incremental_dedup`: the store
-    append (inside :func:`incremental_exact_dedup`), then the survivor
-    partition."""
-    survivors = incremental_exact_dedup(
-        batch_df, store_path, text_col=text_col, id_col=id_col,
-        batch_id=batch_id_base + int(epoch_id),
-    )
-    write_partition(survivors, out_path, epoch_id)
+    """One epoch of :func:`streaming_incremental_dedup`: the survivor
+    partition, then the store append (:func:`incremental_exact_dedup`'s
+    ``batch_id`` contract).  The survivors are pinned only for the
+    epoch: a recompute after the append returns the same rows, because
+    the gate excludes the epoch's own ``__batch`` partition."""
+    batch_id = batch_id_base + int(epoch_id)
+    with _pinned() as pins:
+        survivors = _pin(
+            _exact_store_survivors(batch_df, store_path, text_col, id_col, batch_id),
+            pins,
+        )
+        write_partition(survivors, out_path, epoch_id)
+        _append_fingerprints(survivors, store_path, batch_id)
 
 
 def streaming_embedding_near_dup(
@@ -1544,12 +1554,17 @@ compactors) write.
   non-space whitespace (``'doc\\n'`` minted a different fingerprint
   than ``'doc'``).
 
-Mixing formats silently re-admits newline-variant duplicates -- the
-exact failure class r17 fixed, resurrected through the operational
-side door (VERDICT r17 "What's wrong #1").  Builders stamp; every
-consumer runs :func:`assert_store_format` and fails LOUDLY on a v1
-store instead.  Bump this constant whenever fingerprint normalization
-changes again.
+Mixing formats silently re-admits newline-variant duplicates (VERDICT
+r17 "What's wrong #1").  Bump this constant whenever fingerprint
+normalization changes again.
+
+.. note:: REBUILD persisted stores after upgrading across a format
+   change: a store built before r17 holds incompatible fingerprints,
+   so previously-seen newline-variant rows would re-admit and
+   replayed batches would not rewrite identically.  Enforced since
+   r18: every builder stamps this version, and every consumer runs
+   :func:`assert_store_format`, so a stale store raises instead of
+   silently re-admitting (VERDICT r17 ask #2).
 """
 
 
@@ -1564,23 +1579,15 @@ def _stamp_store_format(df: DataFrame) -> DataFrame:
 
 def assert_store_format(store: DataFrame, store_name: str) -> DataFrame:
     """Refuse to consume a persisted dedup store whose fingerprint
-    format predates :data:`STORE_FORMAT_VERSION` (VERDICT r17 ask #2).
-
-    Two checks, both cheap at any store size:
-
-    * schema: a store with NO ``__fmt`` column is pre-r17 (v1) --
-      detected from metadata alone, zero I/O;
-    * value: one-row probe (``first()``) against the current version.
-      A whole-store version skew (e.g. a v2 store read by a future v3
-      engine) is caught by any row; PARTIAL mixes cannot arise through
-      this module's writers -- every append path first consumes the
-      store through this assertion, and a post-upgrade ``insertInto``
-      against a v1 table fails on column arity before writing.
-
-    Returns ``store`` unchanged so call sites can wrap the load
-    expression.  The error spells out the rebuild path instead of
-    letting the stale store silently re-admit newline-variant
-    duplicates.
+    format predates :data:`STORE_FORMAT_VERSION` (VERDICT r17 ask #2),
+    with the rebuild path in the error.  Two checks, both cheap at any
+    store size: a store with NO ``__fmt`` column is pre-r17 (v1), from
+    metadata alone; and a one-row probe (``first()``) catches a
+    whole-store version skew.  PARTIAL mixes cannot arise through this
+    module's writers -- every append path first consumes the store
+    through this assertion, and a post-upgrade ``insertInto`` against a
+    v1 table fails on column arity before writing.  Returns ``store``
+    unchanged so call sites can wrap the load expression.
     """
     rebuild = (
         "rebuild it from the current corpus snapshot with "
@@ -1605,6 +1612,254 @@ def assert_store_format(store: DataFrame, store_name: str) -> DataFrame:
     return store
 
 
+# ---------------------------------------------------------------------------
+# The store core: write, scan, match, pin, epoch body, compact
+# ---------------------------------------------------------------------------
+
+
+def _write_store(rows, table_name, path, bucket_by, n_buckets, mode="overwrite", epoch=None):
+    """Write store rows as a bucketed catalog table
+    (``sources/layout.py:write_bucketed``), tagged ``__epoch=epoch``
+    unless ``epoch`` is None and stamped ``__fmt``."""
+    from ..sources.layout import write_bucketed
+
+    if epoch is not None:
+        rows = rows.withColumn("__epoch", F.lit(int(epoch)))
+    write_bucketed(
+        _stamp_store_format(rows), table_name, bucket_by=bucket_by,
+        n_buckets=n_buckets, path=path, mode=mode,
+    )
+
+
+def _scan_store(spark, store_table: str, exclude_epoch: int | None = None) -> DataFrame:
+    """The format-checked store minus the rows tagged ``__epoch ==
+    exclude_epoch``: the streaming replay contract -- a re-run epoch
+    must not gate against its OWN failed-run leftovers.  The filter is
+    a pushed scan predicate; it adds no store-side exchange
+    (plan-pinned)."""
+    store = assert_store_format(spark.table(store_table), store_table)
+    if exclude_epoch is not None:
+        store = store.filter(F.col("__epoch") != int(exclude_epoch))
+    return store
+
+
+def _store_matches(bands, store_table, id_col, sig_col, keep, exclude_epoch) -> DataFrame:
+    """Ids of the batch band rows ``bands`` that meet a stored row on
+    ``band_key`` and pass the rescore ``keep(batch_sig, stored_sig)``.
+    ONLY the batch side exchanges, into the store's bucketing, and the
+    rescore rides the join condition (plan-pinned).  Output may repeat
+    an id (one row per matching band); consumers anti-join, which needs
+    no distinct."""
+    store = _scan_store(bands.sparkSession, store_table, exclude_epoch)
+    return (
+        bands.alias("b")
+        .join(store.alias("s"), "band_key")
+        .filter(keep(F.col(f"b.{sig_col}"), F.col(f"s.{sig_col}")))
+        .select(F.col(f"b.{id_col}").alias(id_col))
+    )
+
+
+def _pin(df: DataFrame, pins: list | None) -> DataFrame:
+    """Materialize a frame several consumers read: persisted into an
+    epoch body's ``pins`` (:func:`_pinned` releases it when the epoch
+    returns), or -- for the public batch functions, which return lazy
+    frames -- lazily localCheckpoint-ed, pinned until the JVM
+    garbage-collects the returned frame's lineage."""
+    if pins is None:
+        return df.localCheckpoint(eager=False)
+    pins.append(df.persist())
+    return pins[-1]
+
+
+@contextmanager
+def _pinned():
+    """The ``pins`` list of one epoch body, unpersisted (dependents
+    first) when the body returns or raises."""
+    pins: list[DataFrame] = []
+    try:
+        yield pins
+    finally:
+        for df in reversed(pins):
+            df.unpersist()
+
+
+def _store_gate_epoch(
+    batch_df, epoch_id, gate, store_rows, store_table, out_path, text_col, id_col,
+    profile_path=None,
+) -> None:
+    """One epoch of a bucketed-store admission gate (exact, MinHash or
+    SimHash): ``gate(batch_df, exclude_epoch, pins)`` returns the
+    survivors, ``store_rows(survivors)`` the rows they append to
+    ``store_table``; ``profile_path`` adds the
+    :func:`_write_epoch_profile` funnel leg.  Everything the epoch pins
+    is released before it returns.
+
+    Replay safety: the survivor and profile partitions follow the
+    ``streaming/epoch.py`` contract (a re-run REPLACES its own
+    ``__epoch`` partition).  Bucketed catalog tables only APPEND, so a
+    replayed epoch appends its store rows twice -- harmless, because
+    the gate reads the store as a MEMBERSHIP set and ``exclude_epoch``
+    hides the epoch's own leftovers, so the replay computes identical
+    survivors; ``compact_*_store`` reclaims the duplicate bytes.
+    """
+    with _pinned() as pins:
+        # persisted BEFORE the store append.  A recompute (an evicted
+        # block, or Spark re-caching plans over the table once the
+        # append lands) still returns the same rows: the gate's
+        # exclude_epoch filter hides this epoch's own append
+        survivors = _pin(gate(batch_df, int(epoch_id), pins), pins)
+        write_partition(survivors, out_path, epoch_id)
+        if profile_path is not None:
+            _write_epoch_profile(
+                batch_df, survivors, int(epoch_id), profile_path, text_col, id_col,
+            )
+        rows = store_rows(survivors).withColumn("__epoch", F.lit(int(epoch_id)))
+        _stamp_store_format(rows).write.mode("append").insertInto(store_table)
+
+
+def _write_epoch_profile(batch_df, survivors, epoch_id, profile_path, text_col, id_col) -> None:
+    """Write one epoch's raw-vs-admitted
+    :func:`..profile.profile_funnel` rows under ``__epoch=<id>`` (a
+    replayed epoch REWRITES its partition) -- the gates' shared
+    observability leg.  Survivor frames may carry only (id, signature),
+    so the admitted leg recovers text with a broadcast semi-join on the
+    micro-batch-sized survivor ids."""
+    from .profile import profile_funnel
+
+    admitted = batch_df.join(F.broadcast(survivors.select(id_col)), id_col, "semi")
+    write_partition(
+        profile_funnel({"raw": batch_df, "admitted": admitted}, text_col=text_col, id_col=id_col),
+        profile_path, epoch_id,
+    )
+
+
+def _band_store_id_col(src: DataFrame, id_col: str | None, sig_col: str) -> str:
+    """Resolve a band store's id column.  The builders parameterize
+    ``id_col`` while the stored layout is always (id, sig, band_key,
+    __epoch), so when the caller doesn't say, the id column is the one
+    column that isn't structural -- deriving it here means a store
+    seeded with a non-default id still compacts instead of raising
+    AnalysisException long after seeding."""
+    if id_col is not None:
+        return id_col
+    rest = [c for c in src.columns if c not in {sig_col, "band_key", "__epoch", "__fmt"}]
+    if len(rest) != 1:
+        raise ValueError(
+            f"cannot infer id column from store schema {src.columns}; "
+            "pass id_col explicitly"
+        )
+    return rest[0]
+
+
+def _compact_store(spark, src_table, dest_table, dest_path, n_buckets, sig_col=None, id_col=None):
+    """The maintenance rewrite behind the three ``compact_*``
+    functions: collapse the rows that epoch replays re-append
+    (:func:`_store_gate_epoch`) to one row per store key -- the
+    ``fingerprint``, or ``(band_key, id)`` for a band store with
+    signature column ``sig_col`` -- into a NEW table with the source's
+    columns and bucket spec (``n_buckets`` defaults to the source's
+    catalog value, so downstream joins keep their zero-store-side-
+    exchange plan).  Returns ``(rows_before, rows_after)``.
+
+    Duplicates of one key differ only in provenance: only a replay of
+    the SAME epoch re-appends a row, and the signature is a pure
+    function of the doc, so ``any_value`` and ``min(__epoch)`` are
+    formalities -- the kept tag is the one epoch whose replay must
+    exclude the row, so the replay contract survives compaction.  The
+    groupBy reuses the source scan's bucketing (no exchange).  The new
+    table/path is deliberate (as in ``sources/layout.py:compact``): the
+    atomic swap belongs to the table format, not an in-place overwrite
+    racing a live stream -- quiesce the stream, compact, repoint it.
+    """
+    # a compactor typically runs in a MAINTENANCE session, not the
+    # stream's foreachBatch clone that did the appends -- resolve the
+    # table fresh or a stale relation cache silently compacts away
+    # everything appended since this session first read it
+    spark.catalog.refreshTable(src_table)
+    # compacting a stale-format store is wasted work -- fail here and
+    # rebuild instead (the re-stamp is safe because the asserted
+    # source version equals the current one)
+    src = _scan_store(spark, src_table)
+    keys = ["fingerprint"] if sig_col is None else ["band_key", _band_store_id_col(src, id_col, sig_col)]
+    if n_buckets is None:
+        meta = spark.sql(f"DESCRIBE EXTENDED {src_table}").collect()
+        n_buckets = int({r.col_name: r.data_type for r in meta}["Num Buckets"])
+    aggs = [F.any_value(sig_col).alias(sig_col)] if sig_col else []
+    if "__epoch" in src.columns:
+        aggs.append(F.min("__epoch").alias("__epoch"))
+    out = src.groupBy(*keys).agg(*aggs) if aggs else src.select(*keys).distinct()
+    rows_before = src.count()
+    out = out.select(*[c for c in src.columns if c != "__fmt"])
+    _write_store(out, dest_table, dest_path, keys[0], n_buckets)
+    return rows_before, spark.table(dest_table).count()
+
+
+class _NearDupSpec(NamedTuple):
+    """What a band-store family (MinHash, SimHash) supplies to the
+    shared incremental chain and gate."""
+
+    sig_col: str  # the signature column riding every band row
+    signatures: Callable[[DataFrame], DataFrame]  # docs -> (id, sig)
+    band_rows: Callable[[DataFrame], DataFrame]  # sigs -> (id, sig, band_key)
+    keep: Callable[[Column, Column], Column]  # rescore of two signatures
+    passthrough: Callable[[DataFrame], DataFrame] | None = None  # ungated docs
+
+
+def _incremental_near_dup(new_docs, store_table, id_col, spec, exclude_epoch, pins=None):
+    """The batch-vs-band-store chain both near-dup families share: store
+    match, then ``fresh`` (the store-novel remainder), then its band
+    self-pairs, then the :func:`dedup_clusters` keep-min-id rule, then
+    the anti-join -- plus the family's ungated pass-through rows."""
+    sigs = spec.signatures(new_docs)
+    matched = _store_matches(
+        spec.band_rows(sigs), store_table, id_col, spec.sig_col, spec.keep,
+        exclude_epoch,
+    )
+    # `fresh` embeds the corpus-sized store join and is referenced from
+    # BOTH sides of the within-batch self-join plus the final anti-join
+    # -- without materialization Spark re-runs the store SMJ once per
+    # reference (measured 4x = ~59 s/batch vs ~15 s at a 1e6-doc
+    # MinHash store).  The pin is batch-sized, never corpus-sized.
+    fresh = _pin(sigs.join(matched, id_col, "left_anti"), pins)
+    pairs = _band_self_pairs(spec.band_rows(fresh), id_col, spec.sig_col, spec.keep)
+    dropped = dedup_clusters(pairs).filter(
+        F.col("doc_id") != F.col("cluster_id")
+    ).select(F.col("doc_id").alias(id_col))
+    out = fresh.join(dropped, id_col, "left_anti")
+    return out if spec.passthrough is None else out.unionByName(spec.passthrough(new_docs))
+
+
+def _near_dup_gate(spec, store_rows, store_table, out_path, text_col, id_col, profile_path):
+    """A :func:`_store_gate_epoch` over a band store: the gate is
+    :func:`_incremental_near_dup` without the epoch's own rows, and
+    ``store_rows(survivors)`` are the band rows the survivors append."""
+    return partial(
+        _store_gate_epoch,
+        gate=lambda batch_df, epoch_id, pins: _incremental_near_dup(
+            batch_df, store_table, id_col, spec, epoch_id, pins
+        ),
+        store_rows=store_rows,
+        store_table=store_table, out_path=out_path, text_col=text_col,
+        id_col=id_col, profile_path=profile_path,
+    )
+
+
+# ---------------------------------------------------------------------------
+# Exact fingerprint stores (parquet __batch store, bucketed store)
+# ---------------------------------------------------------------------------
+
+
+def _first_per_fingerprint(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """``(fingerprint, lowest id)`` per normalized-content md5: a
+    batch's first occurrences, 32-byte fingerprints shuffled once
+    (map-side combined)."""
+    return (
+        docs.select(F.col(id_col), F.md5(norm_ws(text_col)).alias("fingerprint"))
+        .groupBy("fingerprint")
+        .agg(F.min(id_col).alias(id_col))
+    )
+
+
 def build_fingerprint_store(
     df: DataFrame,
     store_path: str,
@@ -1616,24 +1871,78 @@ def build_fingerprint_store(
     a corpus snapshot: distinct normalized-content md5s written under an
     ``__batch=<id>`` partition with dynamic partition overwrite, so
     replaying a batch replaces exactly its own partition -- the
-    ``streaming/epoch.py`` contract keyed on ``__batch``.
-
-    .. note:: r17 changed fingerprint normalization (edge whitespace
-       now strips -- ``norm_ws``), so stores built before r17 hold
-       incompatible fingerprints for any text that started/ended
-       with non-space whitespace: REBUILD persisted stores after
-       upgrading, or previously-seen newline-variant rows will
-       re-admit and replayed batches will not rewrite identically.
-       ENFORCED since r18: rows are stamped ``__fmt`` =
-       :data:`STORE_FORMAT_VERSION` and every consumer runs
-       :func:`assert_store_format`, so a stale store raises instead
-       of silently re-admitting (VERDICT r17 ask #2).
+    ``streaming/epoch.py`` contract keyed on ``__batch``.  Rows are
+    stamped with :data:`STORE_FORMAT_VERSION` (see there for when to
+    rebuild).
     """
     fp = F.md5(norm_ws(text_col))
     write_partition(
         _stamp_store_format(df.select(fp.alias("fingerprint")).distinct()),
         store_path, batch_id, col="__batch",
     )
+
+
+def incremental_exact_dedup(
+    new_docs: DataFrame,
+    store_path: str,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    batch_id: int | None = None,
+) -> DataFrame:
+    """Exact dedup of a NEW ingestion batch against an ever-growing
+    persisted corpus -- the continuous-crawl shape, where only the delta
+    may cost anything.  Returns the batch's survivors ``(id,
+    fingerprint)``: first occurrence within the batch (lowest id) AND
+    novel against every fingerprint in the store.  If ``batch_id`` is
+    given, the survivors are checkpointed (the returned frame reflects
+    pre-append state; that pin lives until the JVM garbage-collects the
+    returned frame), then their fingerprints are written under
+    ``__batch=<batch_id>`` (dynamic partition overwrite), so re-running
+    a failed batch replaces its own partition.
+
+    Scale shape: O(batch + store-scan), never a corpus re-shuffle: the
+    batch shuffles 32-byte fingerprints once (map-side combined) and
+    the LEFT ANTI join ships only the store's fingerprint column (AQE
+    broadcasts a small batch, so the store is scanned in place).  For a
+    store too large to re-shuffle per batch, use
+    :func:`build_bucketed_fingerprint_store` +
+    :func:`incremental_exact_dedup_bucketed`.  Duplicate fingerprints
+    across ``__batch`` partitions are harmless (membership, not counts).
+    """
+    survivors = _exact_store_survivors(new_docs, store_path, text_col, id_col, batch_id)
+    if batch_id is not None:
+        # materialize BEFORE appending: the survivor plan reads the
+        # store we are about to write into (read-overwrite hazard), and
+        # the caller's returned frame must reflect pre-append state
+        survivors = survivors.localCheckpoint()
+        _append_fingerprints(survivors, store_path, batch_id)
+    return survivors
+
+
+def _exact_store_survivors(new_docs, store_path, text_col, id_col, batch_id) -> DataFrame:
+    """The batch's first occurrences that are novel against the parquet
+    store, excluding the batch's OWN ``__batch`` partition
+    (partition-pruned): a replayed batch must not anti-join against the
+    failed run's leftovers -- it returns the same survivors and
+    overwrites the same partition, fully idempotent."""
+    from pyspark.errors import AnalysisException
+
+    batch = _first_per_fingerprint(new_docs, text_col, id_col)
+    try:
+        store = assert_store_format(new_docs.sparkSession.read.parquet(store_path), store_path)
+        if batch_id is not None:
+            store = store.filter(F.col("__batch") != int(batch_id))
+        survivors = batch.join(store.select("fingerprint"), "fingerprint", "left_anti")
+    except AnalysisException:  # first batch ever: no store yet
+        survivors = batch
+    return survivors.select(id_col, "fingerprint")
+
+
+def _append_fingerprints(survivors: DataFrame, store_path: str, batch_id: int) -> None:
+    """Write the survivors' fingerprints as the ``__batch=<batch_id>``
+    partition of the parquet store."""
+    fps = _stamp_store_format(survivors.select("fingerprint"))
+    write_partition(fps, store_path, batch_id, col="__batch")
 
 
 def build_bucketed_fingerprint_store(
@@ -1651,15 +1960,10 @@ def build_bucketed_fingerprint_store(
     hash-bucketed (and bucket-sorted) on disk, so every future batch's
     anti-join co-locates against the store with ZERO store-side
     exchange -- the store-side shuffle is paid once at write time
-    instead of once per ingestion batch.  This is the upgrade path
-    :func:`incremental_exact_dedup`'s docstring promises for stores too
-    large to re-shuffle per batch; at a 100 TB corpus the store is
-    billions of 32-byte fingerprints and this is the only shape where
-    the per-batch cost stays O(batch + store-scan-of-matching-buckets).
-
-    ``mode="append"`` adds new fingerprints with the same bucket spec
-    (Spark validates the spec matches); compact periodically via
-    ``sources/layout.py:compact`` if batch appends strand small files.
+    instead of once per ingestion batch: at a 100 TB corpus the store
+    is billions of fingerprints, and the per-batch cost stays
+    O(batch + store-scan-of-matching-buckets).  ``mode="append"`` adds
+    fingerprints under the same bucket spec (Spark validates it).
 
     ``epoch`` (when not ``None``) tags every row with an ``__epoch``
     column -- required when the store feeds
@@ -1669,39 +1973,13 @@ def build_bucketed_fingerprint_store(
 
     Pick ``n_buckets`` >= the ingestion jobs'
     ``spark.sql.shuffle.partitions`` (or enable
-    ``spark.sql.bucketing.coalesceBucketsInJoin.enabled``): when the
-    bucket count is below the join's required partitioning Spark's
-    planner disables the bucketed scan ("Bucketed: false (disabled by
-    query planner)") and re-shuffles the whole store per batch --
-    exactly the cost this layout exists to avoid.
-    
-
-    .. note:: r17 changed fingerprint normalization (edge whitespace
-       now strips -- ``norm_ws``), so stores built before r17 hold
-       incompatible fingerprints for any text that started/ended
-       with non-space whitespace: REBUILD persisted stores after
-       upgrading, or previously-seen newline-variant rows will
-       re-admit and replayed batches will not rewrite identically.
-       ENFORCED since r18: rows are stamped ``__fmt`` =
-       :data:`STORE_FORMAT_VERSION` and every consumer runs
-       :func:`assert_store_format`, so a stale store raises instead
-       of silently re-admitting (VERDICT r17 ask #2).
+    ``spark.sql.bucketing.coalesceBucketsInJoin.enabled``): below the
+    join's required partitioning the planner disables the bucketed scan
+    and re-shuffles the whole store per batch.  Rows are stamped with
+    :data:`STORE_FORMAT_VERSION` (see there for when to rebuild).
     """
-    from ..sources.layout import write_bucketed
-
-    fp = F.md5(norm_ws(text_col))
-    fps = df.select(fp.alias("fingerprint")).distinct()
-    if epoch is not None:
-        fps = fps.withColumn("__epoch", F.lit(int(epoch)))
-    fps = _stamp_store_format(fps)
-    write_bucketed(
-        fps,
-        table_name,
-        bucket_by="fingerprint",
-        n_buckets=n_buckets,
-        path=path,
-        mode=mode,
-    )
+    fps = df.select(F.md5(norm_ws(text_col)).alias("fingerprint")).distinct()
+    _write_store(fps, table_name, path, "fingerprint", n_buckets, mode, epoch)
 
 
 def incremental_exact_dedup_bucketed(
@@ -1712,172 +1990,29 @@ def incremental_exact_dedup_bucketed(
     exclude_epoch: int | None = None,
 ) -> DataFrame:
     """Batch-vs-store exact dedup against a BUCKETED fingerprint store
-    (:func:`build_bucketed_fingerprint_store`): same survivor semantics
-    as :func:`incremental_exact_dedup` -- first occurrence within the
-    batch AND novel against the store -- but the LEFT ANTI join reads
-    the store's bucket layout directly: only the (small) batch side is
-    exchanged, into the store's bucketing; the store-side scan feeds
-    the join with NO Exchange (plan-pinned by
-    tests/test_plan_shapes.py::test_bucketed_incremental_dedup_store_never_shuffles).
-
-    ``exclude_epoch`` drops store rows tagged ``__epoch ==
-    exclude_epoch`` before the anti-join (requires an epoch-tagged
-    store): the streaming wrapper's replay contract -- a re-run epoch
-    must not gate against its OWN failed-run leftovers.  The filter is
-    a pushed scan predicate on the bucketed files; it does not
-    introduce a store-side exchange (plan-pinned).
+    (:func:`build_bucketed_fingerprint_store`): the survivors of
+    :func:`incremental_exact_dedup`, but the LEFT ANTI join reads the
+    store's bucket layout directly -- only the batch side is exchanged;
+    the store scan feeds the join with NO Exchange (plan-pinned in
+    tests/test_plan_shapes.py).  ``exclude_epoch`` drops store rows
+    tagged ``__epoch == exclude_epoch`` (:func:`_scan_store`).  Returns
+    a lazy frame; it pins nothing.
     """
-    spark = new_docs.sparkSession
-    store = assert_store_format(spark.table(store_table), store_table)
-    if exclude_epoch is not None:
-        store = store.filter(F.col("__epoch") != int(exclude_epoch))
-    fp = F.md5(norm_ws(text_col))
-    batch = (
-        new_docs.select(F.col(id_col), fp.alias("fingerprint"))
-        .groupBy("fingerprint")
-        .agg(F.min(id_col).alias(id_col))
-    )
-    return batch.join(
-        store.select("fingerprint"), "fingerprint", "left_anti"
-    ).select(id_col, "fingerprint")
+    store = _scan_store(new_docs.sparkSession, store_table, exclude_epoch).select("fingerprint")
+    batch = _first_per_fingerprint(new_docs, text_col, id_col)
+    return batch.join(store, "fingerprint", "left_anti").select(id_col, "fingerprint")
 
 
-def incremental_exact_dedup(
-    new_docs: DataFrame,
-    store_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    batch_id: int | None = None,
-) -> DataFrame:
-    """Exact dedup of a NEW ingestion batch against an ever-growing
-    persisted corpus -- the continuous-crawl shape, where re-deduping
-    100 TB of history per day is not an option and only the delta may
-    cost anything.  Returns the batch's survivors ``(id, fingerprint)``:
-    first occurrence within the batch (lowest id per fingerprint) AND
-    novel against every fingerprint already in the store.  If
-    ``batch_id`` is given, survivors' fingerprints are appended to the
-    store under ``__batch=<batch_id>`` (dynamic partition overwrite),
-    so re-running a failed batch replaces its own partition instead of
-    duplicating it -- the store stays a set across replays.
-
-    Scale shape: work is O(batch + store-scan), never O(corpus
-    re-shuffle x corpus): the batch shuffles 32-byte fingerprints once
-    for the within-batch min-id (map-side combined), and the LEFT ANTI
-    join against the store hashes on the fingerprint -- the store side
-    ships only its fingerprint column, and AQE broadcasts a small batch
-    side so the store is scanned in place without shuffling at all.
-    For a store too large to re-shuffle per batch, use
-    :func:`build_bucketed_fingerprint_store` +
-    :func:`incremental_exact_dedup_bucketed` and the anti-join
-    co-locates with zero store-side exchange.  The store is append-only
-    parquet;
-    duplicate fingerprints ACROSS batch partitions are harmless to the
-    anti-join (membership, not counts).
-    """
-    fp = F.md5(norm_ws(text_col))
-    batch = (
-        new_docs.select(F.col(id_col), fp.alias("fingerprint"))
-        .groupBy("fingerprint")
-        .agg(F.min(id_col).alias(id_col))
-    )
-    spark = new_docs.sparkSession
-    from pyspark.errors import AnalysisException
-
-    try:
-        store = assert_store_format(
-            spark.read.parquet(store_path), store_path
-        )
-        if batch_id is not None:
-            # exclude the batch's OWN partition (partition-pruned):
-            # a replayed batch must not anti-join against the failed
-            # run's leftovers -- it returns the same survivors and
-            # overwrites the same partition, fully idempotent
-            store = store.filter(F.col("__batch") != int(batch_id))
-        survivors = batch.join(
-            store.select("fingerprint"), "fingerprint", "left_anti"
-        )
-    except AnalysisException:  # first batch ever: no store yet
-        survivors = batch
-    survivors = survivors.select(id_col, "fingerprint")
-    if batch_id is not None:
-        # materialize BEFORE appending: the survivor plan reads the
-        # store we are about to write into (read-overwrite hazard), and
-        # the caller's returned frame must reflect pre-append state
-        survivors = survivors.localCheckpoint()
-        write_partition(
-            _stamp_store_format(survivors.select("fingerprint")),
-            store_path, batch_id, col="__batch",
-        )
-    return survivors
-
-
-def _store_gate_epoch(
-    batch_df: DataFrame,
-    epoch_id: int,
-    gate,
-    store_rows,
-    store_table: str,
-    out_path: str,
-    text_col: str,
-    id_col: str,
-    profile_path: str | None = None,
-) -> None:
-    """One epoch of a bucketed-store admission gate (exact, MinHash or
-    SimHash): ``gate(batch_df, exclude_epoch)`` returns the survivors,
-    ``store_rows(survivors)`` the rows they append to ``store_table``.
-    ``profile_path`` adds the shared :func:`_write_epoch_profile`
-    funnel leg.
-
-    Replay safety decomposes per sink:
-
-    * survivors (``out_path``) and profile rows: the
-      ``streaming/epoch.py`` contract -- a re-run REPLACES exactly its
-      own ``__epoch`` partition.
-    * store (``store_table``): bucketed catalog tables only APPEND (a
-      per-partition overwrite would need a table format with atomic
-      replace), so a replayed epoch appends its rows a second time.
-      That is harmless by construction: the gate consumes the store as
-      a MEMBERSHIP set, and ``exclude_epoch`` drops the current epoch's
-      leftover rows from the gate so the replay computes identical
-      survivors.  The ``compact_*_store`` rewrites reclaim the
-      duplicate bytes.
-    """
-    # materialize BEFORE the store append: the survivor plan reads the
-    # table we are about to write into (read-overwrite hazard)
-    survivors = gate(batch_df, int(epoch_id)).localCheckpoint()
-    write_partition(survivors, out_path, epoch_id)
-    if profile_path is not None:
-        _write_epoch_profile(
-            batch_df, survivors, int(epoch_id), profile_path, text_col, id_col,
-        )
-    (
-        _stamp_store_format(
-            store_rows(survivors).withColumn("__epoch", F.lit(int(epoch_id)))
-        )
-        .write.mode("append")
-        .insertInto(store_table)
-    )
-
-
-def _bucketed_gate(
-    store_table: str,
-    out_path: str,
-    text_col: str,
-    id_col: str,
-    profile_path: str | None = None,
-):
+def _bucketed_gate(store_table, out_path, text_col, id_col, profile_path=None):
     """The per-epoch function of
     :func:`streaming_incremental_dedup_bucketed`: a
     :func:`_store_gate_epoch` over the bucketed fingerprint store."""
-
-    def gate(batch_df: DataFrame, epoch_id: int) -> DataFrame:
-        return incremental_exact_dedup_bucketed(
+    return partial(
+        _store_gate_epoch,
+        gate=lambda batch_df, epoch_id, pins: incremental_exact_dedup_bucketed(
             batch_df, store_table, text_col=text_col, id_col=id_col,
             exclude_epoch=epoch_id,
-        )
-
-    return partial(
-        _store_gate_epoch, gate=gate,
+        ),
         store_rows=lambda survivors: survivors.select("fingerprint"),
         store_table=store_table, out_path=out_path, text_col=text_col,
         id_col=id_col, profile_path=profile_path,
@@ -1898,35 +2033,25 @@ def streaming_incremental_dedup_bucketed(
     store is the BUCKETED catalog table of
     :func:`build_bucketed_fingerprint_store` (seed it with
     ``epoch=-1``), so every epoch's anti-join co-locates against the
-    store's on-disk bucketing with ZERO store-side exchange -- at a
-    100 TB corpus the store is billions of fingerprints, and
-    re-shuffling it per micro-batch (what the parquet-store variant
-    does implicitly when AQE cannot broadcast the batch) would dominate
-    the stream's critical path.  Survivors land under
+    store's on-disk bucketing with ZERO store-side exchange (the
+    parquet-store variant re-shuffles the store whenever AQE cannot
+    broadcast the batch).  Survivors land under
     ``__epoch=<id>`` partitions of ``out_path``; survivor fingerprints
     append to the store with the same bucket spec, becoming history for
     every later epoch.  See :func:`_store_gate_epoch` (and
     ``streaming/epoch.py``) for the replay-idempotency contract.
 
     Observer caveat: ``foreachBatch`` runs in a CLONED SparkSession
-    whose ``insertInto`` refreshes the CLONE's relation cache -- a
-    different session (e.g. the driver session monitoring the stream)
-    that already resolved ``spark.table(store_table)`` keeps its stale
-    file listing and undercounts the store until it calls
-    ``spark.catalog.refreshTable(store_table)``.  The stream itself is
-    unaffected: each epoch's gate resolves inside the writing session.
-
-    ``profile_path`` composes the per-epoch raw-vs-admitted funnel
-    profile into the same query (see
-    :func:`streaming_incremental_minhash_dedup`).
+    whose ``insertInto`` refreshes only the CLONE's relation cache -- a
+    monitoring session that already resolved ``spark.table(store_table)``
+    undercounts the store until it calls
+    ``spark.catalog.refreshTable(store_table)``.  ``profile_path`` as in
+    :func:`streaming_incremental_minhash_dedup`.
 
     Returns the started ``StreamingQuery``.
     """
-    return start_gate_stream(
-        stream, checkpoint_dir,
-        _bucketed_gate(store_table, out_path, text_col, id_col, profile_path),
-        out_path, profile_path,
-    )
+    gate = _bucketed_gate(store_table, out_path, text_col, id_col, profile_path)
+    return start_gate_stream(stream, checkpoint_dir, gate, out_path, profile_path)
 
 
 def compact_bucketed_fingerprint_store(
@@ -1936,61 +2061,11 @@ def compact_bucketed_fingerprint_store(
     dest_path: str,
     n_buckets: int | None = None,
 ) -> tuple[int, int]:
-    """Maintenance rewrite for the bucketed fingerprint store: collapse
-    the duplicate rows that epoch replays append
-    (:func:`_store_gate_epoch` -- bucketed catalog tables can only
-    APPEND, so a replayed epoch re-appends its fingerprints) back to
-    one row per fingerprint, preserving both the bucket spec and the
-    epoch tags.  Returns ``(rows_before, rows_after)``.
-
-    * Epoch tags survive as ``min(__epoch)`` per fingerprint -- the
-      first epoch that wrote the row, which is the only epoch whose
-      replay must exclude it, so the replay contract of
-      :func:`incremental_exact_dedup_bucketed` is unchanged by
-      compaction.  (Duplicate rows for one fingerprint always carry
-      the SAME epoch -- only a replay of that epoch re-appends it --
-      so ``min`` is a formality, not a merge policy.)
-    * ``n_buckets`` defaults to the SOURCE table's bucket count (read
-      from the catalog), so downstream anti-joins keep their
-      zero-store-side-exchange plan against the compacted table.
-    * The dedup aggregation itself runs WITHOUT an exchange: the
-      source scan is already bucketed on ``fingerprint``, so the
-      groupBy reuses its partitioning -- the rewrite's only shuffle is
-      the bucketed write's own clustering, same as any seed write.
-    * Writing to a NEW table/path is deliberate (same stance as
-      ``sources/layout.py:compact``): at scale the atomic swap belongs
-      to the table format / catalog layer, not an in-place overwrite
-      racing a live stream's reads.  Quiesce the stream, compact, then
-      point the stream at ``dest_table``.
-    """
-    from ..sources.layout import write_bucketed
-
-    # a compactor typically runs in a MAINTENANCE session, not the
-    # stream's foreachBatch clone that did the appends -- resolve the
-    # table fresh or a stale relation cache silently compacts away
-    # everything appended since this session first read it
-    spark.catalog.refreshTable(src_table)
-    # compacting a stale-format store is wasted work -- fail here and
-    # rebuild instead (the re-stamp below is safe because the asserted
-    # source version equals the current one)
-    src = assert_store_format(spark.table(src_table), src_table)
-    if n_buckets is None:
-        meta = {
-            r.col_name: r.data_type
-            for r in spark.sql(f"DESCRIBE EXTENDED {src_table}").collect()
-        }
-        n_buckets = int(meta["Num Buckets"])
-    if "__epoch" in src.columns:
-        out = src.groupBy("fingerprint").agg(F.min("__epoch").alias("__epoch"))
-    else:
-        out = src.select("fingerprint").distinct()
-    rows_before = src.count()
-    write_bucketed(
-        _stamp_store_format(out), dest_table, bucket_by="fingerprint",
-        n_buckets=n_buckets, path=dest_path,
-    )
-    rows_after = spark.table(dest_table).count()
-    return rows_before, rows_after
+    """Maintenance rewrite for the bucketed fingerprint store: one row
+    per fingerprint, ``min(__epoch)`` tags, the source's bucket spec,
+    into a NEW table (:func:`_compact_store`).  Returns
+    ``(rows_before, rows_after)``."""
+    return _compact_store(spark, src_table, dest_table, dest_path, n_buckets)
 
 
 # ---------------------------------------------------------------------------
@@ -2100,6 +2175,29 @@ def cross_corpus_decontaminate(
     return clean, pairs
 
 
+def _agreement_at_least(threshold: float):
+    """MinHash rescore: signature agreement >= ``threshold``."""
+    return lambda a, b: _sig_agreement(a, b) >= F.lit(threshold)
+
+
+def _minhash_spec(text_col, id_col, threshold, n, num_hashes, bands, rows_per_band) -> _NearDupSpec:
+    def passthrough(docs: DataFrame) -> DataFrame:
+        # NULL text is coalesced to '' BEFORE the length test: a bare
+        # length(NULL) < n is NULL, which fails the filter and would
+        # silently drop the row from both branches
+        norm_len = F.length(F.coalesce(norm_ws(text_col), F.lit("")))
+        empty = F.array().cast("array<bigint>").alias("signature")
+        return docs.filter(norm_len < n).select(F.col(id_col), empty)
+
+    return _NearDupSpec(
+        "signature",
+        lambda docs: minhash_signatures_text(docs, text_col, id_col, n, num_hashes),
+        lambda sigs: band_rows(sigs, id_col, bands, rows_per_band, keep_signature=True),
+        _agreement_at_least(threshold),
+        passthrough,
+    )
+
+
 def build_minhash_band_store(
     df: DataFrame,
     table_name: str,
@@ -2118,40 +2216,16 @@ def build_minhash_band_store(
     one row per (doc, band) -- ``(id, signature, band_key)`` -- written
     as a catalog table bucketed on ``band_key``, so every later batch's
     gate join reads the store's bucket layout with zero store-side
-    exchange.
-
-    The full signature rides EVERY band row (``bands`` copies, e.g.
-    16 hashes x 8 B x 4 bands = 512 B/doc): candidate rescoring happens
-    inline on the matched row instead of a second join against a
-    corpus-sized signature table -- at 100 TB, paying bytes-at-rest
-    once beats re-shuffling candidates into a doc-keyed table every
-    micro-batch.  ``epoch`` tags rows for the streaming wrapper's
-    replay contract (seed with ``epoch=-1``), exactly as in the exact
-    store.
-    
-
-    .. note:: r17 changed fingerprint normalization (edge whitespace
-       now strips -- ``norm_ws``), so stores built before r17 hold
-       incompatible fingerprints for any text that started/ended
-       with non-space whitespace: REBUILD persisted stores after
-       upgrading, or previously-seen newline-variant rows will
-       re-admit and replayed batches will not rewrite identically.
-       ENFORCED since r18: rows are stamped ``__fmt`` =
-       :data:`STORE_FORMAT_VERSION` and every consumer runs
-       :func:`assert_store_format`, so a stale store raises instead
-       of silently re-admitting (VERDICT r17 ask #2).
+    exchange.  The full signature rides EVERY band row (e.g. 16 hashes
+    x 8 B x 4 bands = 512 B/doc), so candidate rescoring happens inline
+    on the matched row instead of in a second, corpus-sized join.
+    ``epoch`` tags rows as in the exact store (seed with ``epoch=-1``);
+    rows are stamped with :data:`STORE_FORMAT_VERSION` (see there for
+    when to rebuild).
     """
-    from ..sources.layout import write_bucketed
-
     sigs = minhash_signatures_text(df, text_col, id_col, n, num_hashes)
     rows = band_rows(sigs, id_col, bands, rows_per_band, keep_signature=True)
-    if epoch is not None:
-        rows = rows.withColumn("__epoch", F.lit(int(epoch)))
-    rows = _stamp_store_format(rows)
-    write_bucketed(
-        rows, table_name, bucket_by="band_key", n_buckets=n_buckets,
-        path=path, mode=mode,
-    )
+    _write_store(rows, table_name, path, "band_key", n_buckets, mode, epoch)
 
 
 def minhash_store_matches(
@@ -2163,27 +2237,14 @@ def minhash_store_matches(
     rows_per_band: int = 4,
     exclude_epoch: int | None = None,
 ) -> DataFrame:
-    """Batch ids with a near-dup already in the band store: the batch's
-    band rows join the store on ``band_key`` (ONLY the batch side
-    exchanges, into the store's bucketing -- plan-pinned), and each
-    collision rescored by exact signature agreement >= ``threshold``.
-    Output may repeat an id (one row per matching band); consumers
-    anti-join, which needs no distinct.  ``exclude_epoch`` as in
+    """Batch ids with a near-dup already in the band store: a shared
+    band, rescored by signature agreement >= ``threshold``
+    (:func:`_store_matches`; only the batch side exchanges).  Output
+    may repeat an id; consumers anti-join.  ``exclude_epoch`` as in
     :func:`incremental_exact_dedup_bucketed`."""
-    spark = batch_sigs.sparkSession
-    store = assert_store_format(spark.table(store_table), store_table)
-    if exclude_epoch is not None:
-        store = store.filter(F.col("__epoch") != int(exclude_epoch))
-    bb = band_rows(batch_sigs, id_col, bands, rows_per_band, keep_signature=True)
-    return (
-        bb.alias("b")
-        .join(store.alias("s"), "band_key")
-        .filter(
-            _sig_agreement(F.col("b.signature"), F.col("s.signature"))
-            >= F.lit(threshold)
-        )
-        .select(F.col(f"b.{id_col}").alias(id_col))
-    )
+    bands_df = band_rows(batch_sigs, id_col, bands, rows_per_band, keep_signature=True)
+    keep = _agreement_at_least(threshold)
+    return _store_matches(bands_df, store_table, id_col, "signature", keep, exclude_epoch)
 
 
 def incremental_minhash_dedup(
@@ -2210,136 +2271,40 @@ def incremental_minhash_dedup(
        :func:`lsh_candidate_pairs` -> :func:`dedup_clusters`
        keep-min-id rule, restricted to store-novel docs).
 
-    Scale shape per batch: signatures are map-only
-    (:func:`minhash_signatures_text`); the store gate exchanges ONLY
-    the batch's band rows into the store's bucketing (store scan feeds
-    the join with no Exchange); the within-batch stage touches just
-    the store-novel remainder, and its pair graph is collision-bounded,
-    never all-pairs.  The store side never moves, at any corpus size.
+    Scale shape per batch: map-only signatures; the store match
+    exchanges ONLY the batch's band rows into the store's bucketing;
+    the within-batch stage touches just the store-novel remainder, and
+    its pair graph is collision-bounded.  The store never moves.  The
+    returned frame is lazy; the store-novel remainder it reads three
+    times is lazily localCheckpoint-ed on first use, a pin that lives
+    until the JVM garbage-collects the returned frame (the streaming
+    gate releases its own pins every epoch).
 
     Sub-shingle docs (normalized text shorter than ``n``, including
-    NULL text) cannot be MinHashed; they pass through UNGATED as
-    survivors with an empty ``signature`` -- an admission gate must not
-    silently lose rows.  NULL text is coalesced to '' *before* the
-    length test: a bare ``length(NULL) < n`` is NULL, which fails the
-    filter and would silently drop the row from both branches (it also
-    fails :func:`minhash_signatures_text`'s ``length >= n`` filter).
-    They are below the similarity resolution, so near-dup semantics do
-    not apply to them (gate them upstream with the exact path); the
-    epoch body excludes empty signatures from the store append, so they
-    never become degenerate hot band keys.
+    NULL text) cannot be MinHashed; they pass through UNGATED with an
+    empty ``signature`` -- an admission gate must not silently lose
+    rows (gate them upstream with the exact path) -- and never enter
+    the store.
     """
-    norm_len = F.length(
-        F.coalesce(
-            norm_ws(text_col),
-            F.lit(""),
-        )
-    )
-    subshingle = new_docs.filter(norm_len < n).select(
-        F.col(id_col),
-        F.array().cast("array<bigint>").alias("signature"),
-    )
-    sigs = minhash_signatures_text(new_docs, text_col, id_col, n, num_hashes)
-    matched = minhash_store_matches(
-        sigs, store_table, threshold, id_col, bands, rows_per_band,
-        exclude_epoch=exclude_epoch,
-    )
-    # `fresh` embeds the corpus-sized store join and is referenced from
-    # BOTH sides of the within-batch self-join plus the final anti-join
-    # -- without materialization Spark re-runs the store SMJ once per
-    # reference (measured 4x = ~59 s/batch vs ~15 s at a 1e6-doc store).
-    # localCheckpoint(eager=False) persists it batch-sized (never
-    # corpus-sized) on first use.
-    fresh = sigs.join(matched, id_col, "left_anti").localCheckpoint(eager=False)
-    bb = band_rows(fresh, id_col, bands, rows_per_band, keep_signature=True)
-    pairs = (
-        bb.alias("l")
-        .join(bb.alias("r"), "band_key")
-        .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .filter(
-            _sig_agreement(F.col("l.signature"), F.col("r.signature"))
-            >= F.lit(threshold)
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("doc_a"),
-            F.col(f"r.{id_col}").alias("doc_b"),
-        )
-        .distinct()
-    )
-    dropped = dedup_clusters(pairs).filter(
-        F.col("doc_id") != F.col("cluster_id")
-    ).select(F.col("doc_id").alias(id_col))
-    return fresh.join(dropped, id_col, "left_anti").unionByName(subshingle)
-
-
-def _write_epoch_profile(
-    batch_df: DataFrame,
-    survivors: DataFrame,
-    epoch_id: int,
-    profile_path: str,
-    text_col: str,
-    id_col: str,
-) -> None:
-    """Write one epoch's raw-vs-admitted
-    :func:`..profile.profile_funnel` rows under ``__epoch=<id>`` --
-    the streaming gates' shared observability leg.  Kept-fraction
-    drift per epoch is the crawl operator's live health signal.
-    Survivor frames may carry only (id, signature), so the admitted
-    leg recovers text with a semi-join against the survivor ids
-    (broadcast: the checkpointed survivor set is micro-batch-sized,
-    never corpus-sized).  The rows go through
-    :func:`..streaming.epoch.write_partition`, so a replayed epoch
-    REWRITES its profile partition instead of double-counting."""
-    from .profile import profile_funnel
-
-    admitted = batch_df.join(
-        F.broadcast(survivors.select(id_col)), id_col, "semi"
-    )
-    write_partition(
-        profile_funnel(
-            {"raw": batch_df, "admitted": admitted},
-            text_col=text_col, id_col=id_col,
-        ),
-        profile_path, epoch_id,
-    )
+    spec = _minhash_spec(text_col, id_col, threshold, n, num_hashes, bands, rows_per_band)
+    return _incremental_near_dup(new_docs, store_table, id_col, spec, exclude_epoch)
 
 
 def _minhash_gate(
-    store_table: str,
-    out_path: str,
-    text_col: str,
-    id_col: str,
-    threshold: float,
-    n: int,
-    num_hashes: int,
-    bands: int,
-    rows_per_band: int,
-    profile_path: str | None = None,
+    store_table, out_path, text_col, id_col, threshold, n, num_hashes, bands,
+    rows_per_band, profile_path=None,
 ):
     """The per-epoch function of
     :func:`streaming_incremental_minhash_dedup`: a
     :func:`_store_gate_epoch` over the MinHash band store."""
-
-    def gate(batch_df: DataFrame, epoch_id: int) -> DataFrame:
-        return incremental_minhash_dedup(
-            batch_df, store_table, text_col=text_col, id_col=id_col,
-            threshold=threshold, n=n, num_hashes=num_hashes, bands=bands,
-            rows_per_band=rows_per_band, exclude_epoch=epoch_id,
-        )
+    spec = _minhash_spec(text_col, id_col, threshold, n, num_hashes, bands, rows_per_band)
 
     def store_rows(survivors: DataFrame) -> DataFrame:
-        # empty signatures = sub-shingle pass-throughs; banding them
-        # would pile every short doc onto the same degenerate band keys
-        return band_rows(
-            survivors.filter(F.size("signature") > 0),
-            id_col, bands, rows_per_band, keep_signature=True,
-        )
+        # empty signatures are the pass-throughs: banding them would
+        # pile every short doc onto the same degenerate band keys
+        return spec.band_rows(survivors.filter(F.size("signature") > 0))
 
-    return partial(
-        _store_gate_epoch, gate=gate, store_rows=store_rows,
-        store_table=store_table, out_path=out_path, text_col=text_col,
-        id_col=id_col, profile_path=profile_path,
-    )
+    return _near_dup_gate(spec, store_rows, store_table, out_path, text_col, id_col, profile_path)
 
 
 def streaming_incremental_minhash_dedup(
@@ -2361,51 +2326,24 @@ def streaming_incremental_minhash_dedup(
     appends its survivors' band rows (same bucket spec), and writes
     survivor ``(id, signature)`` rows under ``__epoch=<id>`` partitions
     -- :func:`streaming_incremental_dedup_bucketed` with MinHash
-    semantics.  The same observer caveat applies: monitoring sessions
-    must ``refreshTable`` to see the store grow.  Knobs
+    semantics, including its observer caveat (``refreshTable``).  Knobs
     (``n``/``num_hashes``/``bands``/``rows_per_band``) MUST match the
     store's seeding; band keys are derived values, so Spark cannot
     validate the mismatch for you.  Replay contract:
-    :func:`_store_gate_epoch` (``streaming/epoch.py`` for the
-    partitioned outputs).
+    :func:`_store_gate_epoch`.
 
     ``profile_path`` composes observability into the SAME query: each
     epoch also writes its raw-vs-admitted
-    :func:`..profile.profile_funnel` rows under ``__epoch=<id>`` there
-    -- one streaming query, not a second source-scanning stream, and
-    the profile inherits the gate's exactly-once epoch replay.
+    :func:`..profile.profile_funnel` rows under ``__epoch=<id>`` there,
+    inheriting the gate's exactly-once epoch replay.
 
     Returns the started ``StreamingQuery``.
     """
-    return start_gate_stream(
-        stream, checkpoint_dir,
-        _minhash_gate(
-            store_table, out_path, text_col, id_col, threshold, n,
-            num_hashes, bands, rows_per_band, profile_path,
-        ),
-        out_path, profile_path,
+    gate = _minhash_gate(
+        store_table, out_path, text_col, id_col, threshold, n, num_hashes, bands,
+        rows_per_band, profile_path,
     )
-
-
-def _band_store_id_col(src: DataFrame, id_col: str | None, sig_col: str) -> str:
-    """Resolve a band store's id column.  The builders parameterize
-    ``id_col`` while the stored layout is always (id, sig, band_key,
-    __epoch), so when the caller doesn't say, the id column is the one
-    column that isn't structural -- deriving it here means a store
-    seeded with a non-default id still compacts instead of raising
-    AnalysisException long after seeding."""
-    if id_col is not None:
-        return id_col
-    rest = [
-        c for c in src.columns
-        if c not in {sig_col, "band_key", "__epoch", "__fmt"}
-    ]
-    if len(rest) != 1:
-        raise ValueError(
-            f"cannot infer id column from store schema {src.columns}; "
-            "pass id_col explicitly"
-        )
-    return rest[0]
+    return start_gate_stream(stream, checkpoint_dir, gate, out_path, profile_path)
 
 
 def compact_minhash_band_store(
@@ -2417,43 +2355,12 @@ def compact_minhash_band_store(
     id_col: str | None = None,
 ) -> tuple[int, int]:
     """:func:`compact_bucketed_fingerprint_store` for the MinHash band
-    store: collapse replay-appended duplicates to one row per
-    (band_key, doc) with min-epoch tags, rewriting under the same
-    bucket spec (``n_buckets`` defaults to the source's catalog value).
-    Duplicate rows for a (band_key, doc) pair are byte-identical apart
-    from provenance -- the signature is a pure function of the doc and
-    only a replay of the SAME epoch re-appends -- so ``any_value``
-    picks the one signature there is.  ``id_col`` defaults to the one
-    non-structural column in the store schema, matching whatever
-    :func:`build_minhash_band_store` was seeded with.  Returns
-    ``(rows_before, rows_after)``; same new-table atomic-swap stance as
-    the fingerprint compactor."""
-    from ..sources.layout import write_bucketed
-
-    spark.catalog.refreshTable(src_table)  # see the fingerprint compactor
-    src = assert_store_format(spark.table(src_table), src_table)
-    id_col = _band_store_id_col(src, id_col, "signature")
-    if n_buckets is None:
-        meta = {
-            r.col_name: r.data_type
-            for r in spark.sql(f"DESCRIBE EXTENDED {src_table}").collect()
-        }
-        n_buckets = int(meta["Num Buckets"])
-    out = (
-        src.groupBy("band_key", id_col)
-        .agg(
-            F.any_value("signature").alias("signature"),
-            F.min("__epoch").alias("__epoch"),
-        )
-        .select(id_col, "signature", "band_key", "__epoch")
-    )
-    rows_before = src.count()
-    write_bucketed(
-        _stamp_store_format(out), dest_table, bucket_by="band_key",
-        n_buckets=n_buckets, path=dest_path,
-    )
-    rows_after = spark.table(dest_table).count()
-    return rows_before, rows_after
+    store: one row per (band_key, doc) with min-epoch tags, under the
+    same bucket spec (:func:`_compact_store`).  ``id_col`` defaults to
+    the one non-structural column in the store schema, matching
+    whatever :func:`build_minhash_band_store` was seeded with.  Returns
+    ``(rows_before, rows_after)``."""
+    return _compact_store(spark, src_table, dest_table, dest_path, n_buckets, "signature", id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -2473,22 +2380,18 @@ def simhash_band_rows(
     equal slices (the pigeonhole split of
     :func:`simhash_near_dup_pairs`), packed into a single join/bucket
     key ``band * 2^w + slice`` so the store can bucket on one column."""
-    bands = max_hamming + 1
-    if bits % bands:
-        raise ValueError(f"bits={bits} not divisible by bands={bands}")
-    w = bits // bands
-    mask = (1 << w) - 1
-    slices = F.array(
-        *[
-            (
-                F.lit(i * (1 << w)).cast("bigint")
-                + F.shiftright(F.col("simhash"), i * w).bitwiseAND(F.lit(mask))
-            ).cast("bigint")
-            for i in range(bands)
-        ]
-    )
+    keys = _simhash_band_keys(F.col("simhash"), bits, max_hamming + 1)
     cols = [F.col(id_col)] + ([F.col("simhash")] if keep_signature else [])
-    return sigs.select(*cols, F.explode(slices).alias("band_key"))
+    return sigs.select(*cols, F.explode(keys).alias("band_key"))
+
+
+def _simhash_spec(text_col, id_col, bits, max_hamming) -> _NearDupSpec:
+    return _NearDupSpec(
+        "simhash",
+        lambda docs: simhash(docs, text_col, id_col, bits),
+        lambda sigs: simhash_band_rows(sigs, id_col, bits, max_hamming, keep_signature=True),
+        _within_hamming(max_hamming),
+    )
 
 
 def build_simhash_band_store(
@@ -2505,37 +2408,16 @@ def build_simhash_band_store(
 ) -> None:
     """:func:`build_minhash_band_store` with SimHash semantics: one
     ``(id, simhash, band_key)`` row per (doc, band), bucketed on
-    ``band_key``.  The 8-byte signature rides every band row, so the
-    exact Hamming rescore is a popcount on the matched row -- no
-    second join.  Pigeonhole makes the gate EXACT within
-    ``max_hamming`` (unlike MinHash's probabilistic bands): any doc
-    within that distance of a stored one shares at least one
-    bit-identical band.  ``epoch`` as in the exact/MinHash stores.
-    Zero-token (blank) docs yield no :func:`simhash` row and are NOT
-    stored -- see the :func:`incremental_simhash_dedup` note.
-
-    .. note:: r17 changed fingerprint normalization (edge whitespace
-       now strips -- ``norm_ws``), so stores built before r17 hold
-       incompatible fingerprints for any text that started/ended
-       with non-space whitespace: REBUILD persisted stores after
-       upgrading, or previously-seen newline-variant rows will
-       re-admit and replayed batches will not rewrite identically.
-       ENFORCED since r18: rows are stamped ``__fmt`` =
-       :data:`STORE_FORMAT_VERSION` and every consumer runs
-       :func:`assert_store_format`, so a stale store raises instead
-       of silently re-admitting (VERDICT r17 ask #2).
+    ``band_key``; the exact Hamming rescore is a popcount on the matched
+    row.  Pigeonhole makes the gate EXACT within ``max_hamming``: any
+    doc within that distance of a stored one shares at least one
+    bit-identical band.  Zero-token (blank) docs yield no
+    :func:`simhash` row and are NOT stored (see
+    :func:`incremental_simhash_dedup`).
     """
-    from ..sources.layout import write_bucketed
-
     sigs = simhash(df, text_col, id_col, bits)
     rows = simhash_band_rows(sigs, id_col, bits, max_hamming, keep_signature=True)
-    if epoch is not None:
-        rows = rows.withColumn("__epoch", F.lit(int(epoch)))
-    rows = _stamp_store_format(rows)
-    write_bucketed(
-        rows, table_name, bucket_by="band_key", n_buckets=n_buckets,
-        path=path, mode=mode,
-    )
+    _write_store(rows, table_name, path, "band_key", n_buckets, mode, epoch)
 
 
 def simhash_store_matches(
@@ -2548,26 +2430,10 @@ def simhash_store_matches(
 ) -> DataFrame:
     """Batch ids with a stored signature within ``max_hamming`` bits:
     :func:`minhash_store_matches` with pigeonhole bands and an exact
-    popcount rescore riding the join condition.  Only the batch side
-    exchanges (plan-pinned); output may repeat ids -- consumers
-    anti-join."""
-    spark = batch_sigs.sparkSession
-    store = assert_store_format(spark.table(store_table), store_table)
-    if exclude_epoch is not None:
-        store = store.filter(F.col("__epoch") != int(exclude_epoch))
-    bb = simhash_band_rows(
-        batch_sigs, id_col, bits, max_hamming, keep_signature=True
-    )
-    return (
-        bb.alias("b")
-        .join(store.alias("s"), "band_key")
-        .filter(
-            F.bit_count(
-                F.col("b.simhash").bitwiseXOR(F.col("s.simhash"))
-            ) <= F.lit(max_hamming)
-        )
-        .select(F.col(f"b.{id_col}").alias(id_col))
-    )
+    popcount rescore."""
+    bands_df = simhash_band_rows(batch_sigs, id_col, bits, max_hamming, keep_signature=True)
+    keep = _within_hamming(max_hamming)
+    return _store_matches(bands_df, store_table, id_col, "simhash", keep, exclude_epoch)
 
 
 def incremental_simhash_dedup(
@@ -2580,72 +2446,32 @@ def incremental_simhash_dedup(
     exclude_epoch: int | None = None,
 ) -> DataFrame:
     """NEAR-dup dedup of a batch against the persisted SimHash band
-    store -- the Hamming-distance member of the gate family (exact
-    fingerprints / MinHash-Jaccard / SimHash-Hamming), and the only
+    store -- the Hamming member of the gate family, and the only
     probabilistic-free one: pigeonhole banding finds EVERY stored doc
     within ``max_hamming`` bits.  Survivors ``(id, simhash)``: no store
-    match, then first of their within-batch cluster
-    (:func:`simhash_near_dup_pairs` -> :func:`dedup_clusters`
-    keep-min-id on the store-novel remainder).  Scale shape matches the
-    MinHash gate: map-only signatures, batch band rows exchange into
-    the store's bucketing, store never moves.
+    match, then first of their within-batch cluster.  Scale shape and
+    pin lifetime match :func:`incremental_minhash_dedup`: the lazily
+    localCheckpoint-ed remainder stays pinned until the JVM
+    garbage-collects the returned frame.
 
     .. note:: since r17, :func:`simhash` emits NO signature row for
        zero-token (blank / whitespace-only) docs, so such docs BYPASS
-       this gate entirely: they are never stored, never matched, and
-       are absent from the survivors frame (pre-r17 they shared one
-       signature and gated each other).  Handle blanks upstream with
-       exact dedup (:func:`dedup_exact` /
-       :func:`incremental_exact_dedup`, whose ``norm_ws`` fingerprint
-       maps every blank to one value) or an explicit empty filter --
+       this gate entirely: never stored, never matched, absent from
+       the survivors.  Handle blanks upstream with exact dedup
+       (:func:`exact_dedup` / :func:`incremental_exact_dedup`, whose
+       ``norm_ws`` fingerprint maps every blank to one value) --
        pinned in tests/test_dedup_store_contracts.py (ADVICE r17).
     """
-    sigs = simhash(new_docs, text_col, id_col, bits)
-    matched = simhash_store_matches(
-        sigs, store_table, id_col, bits, max_hamming,
-        exclude_epoch=exclude_epoch,
-    )
-    # same multi-reference materialization as the MinHash gate: `fresh`
-    # embeds the store join and feeds the pair stage plus the final
-    # anti-join
-    fresh = sigs.join(matched, id_col, "left_anti").localCheckpoint(eager=False)
-    pairs = simhash_near_dup_pairs(
-        fresh, max_hamming=max_hamming, bits=bits, id_col=id_col,
-        sig_col="simhash",
-    ).select("doc_a", "doc_b")
-    dropped = dedup_clusters(pairs).filter(
-        F.col("doc_id") != F.col("cluster_id")
-    ).select(F.col("doc_id").alias(id_col))
-    return fresh.join(dropped, id_col, "left_anti")
+    spec = _simhash_spec(text_col, id_col, bits, max_hamming)
+    return _incremental_near_dup(new_docs, store_table, id_col, spec, exclude_epoch)
 
 
-def _simhash_gate(
-    store_table: str,
-    out_path: str,
-    text_col: str,
-    id_col: str,
-    bits: int,
-    max_hamming: int,
-    profile_path: str | None = None,
-):
+def _simhash_gate(store_table, out_path, text_col, id_col, bits, max_hamming, profile_path=None):
     """The per-epoch function of
     :func:`streaming_incremental_simhash_dedup`: a
     :func:`_store_gate_epoch` over the SimHash band store."""
-
-    def gate(batch_df: DataFrame, epoch_id: int) -> DataFrame:
-        return incremental_simhash_dedup(
-            batch_df, store_table, text_col=text_col, id_col=id_col,
-            bits=bits, max_hamming=max_hamming, exclude_epoch=epoch_id,
-        )
-
-    return partial(
-        _store_gate_epoch, gate=gate,
-        store_rows=lambda survivors: simhash_band_rows(
-            survivors, id_col, bits, max_hamming, keep_signature=True
-        ),
-        store_table=store_table, out_path=out_path, text_col=text_col,
-        id_col=id_col, profile_path=profile_path,
-    )
+    spec = _simhash_spec(text_col, id_col, bits, max_hamming)
+    return _near_dup_gate(spec, spec.band_rows, store_table, out_path, text_col, id_col, profile_path)
 
 
 def streaming_incremental_simhash_dedup(
@@ -2669,14 +2495,8 @@ def streaming_incremental_simhash_dedup(
 
     Returns the started ``StreamingQuery``.
     """
-    return start_gate_stream(
-        stream, checkpoint_dir,
-        _simhash_gate(
-            store_table, out_path, text_col, id_col, bits, max_hamming,
-            profile_path,
-        ),
-        out_path, profile_path,
-    )
+    gate = _simhash_gate(store_table, out_path, text_col, id_col, bits, max_hamming, profile_path)
+    return start_gate_stream(stream, checkpoint_dir, gate, out_path, profile_path)
 
 
 def compact_simhash_band_store(
@@ -2688,33 +2508,7 @@ def compact_simhash_band_store(
     id_col: str | None = None,
 ) -> tuple[int, int]:
     """:func:`compact_minhash_band_store` for the SimHash store: one
-    row per (band_key, doc), min-epoch tags, same bucket spec, fresh
-    table resolution (see the fingerprint compactor's staleness note),
-    schema-derived ``id_col`` default.
+    row per (band_key, doc), min-epoch tags, same bucket spec,
+    schema-derived ``id_col`` default (:func:`_compact_store`).
     Returns ``(rows_before, rows_after)``."""
-    from ..sources.layout import write_bucketed
-
-    spark.catalog.refreshTable(src_table)
-    src = assert_store_format(spark.table(src_table), src_table)
-    id_col = _band_store_id_col(src, id_col, "simhash")
-    if n_buckets is None:
-        meta = {
-            r.col_name: r.data_type
-            for r in spark.sql(f"DESCRIBE EXTENDED {src_table}").collect()
-        }
-        n_buckets = int(meta["Num Buckets"])
-    out = (
-        src.groupBy("band_key", id_col)
-        .agg(
-            F.any_value("simhash").alias("simhash"),
-            F.min("__epoch").alias("__epoch"),
-        )
-        .select(id_col, "simhash", "band_key", "__epoch")
-    )
-    rows_before = src.count()
-    write_bucketed(
-        _stamp_store_format(out), dest_table, bucket_by="band_key",
-        n_buckets=n_buckets, path=dest_path,
-    )
-    rows_after = spark.table(dest_table).count()
-    return rows_before, rows_after
+    return _compact_store(spark, src_table, dest_table, dest_path, n_buckets, "simhash", id_col)

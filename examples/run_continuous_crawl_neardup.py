@@ -38,6 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from data_stream_flink_user_address_spark.functions.dedup import (
+    STORE_FORMAT_VERSION,
     band_rows,
     build_minhash_band_store,
     compact_minhash_band_store,
@@ -158,6 +159,7 @@ def main() -> None:
                 "doc_id", 4, 4, keep_signature=True,
             )
             .withColumn("__epoch", F.lit(i))
+            .withColumn("__fmt", F.lit(STORE_FORMAT_VERSION))
             .write.mode("append")
             .insertInto(table2)
         )

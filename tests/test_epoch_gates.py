@@ -265,6 +265,25 @@ def test_epoch_replay_is_idempotent_and_keeps_session_conf(
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+@pytest.mark.parametrize("gate", ["exact", "bucketed", "minhash", "simhash"])
+def test_store_gate_epochs_release_their_pins(spark, tmp_path, gate):
+    """A store-gate epoch releases everything it persisted before it
+    returns: after three epochs the session holds no persistent RDD it
+    did not hold before (an unreleased pin adds one or more per epoch
+    until a JVM GC happens to collect it).  Ids, not counts: the same
+    GC may meanwhile collect pins that earlier tests left behind."""
+    jsc = spark.sparkContext._jsc
+    epoch_fn, batch, _, tables = GATES[gate](spark, tmp_path)
+    try:
+        before = set(jsc.getPersistentRDDs().keys())
+        for epoch in (1, 2, 3):
+            epoch_fn(batch, epoch)
+        assert set(jsc.getPersistentRDDs().keys()) - before == set()
+    finally:
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_write_partition_replaces_only_its_partition(
     spark, tmp_path, default_overwrite_mode
 ):
