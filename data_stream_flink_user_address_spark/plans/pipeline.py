@@ -32,13 +32,24 @@ retry re-runs ``foreachBatch`` with the same ``epoch_id``; count rows
 whose stored ``(__run, __epoch)`` equals this attempt already contain
 this batch's contribution and are skipped (exactly-once per key, epoch).
 
-A count table holds one row per state or country, so the batch's
-increments and the stored rows are both collected and folded on the
-driver, and each table is committed whole in one write and one log
-version (``TransactionalKeyedUpsertSink.snapshot`` / ``replace``); only
-the userAddress table, keyed by user, is merged inside Spark by
-``apply``.  On the ``stream_paced`` benchmark this is 8 Spark jobs per
-micro-batch, where a Spark-side merge of every table took 19.
+Per micro-batch, ONE tagged aggregation is collected: the count
+increments of both dimensions and the set of userAddress buckets the
+batch's users hash to.  The buckets go to ``apply``, which then needs
+no probe of its own and merges the userAddress table (keyed by user)
+inside Spark.  A count table holds one row per state or country, so it
+never touches Spark: the sink serves the rows it last committed from
+memory (``TransactionalKeyedUpsertSink.snapshot``), the driver folds
+the increments into them, and ``replace`` writes the whole table from
+the driver as one parquet file and one log version.  The count sinks
+are single-bucket for that reason.  On the ``stream_paced`` benchmark a
+micro-batch runs 3 Spark jobs: the collect (which also runs the join)
+and userAddress's write.  A Spark-side merge of every table took 19,
+and Spark-written count tables 8.
+
+Storage stays bounded: after every ``VACUUM_EVERY_BATCHES``-th batch
+(by batch id) each sink is vacuumed with ``VACUUM_RETAIN_SECONDS``
+retention, which reclaims superseded log entries and data directories
+once they are older than the retention window.
 """
 
 from __future__ import annotations
@@ -48,6 +59,7 @@ import uuid
 from collections import defaultdict
 from datetime import datetime, timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -56,6 +68,14 @@ from ..streaming.stateful_join import stateful_user_address_join
 
 # (dimension, count table) -- the reference's two windowAll counts
 COUNT_TABLES = (("state", "userCountByState"), ("country", "userCountByCountry"))
+# tag of userAddress's touched buckets in the batch's one tagged collect
+BUCKET_TAG = "__bucket"
+
+# every sink is vacuumed after each batch whose id + 1 is a multiple of
+# VACUUM_EVERY_BATCHES, reclaiming what is older than VACUUM_RETAIN_SECONDS
+# (read at call time)
+VACUUM_EVERY_BATCHES = 100
+VACUUM_RETAIN_SECONDS = 3600.0
 
 
 def _fold_counts(inc, stored, attempt: tuple[int, str]) -> list[tuple]:
@@ -77,6 +97,21 @@ def _fold_counts(inc, stored, attempt: tuple[int, str]) -> list[tuple]:
         if value not in done and (value not in latest or ws > latest[value][0]):
             latest[value] = (ws, n)
     return [(value, n, ws) for value, (ws, n) in latest.items()]
+
+
+def _count_table(dim: str, rows: list[tuple]) -> pa.Table:
+    """``(value, count, window_us, __epoch, __run)`` rows as a count
+    table.  Window starts go from epoch microseconds straight to UTC
+    timestamps, never through a naive ``datetime`` the driver's local
+    zone could shift."""
+    value, count, ws, epoch, run = zip(*rows)
+    return pa.table({
+        dim: pa.array(value, pa.string()),
+        "count": pa.array(count, pa.int64()),
+        "window_start": pa.array(ws, pa.int64()).cast(pa.timestamp("us", tz="UTC")),
+        "__epoch": pa.array(epoch, pa.int32()),
+        "__run": pa.array(run, pa.string()),
+    })
 
 
 class ReferencePipeline:
@@ -144,7 +179,7 @@ class ReferencePipeline:
         head, cur = sink.snapshot()
         if cur is None:
             return head, []
-        missing = [c for c in ("__epoch", "__run") if c not in cur.columns]
+        missing = [c for c in ("__epoch", "__run") if c not in cur.column_names]
         if missing:
             raise ValueError(
                 f"count table {sink.path!r} has no {'/'.join(missing)} "
@@ -152,35 +187,52 @@ class ReferencePipeline:
                 "which this pipeline no longer converts; start from a "
                 "fresh out_dir"
             )
-        return head, cur.select(
-            dim, "count", F.unix_micros("window_start"), "__epoch", "__run"
-        ).collect()
+        cols = (cur[dim], cur["count"], cur["window_start"].cast(pa.int64()), cur["__epoch"], cur["__run"])
+        return head, list(zip(*(c.to_pylist() for c in cols)))
 
-    def _merge_counts(self, batch: DataFrame, epoch_id: int) -> None:
-        """Fold one joined micro-batch into both windowed-count tables.
+    def _collect_batch(self, batch: DataFrame, bucket=None) -> tuple[dict[str, list[tuple]], set[int]]:
+        """The batch's count increments, ``{dim: [(value, window_us,
+        count)]}``, and the set of ``bucket`` values over its rows, from
+        one collect.
 
-        One aggregation over the exploded addresses, tagged by dimension,
-        is collected: ``ingest_time`` is one literal per batch, so it has
-        one window x (distinct states + countries) rows.  Both tables
-        (one row per value) are snapshotted and checked before either is
-        written.  Each is then folded on the driver and committed whole
-        by ``replace``: the folded rows plus the stored rows of untouched
-        values, which keep their ``(__epoch, __run)``.  A lost commit
-        race re-snapshots and re-folds.  Window starts travel as epoch
-        microseconds.
+        One aggregation over the exploded addresses, tagged by
+        dimension: ``ingest_time`` is one literal per batch, so it has
+        one window x (distinct states + countries + buckets) rows.  The
+        explode keeps users with no address (``explode_outer``), so
+        every user's bucket is seen; only real addresses are counted.
         """
+        tags = [F.struct(F.lit(dim).alias("dim"), F.col(f"a.{dim}").alias("value"))
+                for dim, _ in COUNT_TABLES]
+        if bucket is not None:
+            tags.append(F.struct(F.lit(BUCKET_TAG).alias("dim"),
+                                 bucket.cast("string").alias("value")))
         rows = (
-            batch.select("ingest_time", F.explode("addresses").alias("a"))
-            .select("ingest_time", F.inline(F.array(*(
-                F.struct(F.lit(dim).alias("dim"), F.col(f"a.{dim}").alias("value"))
-                for dim, _ in COUNT_TABLES
-            ))))
+            batch.select("*", F.explode_outer("addresses").alias("a"))
+            .select("ingest_time", "a", F.inline(F.array(*tags)))
             .groupBy(F.window("ingest_time", self.window).alias("win"), "dim", "value")
-            .count()
+            .agg(F.count("a").alias("count"))
             .select("dim", "value", F.unix_micros("win.start"), "count")
             .collect()
         )
-        inc = {dim: [tuple(r[1:]) for r in rows if r[0] == dim] for dim, _ in COUNT_TABLES}
+        inc = {dim: [tuple(r[1:]) for r in rows if r[0] == dim and r[3]] for dim, _ in COUNT_TABLES}
+        return inc, {int(r[1]) for r in rows if r[0] == BUCKET_TAG}
+
+    def _merge_counts(self, batch: DataFrame, epoch_id: int,
+                      inc: dict[str, list[tuple]] | None = None) -> None:
+        """Fold one joined micro-batch into both windowed-count tables.
+
+        ``inc`` is the batch's increments from :meth:`_collect_batch`
+        (collected here when not given); everything else runs on the
+        driver, with no Spark job while the sinks serve their last
+        commit from memory.  Both tables (one row per value) are
+        snapshotted and checked before either is written.  Each is then
+        folded and committed whole by ``replace``: the folded rows plus
+        the stored rows of untouched values, which keep their
+        ``(__epoch, __run)``.  A lost commit race re-snapshots and
+        re-folds.  Window starts travel as epoch microseconds.
+        """
+        if inc is None:
+            inc = self._collect_batch(batch)[0]
         attempt = (epoch_id, self._run_id)
         snaps = {dim: self._count_snapshot(dim, self.sinks[table]) for dim, table in COUNT_TABLES}
 
@@ -194,13 +246,7 @@ class ReferencePipeline:
                 values = {value for value, _, _ in folded}
                 table_rows = [(value, n, ws, *attempt) for value, n, ws in folded]
                 table_rows += [tuple(r) for r in stored if r[0] not in values]
-                whole = batch.sparkSession.createDataFrame(
-                    table_rows,
-                    f"{dim} string, count bigint, ws bigint, __epoch int, __run string",
-                ).select(
-                    dim, "count", F.timestamp_micros("ws").alias("window_start"), "__epoch", "__run"
-                )
-                if sink.replace(whole, head):
+                if sink.replace(_count_table(dim, table_rows), head):
                     break
                 # lost the race: fold again on top of the winner's table
                 snaps[dim] = self._count_snapshot(dim, sink)
@@ -219,17 +265,21 @@ class ReferencePipeline:
             # recompute current_timestamp() at a later wall time and
             # could land rows of one batch in two different windows
             stamp = datetime.now(timezone.utc).replace(tzinfo=None)
-            # one materialization of the joined batch feeds the
-            # userAddress upsert and the count pass; without the persist
-            # each action would re-run the batch lineage
+            # one materialization of the joined batch feeds the collect
+            # and the userAddress upsert; without the persist each
+            # action would re-run the batch lineage
             batch = batch_df.withColumn(
                 "ingest_time", F.lit(stamp).cast("timestamp")
             ).persist()
             try:
-                ua_sink.apply(batch)
-                self._merge_counts(batch, epoch_id)
+                inc, touched = self._collect_batch(batch, ua_sink._bucket())
+                ua_sink.apply(batch, touched)
+                self._merge_counts(batch, epoch_id, inc)
             finally:
                 batch.unpersist()
+            if (epoch_id + 1) % VACUUM_EVERY_BATCHES == 0:
+                for sink in self.sinks.values():
+                    sink.vacuum(VACUUM_RETAIN_SECONDS)
 
         return fn
 
@@ -239,8 +289,9 @@ class ReferencePipeline:
             self.spark, os.path.join(self.out_dir, "userAddress"), key="userId", order_col="seq"
         )
         for dim, table in COUNT_TABLES:
+            # one bucket: replace() writes the table from the driver
             self.sinks[table] = TransactionalKeyedUpsertSink(
-                self.spark, os.path.join(self.out_dir, table), key=dim
+                self.spark, os.path.join(self.out_dir, table), key=dim, n_buckets=1
             )
 
         shared_ckpt = os.path.join(self.checkpoint_dir, "shared")

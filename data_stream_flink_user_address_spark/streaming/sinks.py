@@ -13,10 +13,13 @@ on a real deployment the same interface fronts Delta ``MERGE`` or the
 Mongo Spark connector -- the batch-level dedup logic is identical.
 
 Two ways to commit: ``apply(df)`` merges a batch into the touched
-buckets inside Spark, and ``snapshot()`` + ``replace(df, version)``
-commit a whole table a caller has already merged on the driver -- the
-reference pipeline's count tables, which hold a handful of rows, take
-the second path (one read and one write per batch, no Spark-side merge).
+buckets inside Spark, and ``snapshot()`` + ``replace(table, version)``
+commit a whole table a caller has already merged on the driver.  The
+reference pipeline's count tables hold a handful of rows and take the
+second path with no Spark job at all: ``replace`` writes a local
+``pyarrow.Table`` as one parquet file from the driver, and ``snapshot``
+serves the rows this sink last committed from memory while the log head
+is still that commit.
 
 Micro-batch retries replay a batch: the merge is idempotent per key, so
 at-least-once delivery converges exactly like the reference's upsert.
@@ -26,12 +29,16 @@ from __future__ import annotations
 
 import json
 import os
+import time
 import uuid
 import warnings
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 
 # Filesystems whose ``rename`` is copy+delete (or otherwise cannot
@@ -210,6 +217,14 @@ class TransactionalKeyedUpsertSink:
     instead of depending on which footer Spark samples.  A manifest
     without a schema (older tables) is read by inference.
 
+    **Finding the head.**  The sink remembers the last version it
+    committed or found, and finds the head by probing
+    ``exists(version + 1)``: one metadata call however long the log is.
+    Only a fresh sink, or a head another writer moved, lists ``_log``
+    -- once, reading the newest claimed version and the newest
+    parsable manifest from that one listing.  A claimed version is
+    never reused, even when its entry is unparsable.
+
     Scale shape is unchanged: a batch reads and rewrites only the
     buckets its keys hash to (the manifest carries the untouched
     buckets' file lists forward), so per-batch cost is O(touched
@@ -217,25 +232,51 @@ class TransactionalKeyedUpsertSink:
     file per bucket it writes, so a bucket's file list does not grow
     with the number of batches.
 
-    ``apply(df)`` persists its LWW-collapsed input for the length of
-    the call -- the bucket probe, the survivor anti-join and every
-    commit retry share one computation -- and unpersists it before
-    returning, so a long-running stream pins nothing between batches.
+    ``apply(df, touched)`` persists its LWW-collapsed input for the
+    length of the call -- the merge and every commit retry share one
+    computation -- and unpersists it before returning, so a
+    long-running stream pins nothing between batches.  ``touched`` is
+    the set of buckets the batch's keys hash to, when the caller has
+    already collected it (the reference pipeline does, in the same
+    ``collect`` as its counts); otherwise ``apply`` probes it with one
+    ``distinct().collect()``.  A commit that wrote a bucket outside
+    ``touched`` is refused before it is published: the stored rows of
+    that bucket were never read, so publishing would drop them.
 
+    **Driver-sized tables** (``snapshot`` / ``replace``).
     ``snapshot()`` returns ``(head, table)``: the newest claimed log
     version (None before the first commit) and the committed contents
-    at the newest parsable version (None before the first commit).
-    ``replace(df, head)`` commits ``df`` -- one row per key, the
-    caller's job -- as the WHOLE table at version ``head + 1`` and
-    returns False, publishing nothing, if another writer has claimed
-    that version since the snapshot; the caller re-snapshots, re-merges
-    and retries.  It is the same optimistic protocol as ``apply``, for
-    tables small enough that the caller merges them on the driver.
-    Old versions' files stay
-    until :meth:`vacuum`, which only reclaims unreferenced files older
-    than its retention window -- protecting both readers pinned to a
-    just-replaced version and in-flight writers whose data is written
-    before their commit.
+    at the newest parsable version as a ``pyarrow.Table`` (None before
+    the first commit).  ``replace(table, head)`` commits ``table`` -- a
+    ``pyarrow.Table``, one row per key, the caller's job -- as the WHOLE
+    table at version ``head + 1`` and returns False, publishing nothing,
+    if another writer has claimed that version since the snapshot; the
+    caller re-snapshots, re-merges and retries.  It is the same
+    optimistic protocol as ``apply``, for tables small enough that the
+    caller merges them on the driver, and it runs no Spark job:
+
+    - ``replace`` writes the table as one parquet file from the driver
+      (``FileSystem.create``) and commits it through the same log.  The
+      driver cannot compute Spark's ``xxhash64`` bucket of a key, so
+      ``replace`` requires a single-bucket sink (``n_buckets=1``): the
+      one file is then a valid bucket for a later ``apply``.
+    - After a successful ``replace`` the sink keeps ``(version,
+      manifest, table)``, and ``snapshot()`` serves that table from
+      memory while the head is still that version.  A fresh sink (a
+      restart), a rival commit or a lost race reads the files instead,
+      once, and keeps what it read.  ``read()`` always reads the files
+      and returns a DataFrame.
+    - Timestamps cross the driver as ``timestamp[us, tz=UTC]``, both in
+      memory and from Spark's ``toArrow``, so the session time zone
+      never shifts a row.
+
+    **Storage.**  Old versions' files stay until :meth:`vacuum`, which
+    reclaims unreferenced files older than its retention window --
+    protecting both readers pinned to a just-replaced version and
+    in-flight writers whose data is written before their commit -- and
+    removes each ``data/txn-*`` directory whole once nothing in it is
+    live.  The reference pipeline calls it on every sink on a fixed
+    schedule (``plans/pipeline.py:VACUUM_EVERY_BATCHES``).
     """
 
     def __init__(
@@ -254,6 +295,9 @@ class TransactionalKeyedUpsertSink:
         self.n_buckets = n_buckets
         self.max_commit_retries = max_commit_retries
         self._warned_non_atomic_scheme = False
+        # (claimed head, newest parsable manifest, its rows as a
+        # pyarrow.Table or None) as last committed or found by this sink
+        self._last: tuple[int, dict | None, pa.Table | None] | None = None
 
     # -- Hadoop FS plumbing -------------------------------------------------
 
@@ -269,27 +313,33 @@ class TransactionalKeyedUpsertSink:
     def _log_dir(self) -> str:
         return f"{self.path}/_log"
 
+    def _entry(self, version: int) -> str:
+        return f"{self._log_dir}/{version:020d}.json"
+
+    @staticmethod
+    def _version_of(name: str) -> int | None:
+        """Log file name -> committed version; None for tmp files and
+        names that are not a version."""
+        if name.endswith(".json") and not name.startswith("."):
+            try:
+                return int(name[: -len(".json")])
+            except ValueError:
+                return None
+        return None
+
     def _list_versions(self, fs) -> list[int]:
         """Committed version numbers, newest first (tmp files excluded)."""
         log = self._jpath(self._log_dir)
         if not fs.exists(log):
             return []
-        versions = []
-        for st in fs.listStatus(log):
-            name = st.getPath().getName()
-            if name.endswith(".json") and not name.startswith("."):
-                try:
-                    versions.append(int(name[: -len(".json")]))
-                except ValueError:
-                    continue
-        return sorted(versions, reverse=True)
+        versions = (self._version_of(st.getPath().getName()) for st in fs.listStatus(log))
+        return sorted((v for v in versions if v is not None), reverse=True)
 
     def _current_version(self, fs) -> int | None:
-        versions = self._list_versions(fs)
-        return versions[0] if versions else None
+        return self._head(fs)[0]
 
     def _read_manifest(self, fs, version: int) -> dict:
-        stream = fs.open(self._jpath(f"{self._log_dir}/{version:020d}.json"))
+        stream = fs.open(self._jpath(self._entry(version)))
         try:
             body = self.spark._jvm.org.apache.commons.io.IOUtils.toString(
                 stream, "UTF-8"
@@ -305,15 +355,16 @@ class TransactionalKeyedUpsertSink:
         except (json.JSONDecodeError, ValueError):
             return None
 
-    def _latest_valid_manifest(self, fs) -> tuple[int | None, dict | None]:
-        """(version, manifest) of the newest PARSABLE log entry.
+    def _newest_valid(self, fs, versions: list[int]) -> tuple[int | None, dict | None]:
+        """(version, manifest) of the newest PARSABLE entry among
+        ``versions`` (newest first).
 
         The publish protocol never exposes a half-written manifest, but
         a crashed foreign writer using direct create() could; skipping
         to the next parsable version keeps the table readable instead
         of wedging every read on a JSONDecodeError.
         """
-        for v in self._list_versions(fs):
+        for v in versions:
             m = self._try_read_manifest(fs, v)
             if m is not None:
                 return v, m
@@ -379,11 +430,12 @@ class TransactionalKeyedUpsertSink:
             fs.delete(self._jpath(tmp), False)
         return renamed
 
-    def _try_commit(self, fs, version: int, manifest: dict) -> bool:
+    def _try_commit(self, fs, version: int, manifest: dict, rows: pa.Table | None = None) -> bool:
         """Write-temp-then-publish ``_log/{version}.json``; False on a
         lost commit race.  The manifest body is complete and closed
         BEFORE it becomes visible under its final name, so readers can
-        never observe a partial entry."""
+        never observe a partial entry.  A win becomes the remembered
+        head, with ``rows`` as its contents when the caller has them."""
         fs.mkdirs(self._jpath(self._log_dir))
         tmp = f"{self._log_dir}/.tmp-{uuid.uuid4().hex}.json"
         out = fs.create(self._jpath(tmp), True)
@@ -391,8 +443,10 @@ class TransactionalKeyedUpsertSink:
             out.write(bytearray(json.dumps(manifest).encode("utf-8")))
         finally:
             out.close()
-        target = f"{self._log_dir}/{version:020d}.json"
-        return self._publish(fs, tmp, target)
+        if not self._publish(fs, tmp, self._entry(version)):
+            return False
+        self._last = (version, manifest, rows)
+        return True
 
     # -- table surface ------------------------------------------------------
 
@@ -402,8 +456,19 @@ class TransactionalKeyedUpsertSink:
     def _head(self, fs) -> tuple[int | None, dict | None]:
         """(newest CLAIMED version, manifest of the newest parsable one).
         A commit goes past the claimed head even when that entry is
-        unparsable -- a claimed version number is never reused."""
-        return self._current_version(fs), self._latest_valid_manifest(fs)[1]
+        unparsable -- a claimed version number is never reused.
+
+        O(1) in the steady state: while no entry follows the remembered
+        head, that head stands.  Otherwise (a fresh sink, or another
+        writer moved the head) one listing of ``_log`` answers both."""
+        if self._last is not None and not fs.exists(self._jpath(self._entry(self._last[0] + 1))):
+            return self._last[0], self._last[1]
+        versions = self._list_versions(fs)
+        if not versions:
+            return None, None
+        manifest = self._newest_valid(fs, versions)[1]
+        self._last = (versions[0], manifest, None)
+        return versions[0], manifest
 
     def _read_files(self, manifest: dict, buckets=None) -> DataFrame:
         """The manifest's data files (only ``buckets`` when given), read
@@ -419,15 +484,24 @@ class TransactionalKeyedUpsertSink:
             reader = reader.schema(T.StructType.fromJson(manifest["schema"]))
         return reader.parquet(*files)
 
-    def snapshot(self) -> tuple[int | None, DataFrame | None]:
-        """``(head version, committed contents)``; ``(None, None)``
-        before the first commit.  Pass the head to :meth:`replace`."""
+    def snapshot(self) -> tuple[int | None, pa.Table | None]:
+        """``(head version, committed contents as a pyarrow.Table)``;
+        ``(None, None)`` before the first commit.  Served from memory
+        while the head is the version this sink last replaced or read;
+        pass the head to :meth:`replace`."""
         head, manifest = self._head(self._fs())
-        return head, None if manifest is None else self._read_files(manifest)
+        if manifest is None:
+            return head, None
+        if self._last[2] is not None:  # _head keeps rows only for the head
+            return head, self._last[2]
+        rows = self._read_files(manifest).toArrow()
+        self._last = (head, manifest, rows)
+        return head, rows
 
     def read(self) -> DataFrame | None:
         """Current committed contents (None before the first commit)."""
-        return self.snapshot()[1]
+        manifest = self._head(self._fs())[1]
+        return None if manifest is None else self._read_files(manifest)
 
     def _write_data(self, merged: DataFrame) -> dict[str, list[str]]:
         """Write ``merged`` (which carries ``__bucket``) as one file per
@@ -435,8 +509,12 @@ class TransactionalKeyedUpsertSink:
         manifest must survive the table directory moving or being
         addressed via another prefix)."""
         txn = f"data/txn-{uuid.uuid4().hex}"
-        merged.repartition("__bucket").write.partitionBy("__bucket").parquet(
-            f"{self.path}/{txn}"
+        (
+            merged.repartition("__bucket").write
+            # no _SUCCESS marker: the log entry is the commit
+            .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+            .partitionBy("__bucket")
+            .parquet(f"{self.path}/{txn}")
         )
         fs = self._fs()
         out: dict[str, list[str]] = {}
@@ -450,24 +528,44 @@ class TransactionalKeyedUpsertSink:
                 ]
         return out
 
-    def replace(self, df: DataFrame, version: int | None) -> bool:
-        """Commit ``df`` (one row per key) as the whole table, iff the
-        head is still ``version`` (from :meth:`snapshot`); False, with
-        the table unchanged, when another commit got there first."""
-        files = self._write_data(df.withColumn("__bucket", self._bucket()))
+    def replace(self, table: pa.Table, version: int | None) -> bool:
+        """Commit ``table`` (a ``pyarrow.Table``, one row per key) as the
+        whole table, iff the head is still ``version`` (from
+        :meth:`snapshot`); False, with the table unchanged, when another
+        commit got there first.  Written from the driver as one file, so
+        the sink must have one bucket."""
+        if self.n_buckets != 1:
+            raise ValueError(
+                f"replace() writes one driver-side file, so the sink at "
+                f"{self.path!r} needs n_buckets=1, not {self.n_buckets}"
+            )
+        rel = f"data/txn-{uuid.uuid4().hex}/__bucket=0/part-00000.parquet"
+        buf = pa.BufferOutputStream()
+        pq.write_table(table, buf)
+        fs = self._fs()
+        out = fs.create(self._jpath(f"{self.path}/{rel}"), False)
+        try:
+            out.write(bytearray(buf.getvalue().to_pybytes()))
+        finally:
+            out.close()
         nxt = 0 if version is None else version + 1
-        manifest = {"version": nxt, "schema": df.schema.jsonValue(), "buckets": files}
-        return self._try_commit(self._fs(), nxt, manifest)
+        schema = from_arrow_schema(table.schema)
+        manifest = {"version": nxt, "schema": schema.jsonValue(), "buckets": {"0": [rel]}}
+        return self._try_commit(fs, nxt, manifest, table)
 
-    def apply(self, batch_df: DataFrame) -> None:
+    def apply(self, batch_df: DataFrame, touched: set[int] | None = None) -> None:
+        """Upsert ``batch_df``.  ``touched`` -- the buckets its keys hash
+        to, if the caller already knows them -- saves the probe job; it
+        must cover every key's bucket, or the commit is refused."""
         # persisted for the call: the probe, the merge and every retry
         # share one computation, and nothing stays pinned afterwards
         incoming = latest_per_key(batch_df, self.key, self.order_col).withColumn(
             "__bucket", self._bucket()
         ).persist()
         try:
-            # bounded collect: <= n_buckets values
-            touched = {int(r[0]) for r in incoming.select("__bucket").distinct().collect()}
+            if touched is None:
+                # bounded collect: <= n_buckets values
+                touched = {int(r[0]) for r in incoming.select("__bucket").distinct().collect()}
             if not touched:
                 return
             fs = self._fs()
@@ -488,8 +586,18 @@ class TransactionalKeyedUpsertSink:
                         f for f in T.StructType.fromJson(base["schema"])
                         if f.name not in schema.fieldNames()
                     ])
+                written = self._write_data(merged)
+                stray = {int(b) for b in written} - touched
+                if stray:
+                    # those buckets' stored rows were never read: a commit
+                    # would drop them (the files stay as orphans for vacuum)
+                    raise ValueError(
+                        f"TransactionalKeyedUpsertSink at {self.path!r}: the batch "
+                        f"wrote bucket(s) {sorted(stray)} outside touched="
+                        f"{sorted(touched)}; nothing was published"
+                    )
                 buckets = {b: fl for b, fl in old_buckets.items() if int(b) not in touched}
-                buckets.update(self._write_data(merged))
+                buckets.update(written)
                 nxt = 0 if head is None else head + 1
                 manifest = {"version": nxt, "schema": schema.jsonValue(), "buckets": buckets}
                 if self._try_commit(fs, nxt, manifest):
@@ -505,10 +613,13 @@ class TransactionalKeyedUpsertSink:
             incoming.unpersist()
 
     def vacuum(self, retain_seconds: float = 3600.0) -> int:
-        """Delete data files not referenced by the current manifest, and
-        superseded log entries, PROVIDED they are older than
-        ``retain_seconds`` (Delta ``VACUUM ... RETAIN``-style age guard);
-        returns the number of data files removed.
+        """Delete data files not referenced by the newest parsable
+        manifest, and the log entries it supersedes, PROVIDED they are
+        older than ``retain_seconds`` (Delta ``VACUUM ... RETAIN``-style
+        age guard); returns the number of data files removed.  A
+        ``data/txn-*`` directory goes whole -- markers, checksums and
+        bucket directories too -- once none of its files is live and
+        every entry in it is past retention.
 
         The retention window is the safety mechanism: a reader pinned to
         a just-replaced version finishes its scan, and an in-flight
@@ -516,11 +627,16 @@ class TransactionalKeyedUpsertSink:
         design -- cannot have its pre-commit files reclaimed from under
         it.  ``retain_seconds=0`` reclaims everything unreferenced
         immediately and is only safe with all readers and writers
-        quiesced."""
-        import time
-
+        quiesced.  A claimed version newer than the newest parsable one
+        is kept, so its number is never reused."""
         fs = self._fs()
-        version, manifest = self._latest_valid_manifest(fs)
+        log_dir = self._jpath(self._log_dir)
+        if not fs.exists(log_dir):
+            return 0
+        log = [(self._version_of(st.getPath().getName()), st) for st in fs.listStatus(log_dir)]
+        version, manifest = self._newest_valid(
+            fs, sorted((v for v, _ in log if v is not None), reverse=True)
+        )
         if manifest is None:
             return 0
         live = set()
@@ -533,29 +649,38 @@ class TransactionalKeyedUpsertSink:
         data_dir = self._jpath(f"{self.path}/data")
         if fs.exists(data_dir):
             for txn in fs.listStatus(data_dir):
-                for st in fs.listStatus(txn.getPath()):
-                    if st.isDirectory():
-                        for leaf in fs.listStatus(st.getPath()):
-                            p = leaf.getPath()
-                            rel = f"data/{txn.getPath().getName()}/{st.getPath().getName()}/{p.getName()}"
-                            if (
-                                p.getName().endswith(".parquet")
-                                and rel not in live
-                                and p.toString() not in live
-                                and leaf.getModificationTime() < cutoff_ms
-                            ):
-                                fs.delete(p, False)
-                                removed += 1
-        current_name = f"{version:020d}.json"
-        for st in fs.listStatus(self._jpath(self._log_dir)):
-            name = st.getPath().getName()
-            if name == current_name:
-                continue
-            is_old_version = name.endswith(".json") and not name.startswith(".")
-            is_stale_tmp = name.startswith(".tmp-")
+                # a directory changed inside the window holds a recent
+                # entry, so nothing in it can go yet
+                if txn.getModificationTime() < cutoff_ms:
+                    removed += self._vacuum_txn(fs, txn, live, cutoff_ms)
+        for v, st in log:
+            is_old_version = v is not None and v < version
+            is_stale_tmp = st.getPath().getName().startswith(".tmp-")
             if (is_old_version or is_stale_tmp) and st.getModificationTime() < cutoff_ms:
                 fs.delete(st.getPath(), False)
         return removed
+
+    def _vacuum_txn(self, fs, txn, live: set[str], cutoff_ms: float) -> int:
+        """Reclaim one ``data/txn-*`` directory: whole when none of its
+        files is live and every entry is past ``cutoff_ms``, else its
+        expired unreferenced ``.parquet`` files one by one.  Returns the
+        number of data files removed."""
+        prefix = f"data/{txn.getPath().getName()}"
+        entries = [(st, f"{prefix}/{st.getPath().getName()}") for st in fs.listStatus(txn.getPath())]
+        for st, rel in list(entries):
+            if st.isDirectory():
+                entries += [(leaf, f"{rel}/{leaf.getPath().getName()}")
+                            for leaf in fs.listStatus(st.getPath())]
+        expired = [st.getModificationTime() < cutoff_ms for st, _ in entries]
+        data = [(st, old, rel in live or st.getPath().toString() in live)
+                for (st, rel), old in zip(entries, expired) if rel.endswith(".parquet")]
+        dead = [st for st, old, is_live in data if old and not is_live]
+        if len(dead) == len(data) and all(expired):
+            fs.delete(txn.getPath(), True)
+        else:
+            for st in dead:
+                fs.delete(st.getPath(), False)
+        return len(dead)
 
     def foreach_batch(self):
         """Adapter for ``writeStream.foreachBatch``."""

@@ -216,7 +216,7 @@ def _count_pipe(spark, out, window="365 days"):
     pipe.window = window
     pipe._run_id = "runA"
     pipe.sinks = {
-        table: TransactionalKeyedUpsertSink(spark, os.path.join(out, table), key=dim)
+        table: TransactionalKeyedUpsertSink(spark, os.path.join(out, table), key=dim, n_buckets=1)
         for dim, table in COUNT_TABLES
     }
     return pipe
@@ -403,3 +403,122 @@ def test_run_namespace_marker_survives_restart(tmp_path):
     import shutil
     shutil.rmtree(ckpt)
     assert RP._run_namespace(ckpt) != first  # recreated checkpoint
+
+
+def test_collect_batch_counts_addresses_and_sees_every_users_bucket(spark, tmp_path):
+    """The one tagged collect returns the count increments (a NULL state
+    is a value; a user without addresses adds none) and the bucket of
+    every user, with or without addresses."""
+    pipe = _count_pipe(spark, str(tmp_path / "out"), window="1 minute")
+    ua = TransactionalKeyedUpsertSink(spark, str(tmp_path / "ua"), key="userId")
+    batch = spark.createDataFrame(
+        [("u1", [("a1", "c", "S0", "z", "C0")]),
+         ("u2", [("a2", "c", None, "z", "C1"), ("a3", "c", "S0", "z", "C0")])]
+        + [(f"none{i}", []) for i in range(12)] + [("null", None)],
+        f"userId string, {ADDRESSES}",
+    ).withColumn("ingest_time", F.lit(datetime(2026, 1, 1, 12, 5, 30)).cast("timestamp"))
+    ws = batch.select(F.unix_micros(F.window("ingest_time", "1 minute").start)).first()[0]
+
+    inc, touched = pipe._collect_batch(batch, ua._bucket())
+
+    assert {dim: sorted(rows, key=str) for dim, rows in inc.items()} == {
+        "state": sorted([("S0", ws, 2), (None, ws, 1)], key=str),
+        "country": [("C0", ws, 2), ("C1", ws, 1)],
+    }
+    assert touched == {r[0] for r in batch.select(ua._bucket()).collect()}
+
+
+def test_merge_counts_runs_no_spark_job_after_the_first_batch(spark, tmp_path):
+    """Once a count sink has committed, it serves its rows from memory
+    and writes from the driver: folding further batches runs no Spark
+    job.  A fresh sink over the same tables (a restart) reads once."""
+    out = str(tmp_path / "out")
+    pipe = _count_pipe(spark, out)
+    batch = spark.createDataFrame(
+        [("u1", [("a1", "c", "S0", "z", "C0")])], f"userId string, {ADDRESSES}"
+    ).withColumn("ingest_time", F.current_timestamp())
+    inc = pipe._collect_batch(batch)[0]
+    pipe._merge_counts(batch, 0, inc)
+    sc, group = spark.sparkContext, f"merge-{uuid.uuid4().hex}"
+
+    def jobs(p, epoch, tag):
+        sc.setJobGroup(f"{group}-{tag}", "count merge")
+        try:
+            p._merge_counts(batch, epoch, inc)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return list(sc.statusTracker().getJobIdsForGroup(f"{group}-{tag}"))
+
+    assert jobs(pipe, 1, "warm") == [] and jobs(pipe, 2, "warm2") == []
+    restarted = _count_pipe(spark, out)
+    assert len(jobs(restarted, 3, "restart")) >= 1
+    assert jobs(restarted, 4, "restart2") == []
+    assert _counts(restarted) == ({"S0": 5}, {"C0": 5})
+
+
+def test_count_rows_from_memory_match_disk_in_a_non_utc_session(spark, tmp_path):
+    """A count table served from memory and the same table read from
+    its files hold identical rows and window starts, and both match the
+    window Spark computes, under a non-UTC session time zone."""
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "America/Los_Angeles")
+    try:
+        out = str(tmp_path / "out")
+        pipe = _count_pipe(spark, out, window="1 minute")
+        batch = spark.createDataFrame(
+            [("u1", [("a1", "c", "S0", "z", "C0"), ("a2", "c", None, "z", "C0")])],
+            f"userId string, {ADDRESSES}",
+        ).withColumn("ingest_time", F.lit(datetime(2026, 1, 1, 23, 59, 30)).cast("timestamp"))
+        ws = batch.select(F.unix_micros(F.window("ingest_time", "1 minute").start)).first()[0]
+        pipe._merge_counts(batch, epoch_id=0)
+
+        fresh = _count_pipe(spark, out, window="1 minute")
+        for dim, table in COUNT_TABLES:
+            memory = pipe.sinks[table].snapshot()
+            assert memory[1] is pipe.sinks[table]._last[2]  # no read
+            disk = fresh.sinks[table].snapshot()
+            assert memory[0] == disk[0] == 0
+            assert sorted(memory[1].to_pylist(), key=str) == sorted(disk[1].to_pylist(), key=str)
+            assert ReferencePipeline._count_snapshot(dim, pipe.sinks[table]) == \
+                ReferencePipeline._count_snapshot(dim, fresh.sinks[table])
+            spark_ws = {r[0] for r in pipe.sinks[table].read().select(F.unix_micros("window_start")).collect()}
+            assert spark_ws == {ws}
+            assert set(disk[1]["window_start"].cast("int64").to_pylist()) == {ws}
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_pipeline_vacuums_on_its_schedule(spark, tmp_path, monkeypatch):
+    """With the schedule at every batch and no retention, each table
+    holds only its live manifest's data files (with their checksums)
+    and one log entry after a run of batches."""
+    from data_stream_flink_user_address_spark.plans import pipeline
+
+    monkeypatch.setattr(pipeline, "VACUUM_EVERY_BATCHES", 1)
+    monkeypatch.setattr(pipeline, "VACUUM_RETAIN_SECONDS", 0.0)
+    out = str(tmp_path / "out")
+    pipe = _count_pipe(spark, out)
+    pipe.sinks["userAddress"] = TransactionalKeyedUpsertSink(
+        spark, os.path.join(out, "userAddress"), key="userId", order_col="seq"
+    )
+    fn = pipe._shared_foreach_batch()
+    for epoch in range(4):
+        fn(spark.createDataFrame(
+            [(f"u{epoch}-{i}", epoch, [("a", "c", f"S{i % 2}", "z", "C0")]) for i in range(6)]
+            + [("u-none", epoch, [])],
+            f"userId string, seq long, {ADDRESSES}",
+        ), epoch)
+
+    for table, sink in pipe.sinks.items():
+        fs = sink._fs()
+        head, manifest = sink._head(fs)
+        live = {f for fl in manifest["buckets"].values() for f in fl}
+        crc = {os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc") for f in live}
+        on_disk = {
+            os.path.relpath(os.path.join(root, n), sink.path)
+            for root, _, names in os.walk(sink.path) for n in names
+        }
+        assert live <= on_disk, table
+        assert on_disk - live - crc == {f"_log/{head:020d}.json"}, table
+    assert len(pipe.sinks["userAddress"].read().collect()) == 25

@@ -11,6 +11,9 @@ import json
 import os
 import sys
 
+import pyarrow as pa
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
@@ -103,15 +106,15 @@ def test_txn_replace_with_stale_version_loses(spark, tmp_path):
     """replace() publishes only on top of the snapshot it names: once
     another commit moved the head it returns False and the table is
     unchanged."""
-    sink = _mk(spark, tmp_path)
+    sink = _mk(spark, tmp_path, n_buckets=1)
     assert sink.snapshot() == (None, None)
-    assert sink.replace(spark.createDataFrame([("a", 1)], "k string, v int"), None)
+    assert sink.replace(pa.table({"k": ["a"], "v": pa.array([1], pa.int32())}), None)
     sink.apply(spark.createDataFrame([("b", 2)], "k string, v int"))  # head 0 -> 1
 
-    assert sink.replace(spark.createDataFrame([("z", 9)], "k string, v int"), 0) is False
+    assert sink.replace(pa.table({"k": ["z"], "v": pa.array([9], pa.int32())}), 0) is False
     head, table = sink.snapshot()
     assert head == 1
-    assert {r["k"]: r["v"] for r in table.collect()} == {"a": 1, "b": 2}
+    assert {r["k"]: r["v"] for r in table.to_pylist()} == {"a": 1, "b": 2}
 
 
 def test_txn_column_added_in_one_bucket_reads_back(spark, tmp_path):
@@ -486,3 +489,50 @@ def test_txn_publish_warns_on_non_atomic_rename_scheme(spark, tmp_path):
         W.simplefilter("always")
         sink._publish(FakeS3FS(), tmp, f"{sink._log_dir}/{100:020d}.json")
     assert not [w for w in caught2 if issubclass(w.category, RuntimeWarning)]
+
+
+def test_txn_steady_state_head_does_not_list_the_log(spark, tmp_path, monkeypatch):
+    """A sink finds the head it committed by probing the next version,
+    not by listing _log; a head another writer moved costs one listing."""
+    sink = _mk(spark, tmp_path)
+    sink.apply(spark.createDataFrame([("a", 1)], "k string, v int"))
+    listings = []
+    orig = TransactionalKeyedUpsertSink._list_versions
+
+    def counted(self, fs):
+        listings.append(os.path.basename(self.path))
+        return orig(self, fs)
+
+    monkeypatch.setattr(TransactionalKeyedUpsertSink, "_list_versions", counted)
+    for v in (2, 3):
+        sink.apply(spark.createDataFrame([("a", v)], "k string, v int"))
+    assert {r["k"]: r["v"] for r in sink.read().collect()} == {"a": 3}
+    assert listings == []
+
+    _mk(spark, tmp_path).apply(spark.createDataFrame([("b", 7)], "k string, v int"))
+    listings.clear()
+    assert sink._current_version(sink._fs()) == 3
+    assert listings == ["kv"]
+
+
+def test_txn_apply_refuses_a_bucket_outside_touched(spark, tmp_path):
+    """apply with a caller-given touched set that misses a bucket of the
+    batch raises and publishes nothing: that bucket's stored rows were
+    never read, so a commit would drop them."""
+    sink = _mk(spark, tmp_path, n_buckets=8)
+    stored = [(f"key{i}", i) for i in range(40)]
+    sink.apply(spark.createDataFrame(stored, "k string, v int"))
+    fs = sink._fs()
+    head = sink._current_version(fs)
+    batch = spark.createDataFrame([("key0", 100), ("key1", 101), ("key2", 102)], "k string, v int")
+    buckets = {r[0] for r in batch.select(sink._bucket()).collect()}
+    assert len(buckets) > 1
+
+    with pytest.raises(ValueError, match="outside touched"):
+        sink.apply(batch, touched=set(sorted(buckets)[:1]))
+    assert sink._current_version(fs) == head
+    assert {r["k"]: r["v"] for r in sink.read().collect()} == dict(stored)
+
+    sink.apply(batch, touched=buckets)
+    got = {r["k"]: r["v"] for r in sink.read().collect()}
+    assert got == {**dict(stored), "key0": 100, "key1": 101, "key2": 102}
