@@ -60,7 +60,7 @@ from collections import defaultdict
 from datetime import datetime, timezone
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..streaming.sinks import TransactionalKeyedUpsertSink
@@ -190,7 +190,7 @@ class ReferencePipeline:
         cols = (cur[dim], cur["count"], cur["window_start"].cast(pa.int64()), cur["__epoch"], cur["__run"])
         return head, list(zip(*(c.to_pylist() for c in cols)))
 
-    def _collect_batch(self, batch: DataFrame, bucket=None) -> tuple[dict[str, list[tuple]], set[int]]:
+    def _collect_batch(self, batch: DataFrame, bucket: Column) -> tuple[dict[str, list[tuple]], set[int]]:
         """The batch's count increments, ``{dim: [(value, window_us,
         count)]}``, and the set of ``bucket`` values over its rows, from
         one collect.
@@ -203,9 +203,7 @@ class ReferencePipeline:
         """
         tags = [F.struct(F.lit(dim).alias("dim"), F.col(f"a.{dim}").alias("value"))
                 for dim, _ in COUNT_TABLES]
-        if bucket is not None:
-            tags.append(F.struct(F.lit(BUCKET_TAG).alias("dim"),
-                                 bucket.cast("string").alias("value")))
+        tags.append(F.struct(F.lit(BUCKET_TAG).alias("dim"), bucket.cast("string").alias("value")))
         rows = (
             batch.select("*", F.explode_outer("addresses").alias("a"))
             .select("ingest_time", "a", F.inline(F.array(*tags)))
@@ -217,22 +215,18 @@ class ReferencePipeline:
         inc = {dim: [tuple(r[1:]) for r in rows if r[0] == dim and r[3]] for dim, _ in COUNT_TABLES}
         return inc, {int(r[1]) for r in rows if r[0] == BUCKET_TAG}
 
-    def _merge_counts(self, batch: DataFrame, epoch_id: int,
-                      inc: dict[str, list[tuple]] | None = None) -> None:
+    def _merge_counts(self, epoch_id: int, inc: dict[str, list[tuple]]) -> None:
         """Fold one joined micro-batch into both windowed-count tables.
 
-        ``inc`` is the batch's increments from :meth:`_collect_batch`
-        (collected here when not given); everything else runs on the
-        driver, with no Spark job while the sinks serve their last
-        commit from memory.  Both tables (one row per value) are
-        snapshotted and checked before either is written.  Each is then
-        folded and committed whole by ``replace``: the folded rows plus
-        the stored rows of untouched values, which keep their
-        ``(__epoch, __run)``.  A lost commit race re-snapshots and
+        ``inc`` is the batch's increments from :meth:`_collect_batch`;
+        everything else runs on the driver, with no Spark job while the
+        sinks serve their last commit from memory.  Both tables (one row
+        per value) are snapshotted and checked before either is written.
+        Each is then folded and committed whole by ``replace``: the
+        folded rows plus the stored rows of untouched values, which keep
+        their ``(__epoch, __run)``.  A lost commit race re-snapshots and
         re-folds.  Window starts travel as epoch microseconds.
         """
-        if inc is None:
-            inc = self._collect_batch(batch)[0]
         attempt = (epoch_id, self._run_id)
         snaps = {dim: self._count_snapshot(dim, self.sinks[table]) for dim, table in COUNT_TABLES}
 
@@ -274,7 +268,7 @@ class ReferencePipeline:
             try:
                 inc, touched = self._collect_batch(batch, ua_sink._bucket())
                 ua_sink.apply(batch, touched)
-                self._merge_counts(batch, epoch_id, inc)
+                self._merge_counts(epoch_id, inc)
             finally:
                 batch.unpersist()
             if (epoch_id + 1) % VACUUM_EVERY_BATCHES == 0:

@@ -218,8 +218,11 @@ class TransactionalKeyedUpsertSink:
     without a schema (older tables) is read by inference.
 
     **Finding the head.**  The sink remembers the last version it
-    committed or found, and finds the head by probing
-    ``exists(version + 1)``: one metadata call however long the log is.
+    committed or found, and finds the head by probing that its entry
+    still exists and ``version + 1`` does not: two metadata calls
+    however long the log is.  (An entry that is gone was vacuumed, and
+    vacuum removes entries oldest first, so a head another writer moved
+    and vacuumed past is never mistaken for the current one.)
     Only a fresh sink, or a head another writer moved, lists ``_log``
     -- once, reading the newest claimed version and the newest
     parsable manifest from that one listing.  A claimed version is
@@ -334,9 +337,6 @@ class TransactionalKeyedUpsertSink:
             return []
         versions = (self._version_of(st.getPath().getName()) for st in fs.listStatus(log))
         return sorted((v for v in versions if v is not None), reverse=True)
-
-    def _current_version(self, fs) -> int | None:
-        return self._head(fs)[0]
 
     def _read_manifest(self, fs, version: int) -> dict:
         stream = fs.open(self._jpath(self._entry(version)))
@@ -458,10 +458,19 @@ class TransactionalKeyedUpsertSink:
         A commit goes past the claimed head even when that entry is
         unparsable -- a claimed version number is never reused.
 
-        O(1) in the steady state: while no entry follows the remembered
-        head, that head stands.  Otherwise (a fresh sink, or another
-        writer moved the head) one listing of ``_log`` answers both."""
-        if self._last is not None and not fs.exists(self._jpath(self._entry(self._last[0] + 1))):
+        O(1) in the steady state: while the remembered head's entry
+        still exists and none follows it, that head stands.  Otherwise
+        (a fresh sink, or another writer moved the head) one listing of
+        ``_log`` answers both.  The remembered entry must still exist
+        because :meth:`vacuum` removes superseded entries oldest first:
+        once the head moved on and the log was vacuumed, the entry after
+        the remembered one may be gone as well, but then so is the
+        remembered one."""
+        if (
+            self._last is not None
+            and fs.exists(self._jpath(self._entry(self._last[0])))
+            and not fs.exists(self._jpath(self._entry(self._last[0] + 1)))
+        ):
             return self._last[0], self._last[1]
         versions = self._list_versions(fs)
         if not versions:
@@ -653,7 +662,9 @@ class TransactionalKeyedUpsertSink:
                 # entry, so nothing in it can go yet
                 if txn.getModificationTime() < cutoff_ms:
                     removed += self._vacuum_txn(fs, txn, live, cutoff_ms)
-        for v, st in log:
+        # oldest first, so the log never has a gap below an entry that
+        # is still there (the O(1) head check in _head relies on it)
+        for v, st in sorted(log, key=lambda e: -1 if e[0] is None else e[0]):
             is_old_version = v is not None and v < version
             is_stale_tmp = st.getPath().getName().startswith(".tmp-")
             if (is_old_version or is_stale_tmp) and st.getModificationTime() < cutoff_ms:

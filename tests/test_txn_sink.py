@@ -81,11 +81,11 @@ def test_txn_rewrites_only_touched_buckets(spark, tmp_path):
     sink.apply(spark.createDataFrame([(f"key{i}", i) for i in range(40)], "k string, v int"))
 
     fs = sink._fs()
-    v0 = sink._current_version(fs)
+    v0 = sink._head(fs)[0]
     m0 = sink._read_manifest(fs, v0)["buckets"]
 
     sink.apply(spark.createDataFrame([("key0", 999)], "k string, v int"))
-    v1 = sink._current_version(fs)
+    v1 = sink._head(fs)[0]
     m1 = sink._read_manifest(fs, v1)["buckets"]
 
     touched = str(
@@ -156,7 +156,7 @@ def test_txn_one_file_per_touched_bucket(spark, tmp_path):
             [(f"key{b}-{i}", b) for i in range(20)], "k string, v int"
         ).repartition(4))
     fs = sink._fs()
-    buckets = sink._read_manifest(fs, sink._current_version(fs))["buckets"]
+    buckets = sink._read_manifest(fs, sink._head(fs)[0])["buckets"]
     assert len(buckets) == 2
     assert all(len(fl) == 1 for fl in buckets.values()), buckets
     assert len(sink.read().collect()) == 60
@@ -168,7 +168,7 @@ def test_txn_concurrent_commit_conflict_retries(spark, tmp_path):
     sink = _mk(spark, tmp_path)
     sink.apply(spark.createDataFrame([("a", 1)], "k string, v int"))
     fs = sink._fs()
-    v = sink._current_version(fs)
+    v = sink._head(fs)[0]
 
     # impersonate a concurrent winner: commit version v+1 with b=7
     other = _mk(spark, tmp_path)
@@ -183,7 +183,7 @@ def test_txn_concurrent_commit_conflict_retries(spark, tmp_path):
 
     # this writer read version v, loses the race on v+1, retries on v+1
     sink.apply(spark.createDataFrame([("a", 50)], "k string, v int"))
-    assert sink._current_version(fs) == v + 2
+    assert sink._head(fs)[0] == v + 2
     got = {r["k"]: r["v"] for r in sink.read().collect()}
     assert got == {"a": 50, "b": 7}  # both writers' effects survive
 
@@ -215,7 +215,7 @@ def test_txn_vacuum_retention_preserves_recent_versions(spark, tmp_path):
     sink = _mk(spark, tmp_path)
     sink.apply(spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int"))
     fs = sink._fs()
-    v0 = sink._current_version(fs)
+    v0 = sink._head(fs)[0]
     v0_files = [
         sink._resolve(f)
         for fl in sink._read_manifest(fs, v0)["buckets"].values()
@@ -251,7 +251,7 @@ def test_txn_manifest_paths_relative_and_table_survives_move(spark, tmp_path):
     sink.apply(spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int"))
     sink.apply(spark.createDataFrame([("b", 99)], "k string, v int"))
     fs = sink._fs()
-    manifest = sink._read_manifest(fs, sink._current_version(fs))
+    manifest = sink._read_manifest(fs, sink._head(fs)[0])
     for fl in manifest["buckets"].values():
         for f in fl:
             assert not f.startswith("/") and "://" not in f, f
@@ -275,7 +275,7 @@ def test_txn_reader_skips_truncated_newest_manifest(spark, tmp_path):
     sink = _mk(spark, tmp_path)
     sink.apply(spark.createDataFrame([("a", 1)], "k string, v int"))
     fs = sink._fs()
-    v = sink._current_version(fs)
+    v = sink._head(fs)[0]
 
     # simulate the crash: an empty manifest at v+1 and garbage at v+2
     for junk_v, body in ((v + 1, b""), (v + 2, b'{"version": 7, "buck')):
@@ -289,7 +289,7 @@ def test_txn_reader_skips_truncated_newest_manifest(spark, tmp_path):
     got = {r["k"]: r["v"] for r in sink.read().collect()}
     assert got == {"a": 1}  # fell back past both junk entries
     sink.apply(spark.createDataFrame([("b", 2)], "k string, v int"))
-    assert sink._current_version(fs) == v + 3  # fresh number, junk not reused
+    assert sink._head(fs)[0] == v + 3  # fresh number, junk not reused
     got = {r["k"]: r["v"] for r in sink.read().collect()}
     assert got == {"a": 1, "b": 2}  # merge based on the last VALID version
 
@@ -300,7 +300,7 @@ def test_txn_lost_race_cleans_tmp_and_returns_false(spark, tmp_path):
     sink = _mk(spark, tmp_path)
     sink.apply(spark.createDataFrame([("a", 1)], "k string, v int"))
     fs = sink._fs()
-    v = sink._current_version(fs)
+    v = sink._head(fs)[0]
     assert sink._try_commit(fs, v, {"version": v, "buckets": {}}) is False
     leftovers = [
         st.getPath().getName()
@@ -354,7 +354,7 @@ def test_txn_two_concurrent_writers_serialize(spark, tmp_path):
     assert got == expected
     # every apply won exactly one version: 8 commits -> versions 0..7
     fs = check._fs()
-    assert check._current_version(fs) == 2 * n_batches - 1
+    assert check._head(fs)[0] == 2 * n_batches - 1
     assert len(check._list_versions(fs)) == 2 * n_batches
 
 
@@ -511,8 +511,31 @@ def test_txn_steady_state_head_does_not_list_the_log(spark, tmp_path, monkeypatc
 
     _mk(spark, tmp_path).apply(spark.createDataFrame([("b", 7)], "k string, v int"))
     listings.clear()
-    assert sink._current_version(sink._fs()) == 3
+    assert sink._head(sink._fs())[0] == 3
     assert listings == ["kv"]
+
+
+def test_txn_head_is_not_stale_after_a_rival_commits_and_vacuums(spark, tmp_path):
+    """A sink idle while another writer commits past its remembered head
+    and vacuums the superseded log entries still finds the true head: it
+    must not take the vacuumed gap after its own entry for "nothing
+    newer", serve its remembered rows, and publish below the head."""
+    def kv(*rows):
+        return pa.table({"k": [k for k, _ in rows], "v": pa.array([v for _, v in rows], pa.int32())})
+
+    a, b = _mk(spark, tmp_path, n_buckets=1), _mk(spark, tmp_path, n_buckets=1)
+    assert a.replace(kv(("a", 1)), None)  # head 0, remembered by a
+    for head, row in ((0, ("b", 2)), (1, ("c", 3))):
+        assert b.snapshot()[0] == head
+        assert b.replace(kv(("a", 1), ("b", 2), row), head)
+    b.vacuum(retain_seconds=0)  # entries 0 and 1 are gone; 2 is the head
+    assert not os.path.exists(a._entry(0)) and not os.path.exists(a._entry(1))
+
+    head, table = a.snapshot()
+    assert head == 2
+    assert {r["k"]: r["v"] for r in table.to_pylist()} == {"a": 1, "b": 2, "c": 3}
+    assert a.replace(kv(("a", 1), ("b", 2), ("c", 3), ("d", 4)), head)
+    assert {r["k"]: r["v"] for r in b.snapshot()[1].to_pylist()} == {"a": 1, "b": 2, "c": 3, "d": 4}
 
 
 def test_txn_apply_refuses_a_bucket_outside_touched(spark, tmp_path):
@@ -523,14 +546,14 @@ def test_txn_apply_refuses_a_bucket_outside_touched(spark, tmp_path):
     stored = [(f"key{i}", i) for i in range(40)]
     sink.apply(spark.createDataFrame(stored, "k string, v int"))
     fs = sink._fs()
-    head = sink._current_version(fs)
+    head = sink._head(fs)[0]
     batch = spark.createDataFrame([("key0", 100), ("key1", 101), ("key2", 102)], "k string, v int")
     buckets = {r[0] for r in batch.select(sink._bucket()).collect()}
     assert len(buckets) > 1
 
     with pytest.raises(ValueError, match="outside touched"):
         sink.apply(batch, touched=set(sorted(buckets)[:1]))
-    assert sink._current_version(fs) == head
+    assert sink._head(fs)[0] == head
     assert {r["k"]: r["v"] for r in sink.read().collect()} == dict(stored)
 
     sink.apply(batch, touched=buckets)
