@@ -8,16 +8,19 @@ Two JSON streams (user, address) -> stateful emit-per-event join ->
 Differences from the reference, by design (SURVEY.md SS7 item 8):
 - windows are one (window x dimension x value) grouped agg, not
   parallelism-1 ``windowAll`` -- identical per-window results;
-- sinks are keyed upsert tables (MongoSink analogue) behind
-  ``foreachBatch``, all on the commit-log backend
-  (``TransactionalKeyedUpsertSink``); swap for the Mongo connector;
+- the sink is one keyed upsert table (MongoSink analogue) behind
+  ``foreachBatch`` on the commit-log backend
+  (``TransactionalKeyedUpsertSink``), whose log also carries the two
+  count tables, so the three collections commit together where the
+  reference's three upserts have no transaction; swap for the Mongo
+  connector;
 - counts are driven by an explicit ingest-time column, making the
   reference's processing-time behavior reproducible in tests.
 
 Execution
 ---------
 ONE streaming query runs the stateful join; its ``foreachBatch``
-multiplexes each joined micro-batch to all three upserts.  Structured
+multiplexes each joined micro-batch to all three tables.  Structured
 Streaming has no cross-query plan sharing, so a layout with one query
 per sink would execute the join -- the expensive stateful operator --
 three times per micro-batch and keep three copies of its keyed state.
@@ -25,29 +28,33 @@ Sharing the join is the Flink-graph behavior (Main.java wires one
 joined stream into all three sinks); the deleted one-query-per-sink
 layout's throughput is recorded in ``STREAM_BENCH.json`` (2.2x slower).
 
-The windowed counts are accumulated in the sink tables themselves, one
-``(dim, count, window_start, __epoch, __run)`` row per key, instead of
-in a checkpointed streaming aggregation.  Replay safety: a micro-batch
-retry re-runs ``foreachBatch`` with the same ``epoch_id``; count rows
-whose stored ``(__run, __epoch)`` equals this attempt already contain
-this batch's contribution and are skipped (exactly-once per key, epoch).
+The windowed counts are accumulated in the sink's commit log itself,
+instead of in a checkpointed streaming aggregation: one ``(value,
+count, window_us, __epoch, __run)`` row per state or country, kept in
+the commit metadata of userAddress's log entry.  Replay safety: a
+micro-batch retry re-runs ``foreachBatch`` with the same ``epoch_id``;
+count rows whose stored ``(__run, __epoch)`` equals this attempt already
+contain this batch's contribution and are skipped (exactly-once per key,
+epoch).
 
 Per micro-batch, ONE tagged aggregation is collected: the count
 increments of both dimensions and the set of userAddress buckets the
 batch's users hash to.  The buckets go to ``apply``, which then needs
 no probe of its own and merges the userAddress table (keyed by user)
-inside Spark.  A count table holds one row per state or country, so it
-never touches Spark: the sink serves the rows it last committed from
-memory (``TransactionalKeyedUpsertSink.snapshot``), the driver folds
-the increments into them, and ``replace`` writes the whole table from
-the driver as one parquet file and one log version.  The count sinks
-are single-bucket for that reason.  On the ``stream_paced`` benchmark a
+inside Spark.  The count tables never touch Spark: ``apply`` hands the
+head's count rows to a driver-side fold of the increments, and publishes
+the folded rows in the same log entry as userAddress's files.  So each
+micro-batch is ONE commit covering all three tables -- a crash before it
+leaves all three at the previous batch, and a lost commit race re-folds
+onto the winner's rows.  ``sinks["userCountByState"]`` and
+``sinks["userCountByCountry"]`` are read-only views that serve those
+rows as the tables' DataFrames.  On the ``stream_paced`` benchmark a
 micro-batch runs 3 Spark jobs: the collect (which also runs the join)
 and userAddress's write.  A Spark-side merge of every table took 19,
 and Spark-written count tables 8.
 
 Storage stays bounded: after every ``VACUUM_EVERY_BATCHES``-th batch
-(by batch id) each sink is vacuumed with ``VACUUM_RETAIN_SECONDS``
+(by batch id) the sink is vacuumed with ``VACUUM_RETAIN_SECONDS``
 retention, which reclaims superseded log entries and data directories
 once they are older than the retention window.
 """
@@ -71,7 +78,7 @@ COUNT_TABLES = (("state", "userCountByState"), ("country", "userCountByCountry")
 # tag of userAddress's touched buckets in the batch's one tagged collect
 BUCKET_TAG = "__bucket"
 
-# every sink is vacuumed after each batch whose id + 1 is a multiple of
+# the sink is vacuumed after each batch whose id + 1 is a multiple of
 # VACUUM_EVERY_BATCHES, reclaiming what is older than VACUUM_RETAIN_SECONDS
 # (read at call time)
 VACUUM_EVERY_BATCHES = 100
@@ -114,14 +121,30 @@ def _count_table(dim: str, rows: list[tuple]) -> pa.Table:
     })
 
 
+class _CountView:
+    """Read-only count table: its rows ride in ``source``'s commit
+    metadata as ``{table: [[value, count, window_us, __epoch, __run],
+    ...]}``; ``read()`` serves them as the table's DataFrame (None before
+    the first count)."""
+
+    def __init__(self, source: TransactionalKeyedUpsertSink, dim: str, table: str):
+        self.source = source
+        self.dim = dim
+        self.table = table
+
+    def read(self) -> DataFrame | None:
+        rows = (self.source.read_metadata() or {}).get(self.table)
+        return self.source.spark.createDataFrame(_count_table(self.dim, rows)) if rows else None
+
+
 class ReferencePipeline:
     """Assemble and run the reference's dataflow on any pair of streams.
 
     ``users`` / ``addresses`` are streaming DataFrames in USER_SCHEMA /
     ADDRESS_SCHEMA shape (plus optional ``seq``).  ``out_dir`` receives
-    three upsert tables: userAddress/, userCountByState/,
-    userCountByCountry/ -- the reference's three Mongo collections
-    (Main.java:170-179).
+    one upsert table, userAddress/, whose commit log also carries the
+    userCountByState and userCountByCountry rows; ``sinks`` serves all
+    three -- the reference's three Mongo collections (Main.java:170-179).
     """
 
     def __init__(
@@ -140,7 +163,7 @@ class ReferencePipeline:
         self.window = window
         self.joined = stateful_user_address_join(users, addresses, seq_col=seq_col)
         self.queries = []
-        self.sinks: dict[str, TransactionalKeyedUpsertSink] = {}
+        self.sinks: dict[str, TransactionalKeyedUpsertSink | _CountView] = {}
         # resolved from the checkpoint in start(); namespaces the
         # epoch guard (see _run_namespace)
         self._run_id: str = ""
@@ -171,25 +194,6 @@ class ReferencePipeline:
             f.write(rid)
         return rid
 
-    @staticmethod
-    def _count_snapshot(dim: str, sink: TransactionalKeyedUpsertSink) -> tuple[int | None, list]:
-        """``(head version, stored rows)`` of one count table, the rows as
-        ``(value, count, window_us, __epoch, __run)``.  Refuses a table
-        without the epoch guard columns."""
-        head, cur = sink.snapshot()
-        if cur is None:
-            return head, []
-        missing = [c for c in ("__epoch", "__run") if c not in cur.column_names]
-        if missing:
-            raise ValueError(
-                f"count table {sink.path!r} has no {'/'.join(missing)} "
-                "column: it predates the epoch-guarded count layout, "
-                "which this pipeline no longer converts; start from a "
-                "fresh out_dir"
-            )
-        cols = (cur[dim], cur["count"], cur["window_start"].cast(pa.int64()), cur["__epoch"], cur["__run"])
-        return head, list(zip(*(c.to_pylist() for c in cols)))
-
     def _collect_batch(self, batch: DataFrame, bucket: Column) -> tuple[dict[str, list[tuple]], set[int]]:
         """The batch's count increments, ``{dim: [(value, window_us,
         count)]}``, and the set of ``bucket`` values over its rows, from
@@ -215,44 +219,34 @@ class ReferencePipeline:
         inc = {dim: [tuple(r[1:]) for r in rows if r[0] == dim and r[3]] for dim, _ in COUNT_TABLES}
         return inc, {int(r[1]) for r in rows if r[0] == BUCKET_TAG}
 
-    def _merge_counts(self, epoch_id: int, inc: dict[str, list[tuple]]) -> None:
-        """Fold one joined micro-batch into both windowed-count tables.
+    def _commit(self, batch: DataFrame, epoch_id: int) -> None:
+        """Upsert one joined, stamped micro-batch into userAddress and
+        fold its count increments into the same commit.
 
-        ``inc`` is the batch's increments from :meth:`_collect_batch`;
-        everything else runs on the driver, with no Spark job while the
-        sinks serve their last commit from memory.  Both tables (one row
-        per value) are snapshotted and checked before either is written.
-        Each is then folded and committed whole by ``replace``: the
-        folded rows plus the stored rows of untouched values, which keep
-        their ``(__epoch, __run)``.  A lost commit race re-snapshots and
-        re-folds.  Window starts travel as epoch microseconds.
+        The fold runs on the driver, on the head's count rows, each time
+        ``apply`` tries to commit: a value this ``(epoch_id, run)``
+        already counted is skipped (a replay), the others are folded by
+        :func:`_fold_counts` and stamped with this attempt, and the rows
+        of untouched values keep their ``(__epoch, __run)``.  Window
+        starts travel as epoch microseconds.
         """
+        ua_sink = self.sinks["userAddress"]
+        inc, touched = self._collect_batch(batch, ua_sink._bucket())
         attempt = (epoch_id, self._run_id)
-        snaps = {dim: self._count_snapshot(dim, self.sinks[table]) for dim, table in COUNT_TABLES}
 
-        for dim, table in COUNT_TABLES:
-            sink = self.sinks[table]
-            for _ in range(sink.max_commit_retries):
-                head, stored = snaps[dim]
+        def fold(meta: dict | None) -> dict:
+            out = {}
+            for dim, table in COUNT_TABLES:
+                stored = (meta or {}).get(table, [])
                 folded = _fold_counts(inc[dim], stored, attempt)
-                if not folded:
-                    break
                 values = {value for value, _, _ in folded}
-                table_rows = [(value, n, ws, *attempt) for value, n, ws in folded]
-                table_rows += [tuple(r) for r in stored if r[0] not in values]
-                if sink.replace(_count_table(dim, table_rows), head):
-                    break
-                # lost the race: fold again on top of the winner's table
-                snaps[dim] = self._count_snapshot(dim, sink)
-            else:
-                raise RuntimeError(
-                    f"count table {sink.path!r}: commit contention exceeded "
-                    f"{sink.max_commit_retries} retries"
-                )
+                out[table] = [[value, n, ws, *attempt] for value, n, ws in folded]
+                out[table] += [r for r in stored if r[0] not in values]
+            return out
+
+        ua_sink.apply(batch, touched, fold)
 
     def _shared_foreach_batch(self):
-        ua_sink = self.sinks["userAddress"]
-
         def fn(batch_df: DataFrame, epoch_id: int) -> None:
             # ingest_time is a CONCRETE literal stamped once per batch,
             # not current_timestamp(): a cache-evicted partition would
@@ -266,28 +260,36 @@ class ReferencePipeline:
                 "ingest_time", F.lit(stamp).cast("timestamp")
             ).persist()
             try:
-                inc, touched = self._collect_batch(batch, ua_sink._bucket())
-                ua_sink.apply(batch, touched)
-                self._merge_counts(epoch_id, inc)
+                self._commit(batch, epoch_id)
             finally:
                 batch.unpersist()
             if (epoch_id + 1) % VACUUM_EVERY_BATCHES == 0:
-                for sink in self.sinks.values():
-                    sink.vacuum(VACUUM_RETAIN_SECONDS)
+                self.sinks["userAddress"].vacuum(VACUUM_RETAIN_SECONDS)
 
         return fn
 
-    def start(self):
-        """Start the shared streaming query."""
-        self.sinks["userAddress"] = TransactionalKeyedUpsertSink(
+    def _open_sinks(self) -> None:
+        """The userAddress sink and the two count views over it.
+        Refuses an ``out_dir`` that holds count tables of their own
+        (the layout before the counts moved into userAddress's log)."""
+        for _, table in COUNT_TABLES:
+            legacy = os.path.join(self.out_dir, table)
+            if os.path.exists(os.path.join(legacy, "_log")):
+                raise ValueError(
+                    f"{legacy!r} is a separate count table, a layout this "
+                    "pipeline no longer converts: its counts live in "
+                    "userAddress's commit log; start from a fresh out_dir"
+                )
+        ua_sink = TransactionalKeyedUpsertSink(
             self.spark, os.path.join(self.out_dir, "userAddress"), key="userId", order_col="seq"
         )
+        self.sinks["userAddress"] = ua_sink
         for dim, table in COUNT_TABLES:
-            # one bucket: replace() writes the table from the driver
-            self.sinks[table] = TransactionalKeyedUpsertSink(
-                self.spark, os.path.join(self.out_dir, table), key=dim, n_buckets=1
-            )
+            self.sinks[table] = _CountView(ua_sink, dim, table)
 
+    def start(self):
+        """Start the shared streaming query."""
+        self._open_sinks()
         shared_ckpt = os.path.join(self.checkpoint_dir, "shared")
         self._run_id = self._run_namespace(shared_ckpt)
         self.queries.append(

@@ -8,18 +8,17 @@ userAddress (key userId), userCountByState (key state), userCountByCountry
 
 Spark mapping: ``writeStream.foreachBatch`` with a per-batch keyed merge.
 The pipeline's only backend is :class:`TransactionalKeyedUpsertSink`
-(commit log; count rows ``(dim, count, window_start, __epoch, __run)``);
-on a real deployment the same interface fronts Delta ``MERGE`` or the
-Mongo Spark connector -- the batch-level dedup logic is identical.
+(commit log); on a real deployment the same interface fronts Delta
+``MERGE`` or the Mongo Spark connector -- the batch-level dedup logic is
+identical.
 
-Two ways to commit: ``apply(df)`` merges a batch into the touched
-buckets inside Spark, and ``snapshot()`` + ``replace(table, version)``
-commit a whole table a caller has already merged on the driver.  The
-reference pipeline's count tables hold a handful of rows and take the
-second path with no Spark job at all: ``replace`` writes a local
-``pyarrow.Table`` as one parquet file from the driver, and ``snapshot``
-serves the rows this sink last committed from memory while the log head
-is still that commit.
+A commit can also carry caller metadata in its log entry (Delta's
+``commitInfo.userMetadata``): ``apply(df, touched, metadata)`` takes it
+as a function of the head's metadata and publishes both in one log
+version.  The reference pipeline keeps its two count tables there --
+one row per state or country, folded on the driver -- so a micro-batch
+commits all three of the reference's collections at once, and a crash
+leaves either all of them or none of them advanced.
 
 Micro-batch retries replay a batch: the merge is idempotent per key, so
 at-least-once delivery converges exactly like the reference's upsert.
@@ -33,12 +32,9 @@ import time
 import uuid
 import warnings
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import from_arrow_schema
 
 
 # Filesystems whose ``rename`` is copy+delete (or otherwise cannot
@@ -145,9 +141,7 @@ class KeyedUpsertSink:
             # allowMissingColumns: a stored table written under an older
             # schema may lack columns the incoming batch now carries --
             # survivors get NULL there instead of failing the union with
-            # AnalysisException.  (The reference pipeline's count tables
-            # refuse such a table before merging: see
-            # plans/pipeline.py:_count_snapshot.)
+            # AnalysisException.
             merged = incoming.unionByName(kept, allowMissingColumns=True)
         (
             merged.write.mode("overwrite")
@@ -246,39 +240,24 @@ class TransactionalKeyedUpsertSink:
     ``touched`` is refused before it is published: the stored rows of
     that bucket were never read, so publishing would drop them.
 
-    **Driver-sized tables** (``snapshot`` / ``replace``).
-    ``snapshot()`` returns ``(head, table)``: the newest claimed log
-    version (None before the first commit) and the committed contents
-    at the newest parsable version as a ``pyarrow.Table`` (None before
-    the first commit).  ``replace(table, head)`` commits ``table`` -- a
-    ``pyarrow.Table``, one row per key, the caller's job -- as the WHOLE
-    table at version ``head + 1`` and returns False, publishing nothing,
-    if another writer has claimed that version since the snapshot; the
-    caller re-snapshots, re-merges and retries.  It is the same
-    optimistic protocol as ``apply``, for tables small enough that the
-    caller merges them on the driver, and it runs no Spark job:
-
-    - ``replace`` writes the table as one parquet file from the driver
-      (``FileSystem.create``) and commits it through the same log.  The
-      driver cannot compute Spark's ``xxhash64`` bucket of a key, so
-      ``replace`` requires a single-bucket sink (``n_buckets=1``): the
-      one file is then a valid bucket for a later ``apply``.
-    - After a successful ``replace`` the sink keeps ``(version,
-      manifest, table)``, and ``snapshot()`` serves that table from
-      memory while the head is still that version.  A fresh sink (a
-      restart), a rival commit or a lost race reads the files instead,
-      once, and keeps what it read.  ``read()`` always reads the files
-      and returns a DataFrame.
-    - Timestamps cross the driver as ``timestamp[us, tz=UTC]``, both in
-      memory and from Spark's ``toArrow``, so the session time zone
-      never shifts a row.
+    **Commit metadata.**  ``apply(df, touched, metadata)`` also
+    publishes caller metadata -- any JSON value -- in the same log entry
+    as the data.  ``metadata`` is a function from the head's metadata
+    (None before the first commit) to this commit's, and ``apply`` calls
+    it again on every commit attempt, so a lost race re-derives it from
+    the winner's; without it the head's metadata carries forward.
+    :meth:`read_metadata` returns the head's, from memory while this
+    sink's last commit is still the head (the manifest is kept as its
+    JSON reads back, so memory and a fresh sink agree).  The sink does
+    not interpret the value.  A batch with no rows commits nothing,
+    metadata included.
 
     **Storage.**  Old versions' files stay until :meth:`vacuum`, which
     reclaims unreferenced files older than its retention window --
     protecting both readers pinned to a just-replaced version and
     in-flight writers whose data is written before their commit -- and
     removes each ``data/txn-*`` directory whole once nothing in it is
-    live.  The reference pipeline calls it on every sink on a fixed
+    live.  The reference pipeline calls it on its one sink on a fixed
     schedule (``plans/pipeline.py:VACUUM_EVERY_BATCHES``).
     """
 
@@ -298,9 +277,9 @@ class TransactionalKeyedUpsertSink:
         self.n_buckets = n_buckets
         self.max_commit_retries = max_commit_retries
         self._warned_non_atomic_scheme = False
-        # (claimed head, newest parsable manifest, its rows as a
-        # pyarrow.Table or None) as last committed or found by this sink
-        self._last: tuple[int, dict | None, pa.Table | None] | None = None
+        # (claimed head, newest parsable manifest) as last committed or
+        # found by this sink
+        self._last: tuple[int, dict | None] | None = None
 
     # -- Hadoop FS plumbing -------------------------------------------------
 
@@ -430,22 +409,23 @@ class TransactionalKeyedUpsertSink:
             fs.delete(self._jpath(tmp), False)
         return renamed
 
-    def _try_commit(self, fs, version: int, manifest: dict, rows: pa.Table | None = None) -> bool:
+    def _try_commit(self, fs, version: int, manifest: dict) -> bool:
         """Write-temp-then-publish ``_log/{version}.json``; False on a
         lost commit race.  The manifest body is complete and closed
         BEFORE it becomes visible under its final name, so readers can
         never observe a partial entry.  A win becomes the remembered
-        head, with ``rows`` as its contents when the caller has them."""
+        head, as its JSON reads back."""
         fs.mkdirs(self._jpath(self._log_dir))
         tmp = f"{self._log_dir}/.tmp-{uuid.uuid4().hex}.json"
+        body = json.dumps(manifest)
         out = fs.create(self._jpath(tmp), True)
         try:
-            out.write(bytearray(json.dumps(manifest).encode("utf-8")))
+            out.write(bytearray(body.encode("utf-8")))
         finally:
             out.close()
         if not self._publish(fs, tmp, self._entry(version)):
             return False
-        self._last = (version, manifest, rows)
+        self._last = (version, json.loads(body))
         return True
 
     # -- table surface ------------------------------------------------------
@@ -471,13 +451,12 @@ class TransactionalKeyedUpsertSink:
             and fs.exists(self._jpath(self._entry(self._last[0])))
             and not fs.exists(self._jpath(self._entry(self._last[0] + 1)))
         ):
-            return self._last[0], self._last[1]
+            return self._last
         versions = self._list_versions(fs)
         if not versions:
             return None, None
-        manifest = self._newest_valid(fs, versions)[1]
-        self._last = (versions[0], manifest, None)
-        return versions[0], manifest
+        self._last = (versions[0], self._newest_valid(fs, versions)[1])
+        return self._last
 
     def _read_files(self, manifest: dict, buckets=None) -> DataFrame:
         """The manifest's data files (only ``buckets`` when given), read
@@ -493,24 +472,16 @@ class TransactionalKeyedUpsertSink:
             reader = reader.schema(T.StructType.fromJson(manifest["schema"]))
         return reader.parquet(*files)
 
-    def snapshot(self) -> tuple[int | None, pa.Table | None]:
-        """``(head version, committed contents as a pyarrow.Table)``;
-        ``(None, None)`` before the first commit.  Served from memory
-        while the head is the version this sink last replaced or read;
-        pass the head to :meth:`replace`."""
-        head, manifest = self._head(self._fs())
-        if manifest is None:
-            return head, None
-        if self._last[2] is not None:  # _head keeps rows only for the head
-            return head, self._last[2]
-        rows = self._read_files(manifest).toArrow()
-        self._last = (head, manifest, rows)
-        return head, rows
-
     def read(self) -> DataFrame | None:
         """Current committed contents (None before the first commit)."""
         manifest = self._head(self._fs())[1]
         return None if manifest is None else self._read_files(manifest)
+
+    def read_metadata(self):
+        """The head's commit metadata (None before the first commit, or
+        when no commit carried any)."""
+        manifest = self._head(self._fs())[1]
+        return None if manifest is None else manifest.get("metadata")
 
     def _write_data(self, merged: DataFrame) -> dict[str, list[str]]:
         """Write ``merged`` (which carries ``__bucket``) as one file per
@@ -537,35 +508,12 @@ class TransactionalKeyedUpsertSink:
                 ]
         return out
 
-    def replace(self, table: pa.Table, version: int | None) -> bool:
-        """Commit ``table`` (a ``pyarrow.Table``, one row per key) as the
-        whole table, iff the head is still ``version`` (from
-        :meth:`snapshot`); False, with the table unchanged, when another
-        commit got there first.  Written from the driver as one file, so
-        the sink must have one bucket."""
-        if self.n_buckets != 1:
-            raise ValueError(
-                f"replace() writes one driver-side file, so the sink at "
-                f"{self.path!r} needs n_buckets=1, not {self.n_buckets}"
-            )
-        rel = f"data/txn-{uuid.uuid4().hex}/__bucket=0/part-00000.parquet"
-        buf = pa.BufferOutputStream()
-        pq.write_table(table, buf)
-        fs = self._fs()
-        out = fs.create(self._jpath(f"{self.path}/{rel}"), False)
-        try:
-            out.write(bytearray(buf.getvalue().to_pybytes()))
-        finally:
-            out.close()
-        nxt = 0 if version is None else version + 1
-        schema = from_arrow_schema(table.schema)
-        manifest = {"version": nxt, "schema": schema.jsonValue(), "buckets": {"0": [rel]}}
-        return self._try_commit(fs, nxt, manifest, table)
-
-    def apply(self, batch_df: DataFrame, touched: set[int] | None = None) -> None:
+    def apply(self, batch_df: DataFrame, touched: set[int] | None = None, metadata=None) -> None:
         """Upsert ``batch_df``.  ``touched`` -- the buckets its keys hash
         to, if the caller already knows them -- saves the probe job; it
-        must cover every key's bucket, or the commit is refused."""
+        must cover every key's bucket, or the commit is refused.
+        ``metadata`` maps the head's commit metadata to this commit's
+        (see the class docstring)."""
         # persisted for the call: the probe, the merge and every retry
         # share one computation, and nothing stays pinned afterwards
         incoming = latest_per_key(batch_df, self.key, self.order_col).withColumn(
@@ -609,11 +557,17 @@ class TransactionalKeyedUpsertSink:
                 buckets.update(written)
                 nxt = 0 if head is None else head + 1
                 manifest = {"version": nxt, "schema": schema.jsonValue(), "buckets": buckets}
+                meta = None if base is None else base.get("metadata")
+                if metadata is not None:
+                    meta = metadata(meta)
+                if meta is not None:
+                    manifest["metadata"] = meta
                 if self._try_commit(fs, nxt, manifest):
                     return
                 # lost the race: another writer committed nxt; re-merge
-                # against their table state (the orphaned data files are
-                # unreferenced and reclaimed by vacuum)
+                # (and re-derive the metadata) against their table state
+                # (the orphaned data files are unreferenced and reclaimed
+                # by vacuum)
             raise RuntimeError(
                 f"TransactionalKeyedUpsertSink: commit contention exceeded "
                 f"{self.max_commit_retries} retries at {self.path}"

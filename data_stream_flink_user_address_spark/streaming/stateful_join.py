@@ -213,9 +213,6 @@ def _make_join_state_machine(ttl_ms: int | None = None):
     return machine
 
 
-_join_state_machine = _make_join_state_machine(None)
-
-
 def batch_emission_trace(users: DataFrame, addresses: DataFrame, seq_col: str = "seq") -> DataFrame:
     """Compute the per-key join's emissions over a bounded input and
     return the full emission trace (one row per emission, ordered by

@@ -101,3 +101,5 @@ def test_pipeline_restart_converges(spark, tmp_path):
     assert st == {"S0": 30, "S1": 20, "S2": 10}
     co = {r["country"]: r["count"] for r in pipe2.sinks["userCountByCountry"].read().collect()}
     assert co == {"C0": 30, "C1": 30}
+    # one table on disk: the count rows ride in userAddress's log
+    assert os.listdir(out) == ["userAddress"]

@@ -108,6 +108,8 @@ def test_full_pipeline_end_to_end(spark, tmp_path):
     assert st == {"S0": 30, "S1": 20, "S2": 10}
     co = pipe.sinks["userCountByCountry"].read().collect()
     assert sum(r["count"] for r in co) == 60 and {r["country"] for r in co} == {"C0", "C1"}
+    # one table on disk: the count rows ride in userAddress's log
+    assert os.listdir(out) == ["userAddress"]
 
 
 def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
@@ -202,6 +204,7 @@ def test_shared_pipeline_final_tables(spark, tmp_path):
     assert {r["state"]: r["count"] for r in st} == {"S0": 24, "S1": 16, "S2": 8}
     co = pipe.sinks["userCountByCountry"].read().collect()
     assert {r["country"]: r["count"] for r in co} == {"C0": 24, "C1": 24}
+    assert os.listdir(pipe.out_dir) == ["userAddress"]
 
 
 ADDRESSES = (
@@ -211,22 +214,21 @@ ADDRESSES = (
 
 
 def _count_pipe(spark, out, window="365 days"):
-    """A pipeline whose count pass runs without a streaming query."""
+    """A pipeline whose sinks run without a streaming query."""
     pipe = ReferencePipeline.__new__(ReferencePipeline)
-    pipe.window = window
-    pipe._run_id = "runA"
-    pipe.sinks = {
-        table: TransactionalKeyedUpsertSink(spark, os.path.join(out, table), key=dim, n_buckets=1)
-        for dim, table in COUNT_TABLES
-    }
+    pipe.spark, pipe.out_dir, pipe.window, pipe._run_id = spark, out, window, "runA"
+    pipe.sinks = {}
+    pipe._open_sinks()
     return pipe
 
 
 def _merge(pipe, batch, epoch_id):
-    """One count merge as a micro-batch runs it: collect the batch's
-    increments (no userAddress sink here, so one constant bucket), then
-    fold them into both tables."""
-    pipe._merge_counts(epoch_id, pipe._collect_batch(batch, F.lit(0))[0])
+    """One micro-batch's commit as ``_shared_foreach_batch`` runs it, on
+    a batch that brings its own ``ingest_time`` (and ``seq`` 0 when it
+    has none)."""
+    if "seq" not in batch.columns:
+        batch = batch.withColumn("seq", F.lit(0).cast("long"))
+    pipe._commit(batch, epoch_id)
 
 
 def _counts(pipe):
@@ -234,6 +236,15 @@ def _counts(pipe):
     return tuple(
         {r[dim]: r["count"] for r in pipe.sinks[table].read().collect()}
         for dim, table in COUNT_TABLES
+    )
+
+
+def _tables(pipe):
+    """All three tables' rows, sorted; userAddress without the batch's
+    ingest_time stamp."""
+    return tuple(
+        sorted(map(tuple, pipe.sinks[t].read().drop("ingest_time").collect()), key=str)
+        for t in ("userAddress", *(table for _, table in COUNT_TABLES))
     )
 
 
@@ -272,31 +283,27 @@ def test_shared_mode_epoch_replay_guard(spark, tmp_path):
     assert _counts(pipe) == ({"S0": 6, "S1": 3}, {"C0": 6, "C1": 3})
 
 
-def test_merge_window_counts_rejects_legacy_table(spark, tmp_path):
-    """A count table without __epoch/__run (written by a pre-epoch
-    pipeline layout) cannot be told apart from this run's increments:
-    the merge must refuse it, naming the table and the fresh-out_dir
-    remedy, and leave the stored rows of both tables untouched."""
-    batch = spark.createDataFrame(
-        [("u", [("a", "c", "S0", "z", "C0")])], f"userId string, {ADDRESSES}"
-    ).withColumn("ingest_time", F.current_timestamp())
-
-    for name, stored in (
-        # no __epoch, no __run
-        ("cnt", spark.createDataFrame(
-            [("S0", 5)], "state string, count bigint")),
-        # __epoch but no __run
-        ("cnt_epoch", spark.createDataFrame(
-            [("S0", 5, 0)], "state string, count bigint, __epoch long")),
-    ):
-        pipe = _count_pipe(spark, str(tmp_path / name))
-        sink = pipe.sinks["userCountByState"]
-        sink.apply(stored)
+def test_start_refuses_separate_count_tables(spark, tmp_path):
+    """An out_dir holding a count table with its own commit log (the
+    layout before the counts moved into userAddress's log) is refused
+    before the query starts, naming the directory and the fresh-out_dir
+    remedy; the stored table is left as it was and nothing is written."""
+    udir, adir = _write_workload(tmp_path)
+    for dim, table in COUNT_TABLES:
+        out = tmp_path / f"out-{table}"
+        legacy = TransactionalKeyedUpsertSink(spark, str(out / table), key=dim, n_buckets=1)
+        legacy.apply(spark.createDataFrame(
+            [("X0", 5, 0, "runA")], f"{dim} string, count bigint, __epoch int, __run string"
+        ))
+        pipe = ReferencePipeline(
+            spark, spark.readStream.schema(USER_SEQ).json(udir),
+            spark.readStream.schema(ADDR_SEQ).json(adir), str(out), str(tmp_path / f"ckpt-{table}"),
+        )
         with pytest.raises(ValueError, match="fresh out_dir") as err:
-            _merge(pipe, batch, epoch_id=0)
-        assert sink.path in str(err.value)
-        assert {r["state"]: r["count"] for r in sink.read().collect()} == {"S0": 5}
-        assert pipe.sinks["userCountByCountry"].read() is None
+            pipe.start()
+        assert legacy.path in str(err.value)
+        assert pipe.queries == [] and sorted(os.listdir(out)) == [table]
+        assert {r[dim]: r["count"] for r in legacy.read().collect()} == {"X0": 5}
 
 
 def test_merge_counts_window_rollover(spark, tmp_path):
@@ -306,15 +313,16 @@ def test_merge_counts_window_rollover(spark, tmp_path):
     window is kept as it is.  A NULL state is one more key."""
     pipe = _count_pipe(spark, str(tmp_path / "out"), window="1 minute")
     old, now, new = (datetime(2026, 1, 1, 12, m) for m in (4, 5, 6))
-    pipe.sinks["userCountByState"].apply(spark.createDataFrame(
-        [("S0", 7, old, 0, "runA"), ("S1", 5, new, 0, "runA"),
-         ("S2", 3, now, 0, "runA"), (None, 4, now, 0, "runA")],
-        "state string, count bigint, window_start timestamp, __epoch int, __run string",
-    ))
-    pipe.sinks["userCountByCountry"].apply(spark.createDataFrame(
-        [("C0", 9, old, 0, "runA")],
-        "country string, count bigint, window_start timestamp, __epoch int, __run string",
-    ))
+    us = dict(zip((old, now, new), spark.range(1).select(
+        *[F.unix_micros(F.lit(d).cast("timestamp")) for d in (old, now, new)]).first()))
+    stored = {
+        "userCountByState": [["S0", 7, us[old], 0, "runA"], ["S1", 5, us[new], 0, "runA"],
+                             ["S2", 3, us[now], 0, "runA"], [None, 4, us[now], 0, "runA"]],
+        "userCountByCountry": [["C0", 9, us[old], 0, "runA"]],
+    }
+    pipe.sinks["userAddress"].apply(
+        spark.createDataFrame([("seed", 0)], "userId string, seq long"), metadata=lambda _: stored
+    )
     batch = spark.createDataFrame(
         [("u1", [("a1", "c", "S0", "z", "C0"), ("a2", "c", "S1", "z", "C0")]),
          ("u2", [("a3", "c", "S2", "z", "C0"), ("a4", "c", None, "z", "C0")])],
@@ -335,21 +343,37 @@ def test_merge_counts_window_rollover(spark, tmp_path):
     assert table("userCountByCountry", "country") == {"C0": (4, now, 1)}
 
 
+def _user_batch(spark, epoch, n=6):
+    """A joined micro-batch of ``n`` users with one address each, and
+    one user without an address."""
+    return spark.createDataFrame(
+        [(f"u{epoch}-{i}", epoch, [("a", "c", f"S{i % 2}", "z", "C0")]) for i in range(n)]
+        + [("u-none", epoch, [])],
+        f"userId string, seq long, {ADDRESSES}",
+    )
+
+
 def test_foreach_batch_reads_each_count_table_once(spark, tmp_path, monkeypatch):
-    """Structural pin of one micro-batch: each count table is
-    snapshotted once and committed whole by one replace, from the rows
-    the driver folded; only userAddress goes through apply."""
+    """Structural pin of one micro-batch: userAddress's apply is the
+    only sink call, it folds the stored count rows once, and it
+    publishes ONE log entry that carries userAddress's files and both
+    count tables' rows.  No count table has a directory of its own."""
     out = str(tmp_path / "out")
     pipe = _count_pipe(spark, out)
-    pipe.sinks["userAddress"] = TransactionalKeyedUpsertSink(
-        spark, os.path.join(out, "userAddress"), key="userId", order_col="seq"
-    )
     calls = []
-    for name in ("read", "snapshot", "replace", "apply"):
+    for name in ("read", "read_metadata", "apply", "_publish"):
         orig = getattr(TransactionalKeyedUpsertSink, name)
 
         def counted(self, *args, _orig=orig, _name=name):
             calls.append((_name, os.path.basename(self.path)))
+            if _name == "apply":  # count the metadata folds too
+                batch, touched, fold = args
+
+                def counted_fold(meta):
+                    calls.append(("fold", os.path.basename(self.path)))
+                    return fold(meta)
+
+                args = (batch, touched, counted_fold)
             return _orig(self, *args)
 
         monkeypatch.setattr(TransactionalKeyedUpsertSink, name, counted)
@@ -358,21 +382,26 @@ def test_foreach_batch_reads_each_count_table_once(spark, tmp_path, monkeypatch)
     batch = spark.createDataFrame(
         [("u1", 1, [("a1", "c", "S0", "z", "C0")])], f"userId string, seq long, {ADDRESSES}"
     )
+    ua = pipe.sinks["userAddress"]
     for epoch in (0, 1):  # empty tables, then stored rows
         calls.clear()
         fn(batch, epoch)
-        assert sorted(calls) == sorted(
-            [(op, table) for _, table in COUNT_TABLES for op in ("snapshot", "replace")]
-            + [("apply", "userAddress")]
-        )
+        assert sorted(calls) == [("_publish", "userAddress"), ("apply", "userAddress"),
+                                 ("fold", "userAddress")]
+        head, manifest = ua._head(ua._fs())
+        assert head == epoch
+        log = sorted(os.listdir(os.path.join(out, "userAddress", "_log")))
+        assert log == [f"{v:020d}.json" for v in range(epoch + 1)]
+        assert set(manifest["metadata"]) == {table for _, table in COUNT_TABLES}
+    assert os.listdir(out) == ["userAddress"]
     assert _counts(pipe) == ({"S0": 2}, {"C0": 2})
 
 
 def test_merge_counts_refolds_after_a_lost_commit_race(spark, tmp_path, monkeypatch):
-    """A commit that lands on a count table between the pipeline's
-    snapshot and its replace makes the replace lose; the pipeline
-    re-snapshots and folds again on top of the winner's rows, so no
-    count is lost and none is doubled."""
+    """A commit that lands between a pipeline's head read and its
+    publish makes the publish lose; ``apply`` re-merges and folds the
+    counts again on top of the winner's rows, so no count is lost and
+    none is doubled.  The rival commits through ``apply`` as well."""
     out = str(tmp_path / "out")
     pipe, rival = _count_pipe(spark, out), _count_pipe(spark, out)
     rival._run_id = "runB"
@@ -382,21 +411,62 @@ def test_merge_counts_refolds_after_a_lost_commit_race(spark, tmp_path, monkeypa
     ).withColumn("ingest_time", F.lit(datetime(2026, 1, 1, 12, 5)).cast("timestamp"))
     _merge(pipe, batch, epoch_id=0)
 
-    orig = TransactionalKeyedUpsertSink.replace
+    orig = TransactionalKeyedUpsertSink._try_commit
     raced = []
 
-    def replace(self, df, version):
-        if not raced:  # the rival commits both tables first, once
+    def try_commit(self, fs, version, manifest):
+        if not raced:  # the rival commits first, once
             raced.append(version)
-            monkeypatch.setattr(TransactionalKeyedUpsertSink, "replace", orig)
+            monkeypatch.setattr(TransactionalKeyedUpsertSink, "_try_commit", orig)
             _merge(rival, batch, epoch_id=7)
-            monkeypatch.setattr(TransactionalKeyedUpsertSink, "replace", replace)
-        return orig(self, df, version)
+            monkeypatch.setattr(TransactionalKeyedUpsertSink, "_try_commit", try_commit)
+        return orig(self, fs, version, manifest)
 
-    monkeypatch.setattr(TransactionalKeyedUpsertSink, "replace", replace)
+    monkeypatch.setattr(TransactionalKeyedUpsertSink, "_try_commit", try_commit)
     _merge(pipe, batch, epoch_id=1)
-    assert raced
+    assert raced == [1]
+    ua = pipe.sinks["userAddress"]
+    assert ua._head(ua._fs())[0] == 2
     assert _counts(pipe) == ({"S0": 3, "S1": 3}, {"C0": 6})
+    assert _counts(rival) == _counts(pipe)
+
+
+def test_a_publish_fault_leaves_all_three_tables_at_the_previous_head(spark, tmp_path, monkeypatch):
+    """Kill test: a micro-batch whose publish fails after its data files
+    are written leaves all three tables at the previous head and rows,
+    and replaying that epoch on a restarted pipeline gives the tables an
+    uninterrupted run gives."""
+    clean = _count_pipe(spark, str(tmp_path / "clean"))
+    for epoch in (0, 1):
+        clean._shared_foreach_batch()(_user_batch(spark, epoch), epoch)
+
+    out = str(tmp_path / "out")
+    pipe = _count_pipe(spark, out)
+    pipe._shared_foreach_batch()(_user_batch(spark, 0), 0)
+    ua = pipe.sinks["userAddress"]
+    before = _tables(pipe)
+    head = ua._head(ua._fs())[0]
+
+    orig = TransactionalKeyedUpsertSink._publish
+
+    def killed(self, fs, tmp, target):
+        monkeypatch.setattr(TransactionalKeyedUpsertSink, "_publish", orig)
+        raise RuntimeError("killed before publish")
+
+    monkeypatch.setattr(TransactionalKeyedUpsertSink, "_publish", killed)
+    data = os.path.join(out, "userAddress", "data")
+    n_txn = len(os.listdir(data))
+    with pytest.raises(RuntimeError, match="killed before publish"):
+        pipe._shared_foreach_batch()(_user_batch(spark, 1), 1)
+    assert len(os.listdir(data)) == n_txn + 1  # the batch's files were written
+
+    restarted = _count_pipe(spark, out)
+    rua = restarted.sinks["userAddress"]
+    assert rua._head(rua._fs())[0] == head
+    assert _tables(restarted) == before
+    restarted._shared_foreach_batch()(_user_batch(spark, 1), 1)
+    assert _tables(restarted) == _tables(clean)
+    assert _counts(restarted) == ({"S0": 6, "S1": 6}, {"C0": 12})
 
 
 def test_run_namespace_marker_survives_restart(tmp_path):
@@ -435,38 +505,55 @@ def test_collect_batch_counts_addresses_and_sees_every_users_bucket(spark, tmp_p
     assert touched == {r[0] for r in batch.select(ua._bucket()).collect()}
 
 
-def test_merge_counts_runs_no_spark_job_after_the_first_batch(spark, tmp_path):
-    """Once a count sink has committed, it serves its rows from memory
-    and writes from the driver: folding further batches runs no Spark
-    job.  A fresh sink over the same tables (a restart) reads once."""
+def test_merge_counts_runs_no_spark_job_after_the_first_batch(spark, tmp_path, monkeypatch):
+    """The count tables add no Spark job to a commit: the fold that
+    ``apply`` calls reads the head's rows from the manifest and runs on
+    the driver, for a warm pipeline and for a restarted one (which
+    finds the head with one listing of the log)."""
     out = str(tmp_path / "out")
     pipe = _count_pipe(spark, out)
     batch = spark.createDataFrame(
         [("u1", [("a1", "c", "S0", "z", "C0")])], f"userId string, {ADDRESSES}"
     ).withColumn("ingest_time", F.current_timestamp())
-    inc = pipe._collect_batch(batch, F.lit(0))[0]
-    pipe._merge_counts(0, inc)
-    sc, group = spark.sparkContext, f"merge-{uuid.uuid4().hex}"
+    _merge(pipe, batch, 0)
+    sc, group = spark.sparkContext, f"fold-{uuid.uuid4().hex}"
+    orig = TransactionalKeyedUpsertSink.apply
+    fold_jobs = []
 
-    def jobs(p, epoch, tag):
-        sc.setJobGroup(f"{group}-{tag}", "count merge")
-        try:
-            p._merge_counts(epoch, inc)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return list(sc.statusTracker().getJobIdsForGroup(f"{group}-{tag}"))
+    def apply(self, batch_df, touched=None, metadata=None):
+        def fold(meta):
+            tag = f"{group}-{len(fold_jobs)}"
+            sc.setJobGroup(tag, "count fold")
+            try:
+                return metadata(meta)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                fold_jobs.append(list(sc.statusTracker().getJobIdsForGroup(tag)))
 
-    assert jobs(pipe, 1, "warm") == [] and jobs(pipe, 2, "warm2") == []
+        return orig(self, batch_df, touched, fold)
+
+    monkeypatch.setattr(TransactionalKeyedUpsertSink, "apply", apply)
+    _merge(pipe, batch, 1)
+    _merge(pipe, batch, 2)
     restarted = _count_pipe(spark, out)
-    assert len(jobs(restarted, 3, "restart")) >= 1
-    assert jobs(restarted, 4, "restart2") == []
+    _merge(restarted, batch, 3)
+    _merge(restarted, batch, 4)
+    assert fold_jobs == [[], [], [], []]
     assert _counts(restarted) == ({"S0": 5}, {"C0": 5})
 
 
 def test_count_rows_from_memory_match_disk_in_a_non_utc_session(spark, tmp_path):
-    """A count table served from memory and the same table read from
-    its files hold identical rows and window starts, and both match the
-    window Spark computes, under a non-UTC session time zone."""
+    """The count rows a sink serves from memory and the same rows a
+    fresh sink reads from the log are identical, and under a non-UTC
+    session time zone both read back row- and schema-identical to the
+    count table the separate-table layout wrote (the same Arrow table
+    as one parquet file, read with its schema), with the window start
+    Spark computes."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+    import pyarrow.parquet as pq
+
+    from data_stream_flink_user_address_spark.plans.pipeline import _count_table
+
     key = "spark.sql.session.timeZone"
     prev = spark.conf.get(key)
     spark.conf.set(key, "America/Los_Angeles")
@@ -480,52 +567,53 @@ def test_count_rows_from_memory_match_disk_in_a_non_utc_session(spark, tmp_path)
         ws = batch.select(F.unix_micros(F.window("ingest_time", "1 minute").start)).first()[0]
         _merge(pipe, batch, epoch_id=0)
 
-        fresh = _count_pipe(spark, out, window="1 minute")
+        ua, fresh = pipe.sinks["userAddress"], _count_pipe(spark, out, window="1 minute")
+        memory = ua.read_metadata()
+        assert memory is ua._last[1]["metadata"]  # no read
+        assert fresh.sinks["userAddress"].read_metadata() == memory
         for dim, table in COUNT_TABLES:
-            memory = pipe.sinks[table].snapshot()
-            assert memory[1] is pipe.sinks[table]._last[2]  # no read
-            disk = fresh.sinks[table].snapshot()
-            assert memory[0] == disk[0] == 0
-            assert sorted(memory[1].to_pylist(), key=str) == sorted(disk[1].to_pylist(), key=str)
-            assert ReferencePipeline._count_snapshot(dim, pipe.sinks[table]) == \
-                ReferencePipeline._count_snapshot(dim, fresh.sinks[table])
+            path = str(tmp_path / f"{table}.parquet")
+            pq.write_table(_count_table(dim, memory[table]), path)
+            arrow_schema = pq.read_schema(path)
+            separate = spark.read.schema(from_arrow_schema(arrow_schema)).parquet(path)
+            assert pipe.sinks[table].read().schema == fresh.sinks[table].read().schema == \
+                separate.schema == T.StructType.fromDDL(
+                    f"{dim} string, count bigint, window_start timestamp, __epoch int, __run string")
+            rows = sorted(pipe.sinks[table].read().collect(), key=str)
+            assert rows == sorted(fresh.sinks[table].read().collect(), key=str) == \
+                sorted(separate.collect(), key=str)
+            assert {(r["__epoch"], r["__run"]) for r in rows} == {(0, "runA")}
             spark_ws = {r[0] for r in pipe.sinks[table].read().select(F.unix_micros("window_start")).collect()}
             assert spark_ws == {ws}
-            assert set(disk[1]["window_start"].cast("int64").to_pylist()) == {ws}
     finally:
         spark.conf.set(key, prev)
 
 
 def test_pipeline_vacuums_on_its_schedule(spark, tmp_path, monkeypatch):
-    """With the schedule at every batch and no retention, each table
+    """With the schedule at every batch and no retention, the one table
     holds only its live manifest's data files (with their checksums)
-    and one log entry after a run of batches."""
+    and one log entry after a run of batches, and it is the only
+    directory in out_dir."""
     from data_stream_flink_user_address_spark.plans import pipeline
 
     monkeypatch.setattr(pipeline, "VACUUM_EVERY_BATCHES", 1)
     monkeypatch.setattr(pipeline, "VACUUM_RETAIN_SECONDS", 0.0)
     out = str(tmp_path / "out")
     pipe = _count_pipe(spark, out)
-    pipe.sinks["userAddress"] = TransactionalKeyedUpsertSink(
-        spark, os.path.join(out, "userAddress"), key="userId", order_col="seq"
-    )
     fn = pipe._shared_foreach_batch()
     for epoch in range(4):
-        fn(spark.createDataFrame(
-            [(f"u{epoch}-{i}", epoch, [("a", "c", f"S{i % 2}", "z", "C0")]) for i in range(6)]
-            + [("u-none", epoch, [])],
-            f"userId string, seq long, {ADDRESSES}",
-        ), epoch)
+        fn(_user_batch(spark, epoch), epoch)
 
-    for table, sink in pipe.sinks.items():
-        fs = sink._fs()
-        head, manifest = sink._head(fs)
-        live = {f for fl in manifest["buckets"].values() for f in fl}
-        crc = {os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc") for f in live}
-        on_disk = {
-            os.path.relpath(os.path.join(root, n), sink.path)
-            for root, _, names in os.walk(sink.path) for n in names
-        }
-        assert live <= on_disk, table
-        assert on_disk - live - crc == {f"_log/{head:020d}.json"}, table
-    assert len(pipe.sinks["userAddress"].read().collect()) == 25
+    sink = pipe.sinks["userAddress"]
+    head, manifest = sink._head(sink._fs())
+    live = {f for fl in manifest["buckets"].values() for f in fl}
+    crc = {os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc") for f in live}
+    on_disk = {
+        os.path.relpath(os.path.join(root, n), sink.path)
+        for root, _, names in os.walk(sink.path) for n in names
+    }
+    assert live <= on_disk
+    assert on_disk - live - crc == {f"_log/{head:020d}.json"}
+    assert os.listdir(out) == ["userAddress"]
+    assert len(sink.read().collect()) == 25
+    assert _counts(pipe) == ({"S0": 12, "S1": 12}, {"C0": 24})

@@ -11,7 +11,6 @@ import json
 import os
 import sys
 
-import pyarrow as pa
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -102,19 +101,37 @@ def test_txn_rewrites_only_touched_buckets(spark, tmp_path):
     assert got["key0"] == 999 and len(got) == 40
 
 
-def test_txn_replace_with_stale_version_loses(spark, tmp_path):
-    """replace() publishes only on top of the snapshot it names: once
-    another commit moved the head it returns False and the table is
-    unchanged."""
-    sink = _mk(spark, tmp_path, n_buckets=1)
-    assert sink.snapshot() == (None, None)
-    assert sink.replace(pa.table({"k": ["a"], "v": pa.array([1], pa.int32())}), None)
-    sink.apply(spark.createDataFrame([("b", 2)], "k string, v int"))  # head 0 -> 1
+def _count_meta(n):
+    """A commit-metadata function adding ``n`` to a running total."""
+    return lambda meta: {"n": (meta or {"n": 0})["n"] + n}
 
-    assert sink.replace(pa.table({"k": ["z"], "v": pa.array([9], pa.int32())}), 0) is False
-    head, table = sink.snapshot()
-    assert head == 1
-    assert {r["k"]: r["v"] for r in table.to_pylist()} == {"a": 1, "b": 2}
+
+def test_txn_apply_refolds_metadata_after_a_lost_race(spark, tmp_path, monkeypatch):
+    """apply's metadata function is called again on every commit
+    attempt: a writer that loses the race to another commit re-derives
+    its metadata from the winner's, so both contributions survive.  A
+    commit without a metadata function carries the head's forward."""
+    sink, rival = _mk(spark, tmp_path), _mk(spark, tmp_path)
+    sink.apply(spark.createDataFrame([("a", 1)], "k string, v int"), metadata=_count_meta(1))
+    orig = TransactionalKeyedUpsertSink._try_commit
+    seen = []
+
+    def try_commit(self, fs, version, manifest):
+        if self is sink and not seen:  # the rival commits first, once
+            seen.append(manifest["metadata"])
+            rival.apply(spark.createDataFrame([("b", 2)], "k string, v int"), metadata=_count_meta(10))
+        return orig(self, fs, version, manifest)
+
+    monkeypatch.setattr(TransactionalKeyedUpsertSink, "_try_commit", try_commit)
+    sink.apply(spark.createDataFrame([("c", 3)], "k string, v int"), metadata=_count_meta(100))
+    assert seen == [{"n": 101}]  # the first attempt, on the stale head
+    assert sink.read_metadata() == rival.read_metadata() == {"n": 111}
+
+    rival.apply(spark.createDataFrame([("d", 4)], "k string, v int"))
+    fresh = _mk(spark, tmp_path)
+    assert fresh._head(fresh._fs())[0] == 3
+    assert fresh.read_metadata() == {"n": 111}
+    assert {r["k"]: r["v"] for r in fresh.read().collect()} == {"a": 1, "b": 2, "c": 3, "d": 4}
 
 
 def test_txn_column_added_in_one_bucket_reads_back(spark, tmp_path):
@@ -519,23 +536,24 @@ def test_txn_head_is_not_stale_after_a_rival_commits_and_vacuums(spark, tmp_path
     """A sink idle while another writer commits past its remembered head
     and vacuums the superseded log entries still finds the true head: it
     must not take the vacuumed gap after its own entry for "nothing
-    newer", serve its remembered rows, and publish below the head."""
+    newer", serve its remembered metadata, and publish below the head."""
     def kv(*rows):
-        return pa.table({"k": [k for k, _ in rows], "v": pa.array([v for _, v in rows], pa.int32())})
+        return spark.createDataFrame(list(rows), "k string, v int")
 
-    a, b = _mk(spark, tmp_path, n_buckets=1), _mk(spark, tmp_path, n_buckets=1)
-    assert a.replace(kv(("a", 1)), None)  # head 0, remembered by a
+    a, b = _mk(spark, tmp_path), _mk(spark, tmp_path)
+    a.apply(kv(("a", 1)), metadata=_count_meta(1))  # head 0, remembered by a
     for head, row in ((0, ("b", 2)), (1, ("c", 3))):
-        assert b.snapshot()[0] == head
-        assert b.replace(kv(("a", 1), ("b", 2), row), head)
+        assert b._head(b._fs())[0] == head
+        b.apply(kv(row), metadata=_count_meta(1))
     b.vacuum(retain_seconds=0)  # entries 0 and 1 are gone; 2 is the head
     assert not os.path.exists(a._entry(0)) and not os.path.exists(a._entry(1))
 
-    head, table = a.snapshot()
-    assert head == 2
-    assert {r["k"]: r["v"] for r in table.to_pylist()} == {"a": 1, "b": 2, "c": 3}
-    assert a.replace(kv(("a", 1), ("b", 2), ("c", 3), ("d", 4)), head)
-    assert {r["k"]: r["v"] for r in b.snapshot()[1].to_pylist()} == {"a": 1, "b": 2, "c": 3, "d": 4}
+    assert a.read_metadata() == {"n": 3}
+    assert a._head(a._fs())[0] == 2
+    a.apply(kv(("d", 4)), metadata=_count_meta(1))
+    assert a._head(a._fs())[0] == b._head(b._fs())[0] == 3
+    assert b.read_metadata() == {"n": 4}
+    assert {r["k"]: r["v"] for r in b.read().collect()} == {"a": 1, "b": 2, "c": 3, "d": 4}
 
 
 def test_txn_apply_refuses_a_bucket_outside_touched(spark, tmp_path):
